@@ -1,208 +1,87 @@
-"""Unified query registry: merges the core (reference-parity +
-agg/window) and LLM-pipeline query sets for the driver contract
-(__spark_entry__.queries / oracle_sql).
+"""Unified query registry: every ``queries_*`` module's QUERIES and
+ORACLES merged for the driver contract (__spark_entry__.queries /
+oracle_sql).
 
 Every registered callable is wrapped to release operator-internal
 persisted blocks (operators/_cache.py) BEFORE building its plan: the
-driver runs many queries (200+ registered) in one long-lived session and never calls
-release_persisted() itself, so without this hook the self-join caches
-(LSH buckets, jaccard shingles, CC edge lists) accumulate until a
-default-sized heap OOMs. Releasing at next-query entry is safe because
-the driver materializes each result before invoking the next query.
+driver runs many queries (300+ registered) in one long-lived session
+and never calls release_persisted() itself, so without this hook the
+self-join caches (LSH buckets, jaccard shingles, CC edge lists)
+accumulate until a default-sized heap OOMs. Releasing at next-query
+entry is safe because the driver materializes each result before
+invoking the next query.
+
+Order is ``HEAD``, then every other query in module order: the
+``queries_*`` file names sorted naturally (core, domain, llm, llm2 ..
+llm25, spatial, streaming, surface, surface2 .. surface13, tpch), each
+module's own order within it.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
+import pkgutil
+import re
 
 from ..operators._cache import release_persisted
-from . import (
-    queries_core,
-    queries_domain,
-    queries_llm,
-    queries_llm2,
-    queries_llm3,
-    queries_llm4,
-    queries_llm5,
-    queries_llm6,
-    queries_llm7,
-    queries_llm8,
-    queries_llm9,
-    queries_llm10,
-    queries_llm11,
-    queries_llm12,
-    queries_llm13,
-    queries_llm14,
-    queries_llm15,
-    queries_llm16,
-    queries_llm17,
-    queries_llm18,
-    queries_llm19,
-    queries_llm20,
-    queries_llm21,
-    queries_llm22,
-    queries_llm23,
-    queries_llm24,
-    queries_llm25,
-    queries_spatial,
-    queries_streaming,
-    queries_surface,
-    queries_surface2,
-    queries_surface3,
-    queries_surface4,
-    queries_surface5,
-    queries_surface6,
-    queries_surface7,
-    queries_surface8,
-    queries_surface9,
-    queries_surface10,
-    queries_surface11,
-    queries_surface12,
-    queries_surface13,
-    queries_tpch,
-)
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-# ---------------------------------------------------------------------------
-# Driver-window curation.
-#
 # The driver records correctness rows for the FIRST 50 ``queries()``
-# entries only (CORRECTNESS_r01/r02 both have exactly 50 rows). That
-# makes the head of this registry a contract surface, so it is curated
-# explicitly per round instead of falling out of module import order
-# (the round-2 reorder silently rotated 15 green queries -- including
-# all three spatial_pip_* rows, SURVEY §2's J3 -- out of the window).
-#
-# Round-3 window (this file's head): the smoke anchor, the J3 re-pins,
-# agg_approx_sketches (first driver row after its r1 red + fix), and
-# 45 queries that have NEVER had a driver row. The rotation ledger in
-# COVERAGE.md tracks which round each query earned its driver row;
-# the remaining never-checked tail (funnel/retention/event-analytics
-# block) is slated for the round-4 window.
-# ---------------------------------------------------------------------------
-WINDOW_R3: list[str] = [
-    # smoke anchor (driver-green r1+r2)
-    "flagship_enrich",
-    # J3 re-pin: the reference's hardest operator (geo-indices.js:22-56)
+# entries only, so the head of this registry is a contract surface
+# (pinned by tests/test_registry_head.py). Earlier heads and the
+# rotation that chose this one: COVERAGE.md's rotation ledger.
+HEAD: list[str] = [
+    "dedup_embedding_cosine",
+    "split_train_valid_test",
+    "sql_api_q11ish",
+    "sql_api_q21ish",
     "spatial_pip_join",
     "spatial_pip_join_grid",
     "spatial_pip_nomatch_log",
-    # r1-red row, fixed in r2 but rotated out before earning its row
-    "agg_approx_sketches",
-    # --- 45 first-time driver-checked below this line ---
-    "pack_greedy_bins",
-    "domain_cap_sample",
-    "mixture_resample",
+    "sql_api_q22ish",
+    "sql_api_q3",
+    "streaming_sessionize",
     "text_bpe_token_estimate",
-    "text_winnow_fingerprints",
-    "decontaminate_bloom",
     "text_chunk_windows",
     "text_ngram_novelty",
-    "graph_sssp_bounded",
-    "emb_label_centroids",
-    "emb_assign_nearest_prototype",
-    "kmeans_lloyd_round",
-    "p7_base62_surrogate",
-    "sql_api_q3",
-    "array_function_battery",
-    "null_semantics_battery",
-    "window_frames_battery",
-    "conditional_agg_battery",
-    "merge_upsert",
-    "scd2_dimension",
-    "range_join_events",
-    "hypertable_rollup_daily",
-    "unpivot_metrics",
-    "agg_grouping_sets",
-    "window_distribution",
-    "regexp_battery",
-    "map_column_ops",
-    "correlated_scalar_subquery",
-    "lateral_topk_orders",
-    "variant_extraction",
-    "j_skew_salted_join",
-    "agg_skew_salted",
-    "sql_api_q11ish",
-    "sql_api_q21ish",
-    "sql_api_q22ish",
-    "sample_bottomk",
-    "sample_group_bottomk",
-    "split_train_valid_test",
     "text_ngram_topk",
-    "graph_triangle_count",
-    "sample_weighted",
-    "budget_fill_by_quality",
-    "agg_histogram",
-    "graph_pagerank",
-    # first driver row for the streaming surface (real incremental
-    # execution to a memory sink, exact oracle); displaces
-    # graph_degree_distribution to the r4 window
-    "streaming_sessionize",
-]
-
-
-# Round-4 window (the head this round, flipped per VERDICT r3 #1).
-# Drawn from the never-driver-checked tail per COVERAGE.md's rotation
-# ledger: event analytics, warehouse maintenance, TPC-H battery heads,
-# round-3 cross-set/timeseries/multimodal/spatial additions. Two edits
-# vs the r3-staged list, per VERDICT r3 #6 (the judge expected the
-# streaming pair in this window): streaming_windowed_agg and
-# streaming_dim_join_agg swapped in; try_function_battery and
-# join_null_safe (test-pinned SQL batteries, lowest rotation risk)
-# displaced to the r5 staging.
-WINDOW_R4: list[str] = [
-    "flagship_enrich",
-    "graph_degree_distribution",
-    "funnel_stages",
-    "cohort_retention",
-    "streaks_gaps_islands",
-    "skyline_price_size",
-    "event_path_topk",
-    "attribution_last_touch",
-    "attribution_first_touch",
-    "funnel_stages_windowed",
-    "funnel_time_to_convert",
-    "session_entry_exit",
-    "compaction_bin_plan",
-    "median_exact_groups",
-    "median_exact_udaf",
-    "profile_columns",
-    "incremental_agg_merge",
-    "basket_pair_support",
-    "basket_pair_lift",
-    "snapshot_diff",
-    "rolling_7d_active_users",
-    "skew_key_diagnostics",
-    "dq_constraint_checks",
-    "densify_date_spine",
-    "mom_revenue_growth",
+    "text_winnow_fingerprints",
+    "unpivot_metrics",
+    "variant_extraction",
+    "window_distribution",
+    "window_frames_battery",
     "asof_join_tolerance",
-    "sql_recursive_reachability",
-    "max_concurrent_intervals",
-    "regression_slope_by_nation",
-    "time_weighted_value",
-    "zorder_bucket_stats",
-    "streaming_windowed_agg",
-    "id_gap_ranges",
-    "relational_division",
-    "rfm_segmentation",
-    "streaming_dim_join_agg",
-    "outlier_iqr_by_group",
-    "provenance_file_counts",
+    "attribution_first_touch",
+    "attribution_last_touch",
+    "basket_pair_lift",
+    "basket_pair_support",
+    "cohort_retention",
+    "compaction_bin_plan",
+    "corpus_source_overlap",
     "cumulative_unique_users",
-    "status_transition_matrix",
-    "revenue_concentration_8020",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "tpch_q17_small_quantity_revenue",
     "decontaminate_embedding_lsh",
     "dedup_incremental_minhash",
-    "corpus_source_overlap",
+    "densify_date_spine",
+    "dq_constraint_checks",
+    "event_path_topk",
+    "funnel_stages",
+    "funnel_stages_windowed",
+    "funnel_time_to_convert",
+    "graph_degree_distribution",
+    "id_gap_ranges",
+    "incremental_agg_merge",
+    "max_concurrent_intervals",
+    "median_exact_groups",
+    "median_exact_udaf",
+    "mom_revenue_growth",
     "multimodal_byte_histogram",
-    "spatial_knn_join",
+    "outlier_iqr_by_group",
+    "profile_columns",
+    "provenance_file_counts",
+    "regression_slope_by_nation",
+    "relational_division",
+    "revenue_concentration_8020",
 ]
 
 
@@ -219,12 +98,7 @@ def _released(fn):
         # ContextCleaner can unregister its dead broadcasts -- a
         # long-lived driver session (the correctness driver runs 50
         # queries back to back) otherwise accumulates broadcast blocks.
-        # Gate on env for interactive use (~10-30 ms/call is noise at
-        # 50 queries but real in a tight exploratory loop).
-        if os.environ.get("SPARK_GRAFT_NO_GC", "") != "1":
-            import gc
-
-            gc.collect()
+        gc.collect()
         return fn(spark, sf_dir)
 
     wrapped.__name__ = fn.__name__
@@ -233,597 +107,23 @@ def _released(fn):
     return wrapped
 
 
-for mod in (
-    queries_core,
-    queries_domain,
-    queries_llm,
-    queries_llm2,
-    queries_llm3,
-    queries_llm4,
-    queries_llm5,
-    queries_llm6,
-    queries_llm7,
-    queries_llm8,
-    queries_llm9,
-    queries_llm10,
-    queries_llm11,
-    queries_llm12,
-    queries_llm13,
-    queries_llm14,
-    queries_llm15,
-    queries_llm16,
-    queries_llm17,
-    queries_llm18,
-    queries_llm19,
-    queries_llm20,
-    queries_llm21,
-    queries_llm22,
-    queries_llm23,
-    queries_llm24,
-    queries_llm25,
-    queries_spatial,
-    queries_streaming,
-    queries_surface,
-    queries_surface2,
-    queries_surface3,
-    queries_surface4,
-    queries_surface5,
-    queries_surface6,
-    queries_surface7,
-    queries_surface8,
-    queries_surface9,
-    queries_surface10,
-    queries_surface11,
-    queries_surface12,
-    queries_surface13,
-    queries_tpch,
-):
-    QUERIES.update({k: _released(v) for k, v in mod.QUERIES.items()})
-    ORACLES.update(mod.ORACLES)
+def _natural(name: str) -> list:
+    return [int(p) if p.isdigit() else p for p in re.split(r"(\d+)", name)]
 
-# Round-5 window (the head this round, flipped per VERDICT r4 #1).
-# Covers EVERY query that had never had a driver row at the end of
-# round 4: the TPC-H battery tail, the graph family completion,
-# timeseries/intervals/spatial round-3 additions, the SemDeDup/PQ
-# trio, the e2e curation pipeline, the two batteries displaced from
-# r4, and the round-4 additions. After r5, driver-row union =
-# 208/208 of the r4-registered set; queries ADDED in round 5 are
-# staged in WINDOW_R6_CANDIDATES below (this window is full).
-WINDOW_R5: list[str] = [
-    "flagship_enrich",
-    "dedup_semantic_clusters",
-    "emb_pq_encode",
-    "ann_cosine_pq_adc",
-    "er_blocked_fuzzy_match",
-    "text_line_dedup",
-    "timeseries_gapfill_locf",
-    "text_oov_bigram_rate",
-    "timeseries_gapfill_linear",
-    "timeseries_cusum_changepoint",
-    "pipeline_corpus_curation_e2e",
-    "spatial_bbox_intersect_join",
-    "spatial_polygon_intersect_join",
-    "streaming_stream_stream_join",
-    "graph_label_propagation",
-    "graph_kcore",
-    "graph_common_neighbors_topk",
-    "intervals_merge_overlaps",
-    "weighted_median_exact",
-    "try_function_battery",
-    "join_null_safe",
-    "sample_reservoir_merge",
-    "merge_on_files_cow",
-    "dedup_containment",
-    "streaming_dedup_exact",
-    "spatial_convex_sat_join",
-    "corpus_epoch_shuffle",
-    "attribution_linear_touch",
-    "graph_neighbor_jaccard_topk",
-    "quality_terciles_by_lang",
-    "outlier_mad_by_group",
-    "eval_langid_confusion",
-    "dedup_minhash_calibration",
-    "spatial_pip_holes_join",
-    "pack_efficiency_stats",
-    "orders_backlog_aging",
-    "dq_freshness_by_type",
-    "tpch_q2_best_supplier",
-    "tpch_q4_order_priority_exists",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_profit_by_nation_year",
-    "tpch_q12_shipping_delay_buckets",
-    "tpch_q13_order_count_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_disjunctive_predicates",
-    "tpch_q20_dominant_suppliers",
-]
 
-# Historical windows stay assert-validated (a rename/removal of a
-# pinned query would silently invalidate the rotation ledger); the
-# head reorder itself is done once, below, by the CURRENT window
-# (WINDOW_R6 -- insertion order is the driver's iteration order).
-_missing = [n for n in WINDOW_R5 if n not in QUERIES]
-assert not _missing, f"WINDOW_R5 names not registered: {_missing}"
-assert len(WINDOW_R5) == len(set(WINDOW_R5)) == 50, "window must be exactly 50 unique slots"
-_missing_r4 = [n for n in WINDOW_R4 if n not in QUERIES]
-assert not _missing_r4, f"WINDOW_R4 names not registered: {_missing_r4}"
-assert len(WINDOW_R4) == len(set(WINDOW_R4)) == 50
+_modules = sorted(
+    (m.name for m in pkgutil.iter_modules([os.path.dirname(__file__)])
+     if m.name.startswith("queries_")),
+    key=_natural,
+)
+_all: dict = {}
+ORACLES: dict[str, str] = {}
+for _name in _modules:
+    _mod = importlib.import_module(f".{_name}", __package__)
+    _all.update({k: _released(v) for k, v in _mod.QUERIES.items()})
+    ORACLES.update(_mod.ORACLES)
 
-# Round-6 window (the head this round, flipped per VERDICT r5 #4).
-# Composition: the flagship anchor re-pin, the emb_pq_encode REPAIR
-# re-pin (r5's one red driver row -- output reshaped to scalar
-# (vec_id, sub_id, code) rows per VERDICT r5 #1; the displaced
-# first-time slot corpus_temperature_mixture moved to WINDOW_R7), and
-# 48 first-time round-5 additions. COVERAGE.md's rotation ledger
-# tracks the never-checked set.
-WINDOW_R6: list[str] = [
-    "flagship_enrich",
-    "emb_pq_encode",
-    "spatial_pip_holes_join_grid",
-    # surface7: DQ audits, exact timeseries, sampling, pivot, percentiles
-    "dq_referential_integrity",
-    "dq_uniqueness_violations",
-    "timeseries_ewma_bounded",
-    "timeseries_ohlc_daily",
-    "timeseries_seasonal_naive_error",
-    "sample_systematic",
-    "pivot_event_counts",
-    "percentiles_exact_battery",
-    # llm7: URL/prefix dedup, TF-IDF, Count-Min, embedding stats,
-    # ER resolution, mixture audit
-    "dedup_url_canonicalize",
-    "dedup_truncation_prefix",
-    "text_tfidf_topk",
-    "sketch_countmin_heavy_hitters",
-    "emb_dimension_stats",
-    "er_resolution_clusters",
-    "corpus_mixture_deficit",
-    # streaming: hopping windows
-    "streaming_hopping_window_agg",
-    # graph + warehouse additions
-    "graph_degree_assortativity",
-    "mv_join_delta_maintenance",
-    "window_range_frames",
-    "agg_mode_exact",
-    # llm8 + sequence/interval analytics
-    "quality_ngram_lm_score",
-    "emb_whitening_apply",
-    "text_pii_scrub",
-    "events_sequence_pattern",
-    "intervals_intersection_total",
-    "multimodal_frame_sample_fanout",
-    "audience_overlap_daily",
-    "dq_event_order_inversions",
-    "timeseries_decompose_weekly",
-    "scd2_as_of_read",
-    "ann_recall_eval",
-    # llm9: substring-span dedup, BPE merge stats, RAKE keywords,
-    # deterministic HLL eval, boilerplate strip
-    "dedup_substring_spans",
-    "text_bpe_merge_pairs",
-    "text_rake_keywords",
-    "sketch_hll_distinct_eval",
-    "text_boilerplate_strip",
-    "ann_cosine_ivf_pq",
-    "multimodal_audio_energy_windows",
-    # surface8: equi-depth histogram, purchase cadence, integer z-score
-    "histogram_equi_depth",
-    "customer_interpurchase_stats",
-    "timeseries_zscore_anomaly",
-    # spatial: geohash density map, DBSCAN core points
-    "spatial_geohash_density",
-    "spatial_dbscan_core",
-    # surface8 (cont.): bitemporal read, TVD drift monitor, LTV
-    # curve, Benford audit -- window exactly 50: the flagship anchor
-    # + the emb_pq_encode repair re-pin + 48 first-time
-    "bitemporal_as_of_join",
-    "dq_distribution_drift",
-    "cohort_ltv_curve",
-    "dq_benford_first_digit",
-]
-_missing_r6 = [n for n in WINDOW_R6 if n not in QUERIES]
-assert not _missing_r6, f"WINDOW_R6 names not registered: {_missing_r6}"
-assert len(WINDOW_R6) == len(set(WINDOW_R6)) == 50, "window must be exactly 50 unique slots"
-
-# Round-7 window (the head this round, flipped per VERDICT r6 #1 --
-# the documented rename of WINDOW_R7_CANDIDATES). Exactly 50 unique
-# slots, ALL first-time: the flagship anchor re-pin moved out when the
-# r6 emb_pq_encode repair displaced corpus_temperature_mixture here
-# (flagship stays anchored in WINDOW_R6 and WINDOW_R8, and
-# entry() smoke-checks it every round regardless; the one-round anchor
-# gap is recorded in COVERAGE.md's rotation ledger per ADVICE r6).
-WINDOW_R7: list[str] = [
-    "corpus_temperature_mixture",
-    "ann_truncated_dim_recall_eval",
-    "multimodal_image_ahash_pairs",
-    "pack_length_bucket_waste",
-    "incremental_agg_retract",
-    "er_survivorship_golden",
-    "dq_cross_table_reconciliation",
-    "sketch_countmin_error_eval",
-    "emb_int8_fidelity_eval",
-    "corpus_augment_swap",
-    "hierarchy_rollup_cost",
-    "multimodal_audio_silence_segments",
-    "text_code_switch_detect",
-    "emb_centroid_drift_eval",
-    "dedup_pair_agreement_eval",
-    "sample_balanced_classes",
-    # llm11: governance + lossless set-similarity + sketch eval
-    "privacy_k_anonymity",
-    "privacy_contribution_cap",
-    "dedup_jaccard_prefix_filter",
-    "sketch_bloom_fpr_eval",
-    "schema_evolution_union",
-    # llm12: sketch mergeability, layout economics, span corruption
-    "sketch_hll_merge_rollup",
-    "sketch_histogram_quantile_eval",
-    "corpus_span_corruption",
-    "file_skipping_effectiveness",
-    # llm13: retrieval + metric-learning data prep
-    "text_phrase_search",
-    "dedup_minhash_bbit_eval",
-    "emb_contrastive_pairs",
-    # llm14: sketch set-algebra, weighted sampling, l-diversity
-    "sketch_hll_intersection_eval",
-    "corpus_negative_sampling",
-    "privacy_l_diversity",
-    # streaming: the watermark drop contract, exactly predicted
-    "streaming_late_data_drop",
-    # llm15: phonetic ER blocking + video shot segmentation
-    "er_phonetic_blocking",
-    "multimodal_video_shot_cuts",
-    # llm16: operational honesty reports
-    "dedup_lsh_cap_loss_report",
-    "outlier_winsorized_stats",
-    "events_user_lifecycle_states",
-    "privacy_release_gate",
-    # llm17: corpus QA + pre-flight audits (Gopher rules, Zipf,
-    # compression proxy, threshold sensitivity, survivor bias,
-    # join-explosion and shuffle-balance audits)
-    "quality_gopher_rules",
-    "text_zipf_profile",
-    "text_compression_ratio_proxy",
-    "dedup_threshold_sensitivity",
-    "corpus_dedup_survivor_bias",
-    "join_explosion_audit",
-    "shuffle_partition_balance_report",
-    # surface9: ACF sufficient stats, min/max downsample, norm
-    # outliers, t-closeness, sessionization timeout sensitivity --
-    # window now exactly 50, all first-time
-    "timeseries_acf_lag1",
-    "timeseries_downsample_minmax",
-    "emb_norm_percentile_outliers",
-    "privacy_t_closeness",
-    "sessionization_gap_sensitivity",
-]
-_missing_r7 = [n for n in WINDOW_R7 if n not in QUERIES]
-assert not _missing_r7, f"WINDOW_R7 names not registered: {_missing_r7}"
-# complete at exactly 50 unique slots (the r4-ADVICE ==50 pattern)
-assert len(WINDOW_R7) == len(set(WINDOW_R7)) == 50
-
-# Round-8 window (the head this round, flipped per VERDICT r7 #1 --
-# the documented rename of WINDOW_R8_CANDIDATES). Exactly 50 unique
-# slots: 49 first-time + the flagship anchor re-pin (ADVICE r5:
-# flagship is a re-pin, not a first-time slot). This flip completes
-# 355/355 driver-checked coverage; COVERAGE.md's rotation ledger
-# closes with this window.
-WINDOW_R8: list[str] = [
-    "flagship_enrich",
-    # surface10: native session windows, local clustering, volume
-    # anomaly, nearest as-of
-    "events_session_window_native",
-    "graph_local_clustering",
-    "dq_volume_anomaly_daily",
-    "asof_join_nearest",
-    # llm18: Heaps growth, radius search, shingle sensitivity, DP
-    # sensitivity audit
-    "text_vocab_growth_heaps",
-    "ann_range_search",
-    "dedup_shingle_size_sensitivity",
-    "privacy_histogram_sensitivity",
-    # surface11: repeat-order audit, xcorr ladder, k-anon ladder,
-    # latency percentiles
-    "dq_rapid_repeat_orders",
-    "timeseries_xcorr_lags",
-    "privacy_generalization_ladder",
-    "orders_ship_latency_percentiles",
-    # llm19: mixture diversity, waterfill, fingerprint eval, KMV
-    "corpus_mixture_diversity",
-    "corpus_token_budget_waterfill",
-    "dedup_exact_bytes_vs_norm_eval",
-    "sketch_bottomk_theta_eval",
-    # llm20: coverage, group-size census, fertility, cosine histogram
-    "text_ngram_coverage_vs_reference",
-    "dedup_group_size_histogram",
-    "text_tokenizer_fertility_by_lang",
-    "emb_cosine_histogram_sampled",
-    # surface12: fixed-point decay, incremental distinct MV
-    "customer_decayed_value_fixedpoint",
-    "mv_distinct_delta_maintenance",
-    # llm21: LSH S-curve design (exact integer ppm), stopword matrix
-    "dedup_lsh_s_curve_design",
-    "text_stopword_signal_matrix",
-    "er_blocking_strategy_eval",
-    # surface13: SLA, window batteries, DQ money audit, gap buckets,
-    # forward asof, HHI, weekday profile, returns, lifecycle, cohort
-    "orders_fill_rate_sla",
-    "window_first_last_value_battery",
-    "window_ratio_to_report",
-    "window_lead_lag_battery",
-    "dq_money_precision_audit",
-    "events_gap_time_buckets",
-    "asof_join_forward",
-    "revenue_concentration_hhi",
-    "orders_weekday_profile",
-    "lineitem_return_rate_by_nation",
-    "customers_monthly_lifecycle",
-    "cohort_time_to_first_purchase",
-    # llm22: curriculum, winnow sensitivity, margins, exact emb dedup,
-    # KMV merge proof, truncation curve, source TVD, layout planning,
-    # word lengths, hapax, length percentiles, radius ladder
-    "corpus_curriculum_phases",
-    "dedup_winnow_window_sensitivity",
-    "ann_topk_margin_eval",
-    "dedup_embedding_exact",
-    "sketch_kmv_merge_eval",
-    "pack_truncation_loss_curve",
-    "corpus_source_token_tvd",
-    "layout_partition_size_planning",
-    "text_word_length_histogram",
-    "text_hapax_ratio_by_source",
-    "corpus_length_percentiles_by_lang",
-    "ann_radius_sensitivity",
-]
-_missing_r8 = [n for n in WINDOW_R8 if n not in QUERIES]
-assert not _missing_r8, f"WINDOW_R8 names not registered: {_missing_r8}"
-assert len(WINDOW_R8) == len(set(WINDOW_R8)) == 50
-
-# Round-9 window (the head this round, flipped per VERDICT r8 #1:
-# with first-time coverage complete at 355/355 after r8, the rotation
-# becomes a staleness RE-PIN rotation -- re-earn driver rows oldest
-# first, because the r1/r2 cohort's rows were recorded on code that
-# has since been rewritten under them: the spatial codegen rewrite
-# (r7), the window tie-break rewrite (r7), the LSH cap plumbing (r8),
-# the registry cache-release wrapper, and this round's adaptive-m
-# oracle for dedup_embedding_cosine_lsh).
-#
-# Composition: 47 re-pins + the 3 round-9 additions (VERDICT r8 #6
-# freeze-lift: each lands with oracle twin + recompute test + this
-# head slot + SCALING.md entry in one commit). The re-pins are ALL 11
-# queries whose latest driver row is r1 (computed from the raw
-# CORRECTNESS artifacts) and 36 of the 49 whose latest is r2 --
-# priority to the judge-named reference-parity cohort (j/d/e/f/p),
-# the dedup/ANN block (whose cap plumbing changed in r8 and whose
-# embedding-LSH oracle changed THIS round), the window/sort/events
-# queries (tie-break rewrite r7), and the agg trio. The 13 deferred
-# r2 rows (the 3 rows-only-by-design checks, which re-earn only a
-# weaker row, plus 10 text/sampling queries untouched by any rewrite
-# and pinned by r7 recomputes) are staged for WINDOW_R10 in
-# COVERAGE.md's ledger.
-WINDOW_R9: list[str] = [
-    # --- round-9 additions (first-time slots) ---
-    "decontaminate_incremental_bloom",
-    "pack_bucketed_greedy",
-    "spatial_convex_contains_join",
-    # --- re-pins: latest driver row r1 (the 11 oldest rows) ---
-    "agg_cube",
-    "agg_stats_exact",
-    "asof_join_click_purchase",
-    "date_functions",
-    "json_extraction",
-    "pivot_status_by_segment",
-    "setop_except",
-    "setop_intersect",
-    "setop_semi_anti",
-    "string_functions",
-    "window_rank_battery",
-    # --- re-pins: latest driver row r2 ---
-    "j1_broadcast_inner_join",
-    "j1_integrity_anti_join",
-    "j2_left_join_null",
-    "f2_degenerate_filter",
-    "f4_missing_dim_log",
-    "d1_keep_first_dedup",
-    "d2_content_hash_dedup",
-    "p_scalar_transforms",
-    "p8_element_at",
-    "e1_posexplode_align",
-    "e2_relation_fanout",
-    "e3_union_records",
-    "agg_pricing_summary",
-    "agg_count_distinct",
-    "agg_rollup",
-    "window_topk_per_group",
-    "window_running_sum",
-    "sort_global_topk",
-    "events_windowed_agg",
-    "events_sessionize",
-    "dedup_exact_text",
-    "dedup_minhash_signature",
-    "dedup_minhash_lsh_pairs",
-    "dedup_simhash",
-    "dedup_simhash_hamming_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_cluster_assign",
-    "dedup_cluster_assign_lss",
-    "dedup_keep_representatives",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh",
-    "ann_cosine_topk",
-    "ann_cosine_lsh",
-    "ann_cosine_ivf_sampled",
-    "graph_bfs_hops",
-    "pack_concat_chunks",
-]
-_missing_r9 = [n for n in WINDOW_R9 if n not in QUERIES]
-assert not _missing_r9, f"WINDOW_R9 names not registered: {_missing_r9}"
-assert len(WINDOW_R9) == len(set(WINDOW_R9)) == 50
-# THE head reorder (insertion order is the driver's iteration order).
-QUERIES = {
-    **{n: QUERIES[n] for n in WINDOW_R9},
-    **{n: q for n, q in QUERIES.items() if n not in set(WINDOW_R9)},
-}
-
-# Round-10 window (the head this round, per VERDICT r9 #1 + #5).
-# Composition: the 6 round-10 freeze-lift additions (3 from the
-# round-open commit, 3 from this session -- each landing with oracle
-# twin + recompute + this head slot + SCALING.md entry in one
-# commit), then the 13 re-pins DEFERRED from WINDOW_R9 (the 3
-# rows-only-by-design checks, which re-earn only the weaker row, plus
-# the 10 r2 text/sampling queries untouched by any rewrite), then the
-# 31 oldest remaining rows -- the r3 cohort head, alphabetical.
-# VERDICT r9 #1 staged 13 + 37; the 6 addition slots displace the 6
-# newest of those 37 (split_train_valid_test, sql_api_q11ish,
-# sql_api_q21ish, spatial_pip_join, spatial_pip_join_grid,
-# spatial_pip_nomatch_log lead WINDOW_R11), the same precedence r9
-# applied to its own additions. After this window every driver row is
-# <= 8 rounds old and the rotation continues oldest-first.
-WINDOW_R10: list[str] = [
-    # --- round-10 additions (first-time slots) ---
-    "dedup_minhash_index_refresh",
-    "spatial_simple_poly_intersect_join",
-    "streaming_decontaminate_bloom",
-    "dedup_cluster_incremental",
-    "text_collocations_pmi",
-    "streaming_minhash_refresh",
-    # --- re-pins deferred from WINDOW_R9 (latest row r2) ---
-    "ann_cosine_ivf",
-    "domain_ndjson_lines",
-    "domain_transform_records",
-    "decontaminate_ngram",
-    "emb_quantize_int8",
-    "quality_filter_composite",
-    "sample_stratified",
-    "text_pii_redact",
-    "text_repetition",
-    "tfidf_topk_terms",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_token_stats",
-    # --- re-pins: latest driver row r3 (oldest remaining, A-Z) ---
-    "agg_approx_sketches",
-    "agg_grouping_sets",
-    "agg_histogram",
-    "agg_skew_salted",
-    "array_function_battery",
-    "budget_fill_by_quality",
-    "conditional_agg_battery",
-    "correlated_scalar_subquery",
-    "decontaminate_bloom",
-    "domain_cap_sample",
-    "emb_assign_nearest_prototype",
-    "emb_label_centroids",
-    "graph_pagerank",
-    "graph_sssp_bounded",
-    "graph_triangle_count",
-    "hypertable_rollup_daily",
-    "j_skew_salted_join",
-    "kmeans_lloyd_round",
-    "lateral_topk_orders",
-    "map_column_ops",
-    "merge_upsert",
-    "mixture_resample",
-    "null_semantics_battery",
-    "p7_base62_surrogate",
-    "pack_greedy_bins",
-    "range_join_events",
-    "regexp_battery",
-    "sample_bottomk",
-    "sample_group_bottomk",
-    "sample_weighted",
-    "scd2_dimension",
-]
-_missing_r10 = [n for n in WINDOW_R10 if n not in QUERIES]
-assert not _missing_r10, f"WINDOW_R10 names not registered: {_missing_r10}"
-assert len(WINDOW_R10) == len(set(WINDOW_R10)) == 50
-# THE head reorder (insertion order is the driver's iteration order).
-QUERIES = {
-    **{n: QUERIES[n] for n in WINDOW_R10},
-    **{n: q for n, q in QUERIES.items() if n not in set(WINDOW_R10)},
-}
-
-# Round-11 window (the head this round, per VERDICT r10 #2, executing
-# the WINDOW_R11 staging recorded in COVERAGE.md's round-10 ledger).
-# Composition: dedup_embedding_cosine LEADS for re-certification (its
-# plan changed AFTER its r9 driver row -- the r10 x10 soak's
-# streamed-side BNLJ repartition fix; value-identical, but the row
-# attests the pre-fix plan), then the 6 re-pins displaced from the r10
-# window by the round-10 additions (split_train_valid_test,
-# sql_api_q11ish, sql_api_q21ish, spatial_pip_join,
-# spatial_pip_join_grid, spatial_pip_nomatch_log -- latest row r3),
-# then the oldest remaining rows oldest-first: the 12 other r3-cohort
-# rows and the 31 oldest r4-cohort rows, alphabetical within round
-# (computed from the raw CORRECTNESS_r01..r10 artifacts: max round per
-# query). No first-time slots: round 11 is an optimization round and
-# adds no queries. After this window every driver row is <= 7 rounds
-# old and the rotation continues oldest-first (the remaining 18 r4
-# rows lead WINDOW_R12).
-WINDOW_R11: list[str] = [
-    # --- re-certification lead (plan changed after its r9 row) ---
-    "dedup_embedding_cosine",
-    # --- re-pins displaced from WINDOW_R10 (latest row r3) ---
-    "split_train_valid_test",
-    "sql_api_q11ish",
-    "sql_api_q21ish",
-    "spatial_pip_join",
-    "spatial_pip_join_grid",
-    "spatial_pip_nomatch_log",
-    # --- re-pins: latest driver row r3 (the rest of the cohort, A-Z) ---
-    "sql_api_q22ish",
-    "sql_api_q3",
-    "streaming_sessionize",
-    "text_bpe_token_estimate",
-    "text_chunk_windows",
-    "text_ngram_novelty",
-    "text_ngram_topk",
-    "text_winnow_fingerprints",
-    "unpivot_metrics",
-    "variant_extraction",
-    "window_distribution",
-    "window_frames_battery",
-    # --- re-pins: latest driver row r4 (oldest remaining, A-Z) ---
-    "asof_join_tolerance",
-    "attribution_first_touch",
-    "attribution_last_touch",
-    "basket_pair_lift",
-    "basket_pair_support",
-    "cohort_retention",
-    "compaction_bin_plan",
-    "corpus_source_overlap",
-    "cumulative_unique_users",
-    "decontaminate_embedding_lsh",
-    "dedup_incremental_minhash",
-    "densify_date_spine",
-    "dq_constraint_checks",
-    "event_path_topk",
-    "funnel_stages",
-    "funnel_stages_windowed",
-    "funnel_time_to_convert",
-    "graph_degree_distribution",
-    "id_gap_ranges",
-    "incremental_agg_merge",
-    "max_concurrent_intervals",
-    "median_exact_groups",
-    "median_exact_udaf",
-    "mom_revenue_growth",
-    "multimodal_byte_histogram",
-    "outlier_iqr_by_group",
-    "profile_columns",
-    "provenance_file_counts",
-    "regression_slope_by_nation",
-    "relational_division",
-    "revenue_concentration_8020",
-]
-_missing_r11 = [n for n in WINDOW_R11 if n not in QUERIES]
-assert not _missing_r11, f"WINDOW_R11 names not registered: {_missing_r11}"
-assert len(WINDOW_R11) == len(set(WINDOW_R11)) == 50
-# THE head reorder (insertion order is the driver's iteration order).
-QUERIES = {
-    **{n: QUERIES[n] for n in WINDOW_R11},
-    **{n: q for n, q in QUERIES.items() if n not in set(WINDOW_R11)},
-}
+assert len(set(HEAD)) == 50 and set(HEAD) <= set(_all), (
+    "HEAD must name 50 unique registered queries"
+)
+QUERIES: dict = {n: _all[n] for n in HEAD} | _all
