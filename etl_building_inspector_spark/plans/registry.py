@@ -4,7 +4,7 @@ oracle_sql).
 
 Every registered callable is wrapped to release operator-internal
 persisted blocks (operators/_cache.py) BEFORE building its plan: the
-driver runs many queries (300+ registered) in one long-lived session
+driver runs many queries (200+ registered) in one long-lived session
 and never calls release_persisted() itself, so without this hook the
 self-join caches (LSH buckets, jaccard shingles, CC edge lists)
 accumulate until a default-sized heap OOMs. Releasing at next-query
@@ -123,7 +123,7 @@ for _name in _modules:
     _all.update({k: _released(v) for k, v in _mod.QUERIES.items()})
     ORACLES.update(_mod.ORACLES)
 
-assert len(set(HEAD)) == 50 and set(HEAD) <= set(_all), (
+assert len(HEAD) == len(set(HEAD)) == 50 and set(HEAD) <= set(_all), (
     "HEAD must name 50 unique registered queries"
 )
 QUERIES: dict = {n: _all[n] for n in HEAD} | _all

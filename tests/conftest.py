@@ -25,8 +25,9 @@ SF_DIR = "/root/testdata/sf0.001"
 # -- tests/test_queries_oracle.py (oracle conformance for ALL
 # registered queries at sf0.001), the per-query plan pins in
 # tests/test_plans.py, and every fast unit/golden test -- and finishes
-# in ~14 min (measured 2026-08-18, durations in /tmp and
-# OPTIMIZATION_r11.md). The HEAVY tier (EBI_HEAVY_TESTS=1) adds back:
+# in ~14 min (measured 2026-08-18 with `pytest --durations=0`; the
+# per-test timings were not kept). The HEAVY tier (EBI_HEAVY_TESTS=1)
+# adds back:
 #
 #   * the independent pandas-recompute property layer
 #     (tests/test_r*_properties.py, ~480 s): second-opinion recomputes
@@ -66,13 +67,16 @@ _HEAVY_PATTERNS = [
 ]
 
 
+_HEAVY_REASON = (
+    "heavy tier -- run with EBI_HEAVY_TESTS=1 (driver-budget "
+    "split, VERDICT r10 #1; see tests/conftest.py)"
+)
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("EBI_HEAVY_TESTS") == "1":
         return
-    skip = pytest.mark.skip(
-        reason="heavy tier -- run with EBI_HEAVY_TESTS=1 (driver-budget "
-        "split, VERDICT r10 #1; see tests/conftest.py)"
-    )
+    skip = pytest.mark.skip(reason=_HEAVY_REASON)
     for item in items:
         nid = item.nodeid
         if nid.startswith("tests/"):
@@ -83,6 +87,19 @@ def pytest_collection_modifyitems(config, items):
             for p in _HEAVY_PATTERNS
         ):
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how much of the suite the heavy tier left out, so a default
+    run is never mistaken for a full one."""
+    heavy = sum(
+        1
+        for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple) and _HEAVY_REASON in r.longrepr[2]
+    )
+    terminalreporter.write_line(
+        f"heavy tier: {heavy} tests skipped (run with EBI_HEAVY_TESTS=1)"
+    )
 
 
 @pytest.fixture(scope="session")

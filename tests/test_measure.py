@@ -1,0 +1,51 @@
+"""tools/measure.py, called in-process on the shared test session."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+from etl_building_inspector_spark.operators import _cache, dedup
+
+_spec = importlib.util.spec_from_file_location(
+    "measure",
+    os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "measure.py"),
+)
+measure = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(measure)
+
+QUERY = "flagship_enrich"
+
+
+def test_run_times_and_releases(spark, sf_dir):
+    assert measure.run(spark, QUERY, sf_dir) > 0
+    assert not _cache._PERSISTED and not _cache._CHECKPOINTED
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+
+
+def test_plans_writes_physical_plan(spark, sf_dir, tmp_path):
+    [path] = measure.write_plans(spark, sf_dir, str(tmp_path / "plans"), [QUERY])
+    assert path.endswith(f"{QUERY}.txt")
+    with open(path) as f:
+        assert "Physical Plan" in f.read()
+
+
+def test_profile_reports_jobs_with_stages(spark, sf_dir):
+    wall, jobs = measure.profile(spark, sf_dir, QUERY, "test-measure-profile")
+    assert wall > 0
+    assert jobs
+    assert all(j["group"] == "test-measure-profile" for j in jobs)
+    assert any(j["stage_totals"] for j in jobs)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    measure.print_profile(QUERY, wall, jobs)
+
+
+def test_fanout_switch_round_trips():
+    real = dedup.fan_out_scan
+    measure.fanout_switch(False)
+    try:
+        assert dedup.fan_out_scan is not real
+        assert dedup.fan_out_scan("df") == "df"
+    finally:
+        measure.fanout_switch(True)
+    assert dedup.fan_out_scan is real

@@ -1,0 +1,221 @@
+"""Measure registered queries in one session: timings, interleaved
+A/Bs, physical plans and per-job/per-stage profiles.
+
+Usage:
+  python tools/measure.py [--sf SF_DIR] [--n N] time q [q ...]
+  python tools/measure.py [--sf SF_DIR] [--n N] ab-conf --key K --a V1 --b V2 q [q ...]
+  python tools/measure.py [--sf SF_DIR] [--n N] ab-fanout q [q ...]
+  python tools/measure.py [--sf SF_DIR] plans OUT_DIR [q ...]
+  python tools/measure.py [--sf SF_DIR] [--n N] profile q [q ...]
+
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``. Every timed run goes
+through ``run``: build, action into the ``noop`` sink, then
+``release_persisted()`` and ``gc.collect()``. The session is the
+package's own ``session.get_spark()``.
+
+* ``time``: each query cold, then ``--n`` warm reruns.
+* ``ab-conf``: one warm-up, then ``--n`` rounds alternating the SQL
+  conf ``--key`` between ``--a`` (baseline) and ``--b`` (candidate);
+  best-of-N each (interleaving cancels host drift).
+* ``ab-fanout``: the same A/B with ``operators._parallel.fan_out_scan``
+  disabled (baseline) and enabled.
+* ``plans``: ``explain("formatted")`` of each query (default: the
+  ``bench.py`` headline list) into ``OUT_DIR/<query>.txt``. For
+  before/after evidence, dump into ``.../before`` and ``.../after``.
+* ``profile``: ``--n`` runs per query, each under its own job group;
+  prints every job (duration, tasks) and the stages it ran (task time,
+  CPU time, tasks, shuffle write, spill) from Spark's status store.
+"""
+
+from __future__ import annotations
+
+import argparse
+import gc
+import os
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from etl_building_inspector_spark.operators import _parallel  # noqa: E402
+from etl_building_inspector_spark.operators._cache import (  # noqa: E402
+    release_persisted,
+)
+from etl_building_inspector_spark.plans.registry import QUERIES  # noqa: E402
+from etl_building_inspector_spark.session import get_spark  # noqa: E402
+from perfbench.probes import (  # noqa: E402
+    drain_listener_bus,
+    read_jobs,
+    read_stages,
+)
+
+
+def session(sf_dir: str):
+    """The package session, warmed the way bench.py warms it."""
+    spark = get_spark("measure")
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return spark
+
+
+def run(spark, name: str, sf_dir: str) -> float:
+    """Build + noop-sink action of one query; wall seconds. Releases the
+    query's tracked persists and collects garbage afterwards."""
+    t0 = time.time()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = time.time() - t0
+    release_persisted()
+    gc.collect()
+    return dt
+
+
+def _fmt(xs: list[float]) -> str:
+    return "/".join(f"{x:.2f}" for x in xs)
+
+
+def time_queries(spark, sf_dir: str, names: list[str], n: int) -> None:
+    for name in names:
+        cold = run(spark, name, sf_dir)
+        warm = [run(spark, name, sf_dir) for _ in range(n)]
+        print(f"{name:44s} cold {cold:6.2f}  warm best {min(warm):6.2f} [{_fmt(warm)}]")
+
+
+def ab(spark, sf_dir: str, names: list[str], n: int, set_a, set_b) -> None:
+    """Interleaved A/B, best-of-``n`` each, after one warm-up run. The
+    B setting is left in place."""
+    tot_a = tot_b = 0.0
+    for name in names:
+        run(spark, name, sf_dir)
+        a, b = [], []
+        for _ in range(n):
+            set_a()
+            a.append(run(spark, name, sf_dir))
+            set_b()
+            b.append(run(spark, name, sf_dir))
+        tot_a += min(a)
+        tot_b += min(b)
+        print(
+            f"{name:42s} A min {min(a):6.3f} [{_fmt(a)}]  "
+            f"B min {min(b):6.3f} [{_fmt(b)}]  B speedup {min(a) / min(b):5.2f}x"
+        )
+    print(f"TOTALS: A {tot_a:.2f}  B {tot_b:.2f}  ({tot_a / tot_b:.2f}x)")
+
+
+_FAN_OUT = _parallel.fan_out_scan
+
+
+def _no_fan_out(df):
+    return df
+
+
+def fanout_switch(on: bool) -> None:
+    """Enable or disable fan_out_scan in every package module holding it
+    by name (query modules import it from ``_parallel`` inside their
+    builders, so patching ``_parallel`` covers those)."""
+    fn = _FAN_OUT if on else _no_fan_out
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith("etl_building_inspector_spark"):
+            if getattr(mod, "fan_out_scan", None) in (_FAN_OUT, _no_fan_out):
+                mod.fan_out_scan = fn
+
+
+def write_plans(spark, sf_dir: str, out_dir: str, names: list[str]) -> list[str]:
+    """``explain("formatted")`` of each query into OUT_DIR/<query>.txt."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    paths = []
+    for name in names:
+        plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().explainString(mode)
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        release_persisted()
+        paths.append(path)
+        print(f"wrote {path} ({len(plan)} chars)")
+    return paths
+
+
+def profile(spark, sf_dir: str, name: str, group: str) -> tuple[float, list[dict]]:
+    """One ``run`` under job group ``group``: its wall seconds and its
+    jobs in id order, each with ``stage_totals`` for the stages it ran."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        wall = run(spark, name, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    drain_listener_bus(spark)
+    stages = read_stages(spark)
+    jobs = []
+    for jid, job in sorted(read_jobs(spark).items()):
+        if job["group"] != group:
+            continue
+        ran = {s: stages[s] for s in job["stages"] if stages.get(s, {}).get("ran")}
+        jobs.append(dict(job, id=jid, stage_totals=ran))
+    return wall, jobs
+
+
+def print_profile(name: str, wall: float, jobs: list[dict]) -> None:
+    print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
+    for j in jobs:
+        dur = j["completed"] - j["submitted"]
+        print(f"job {j['id']:4d} {dur:7.3f}s  tasks={j['tasks']:4d}  failed={j['failed_tasks']}")
+        for sid, s in sorted(j["stage_totals"].items()):
+            print(
+                f"   stage {sid:4d} taskTime={s['run_s']:7.2f}s cpu={s['cpu_s']:7.2f}s "
+                f"n={s['tasks']:4d} sw={s['shuffle_write_b'] / 1e6:7.1f}MB "
+                f"spill={s['spill_b'] / 1e6:7.1f}MB"
+            )
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    ap.add_argument("--n", type=int, default=3, help="runs per query / A-B side")
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    for cmd in ("time", "ab-fanout", "profile"):
+        sub.add_parser(cmd).add_argument("queries", nargs="+")
+    p = sub.add_parser("ab-conf")
+    p.add_argument("--key", required=True)
+    p.add_argument("--a", required=True, help="baseline value")
+    p.add_argument("--b", required=True, help="candidate value")
+    p.add_argument("queries", nargs="+")
+    p = sub.add_parser("plans")
+    p.add_argument("out_dir")
+    p.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if not args.sf:
+        ap.error("--sf or $SPARK_GRAFT_SF_DIR is required")
+
+    spark = session(args.sf)
+    if args.cmd == "time":
+        time_queries(spark, args.sf, args.queries, args.n)
+    elif args.cmd == "ab-conf":
+        ab(
+            spark, args.sf, args.queries, args.n,
+            lambda: spark.conf.set(args.key, args.a),
+            lambda: spark.conf.set(args.key, args.b),
+        )
+    elif args.cmd == "ab-fanout":
+        ab(
+            spark, args.sf, args.queries, args.n,
+            lambda: fanout_switch(False),
+            lambda: fanout_switch(True),
+        )
+    elif args.cmd == "plans":
+        from bench import HEADLINE
+
+        write_plans(spark, args.sf, args.out_dir, args.queries or HEADLINE)
+    else:
+        for name in args.queries:
+            for it in range(args.n):
+                wall, jobs = profile(spark, args.sf, name, f"measure-{name}-{it}")
+                print_profile(f"{name} run{it}", wall, jobs)
+
+
+if __name__ == "__main__":
+    main()
