@@ -1,21 +1,1 @@
-from .ids import base62_of_hex, md5_surrogate, synth_id
-from .text import (
-    fingerprint,
-    lang_scores,
-    normalize_text,
-    quality_features,
-    shingles,
-    tokens,
-)
-
-__all__ = [
-    "base62_of_hex",
-    "md5_surrogate",
-    "synth_id",
-    "fingerprint",
-    "lang_scores",
-    "normalize_text",
-    "quality_features",
-    "shingles",
-    "tokens",
-]
+"""Column-expression functions, one family per submodule (import e.g. ``functions.text``)."""

@@ -1,61 +1,1 @@
-from .dedup import (
-    exact_dedup,
-    keep_first,
-    minhash_signature,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash,
-)
-from .joins import (
-    broadcast_lookup_join,
-    integrity_check,
-    left_join_with_log,
-    salted_join,
-)
-from .multimodal import extract_media_features, synth_media
-from .rangejoin import range_join_bucketed
-from .rollup import hypertable_rollup, rollup_base, rollup_coarser
-from .scd import merge_upsert, scd2_apply
-from .similarity import (
-    cosine_topk_bruteforce,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
-    lsh_buckets,
-    with_cosine,
-)
-from .spatial import (
-    point_in_polygon,
-    point_in_polygon_with_holes,
-    spatial_join_broadcast,
-    spatial_join_grid,
-)
-
-__all__ = [
-    "exact_dedup",
-    "keep_first",
-    "minhash_signature",
-    "minhash_lsh_pairs",
-    "ngram_jaccard_pairs",
-    "simhash",
-    "broadcast_lookup_join",
-    "integrity_check",
-    "left_join_with_log",
-    "salted_join",
-    "extract_media_features",
-    "synth_media",
-    "range_join_bucketed",
-    "hypertable_rollup",
-    "rollup_base",
-    "rollup_coarser",
-    "merge_upsert",
-    "scd2_apply",
-    "cosine_topk_bruteforce",
-    "cosine_topk_ivf",
-    "cosine_topk_lsh",
-    "lsh_buckets",
-    "with_cosine",
-    "point_in_polygon",
-    "point_in_polygon_with_holes",
-    "spatial_join_broadcast",
-    "spatial_join_grid",
-]
+"""Distributed operators, one family per submodule (import e.g. ``operators.dedup``)."""

@@ -61,31 +61,3 @@ def left_join_with_log(
     logs = joined.filter(F.col(null_col).isNull()).select(error_expr.alias("error"))
     return joined, logs
 
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-buster for fact-fact joins on hot keys: the fact side gets
-    a random-ish salt bucket (deterministic: key-independent hash of a
-    row id would break co-location, so we hash a secondary column --
-    here monotonically_increasing_id is fine because ONLY the fact side
-    fans out), the build side replicates `salt` ways. The shuffle then
-    spreads a hot key over `salt` reducers.
-
-    Prefer AQE's skew-join handling (on in session.py) when it
-    triggers; this operator is for the cases it can't see, e.g. a skewed
-    key feeding a window or a non-AQE engine path. Cost: build side
-    x salt.
-    """
-    fact_s = fact.withColumn(
-        "__salt", (F.abs(F.hash(F.monotonically_increasing_id())) % salt)
-    )
-    dim_s = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    out = fact_s.join(dim_s, [key, "__salt"], how)
-    return out.drop("__salt")

@@ -35,6 +35,12 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine of two array columns, dot / (norm * norm): the expression
+    every HOF cosine in this module builds, so plans stay identical."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
 def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
     """Arrow-vectorized cosine between two array columns — bit-exact
     twin of the HOF expression dot/(sqrt(na)*sqrt(nb)) and of the
@@ -78,7 +84,7 @@ def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame
     # unrounded: identical sequential folds yield bit-identical doubles
     # in Spark and the DuckDB list_reduce oracle; round() is not
     # engine-portable at half-boundaries.
-    return df.withColumn(out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))))
+    return df.withColumn(out, _cosine(F.col(a), F.col(b)))
 
 
 def cosine_topk_bruteforce(
@@ -110,10 +116,7 @@ def cosine_topk_bruteforce(
     sim = joined.select(
         "query_id",
         "neighbor_id",
-        (
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (_norm(F.col("__qvec")) * _norm(F.col("__cvec")))
-        ).alias("cosine"),
+        _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     ).filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -392,8 +395,7 @@ def embedding_neardup_lsh(
     else:
         scored = joined.withColumn(
             "cosine",
-            _dot(F.col("__va"), F.col("__vb"))
-            / (_norm(F.col("__va")) * _norm(F.col("__vb"))),
+            _cosine(F.col("__va"), F.col("__vb")),
         )
     return scored.filter(F.col("cosine") >= threshold).select(
         "id_a", "id_b", "cosine"
@@ -456,10 +458,7 @@ def cosine_topk_lsh(
         sim = joined.select(
             "query_id",
             "neighbor_id",
-            (
-                _dot(F.col("__qvec"), F.col("__cvec"))
-                / (_norm(F.col("__qvec")) * _norm(F.col("__cvec")))
-            ).alias("cosine"),
+            _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
         )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -559,10 +558,7 @@ def cosine_topk_ivf(
     sim = joined.select(
         "query_id",
         "neighbor_id",
-        (
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (_norm(F.col("__qvec")) * _norm(F.col("__cvec")))
-        ).alias("cosine"),
+        _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -655,9 +651,6 @@ def _ivf_sampled_candidates(
         .limit(n_centroids)
     )
 
-    def _cos(a: Column, b: Column) -> Column:
-        return _dot(a, b) / (_norm(a) * _norm(b))
-
     w_assign = Window.partitionBy("__id").orderBy(
         F.col("__cc").desc(), F.col("cent_id").asc()
     )
@@ -666,7 +659,7 @@ def _ivf_sampled_candidates(
             corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
         )
         .crossJoin(F.broadcast(cent))
-        .withColumn("__cc", _cos(F.col("__v"), F.col("__cv")))
+        .withColumn("__cc", _cosine(F.col("__v"), F.col("__cv")))
         .withColumn("__arnk", F.row_number().over(w_assign))
         .filter(F.col("__arnk") == 1)
         .select(F.col("__id").alias("neighbor_id"), "cent_id")
@@ -677,7 +670,7 @@ def _ivf_sampled_candidates(
     probes = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
         .crossJoin(F.broadcast(cent))
-        .withColumn("__qc", _cos(F.col("__qv"), F.col("__cv")))
+        .withColumn("__qc", _cosine(F.col("__qv"), F.col("__cv")))
         .withColumn("__prnk", F.row_number().over(w_probe))
         .filter(F.col("__prnk") <= n_probe)
         .select("query_id", "cent_id")
@@ -717,9 +710,6 @@ def cosine_topk_ivf_sampled(
         corpus, queries, vec_col, id_col, n_centroids, n_probe, salt
     )
 
-    def _cos(a: Column, b: Column) -> Column:
-        return _dot(a, b) / (_norm(a) * _norm(b))
-
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
     sims = (
@@ -728,7 +718,7 @@ def cosine_topk_ivf_sampled(
         .select(
             "query_id",
             "neighbor_id",
-            _cos(F.col("__qv"), F.col("__nv")).alias("cosine"),
+            _cosine(F.col("__qv"), F.col("__nv")).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -874,9 +864,6 @@ def semantic_dedup_sampled(
         .limit(n_centroids)
     )
 
-    def _cos(a: Column, b: Column) -> Column:
-        return _dot(a, b) / (_norm(a) * _norm(b))
-
     w_assign = Window.partitionBy("__id").orderBy(
         F.col("__cc").desc(), F.col("cent_id").asc()
     )
@@ -885,7 +872,7 @@ def semantic_dedup_sampled(
             corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
         )
         .crossJoin(F.broadcast(cent))
-        .withColumn("__cc", _cos(F.col("__v"), F.col("__cv")))
+        .withColumn("__cc", _cosine(F.col("__v"), F.col("__cv")))
         .withColumn("__arnk", F.row_number().over(w_assign))
         .filter(F.col("__arnk") == 1)
         .select("__id", "__v", "cent_id")
@@ -906,7 +893,7 @@ def semantic_dedup_sampled(
     dominated = (
         a.join(b, "cent_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(_cos(F.col("__va"), F.col("__vb")) >= F.lit(tau))
+        .filter(_cosine(F.col("__va"), F.col("__vb")) >= F.lit(tau))
         .select("id_b")
         .distinct()
     )
@@ -1073,16 +1060,13 @@ def pq_adc_topk(
     ).select(F.col(id_col).alias("neighbor_id"), "recon")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
 
-    def _cos(a: Column, b: Column) -> Column:
-        return _dot(a, b) / (_norm(a) * _norm(b))
-
     sims = (
         enc.crossJoin(F.broadcast(qv))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            _cos(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
+            _cosine(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1198,10 +1182,7 @@ def probe_ivf_index(
     sim = joined.select(
         "query_id",
         "neighbor_id",
-        (
-            _dot(F.col("__qvec"), F.col("__cvec"))
-            / (_norm(F.col("__qvec")) * _norm(F.col("__cvec")))
-        ).alias("cosine"),
+        _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -1243,9 +1224,6 @@ def cosine_topk_ivf_pq(
     corpus-sized shuffles are the two argmin windows keyed by id.
     """
 
-    def _cos(a: Column, b: Column) -> Column:
-        return _dot(a, b) / (_norm(a) * _norm(b))
-
     cand = _ivf_sampled_candidates(
         corpus, queries, vec_col, id_col, n_centroids, n_probe, cent_salt
     )
@@ -1260,7 +1238,7 @@ def cosine_topk_ivf_pq(
         .select(
             "query_id",
             "neighbor_id",
-            _cos(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
+            _cosine(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -24,19 +24,7 @@ from ..functions.timeutil import epoch_micros
 from ..operators.dedup import keep_first
 from ..operators.joins import broadcast_lookup_join, left_join_with_log
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # exact integer money domain: x has <=2 decimals -> bigint cents.
@@ -70,7 +58,7 @@ WHERE l.l_shipdate >= TIMESTAMP '1995-01-01' AND l.l_quantity > 30
 """
 
 
-@_q("flagship_enrich", _FLAGSHIP_SQL)
+@query("flagship_enrich", _FLAGSHIP_SQL)
 def flagship_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -107,7 +95,7 @@ def flagship_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "j1_broadcast_inner_join",
     """
 SELECT CAST(o.o_orderkey AS BIGINT) AS order_key,
@@ -138,7 +126,7 @@ def j1_broadcast_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "j1_integrity_anti_join",
     """
 SELECT CAST(o.o_orderkey AS BIGINT) AS order_key
@@ -189,7 +177,7 @@ def _j2_joined(spark: SparkSession, sf_dir: str):
     )
 
 
-@_q("j2_left_join_null", _J2_SQL)
+@query("j2_left_join_null", _J2_SQL)
 def j2_left_join_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined, _ = _j2_joined(spark, sf_dir)
     return joined.select(
@@ -199,7 +187,7 @@ def j2_left_join_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "f4_missing_dim_log",
     """
 SELECT concat('Can''t find customer for order ', o.o_orderkey) AS error
@@ -220,7 +208,7 @@ def f4_missing_dim_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "d1_keep_first_dedup",
     """
 WITH stream AS (
@@ -258,7 +246,7 @@ def d1_keep_first_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "d2_content_hash_dedup",
     """
 SELECT md5(concat_ws(',', p_type, p_brand)) AS content_key,
@@ -287,7 +275,7 @@ def d2_content_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "p_scalar_transforms",
     """
 SELECT
@@ -331,7 +319,7 @@ def p_scalar_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "p8_element_at",
     """
 SELECT CAST(vec_id AS BIGINT) AS vec_id,
@@ -359,7 +347,7 @@ def p8_element_at(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "e1_posexplode_align",
     """
 SELECT CAST(p_partkey AS BIGINT) AS part_key,
@@ -394,7 +382,7 @@ def e1_posexplode_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "e2_relation_fanout",
     """
 SELECT concat('order/', o_orderkey) AS rel_from,
@@ -434,7 +422,7 @@ def e2_relation_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "e3_union_records",
     """
 SELECT 'object' AS record_type,
@@ -493,7 +481,7 @@ def e3_union_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "f2_degenerate_filter",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -522,7 +510,7 @@ def f2_degenerate_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "agg_pricing_summary",
     """
 SELECT l_returnflag, l_linestatus,
@@ -556,7 +544,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "agg_count_distinct",
     """
 SELECT l_returnflag,
@@ -576,7 +564,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "agg_rollup",
     """
 SELECT l_returnflag, l_linestatus,
@@ -599,7 +587,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "window_topk_per_group",
     """
 SELECT CAST(o_custkey AS BIGINT) AS cust_key,
@@ -630,7 +618,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "window_running_sum",
     """
 SELECT CAST(l_suppkey AS BIGINT) AS supp_key,
@@ -667,7 +655,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "sort_global_topk",
     """
 SELECT CAST(l_orderkey AS BIGINT) AS order_key,
@@ -701,7 +689,7 @@ def sort_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "events_windowed_agg",
     """
 SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
@@ -732,7 +720,7 @@ def events_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "events_sessionize",
     """
 WITH gaps AS (

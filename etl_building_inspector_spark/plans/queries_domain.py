@@ -12,18 +12,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 def _landing() -> dict[str, str]:
@@ -55,7 +44,7 @@ def _landing() -> dict[str, str]:
     }
 
 
-@_q("domain_transform_records")
+@query("domain_transform_records")
 def domain_transform_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's entire transform step as one DataFrame: objects +
     relations + logs (building-inspector.js:371-412). sf_dir is unused
@@ -86,7 +75,7 @@ def domain_transform_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("domain_ndjson_lines")
+@query("domain_ndjson_lines")
 def domain_ndjson_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 sink shape: every record rendered as the reference's NDJSON
     {type, obj} line."""

@@ -37,6 +37,7 @@ from ..operators.similarity import (
     lsh_planes,
 )
 from ..sources.tables import load_table
+from .registry import query
 
 # LSH geometry shared by the Spark plans AND the generated DuckDB
 # oracles below -- single source of truth, the two sides cannot drift.
@@ -50,19 +51,6 @@ NEARDUP_THRESHOLD = 0.35
 NEARDUP_BUCKET_CAP = 32
 MINHASH_BUCKET_CAP = 16
 JACCARD_DF_CAP = 32
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 # --- shared SQL fragments (twins of functions/text.py) ---------------------
@@ -90,7 +78,7 @@ def _stop_hits_sql(toks: str, words: tuple[str, ...]) -> str:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "text_token_stats",
     f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
@@ -146,7 +134,7 @@ FROM s
 """
 
 
-@_q("text_lang_id", _lang_id_sql())
+@query("text_lang_id", _lang_id_sql())
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.withColumn("__toks", tokens("text"))
@@ -156,7 +144,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "text_fingerprint",
     f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -201,7 +189,7 @@ def _docs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(mutated)
 
 
-@_q(
+@query(
     "dedup_exact_text",
     f"""
 WITH {_DOCS_WITH_DUPS_SQL.strip()}
@@ -232,7 +220,7 @@ FROM sh
 """
 
 
-@_q("dedup_minhash_signature", _minhash_sig_sql())
+@query("dedup_minhash_signature", _minhash_sig_sql())
 def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sig = minhash_signature(docs, "text", k=8, shingle_n=3)
@@ -278,7 +266,7 @@ FROM b2 a JOIN b2 b
 """
 
 
-@_q("dedup_minhash_lsh_pairs", _minhash_lsh_sql())
+@query("dedup_minhash_lsh_pairs", _minhash_lsh_sql())
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_dups(spark, sf_dir)
     pairs = minhash_lsh_pairs(
@@ -314,7 +302,7 @@ FROM t
 """
 
 
-@_q("dedup_simhash", _simhash_sql())
+@query("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return simhash(docs, "text", bits=16).select(
@@ -348,7 +336,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 """
 
 
-@_q("dedup_simhash_hamming_pairs", _simhash_pairs_sql())
+@query("dedup_simhash_hamming_pairs", _simhash_pairs_sql())
 def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup PAIRS: banded bit-slice blocking + exact
     popcount(xor) filter (operators/dedup.simhash_hamming_pairs).
@@ -387,7 +375,7 @@ WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= {threshold}
 """
 
 
-@_q("dedup_ngram_jaccard", _jaccard_sql())
+@query("dedup_ngram_jaccard", _jaccard_sql())
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_dups(spark, sf_dir)
     pairs = ngram_jaccard_pairs(
@@ -454,7 +442,7 @@ QUALIFY rank <= {k}
 """
 
 
-@_q("ann_cosine_topk", _ann_sql())
+@query("ann_cosine_topk", _ann_sql())
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -531,7 +519,7 @@ QUALIFY rank <= {k}
 """
 
 
-@_q("ann_cosine_lsh", _ann_lsh_sql())
+@query("ann_cosine_lsh", _ann_lsh_sql())
 def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-green oracle: the DuckDB twin regenerates the hyperplanes
     from the same seeds. Recall >= 0.8 vs brute force is additionally
@@ -614,7 +602,7 @@ QUALIFY rank <= {k}
 """
 
 
-@_q("ann_cosine_ivf_sampled", _ivf_sampled_sql())
+@query("ann_cosine_ivf_sampled", _ivf_sampled_sql())
 def ann_cosine_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with md5-sampled centroids: same inverted-file shape as
     the KMeans variant but fully deterministic, so the whole pipeline
@@ -638,7 +626,7 @@ def ann_cosine_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ann_cosine_ivf")  # rows-only: KMeans centroids aren't SQL-expressible
+@query("ann_cosine_ivf")  # rows-only: KMeans centroids aren't SQL-expressible
 def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (KMeans coarse quantization + multi-probe); recall vs
     brute force pinned in tests/test_similarity.py."""
@@ -655,7 +643,7 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "dedup_embedding_cosine",
     f"""
 SELECT CAST(a.vec_id AS BIGINT) AS id_a,
@@ -807,7 +795,7 @@ WHERE {_EMB_DOT} / ({_EMB_NORM_A} * {_EMB_NORM_B}) >= {threshold}
 """
 
 
-@_q("dedup_embedding_cosine_lsh", _neardup_lsh_sql())
+@query("dedup_embedding_cosine_lsh", _neardup_lsh_sql())
 def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scale-safe registered form of embedding near-dup (VERDICT r01
     item 2): LSH bucket candidates (equi-join on (table, bucket), hot
@@ -870,7 +858,7 @@ GROUP BY j.lang_true, j.lang_pred
 """
 
 
-@_q("eval_langid_confusion", _langid_confusion_sql())
+@query("eval_langid_confusion", _langid_confusion_sql())
 def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix (lang_true x lang_pred) with per-true-label
     recall in ppm. One narrow classification pass rides the document
@@ -938,7 +926,7 @@ JOIN sh2 hb ON p.id_b = hb.doc_id
 """
 
 
-@_q("dedup_minhash_calibration", _minhash_calibration_sql())
+@query("dedup_minhash_calibration", _minhash_calibration_sql())
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimate-vs-exact per LSH pair. The Spark plan computes
     signatures once (narrow fold), derives candidate pairs through

@@ -15,19 +15,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .queries_llm import _DOT_SQL, _TOKS
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants
@@ -50,7 +38,7 @@ PACK_BATCH = 8
 def _trunc_recall_sql() -> str:
     from . import queries_llm as _llm
 
-    full = _llm.ORACLES["ann_cosine_topk"].strip()
+    full = _llm._ann_sql().strip()
     dot_qc = _DOT_SQL.format(a="qe", b="ce")
     dot_qq = _DOT_SQL.format(a="qe", b="qe")
     dot_cc = _DOT_SQL.format(a="ce", b="ce")
@@ -83,7 +71,7 @@ ORDER BY f.query_id
 """
 
 
-@_q("ann_truncated_dim_recall_eval", _trunc_recall_sql())
+@query("ann_truncated_dim_recall_eval", _trunc_recall_sql())
 def ann_truncated_dim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall of 16-dim truncated cosine top-k vs the 64-dim
     ground truth: the measurement that decides whether a serving tier
@@ -94,7 +82,7 @@ def ann_truncated_dim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     from . import queries_llm as _llm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    full = _llm.QUERIES["ann_cosine_topk"](spark, sf_dir).select(
+    full = _llm.ann_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
     te = emb.select(
@@ -225,7 +213,7 @@ def _synth_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("multimodal_image_ahash_pairs", _ahash_pairs_sql())
+@query("multimodal_image_ahash_pairs", _ahash_pairs_sql())
 def multimodal_image_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup pairs: aHash through the Arrow kernel, 16-bit
     band equi-join for candidates, exact hamming refine. At hamming
@@ -298,7 +286,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-@_q("pack_length_bucket_waste", _PACK_BUCKET_SQL)
+@query("pack_length_bucket_waste", _PACK_BUCKET_SQL)
 def pack_length_bucket_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Padding waste under power-of-two length bucketing: per bucket,
     exact token mass vs padded capacity in ppm. The bucket id comes
@@ -371,7 +359,7 @@ ORDER BY canonical_key
 """
 
 
-@_q("er_survivorship_golden", _survivorship_sql())
+@query("er_survivorship_golden", _survivorship_sql())
 def er_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden record per merged entity: longest-name survivorship with
     total tiebreaks, over the transitive-merge clusters. Plan shape:
@@ -380,7 +368,7 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster partition."""
     from . import queries_llm7 as _llm7
 
-    cc = _llm7.QUERIES["er_resolution_clusters"](spark, sf_dir)
+    cc = _llm7.er_resolution_clusters(spark, sf_dir)
     part = load_table(spark, sf_dir, "part")
     names = part.groupBy("p_name").agg(F.min("p_partkey").alias("rep_key"))
     members = cc.join(
@@ -459,7 +447,7 @@ FROM est ORDER BY n_exact DESC, bigram
 """
 
 
-@_q("sketch_countmin_error_eval", _cm_error_sql())
+@query("sketch_countmin_error_eval", _cm_error_sql())
 def sketch_countmin_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CM overestimate per true heavy hitter, in exact counts and ppm
     -- the acceptance number that sizes (d, w) before trusting the
@@ -555,7 +543,7 @@ FROM s ORDER BY vec_id
 """
 
 
-@_q("emb_int8_fidelity_eval", _int8_fidelity_sql())
+@query("emb_int8_fidelity_eval", _int8_fidelity_sql())
 def emb_int8_fidelity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector cosine fidelity of symmetric int8 quantization --
     the number that decides whether the 4x-smaller index is safe to
@@ -638,7 +626,7 @@ FROM aug ORDER BY doc_id
 """
 
 
-@_q("corpus_augment_swap", _AUG_SQL)
+@query("corpus_augment_swap", _AUG_SQL)
 def corpus_augment_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible token-swap augmentation: positions derived from
     doc_id, so the augmented corpus is a pure function of the input
@@ -710,7 +698,7 @@ ORDER BY key, seg_start
 """
 
 
-@_q("multimodal_audio_silence_segments", _silence_sql())
+@query("multimodal_audio_silence_segments", _silence_sql())
 def multimodal_audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Below-mean-energy windows merged into contiguous silence
     segments (islands): kernel windows -> two per-key window
@@ -804,7 +792,7 @@ ORDER BY doc_id
 """
 
 
-@_q("text_code_switch_detect", _code_switch_sql())
+@query("text_code_switch_detect", _code_switch_sql())
 def text_code_switch_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-window language votes over 10-token windows, doc-level
     code-switching flag when >= 2 languages win. Same deterministic
@@ -895,7 +883,7 @@ ORDER BY label
 """
 
 
-@_q("emb_centroid_drift_eval", _centroid_drift_sql())
+@query("emb_centroid_drift_eval", _centroid_drift_sql())
 def emb_centroid_drift_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid L1 drift between two deterministic halves of
     the corpus: per-dim mean difference cross-multiplied into exact
@@ -963,8 +951,8 @@ def emb_centroid_drift_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pair_agreement_sql() -> str:
     from . import queries_llm as _llm
 
-    lsh = _llm.ORACLES["dedup_minhash_lsh_pairs"].strip()
-    jac = _llm.ORACLES["dedup_ngram_jaccard"].strip()
+    lsh = _llm._minhash_lsh_sql().strip()
+    jac = _llm._jaccard_sql().strip()
     return f"""
 WITH lsh AS (
 {lsh}
@@ -984,7 +972,7 @@ FROM tp
 """
 
 
-@_q("dedup_pair_agreement_eval", _pair_agreement_sql())
+@query("dedup_pair_agreement_eval", _pair_agreement_sql())
 def dedup_pair_agreement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row agreement summary between the LSH candidate pairs and
     the DF-capped exact-Jaccard pairs (both registered strategies
@@ -992,10 +980,10 @@ def dedup_pair_agreement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set); counts and ppms are exact."""
     from . import queries_llm as _llm
 
-    lsh = _llm.QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir).select(
+    lsh = _llm.dedup_minhash_lsh_pairs(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    jac = _llm.QUERIES["dedup_ngram_jaccard"](spark, sf_dir).select(
+    jac = _llm.dedup_ngram_jaccard(spark, sf_dir).select(
         "id_a", "id_b"
     )
     from ..operators._cache import track_persist
@@ -1051,7 +1039,7 @@ ORDER BY label
 """
 
 
-@_q("sample_balanced_classes", _BAL_SQL)
+@query("sample_balanced_classes", _BAL_SQL)
 def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downsample every label to the minority-class count with a
     deterministic md5-ranked pick. Plan shape: one bounded groupBy for

@@ -28,19 +28,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .queries_llm import _DOCS_WITH_DUPS_SQL, _NORM, _TOKS, _docs_with_dups, _shingles_sql
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants
@@ -78,7 +66,7 @@ ORDER BY c_nationkey, c_mktsegment, bal_band
 """
 
 
-@_q("privacy_k_anonymity", _kanon_sql())
+@query("privacy_k_anonymity", _kanon_sql())
 def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quasi-identifier group-size audit: every (nation, segment,
     balance-band) cell with fewer than K members — the k-anonymity
@@ -136,7 +124,7 @@ ORDER BY t.month
 """
 
 
-@_q("privacy_contribution_cap", _contrib_sql())
+@query("privacy_contribution_cap", _contrib_sql())
 def privacy_contribution_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user contribution bounding: each customer keeps only their
     CONTRIB_CAP earliest orders (orderdate, orderkey tiebreak), then
@@ -225,7 +213,7 @@ WHERE 100 * inter_sh >= {t} * (s_a + s_b - inter_sh)
 """
 
 
-@_q("dedup_jaccard_prefix_filter", _prefix_filter_sql())
+@query("dedup_jaccard_prefix_filter", _prefix_filter_sql())
 def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs with shingle-set Jaccard >= 0.6, found WITHOUT a
     doc-frequency cap and WITHOUT all-pairs: AllPairs prefix filtering
@@ -293,7 +281,7 @@ FROM hits WHERE n_hit = {BLOOM_K}
 """
 
 
-@_q("sketch_bloom_fpr_eval", _bloom_sql())
+@query("sketch_bloom_fpr_eval", _bloom_sql())
 def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Realized Bloom-filter false-positive rate: members = even-doc
     fingerprints hashed into BLOOM_BITS bits by BLOOM_K md5 slices;
@@ -398,7 +386,7 @@ ORDER BY src_version
 """
 
 
-@_q("schema_evolution_union", _schema_union_sql())
+@query("schema_evolution_union", _schema_union_sql())
 def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName(allowMissingColumns=True) over two schema versions
     of the same table — v1 files predate the status column, v2 files

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm9 import _HLL_NUM, HLL_M, HLL_VBITS, _hll_exprs
+from .registry import query
 
 # z-denominator building blocks derived from the llm9 constants (a
 # retune of HLL_M/HLL_VBITS there must flow through here, or the
@@ -36,19 +37,6 @@ from .queries_llm9 import _HLL_NUM, HLL_M, HLL_VBITS, _hll_exprs
 # passes)
 _HLL_SHIFT = HLL_VBITS + 1  # rho in [1, SHIFT]; weight of rho=r is 2^(SHIFT-r)
 _HLL_EMPTY = 2**_HLL_SHIFT  # an absent register contributes 2^SHIFT (rho = 0)
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 # shared constants
@@ -121,7 +109,7 @@ ORDER BY s.event_type
 """
 
 
-@_q("sketch_hll_merge_rollup", _hll_rollup_sql())
+@query("sketch_hll_merge_rollup", _hll_rollup_sql())
 def sketch_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL mergeability as data: per-month register shards max-merged
     vs registers built directly on all events — z-denominators and
@@ -242,7 +230,7 @@ ORDER BY o_orderpriority
 """
 
 
-@_q("sketch_histogram_quantile_eval", _hist_quantile_sql())
+@query("sketch_histogram_quantile_eval", _hist_quantile_sql())
 def sketch_histogram_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median from a 16-bin equi-width histogram vs the exact lower
     median, per order priority — histogram-quantile error as
@@ -381,7 +369,7 @@ ORDER BY doc_id
 """
 
 
-@_q("corpus_span_corruption", _span_sql())
+@query("corpus_span_corruption", _span_sql())
 def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic T5 span corruption: md5-derived span starts and
     lengths, overlapping spans merged into one sentinel, corrupted
@@ -504,7 +492,7 @@ ORDER BY z.layout, p.pred_id
 """
 
 
-@_q("file_skipping_effectiveness", _skip_sql())
+@query("file_skipping_effectiveness", _skip_sql())
 def file_skipping_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-layout zonemap pruning: files of FILE_ROWS rows under
     arrival vs date-clustered order, per-file [min,max] orderdate, and

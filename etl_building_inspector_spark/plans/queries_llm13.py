@@ -14,19 +14,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .queries_llm import _DOCS_WITH_DUPS_SQL, _TOKS, _docs_with_dups
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants
@@ -74,7 +62,7 @@ ORDER BY phrase_id, doc_id
 """
 
 
-@_q("text_phrase_search", _phrase_sql())
+@query("text_phrase_search", _phrase_sql())
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase matching through positional postings: explode
     (doc, pos, token) restricted to the phrase vocabulary (the filter
@@ -177,7 +165,7 @@ JOIN sh2 hb ON p.id_b = hb.doc_id
 """
 
 
-@_q("dedup_minhash_bbit_eval", _bbit_sql())
+@query("dedup_minhash_bbit_eval", _bbit_sql())
 def dedup_minhash_bbit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b-bit minhash (Li & König 2010, b=1): J_hat = 2c - 1 from the
     equal-bit fraction of 1-bit-truncated minhashes, vs the exact
@@ -289,7 +277,7 @@ ORDER BY anchor_id, is_positive DESC, rnk
 """
 
 
-@_q("emb_contrastive_pairs", _contra_sql())
+@query("emb_contrastive_pairs", _contra_sql())
 def emb_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible contrastive pairs: per anchor, CONTRA_POS
     same-label positives and CONTRA_NEG cross-label negatives ranked

@@ -27,19 +27,7 @@ from .queries_llm import _TOKS
 from .queries_llm9 import _HLL_NUM, HLL_M, _hll_exprs
 from .queries_llm11 import _BAND
 from .queries_llm12 import _HLL_EMPTY, _HLL_SHIFT
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants
@@ -111,7 +99,7 @@ ORDER BY zu.type_a, zu.type_b
 """
 
 
-@_q("sketch_hll_intersection_eval", _hll_inter_sql())
+@query("sketch_hll_intersection_eval", _hll_inter_sql())
 def sketch_hll_intersection_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-user overlap between event-type pairs estimated by HLL
     inclusion-exclusion (union = register max-merge) vs the exact
@@ -264,7 +252,7 @@ ORDER BY n_draws DESC, tok
 """
 
 
-@_q("corpus_negative_sampling", _ns_sql())
+@query("corpus_negative_sampling", _ns_sql())
 def corpus_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic unigram^0.75 negative sampling (the word2vec
     noise distribution): vocab weights via sqrt-composed pow (bit
@@ -365,7 +353,7 @@ ORDER BY c_nationkey, bal_band
 """
 
 
-@_q("privacy_l_diversity", _ldiv_sql())
+@query("privacy_l_diversity", _ldiv_sql())
 def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QI groups (nation, balance band) of size >= 2 whose market
     segment takes fewer than L distinct values — the homogeneity leak

@@ -21,19 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants (the frame cadence lives in queries_llm8 — this
@@ -103,7 +91,7 @@ SELECT * FROM pairs
 """
 
 
-@_q("er_phonetic_blocking", _phon_sql())
+@query("er_phonetic_blocking", _phon_sql())
 def er_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ER blocking on a simplified-Soundex key of the first name
     token, over distinct part names plus deterministically typo'd
@@ -194,7 +182,7 @@ ORDER BY key, shot_id
 """
 
 
-@_q("multimodal_video_shot_cuts", _shot_sql())
+@query("multimodal_video_shot_cuts", _shot_sql())
 def multimodal_video_shot_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary segmentation: frames from the REAL mapInPandas
     fan-out kernel (multimodal.sample_frames), per-frame energy from

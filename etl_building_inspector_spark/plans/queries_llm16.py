@@ -21,19 +21,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .queries_llm import MINHASH_BUCKET_CAP, _docs_with_dups, _lsh_buckets_cte
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 WINSOR_LO_PPM = 50_000  # P5
@@ -66,7 +54,7 @@ ORDER BY band
 """
 
 
-@_q("dedup_lsh_cap_loss_report", _cap_loss_sql())
+@query("dedup_lsh_cap_loss_report", _cap_loss_sql())
 def dedup_lsh_cap_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What the LSH bucket cap costs: per band, bucket count, over-cap
     buckets, max width, and candidate pairs kept vs LOST (w*(w-1)/2
@@ -157,7 +145,7 @@ ORDER BY c_nationkey
 """
 
 
-@_q("outlier_winsorized_stats", _winsor_sql())
+@query("outlier_winsorized_stats", _winsor_sql())
 def outlier_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized mean per nation: exact P5/P95 by the lower-rank
     convention (rn = ceil(p*n), deterministic sort on cents), values
@@ -266,7 +254,7 @@ ORDER BY day, state
 """
 
 
-@_q("events_user_lifecycle_states", _lifecycle_sql())
+@query("events_user_lifecycle_states", _lifecycle_sql())
 def events_user_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily growth accounting: new (first-ever day), retained
     (also active the previous day), resurrected (active before,
@@ -351,7 +339,7 @@ ORDER BY c_nationkey, bal_band
 """
 
 
-@_q("privacy_release_gate", _release_gate_sql())
+@query("privacy_release_gate", _release_gate_sql())
 def privacy_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed release decision per QI cell: k-anonymity
     (size >= K) AND l-diversity (sensitive diversity >= L) in one

@@ -51,19 +51,7 @@ from .queries_llm import (
     _shingles_sql,
     _stop_hits_sql,
 )
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # Gopher-style rule constants (Rae et al. 2021, table A1 shape —
@@ -123,7 +111,7 @@ FROM rules GROUP BY source ORDER BY source
 """
 
 
-@_q("quality_gopher_rules", _GOPHER_SQL)
+@query("quality_gopher_rules", _GOPHER_SQL)
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rules as per-source pass counts. Each rule
     is a cross-multiplied integer comparison (3n <= chars <= 10n
@@ -214,7 +202,7 @@ FROM ranked WHERE rank <= {ZIPF_TOP_K} ORDER BY rank
 """
 
 
-@_q("text_zipf_profile", _ZIPF_SQL)
+@query("text_zipf_profile", _ZIPF_SQL)
 def text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 token frequency profile. The explode+count shuffles on
     token with map-side combine; the top-20 is orderBy(freq DESC,
@@ -274,7 +262,7 @@ FROM ppm GROUP BY 1, 2 ORDER BY source, bucket
 """
 
 
-@_q("text_compression_ratio_proxy", _COMPRESS_SQL)
+@query("text_compression_ratio_proxy", _COMPRESS_SQL)
 def text_compression_ratio_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-bigram ppm as a compressibility proxy (repeated
     boilerplate => low distinct ratio => compresses well), bucketed
@@ -344,7 +332,7 @@ FROM m GROUP BY est_matches ORDER BY est_matches
 """
 
 
-@_q("dedup_threshold_sensitivity", _threshold_sensitivity_sql())
+@query("dedup_threshold_sensitivity", _threshold_sensitivity_sql())
 def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How many LSH candidate pairs survive at every signature-
     agreement threshold: the (est_matches of k, pair count) histogram.
@@ -419,7 +407,7 @@ FROM marked GROUP BY source ORDER BY source
 """
 
 
-@_q("corpus_dedup_survivor_bias", _SURVIVOR_SQL)
+@query("corpus_dedup_survivor_bias", _SURVIVOR_SQL)
 def corpus_dedup_survivor_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What exact (content-hash, keep-min-id) dedup throws away, per
     source: kept/dropped doc and char counts. A dedup that guts one
@@ -475,7 +463,7 @@ FROM k ORDER BY n_self_pairs DESC, partkey LIMIT {EXPLOSION_TOP_K}
 """
 
 
-@_q("join_explosion_audit", _EXPLOSION_SQL)
+@query("join_explosion_audit", _EXPLOSION_SQL)
 def join_explosion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Worst self-join keys by pair fanout (n*(n-1)/2) — the number to
     read before launching any pair-generating self-join. One
@@ -516,7 +504,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-@_q("shuffle_partition_balance_report", _BALANCE_SQL)
+@query("shuffle_partition_balance_report", _BALANCE_SQL)
 def shuffle_partition_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simulated hash-shuffle balance: u32(md5('shuffle:'||key)) % 32
     buckets (the repo's engine-portable sampling hash, NOT Spark's

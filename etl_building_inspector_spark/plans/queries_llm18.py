@@ -17,19 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.text import shingles, tokens
 from ..sources.tables import load_table
 from .queries_llm import _TOKS, _shingles_sql
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 HEAPS_BUCKETS = 10
@@ -69,7 +57,7 @@ ORDER BY bucket
 """
 
 
-@_q("text_vocab_growth_heaps", _HEAPS_SQL)
+@query("text_vocab_growth_heaps", _HEAPS_SQL)
 def text_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law growth curve: cumulative (token volume, distinct
     vocabulary) at ten doc-id deciles. Vocabulary that keeps growing
@@ -143,7 +131,7 @@ WHERE q.vec_id < {RANGE_SEARCH_QUERIES}
 """
 
 
-@_q("ann_range_search", _RANGE_SEARCH_SQL)
+@query("ann_range_search", _RANGE_SEARCH_SQL)
 def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius search: every corpus vector within cosine >= 0.25 of
     each of the 5 query vectors. The query block is broadcast (5 rows
@@ -199,7 +187,7 @@ SELECT CAST({n} AS BIGINT) AS shingle_n,
     return f"{body}\nORDER BY shingle_n"
 
 
-@_q("dedup_shingle_size_sensitivity", _shingle_sensitivity_sql())
+@query("dedup_shingle_size_sensitivity", _shingle_sensitivity_sql())
 def dedup_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(total, distinct) shingle counts at n = 2, 3, 5: small n makes
     shingles common (high collision, aggressive dedup), large n makes
@@ -261,7 +249,7 @@ FROM per_user GROUP BY event_type ORDER BY event_type
 """
 
 
-@_q("privacy_histogram_sensitivity", _HISTOGRAM_SENSITIVITY_SQL)
+@query("privacy_histogram_sensitivity", _HISTOGRAM_SENSITIVITY_SQL)
 def privacy_histogram_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1 sensitivity of the per-event-type count release: the most
     rows one user contributes to each bucket (= how much the bucket

@@ -17,19 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, tokens
 from ..sources.tables import load_table
 from .queries_llm import _DOCS_WITH_DUPS_SQL, _NORM, _TOKS, _docs_with_dups
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 WATERFILL_BUDGET_FRACTION_INV = 2  # budget = total tokens DIV 2
@@ -69,7 +57,7 @@ _DIVERSITY_SQL = (
 )
 
 
-@_q("corpus_mixture_diversity", _DIVERSITY_SQL)
+@query("corpus_mixture_diversity", _DIVERSITY_SQL)
 def corpus_mixture_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus diversity by source and by lang: Simpson index as exact
     integer rationals (num = sum cnt*(cnt-1), den = N*(N-1) -- the
@@ -165,7 +153,7 @@ FROM shared ORDER BY source
 """
 
 
-@_q("corpus_token_budget_waterfill", _WATERFILL_SQL)
+@query("corpus_token_budget_waterfill", _WATERFILL_SQL)
 def corpus_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Waterfill a token budget (half the corpus) across sources:
     every source keeps min(its tokens, waterline); the line is where
@@ -262,7 +250,7 @@ FROM fps
 """
 
 
-@_q("dedup_exact_bytes_vs_norm_eval", _BYTES_VS_NORM_SQL)
+@query("dedup_exact_bytes_vs_norm_eval", _BYTES_VS_NORM_SQL)
 def dedup_exact_bytes_vs_norm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-exact vs normalized-text dedup, one row: document count,
     group counts under each fingerprint, duplicates each would drop,
@@ -322,7 +310,7 @@ FROM kth, exact
 """
 
 
-@_q("sketch_bottomk_theta_eval", _KMV_SQL)
+@query("sketch_bottomk_theta_eval", _KMV_SQL)
 def sketch_bottomk_theta_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (bottom-k / theta) distinct estimate vs exact, one row:
     keep the k=256 smallest u32(md5) hash values of the key; est =

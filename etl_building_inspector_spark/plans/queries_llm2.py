@@ -42,19 +42,7 @@ from .queries_llm import (
     _TOKS,
     MINHASH_BUCKET_CAP,
 )
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +56,7 @@ QF_MIN_STOPRATIO = 0.05
 QF_MAX_PUNCT = 0.2
 
 
-@_q(
+@query(
     "quality_filter_composite",
     f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
@@ -141,7 +129,7 @@ WHERE {u32} < {thr}
 """
 
 
-@_q("sample_stratified", _sample_sql())
+@query("sample_stratified", _sample_sql())
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-Bernoulli sample with per-language rates (en 50%, zh 10%,
     others 25%) — reproducible across runs/partitionings, unlike
@@ -185,7 +173,7 @@ FROM seeded
 """
 
 
-@_q("text_pii_redact", _pii_sql())
+@query("text_pii_redact", _pii_sql())
 def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count and redact emails / IPv4s / phone fragments. Narrow
     regexp chain, no shuffle (operators/textops.py: PII_RULES order is
@@ -220,7 +208,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "text_repetition",
     f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
@@ -258,7 +246,7 @@ DECON_N = 4
 DECON_BENCH_MOD = 17  # doc_id % 17 == 0 plays the "benchmark suite"
 
 
-@_q(
+@query(
     "decontaminate_ngram",
     f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
@@ -294,7 +282,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_K = 3
 
 
-@_q(
+@query(
     "tfidf_topk_terms",
     f"""
 WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
@@ -363,7 +351,7 @@ FROM comp
 """
 
 
-@_q("dedup_cluster_assign", _cluster_sql())
+@query("dedup_cluster_assign", _cluster_sql())
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS from near-dup PAIRS: connected components by
     min-label propagation over the MinHash-LSH pair graph (keep
@@ -386,7 +374,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("dedup_cluster_assign_lss", _cluster_sql())
+@query("dedup_cluster_assign_lss", _cluster_sql())
 def dedup_cluster_assign_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering contract as dedup_cluster_assign, computed by
     the ALTERNATING large-star/small-star algorithm instead of
@@ -422,7 +410,7 @@ WHERE c.node IS NULL OR c.component = d.doc_id
 """
 
 
-@_q("dedup_keep_representatives", _keep_sql())
+@query("dedup_keep_representatives", _keep_sql())
 def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end of the dedup pipeline: pairs → components → KEPT CORPUS.
     A doc survives iff it is untouched by any near-dup pair (left
@@ -451,7 +439,7 @@ def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "emb_quantize_int8",
     """
 WITH t AS (
@@ -522,7 +510,7 @@ FROM walk GROUP BY node
 """
 
 
-@_q("graph_bfs_hops", _bfs_sql())
+@query("graph_bfs_hops", _bfs_sql())
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min hop distance (<= BFS_MAX_HOPS) from seed docs over the
     MinHash-LSH pair graph — frontier-only delta iteration
@@ -556,7 +544,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "quality_terciles_by_lang",
     f"""
 WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),

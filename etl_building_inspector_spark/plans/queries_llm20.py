@@ -23,19 +23,7 @@ from .queries_llm import (
     _docs_with_dups,
     _shingles_sql,
 )
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 COVERAGE_SHINGLE_N = 3
@@ -72,7 +60,7 @@ SELECT CAST((SELECT count(*) FROM te) AS BIGINT) AS heldout_ngrams,
 """
 
 
-@_q("text_ngram_coverage_vs_reference", _COVERAGE_SQL)
+@query("text_ngram_coverage_vs_reference", _COVERAGE_SQL)
 def text_ngram_coverage_vs_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct trigram coverage of the held-out split by the train
     split (the deterministic md5 80/20 assignment shared with
@@ -133,7 +121,7 @@ FROM g GROUP BY sz ORDER BY sz
 """
 
 
-@_q("dedup_group_size_histogram", _GROUP_SIZE_SQL)
+@query("dedup_group_size_histogram", _GROUP_SIZE_SQL)
 def dedup_group_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-hash duplicate group-size census: for each group size,
     how many groups and docs. The shape tells you what dedup will do
@@ -191,7 +179,7 @@ FROM per_doc GROUP BY lang ORDER BY lang
 """
 
 
-@_q("text_tokenizer_fertility_by_lang", _fertility_sql())
+@query("text_tokenizer_fertility_by_lang", _fertility_sql())
 def text_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility (BPE-estimate tokens per whitespace word,
     ppm) per language -- the fit metric that says which languages a
@@ -255,7 +243,7 @@ FROM pairs GROUP BY bucket ORDER BY bucket
 """
 
 
-@_q("emb_cosine_histogram_sampled", _COSINE_HIST_SQL)
+@query("emb_cosine_histogram_sampled", _COSINE_HIST_SQL)
 def emb_cosine_histogram_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of pairwise cosines over a DETERMINISTIC pair sample
     (a % 10 == 0 and (a+b) % 10 == 0 on the upper triangle: ~1% of all

@@ -15,19 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import LANG_STOPWORDS, tokens
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +43,7 @@ FROM t ORDER BY s_tenths
 """
 
 
-@_q("dedup_lsh_s_curve_design", _SCURVE_SQL)
+@query("dedup_lsh_s_curve_design", _SCURVE_SQL)
 def dedup_lsh_s_curve_design(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banding design curve, exactly: P(candidate | Jaccard=s) =
     1-(1-s^r)^b at s = 0.1..0.9 for the registered (b=4, r=2) config
@@ -108,7 +96,7 @@ FROM (
     return "\nUNION ALL\n".join(selects) + "\nORDER BY doc_lang, stopset_lang"
 
 
-@_q("text_stopword_signal_matrix", _signal_matrix_sql())
+@query("text_stopword_signal_matrix", _signal_matrix_sql())
 def text_stopword_signal_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc language x stopword set) hit-rate matrix in ppm: the
     diagonal should dominate every row for the stopword-vote lang-ID
@@ -217,7 +205,7 @@ FROM out ORDER BY strategy
 """
 
 
-@_q("er_blocking_strategy_eval", _blocking_eval_sql())
+@query("er_blocking_strategy_eval", _blocking_eval_sql())
 def er_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall vs candidate workload for three ER blocking strategies
     (exact first token, simplified Soundex, 2-char prefix) on the

@@ -18,19 +18,7 @@ from ..functions.text import tokens, winnow_fingerprints
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm18 import _RANGE_DOT, _RANGE_NC, _RANGE_NQ
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 WINNOW_SENS_W = (4, 8, 16)
@@ -70,7 +58,7 @@ FROM phases ORDER BY phase, source
 """
 
 
-@_q("corpus_curriculum_phases", _CURRICULUM_SQL)
+@query("corpus_curriculum_phases", _CURRICULUM_SQL)
 def corpus_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-phase data curriculum: sources ranked into quality
     terciles (mean chars/doc, total tiebreak), phase weights 1 /
@@ -140,7 +128,7 @@ FROM (
     return "\nUNION ALL\n".join(selects) + "\nORDER BY w"
 
 
-@_q("dedup_winnow_window_sensitivity", _winnow_sens_sql())
+@query("dedup_winnow_window_sensitivity", _winnow_sens_sql())
 def dedup_winnow_window_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing storage-vs-guarantee curve: distinct fingerprints
     kept at w = 4, 8, 16 next to the raw k-gram hash count -- larger w
@@ -203,7 +191,7 @@ FROM ranked WHERE rn <= 2 GROUP BY q_id ORDER BY q_id
 """
 
 
-@_q("ann_topk_margin_eval", _MARGIN_SQL)
+@query("ann_topk_margin_eval", _MARGIN_SQL)
 def ann_topk_margin_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-1 vs top-2 cosine margin per query from the brute-force
     ranking (10 broadcast queries x corpus stream): a margin near 0
@@ -275,7 +263,7 @@ FROM g GROUP BY sz ORDER BY sz
 """
 
 
-@_q("dedup_embedding_exact", _EMB_EXACT_SQL)
+@query("dedup_embedding_exact", _EMB_EXACT_SQL)
 def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-identical embedding census: GROUP BY the array column
     itself (both engines hash arrays element-wise, no string
@@ -338,7 +326,7 @@ FROM direct, merged
 """
 
 
-@_q("sketch_kmv_merge_eval", _KMV_MERGE_SQL)
+@query("sketch_kmv_merge_eval", _KMV_MERGE_SQL)
 def sketch_kmv_merge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV/theta mergeability, proved on data: split the keys into two
     halves, keep each half's 256 smallest hashes, merge and
@@ -403,7 +391,7 @@ ORDER BY context_len
 """
 
 
-@_q("pack_truncation_loss_curve", _trunc_sql())
+@query("pack_truncation_loss_curve", _trunc_sql())
 def pack_truncation_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokens kept vs LOST at context lengths 32/64/128 under
     truncate-to-context packing (each doc contributes min(n, L))
@@ -462,7 +450,7 @@ FROM grid GROUP BY source ORDER BY source
 """
 
 
-@_q("corpus_source_token_tvd", _SOURCE_TVD_SQL)
+@query("corpus_source_token_tvd", _SOURCE_TVD_SQL)
 def corpus_source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total variation distance between each source's unigram
     distribution and the corpus's, in exact integer ppm (the
@@ -554,7 +542,7 @@ ORDER BY tbl
 """
 
 
-@_q("layout_partition_size_planning", _PLANNING_SQL)
+@query("layout_partition_size_planning", _PLANNING_SQL)
 def layout_partition_size_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-count planning at a 128 MiB target from documented
     per-row byte estimates (variable text/props lengths + fixed-width
@@ -614,7 +602,7 @@ FROM tok GROUP BY 1 ORDER BY token_len
 """
 
 
-@_q("text_word_length_histogram", _WORD_LEN_SQL)
+@query("text_word_length_histogram", _WORD_LEN_SQL)
 def text_word_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-length histogram (clamped at 15+): the distribution the
     ceil(len/4) BPE estimate and any subword vocab size budget rest
@@ -651,7 +639,7 @@ GROUP BY source ORDER BY source
 """
 
 
-@_q("text_hapax_ratio_by_source", _HAPAX_SQL)
+@query("text_hapax_ratio_by_source", _HAPAX_SQL)
 def text_hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share of each source's token occurrences that are corpus-level
     hapax legomena (global frequency exactly 1), in ppm: high hapax =
@@ -708,7 +696,7 @@ FROM ranked GROUP BY lang ORDER BY lang
 """
 
 
-@_q("corpus_length_percentiles_by_lang", _LENGTH_PCT_SQL)
+@query("corpus_length_percentiles_by_lang", _LENGTH_PCT_SQL)
 def corpus_length_percentiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p25/p50/p75/p95 document length per language at the
     ceil(p*n) rank under the (n_chars, doc_id) total order -- length
@@ -766,7 +754,7 @@ FROM scored GROUP BY q_id ORDER BY q_id
 """
 
 
-@_q("ann_radius_sensitivity", _radius_sens_sql())
+@query("ann_radius_sensitivity", _radius_sens_sql())
 def ann_radius_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighbor counts per query at cosine >= 0.20 / 0.25 / 0.30 from
     ONE brute-force pass (conditional sums over the same scored rows)

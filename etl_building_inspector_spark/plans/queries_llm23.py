@@ -24,19 +24,7 @@ from ..sources.tables import load_table
 from .queries_llm import _TOKS, _shingles_sql
 from .queries_llm2 import DECON_BENCH_MOD, DECON_N
 from .queries_llm3 import PACK_BUDGET
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +59,7 @@ FROM train LEFT JOIN bh USING (doc_id) LEFT JOIN dh USING (doc_id)
 """
 
 
-@_q("decontaminate_incremental_bloom", _INCR_DECON_SQL)
+@query("decontaminate_incremental_bloom", _INCR_DECON_SQL)
 def decontaminate_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental Bloom decontamination refresh (operators/textops.py::
     bloom_decontaminate_incremental): per-batch blooms are mergeable
@@ -125,7 +113,7 @@ FROM r
 """
 
 
-@_q("pack_bucketed_greedy", _BUCKETED_PACK_SQL)
+@query("pack_bucketed_greedy", _BUCKETED_PACK_SQL)
 def pack_bucketed_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The applyInPandas-free packing assignment (VERDICT r8 #6): per
     (source, bucket), bin_seq = rank DIV per_bin and slot = rank MOD

@@ -23,19 +23,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .queries_llm6 import _INC_BANDS, _INC_K, _inc_minhash_sql
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +38,7 @@ def _q(name: str, sql: str | None = None):
 # ---------------------------------------------------------------------------
 
 
-@_q("dedup_minhash_index_refresh", _inc_minhash_sql())
+@query("dedup_minhash_index_refresh", _inc_minhash_sql())
 def dedup_minhash_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe today's batch against a standing band index REFRESHED by
     merge (operators/dedup.py::minhash_band_index /

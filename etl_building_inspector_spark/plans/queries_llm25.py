@@ -35,19 +35,7 @@ from ..operators._cache import track_persist
 from ..sources.tables import load_table
 from .queries_llm import _TOKS, MINHASH_BUCKET_CAP
 from .queries_llm2 import _cluster_sql, _docs_with_dups
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +48,7 @@ def _q(name: str, sql: str | None = None):
 # ---------------------------------------------------------------------------
 
 
-@_q("dedup_cluster_incremental", _cluster_sql())
+@query("dedup_cluster_incremental", _cluster_sql())
 def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering contract as dedup_cluster_assign, computed
     INCREMENTALLY: CC over yesterday's edges, then
@@ -100,7 +88,7 @@ PMI_MIN_COUNT = 5
 PMI_K = 100
 
 
-@_q(
+@query(
     "text_collocations_pmi",
     f"""
 WITH t AS (SELECT {_TOKS} AS toks FROM documents),

@@ -20,19 +20,7 @@ from ..operators.textops import bloom_decontaminate, domain_cap
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm2 import DECON_BENCH_MOD, DECON_N
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +51,7 @@ FROM o
 """
 
 
-@_q("pack_concat_chunks", _concat_chunks_sql())
+@query("pack_concat_chunks", _concat_chunks_sql())
 def pack_concat_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style packing: corpus laid end-to-end in doc_id order, cut
     every PACK_CHUNK_TOKENS tokens. The oracle's single global window
@@ -105,7 +93,7 @@ FROM pack
 """
 
 
-@_q("pack_greedy_bins", _greedy_sql())
+@query("pack_greedy_bins", _greedy_sql())
 def pack_greedy_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-fit-sequential packing per source group (docs never
     straddle a context boundary). Spark walks each group inside
@@ -135,7 +123,7 @@ FROM r
 """
 
 
-@_q("domain_cap_sample", _cap_sql())
+@query("domain_cap_sample", _cap_sql())
 def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain balancing: keep at most DOMAIN_CAP docs per source,
     chosen by salted-hash rank (unbiased within the domain,
@@ -175,7 +163,7 @@ FROM documents d JOIN r USING (lang)
 """
 
 
-@_q("mixture_resample", _mix_sql())
+@query("mixture_resample", _mix_sql())
 def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data mixing: resample so surviving docs approach the TARGET
     language proportions (en 50%, zh 30%, others 20%). Per-lang rates
@@ -245,7 +233,7 @@ FROM documents
 """
 
 
-@_q("text_bpe_token_estimate", _bpe_sql())
+@query("text_bpe_token_estimate", _bpe_sql())
 def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token budgets at pre-tokenizer fidelity: BPE-style pieces
     (letter runs / digits / punctuation, RE2+Java-portable pattern)
@@ -290,7 +278,7 @@ FROM m
 """
 
 
-@_q("text_winnow_fingerprints", _winnow_sql())
+@query("text_winnow_fingerprints", _winnow_sql())
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (k=3-gram u32 hashes, window
     w=4 minima, MOSS-style): the rolling-hash sketch that guarantees
@@ -345,7 +333,7 @@ FROM train LEFT JOIN hits USING (doc_id)
 """
 
 
-@_q("decontaminate_bloom", _bloom_decon_sql())
+@query("decontaminate_bloom", _bloom_decon_sql())
 def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """decontaminate_ngram's exact output through the 100 TB-shaped
     path: a 128 KiB broadcast Bloom filter prefilters corpus grams
@@ -386,7 +374,7 @@ FROM x
 """
 
 
-@_q("text_chunk_windows", _chunk_sql())
+@query("text_chunk_windows", _chunk_sql())
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding token windows per document: size CHUNK_SIZE, stride
     CHUNK_STRIDE (tail windows truncate, never pad). Narrow except
@@ -464,7 +452,7 @@ WHERE shared * 100 >= {tau} * least(n_a, n_b)
 """
 
 
-@_q("dedup_containment", _containment_sql())
+@query("dedup_containment", _containment_sql())
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup: pairs where >= {tau}% of the smaller
     document's winnowing fingerprints appear in the other document.
@@ -572,7 +560,7 @@ FROM documents
 """
 
 
-@_q("corpus_epoch_shuffle", _epoch_shuffle_sql())
+@query("corpus_epoch_shuffle", _epoch_shuffle_sql())
 def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-{seed} training order: shard = u32(md5(seed:id)) % {n},
     position = rank of md5(seed:id) within the shard. Hash-ordering
@@ -629,7 +617,7 @@ FROM bins GROUP BY grp
 """
 
 
-@_q("pack_efficiency_stats", _pack_efficiency_sql())
+@query("pack_efficiency_stats", _pack_efficiency_sql())
 def pack_efficiency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Utilization of pack_greedy_bins per source group: bins used,
     packed vs capacity tokens, fill ratio in integer ppm, and the

@@ -23,19 +23,7 @@ from .queries_llm import (
     _TOKS,
     MINHASH_BUCKET_CAP,
 )
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +56,7 @@ GROUP BY sh.doc_id
 """
 
 
-@_q("text_ngram_novelty", _NOVELTY_SQL)
+@query("text_ngram_novelty", _NOVELTY_SQL)
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
@@ -140,7 +128,7 @@ FROM walk GROUP BY node
 """
 
 
-@_q("graph_sssp_bounded", _sssp_sql())
+@query("graph_sssp_bounded", _sssp_sql())
 def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import sssp_bounded
 
@@ -186,7 +174,7 @@ FROM ex GROUP BY label, dim
 """
 
 
-@_q("emb_label_centroids", _CENTROID_SQL)
+@query("emb_label_centroids", _CENTROID_SQL)
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
@@ -256,7 +244,7 @@ FROM (
 """
 
 
-@_q("emb_assign_nearest_prototype", _PROTO_SQL)
+@query("emb_assign_nearest_prototype", _PROTO_SQL)
 def emb_assign_nearest_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
@@ -342,7 +330,7 @@ FROM ex GROUP BY cluster, dim
 """
 
 
-@_q("kmeans_lloyd_round", _LLOYD_SQL)
+@query("kmeans_lloyd_round", _LLOYD_SQL)
 def kmeans_lloyd_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 

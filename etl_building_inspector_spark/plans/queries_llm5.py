@@ -23,19 +23,7 @@ from ..operators.similarity import (
 )
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants (Spark plan and SQL oracle are generated from THESE)
@@ -99,7 +87,7 @@ FROM assign a LEFT JOIN dominated d ON a.vec_id = d.id_b
 """
 
 
-@_q("dedup_semantic_clusters", _semantic_sql())
+@query("dedup_semantic_clusters", _semantic_sql())
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: cluster embeddings, prune within-cluster near-dupes
     (cosine >= tau to a smaller-id neighbor). Deterministic md5-sampled
@@ -158,7 +146,7 @@ enc AS (
   FROM best GROUP BY vec_id)"""
 
 
-@_q(
+@query(
     "emb_pq_encode",
     f"""WITH {_pq_cte()}
 SELECT CAST(vec_id AS BIGINT) AS vec_id,
@@ -215,7 +203,7 @@ QUALIFY rank <= {k}
 """
 
 
-@_q("ann_cosine_pq_adc", _pq_adc_sql())
+@query("ann_cosine_pq_adc", _pq_adc_sql())
 def ann_cosine_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-k: full-precision query vs PQ-reconstructed corpus --
     the scan side reads 8 small ints per vector instead of 256 bytes
@@ -239,9 +227,7 @@ def ann_cosine_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "er_blocked_fuzzy_match",
-    f"""
+_ER_FUZZY_SQL = f"""
 WITH names AS (
   SELECT p_name, min(p_partkey) AS rep_key FROM part GROUP BY p_name)
 SELECT a.p_name AS name_a, b.p_name AS name_b,
@@ -252,8 +238,10 @@ FROM names a JOIN names b
   ON split_part(a.p_name, ' ', 1) = split_part(b.p_name, ' ', 1)
  AND a.p_name < b.p_name
 WHERE levenshtein(a.p_name, b.p_name) <= {ER_LEV_MAX}
-""",
-)
+"""
+
+
+@query("er_blocked_fuzzy_match", _ER_FUZZY_SQL)
 def er_blocked_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution fuzzy match with blocking: canonicalize to
     distinct names (rep = min key), equi-join on a cheap block key
@@ -322,7 +310,7 @@ FROM keep GROUP BY doc_id
 """
 
 
-@_q("text_line_dedup", _line_dedup_sql())
+@query("text_line_dedup", _line_dedup_sql())
 def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style line-level dedup (Raffel et al. 2020 dedup three-
     sentence spans; here a 'line' is a {LINE_TOKENS}-token span): keep
@@ -385,7 +373,7 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "timeseries_gapfill_locf",
     """
 WITH daily AS (

@@ -22,19 +22,7 @@ from ..operators.dedup import minhash_signature
 from ..operators.similarity import cosine_arrow, lsh_buckets
 from ..sources.tables import load_table
 from .queries_llm import EMB_DIM, _planes_cte, _shingles_sql, _TOKS
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -128,7 +116,7 @@ QUALIFY row_number() OVER (
 """
 
 
-@_q("decontaminate_embedding_lsh", _decon_emb_sql())
+@query("decontaminate_embedding_lsh", _decon_emb_sql())
 def decontaminate_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-set embedding decontamination: flag corpus vectors whose
     cosine to ANY benchmark vector >= threshold, with the best match.
@@ -204,7 +192,7 @@ def decontaminate_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 OOV_VOCAB_K = 64
 
 
-@_q(
+@query(
     "text_oov_bigram_rate",
     f"""
 WITH grams AS (
@@ -337,7 +325,7 @@ GROUP BY doc_id
 """
 
 
-@_q("dedup_incremental_minhash", _inc_minhash_sql())
+@query("dedup_incremental_minhash", _inc_minhash_sql())
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup flagging: which NEW docs (deterministic
     doc_id slice standing in for today's crawl) collide with the
@@ -399,7 +387,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "timeseries_gapfill_linear",
     """
 WITH daily AS (
@@ -504,7 +492,7 @@ def timeseries_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "corpus_source_overlap",
     f"""
 WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
@@ -600,7 +588,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "timeseries_cusum_changepoint",
     """
 WITH daily AS (
@@ -705,7 +693,7 @@ FROM codes_t
 """
 
 
-@_q("multimodal_byte_histogram", _bhist_sql())
+@query("multimodal_byte_histogram", _bhist_sql())
 def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction through the REAL multimodal
     path: binary blobs -> Arrow-batched mapInPandas -> numpy bincount
@@ -827,7 +815,7 @@ FROM final
 """
 
 
-@_q("pipeline_corpus_curation_e2e", _e2e_sql())
+@query("pipeline_corpus_curation_e2e", _e2e_sql())
 def pipeline_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation stages COMPOSED, as a user would run them nightly:
     token-count quality gate -> exact dedup (keep lowest id per

@@ -36,24 +36,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from . import queries_llm5
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
-
-
-# shared tokenization (twin of queries_llm.py's _NORM/_TOKS)
-_NORM = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-_TOKS = f"str_split({_NORM}, ' ')"
+from .queries_llm import _NORM, _TOKS
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -94,7 +78,7 @@ ORDER BY canonical_url
 """
 
 
-@_q("dedup_url_canonicalize", _URL_DEDUP_SQL)
+@query("dedup_url_canonicalize", _URL_DEDUP_SQL)
 def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalize messy URLs (case, www., utm params, trailing
     slash) and keep-first per canonical form -- the web-crawl dedup
@@ -173,7 +157,7 @@ ORDER BY prefix_key
 """
 
 
-@_q("dedup_truncation_prefix", _PREFIX_DEDUP_SQL)
+@query("dedup_truncation_prefix", _PREFIX_DEDUP_SQL)
 def dedup_truncation_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-hash dedup for truncated duplicates: hash the first 64
     normalized chars, keep the longest member per group. Fixed-width
@@ -247,7 +231,7 @@ ORDER BY doc_id, rank
 """
 
 
-@_q("text_tfidf_topk", _TFIDF_SQL)
+@query("text_tfidf_topk", _TFIDF_SQL)
 def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 keywords per doc by integer-domain TF-IDF. The idf
     factor floor(1e6*N/df) is a BIGINT, so scores sum/compare exactly
@@ -372,7 +356,7 @@ ORDER BY rank
 """
 
 
-@_q("sketch_countmin_heavy_hitters", _cm_sql())
+@query("sketch_countmin_heavy_hitters", _cm_sql())
 def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch (d=4, w=1024) over token bigrams with a
     top-20 heavy-hitter readout. The sketch build is one groupBy over
@@ -456,7 +440,7 @@ FROM flat GROUP BY dim ORDER BY dim
 """
 
 
-@_q("emb_dimension_stats", _EMB_STATS_SQL)
+@query("emb_dimension_stats", _EMB_STATS_SQL)
 def emb_dimension_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension stats over the embedding corpus -- the input to
     whitening / mean-centering / min-max normalization. posexplode ->
@@ -506,7 +490,7 @@ def _er_cc_cte_body() -> str:
     comp), shared verbatim by the cluster oracle and the survivorship
     oracle (queries_llm10) -- one source of truth, no string surgery
     on a finished SQL statement."""
-    pairs = ORACLES_ER_PAIRS.strip()
+    pairs = queries_llm5._ER_FUZZY_SQL.strip()
     return f"""pairs AS (
 {pairs}
 ),
@@ -535,10 +519,7 @@ FROM comp ORDER BY entity_key
 """
 
 
-ORACLES_ER_PAIRS = queries_llm5.ORACLES["er_blocked_fuzzy_match"]
-
-
-@_q("er_resolution_clusters", None)
+@query("er_resolution_clusters", _er_clusters_sql())
 def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive entity merge: min-label connected components over
     the blocked fuzzy-match pair graph (operators/dedup.py CC --
@@ -547,7 +528,7 @@ def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every entity that participates in at least one match."""
     from ..operators.dedup import connected_components
 
-    pairs = queries_llm5.QUERIES["er_blocked_fuzzy_match"](spark, sf_dir)
+    pairs = queries_llm5.er_blocked_fuzzy_match(spark, sf_dir)
     cc = connected_components(
         pairs.select("key_a", "key_b"), src="key_a", dst="key_b"
     )
@@ -555,9 +536,6 @@ def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("long").alias("entity_key"),
         F.col("component").cast("long").alias("canonical_key"),
     ).orderBy("entity_key")
-
-
-ORACLES["er_resolution_clusters"] = _er_clusters_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -584,7 +562,7 @@ ORDER BY lang
 """
 
 
-@_q("corpus_mixture_deficit", _MIXTURE_SQL)
+@query("corpus_mixture_deficit", _MIXTURE_SQL)
 def corpus_mixture_deficit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-count mixture audit per language against a uniform
     target share: the planning report that feeds mixture_resample's

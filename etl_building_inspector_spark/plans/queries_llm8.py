@@ -24,22 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
-
-
-_NORM = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
+from .queries_llm import _NORM
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +66,7 @@ ORDER BY doc_id
 """
 
 
-@_q("quality_ngram_lm_score", _LM_SQL)
+@query("quality_ngram_lm_score", _LM_SQL)
 def quality_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-trained char-trigram LM score per document in exact ppm
     (the perplexity-style quality filter, integer domain). The model
@@ -191,7 +177,7 @@ ORDER BY vec_id, dim
 """
 
 
-@_q("emb_whitening_apply", _WHITEN_SQL)
+@query("emb_whitening_apply", _WHITEN_SQL)
 def emb_whitening_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean-center + unit-variance scale every embedding dimension --
     the applied transform downstream of emb_dimension_stats. The
@@ -270,7 +256,7 @@ FROM scrubbed ORDER BY doc_id
 """
 
 
-@_q("text_pii_scrub", _PII_SQL)
+@query("text_pii_scrub", _PII_SQL)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scrub emails and phone-shaped tokens to placeholders, keeping
     per-doc match counts as the audit trail -- map-only (zero
@@ -370,7 +356,7 @@ def _video_stub_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(vids, every_ms=_FRAME_EVERY_MS, key_col="key")
 
 
-@_q("multimodal_frame_sample_fanout", _FRAME_SQL)
+@query("multimodal_frame_sample_fanout", _FRAME_SQL)
 def multimodal_frame_sample_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling through the real Arrow mapInPandas kernel:
     1 -> duration/every_ms rows per blob, frames as content-addressed
@@ -400,8 +386,8 @@ def multimodal_frame_sample_fanout(spark: SparkSession, sf_dir: str) -> DataFram
 def _ann_recall_sql() -> str:
     from . import queries_llm as _llm
 
-    brute = _llm.ORACLES["ann_cosine_topk"].strip()
-    ivf = _llm.ORACLES["ann_cosine_ivf_sampled"].strip()
+    brute = _llm._ann_sql().strip()
+    ivf = _llm._ivf_sampled_sql().strip()
     return f"""
 WITH brute AS (
 {brute}
@@ -421,7 +407,7 @@ ORDER BY b.query_id
 """
 
 
-@_q("ann_recall_eval", None)
+@query("ann_recall_eval", _ann_recall_sql())
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall of the deterministic IVF ANN against the
     brute-force ground truth -- the acceptance gate of any ANN
@@ -430,10 +416,10 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded)."""
     from . import queries_llm as _llm
 
-    brute = _llm.QUERIES["ann_cosine_topk"](spark, sf_dir).select(
+    brute = _llm.ann_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    ivf = _llm.QUERIES["ann_cosine_ivf_sampled"](spark, sf_dir).select(
+    ivf = _llm.ann_cosine_ivf_sampled(spark, sf_dir).select(
         F.col("query_id").alias("i_qid"),
         F.col("neighbor_id").alias("i_nid"),
     )
@@ -452,6 +438,3 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
-
-
-ORACLES["ann_recall_eval"] = _ann_recall_sql()

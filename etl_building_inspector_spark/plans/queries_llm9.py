@@ -27,19 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants (Spark plan and SQL oracle generated from THESE)
@@ -81,7 +69,7 @@ ORDER BY doc_id
 """
 
 
-@_q("dedup_substring_spans", _SPANS_SQL)
+@query("dedup_substring_spans", _SPANS_SQL)
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated token-span coverage: hash every SPAN_N-token
     window, mark spans occurring >= 2 times corpus-wide, report the
@@ -162,7 +150,7 @@ LIMIT {BPE_TOPK}
 """
 
 
-@_q("text_bpe_merge_pairs", _BPE_SQL)
+@query("text_bpe_merge_pairs", _BPE_SQL)
 def text_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top merge candidates for BPE iteration 0: adjacent char-pair
     counts weighted by word frequency, over the distinct-word vocab
@@ -236,7 +224,7 @@ LIMIT {RAKE_TOPK}
 """
 
 
-@_q("text_rake_keywords", _rake_sql())
+@query("text_rake_keywords", _rake_sql())
 def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keywords: stopword-delimited phrases -> word
     degree/frequency scores in exact ppm, top-K with deterministic
@@ -348,7 +336,7 @@ ORDER BY event_type
 """
 
 
-@_q("sketch_hll_distinct_eval", _hll_sql())
+@query("sketch_hll_distinct_eval", _hll_sql())
 def sketch_hll_distinct_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-user HLL per event_type, built from scratch on md5
     bits, evaluated against the exact count -- estimate AND error are
@@ -440,7 +428,7 @@ FROM kept ORDER BY doc_id
 """
 
 
-@_q("text_boilerplate_strip", _boiler_sql())
+@query("text_boilerplate_strip", _boiler_sql())
 def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML boilerplate removal: drop link-bearing / low-text lines,
     keep the dense body text, md5-verify the cleaned output. The keep
@@ -546,7 +534,7 @@ QUALIFY rank <= {IVFPQ_K}
 """
 
 
-@_q("ann_cosine_ivf_pq", _ivf_pq_sql())
+@query("ann_cosine_ivf_pq", _ivf_pq_sql())
 def ann_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ADC top-k (IVFADC minus residuals): probe 6/16 cells,
     score only cell members, read only their PQ reconstructions. At
@@ -651,7 +639,7 @@ def audio_windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_energy_windows(auds, window_bytes=AUDIO_WIN, key_col="key")
 
 
-@_q("multimodal_audio_energy_windows", _audio_sql())
+@query("multimodal_audio_energy_windows", _audio_sql())
 def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Framed audio energy via the Arrow mapInPandas kernel
     (operators/multimodal.audio_energy_windows): 1 blob -> one row per
@@ -701,7 +689,7 @@ FROM rk ORDER BY source
 """
 
 
-@_q("corpus_temperature_mixture", _temp_mix_sql())
+@query("corpus_temperature_mixture", _temp_mix_sql())
 def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Alpha=2 temperature mixture over sources: exact squared-share
     weights and a largest-remainder allocation that sums exactly to

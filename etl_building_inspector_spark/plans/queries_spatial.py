@@ -22,19 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.spatial import spatial_join_broadcast, spatial_join_grid
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # --- Spark-side synthesized geometry ---------------------------------------
@@ -111,7 +99,7 @@ _PIP_SQL = """
 """
 
 
-@_q(
+@query(
     "spatial_pip_join",
     f"""
 WITH {_POLYS_SQL.strip()}, {_POINTS_SQL.strip()}
@@ -131,7 +119,7 @@ def spatial_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "poly_id")
 
 
-@_q(
+@query(
     "spatial_pip_join_grid",
     f"""
 WITH {_POLYS_SQL.strip()}, {_POINTS_SQL.strip()}
@@ -152,7 +140,7 @@ def spatial_pip_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "poly_id")
 
 
-@_q(
+@query(
     "spatial_pip_nomatch_log",
     f"""
 WITH {_POLYS_SQL.strip()}, {_POINTS_SQL.strip()}
@@ -212,7 +200,7 @@ QUALIFY row_number() OVER (PARTITION BY point_id ORDER BY d2, poly_id) = 1
 """
 
 
-@_q("spatial_knn_join", _knn_sql())
+@query("spatial_knn_join", _knn_sql())
 def spatial_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest neighbor within radius R via grid bucketing: centers
     hash to one cell (cell = R), each point probes its 3x3 cell
@@ -353,7 +341,7 @@ WHERE ax0 <= bx1 AND bx0 <= ax1 AND ay0 <= by1 AND by0 <= ay1
 """
 
 
-@_q("spatial_bbox_intersect_join", _bbox_sql())
+@query("spatial_bbox_intersect_join", _bbox_sql())
 def spatial_bbox_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon-polygon overlap candidates via shared grid cells: each
     box explodes to the cells it covers, candidates are equi-join hits
@@ -487,7 +475,7 @@ WHERE bx0 <= acx + r AND acx - r <= bx1
 """
 
 
-@_q("spatial_polygon_intersect_join", _poly_intersect_sql())
+@query("spatial_polygon_intersect_join", _poly_intersect_sql())
 def spatial_polygon_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT polygon-polygon intersection pairs: grid-cell candidate
     stage (identical to spatial_bbox_intersect_join), then the
@@ -647,7 +635,7 @@ WHERE NOT ({sep("ra", "rb")}) AND NOT ({sep("rb", "ra")})
 """
 
 
-@_q("spatial_convex_sat_join", _convex_sat_sql())
+@query("spatial_convex_sat_join", _convex_sat_sql())
 def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shape-AGNOSTIC exact convex intersection join: supplier
     diamonds vs part triangles through
@@ -761,7 +749,7 @@ def _holes_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("spatial_pip_holes_join", _pip_holes_sql())
+@query("spatial_pip_holes_join", _pip_holes_sql())
 def spatial_pip_holes_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-polygon with HOLES (full GeoJSON Polygon semantics,
     the shape geo-indices.js actually indexes): even-odd crossings
@@ -782,7 +770,7 @@ def spatial_pip_holes_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "poly_id")
 
 
-@_q("spatial_pip_holes_join_grid", _pip_holes_sql())
+@query("spatial_pip_holes_join_grid", _pip_holes_sql())
 def spatial_pip_holes_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid strategy for the HOLES polygon join: same semantics and
     oracle as spatial_pip_holes_join, but no broadcast -- both sides
@@ -839,7 +827,7 @@ FROM c GROUP BY cell ORDER BY cell
 """
 
 
-@_q("spatial_geohash_density", _gh_sql())
+@query("spatial_geohash_density", _gh_sql())
 def spatial_geohash_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial density heatmap: Z-order bit-interleaved cell ids
     (the geohash construction) + base32 labels, density and exact
@@ -917,7 +905,7 @@ ORDER BY point_id
 """
 
 
-@_q("spatial_dbscan_core", _dbscan_sql())
+@query("spatial_dbscan_core", _dbscan_sql())
 def spatial_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN's density test (Ester et al. 1996): |N_eps(p)| per
     point -- INCLUDING p itself, exactly as the paper defines the
@@ -1054,7 +1042,7 @@ WHERE {contains}
 """
 
 
-@_q("spatial_convex_contains_join", _convex_contains_sql())
+@query("spatial_convex_contains_join", _convex_contains_sql())
 def spatial_convex_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact convex containment join (diamond contains triangle):
     grid-cell filter identical to spatial_convex_sat_join, refined by
@@ -1218,7 +1206,7 @@ WHERE {intersects}
 """
 
 
-@_q("spatial_simple_poly_intersect_join", _simple_poly_intersect_sql())
+@query("spatial_simple_poly_intersect_join", _simple_poly_intersect_sql())
 def spatial_simple_poly_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact NON-convex intersection join (dart x L-shape): grid-cell
     filter identical to the convex SAT join, refined by

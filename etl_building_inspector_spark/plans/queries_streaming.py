@@ -21,18 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 _MEMORY_SINK_SEQ = [0]
@@ -94,7 +83,7 @@ def _stream_events_dir(spark: SparkSession, sf_dir: str) -> str:
     return d
 
 
-@_q(
+@query(
     "streaming_sessionize",
     """
 WITH gaps AS (
@@ -151,7 +140,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "streaming_windowed_agg",
     """
 SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
@@ -194,7 +183,7 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "streaming_dim_join_agg",
     """
 SELECT c_mktsegment AS segment,
@@ -237,7 +226,7 @@ def streaming_dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.select("segment", "n_events", "value_e4")
 
 
-@_q(
+@query(
     "streaming_stream_stream_join",
     """
 SELECT CAST(c.user_id AS BIGINT) AS user_id,
@@ -298,7 +287,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "streaming_dedup_exact",
     """
 SELECT CAST(event_id AS BIGINT) AS event_id,
@@ -346,7 +335,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "streaming_hopping_window_agg",
     """
 WITH starts AS (
@@ -484,7 +473,7 @@ ORDER BY window_start, event_type
 """
 
 
-@_q("streaming_late_data_drop", _late_drop_sql())
+@query("streaming_late_data_drop", _late_drop_sql())
 def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data semantics as an exact oracle: a 3-batch
     file replay (bulk -> newest -> stragglers, maxFilesPerTrigger=1)
@@ -618,7 +607,7 @@ LEFT JOIN hits h ON h.doc_id = train.doc_id AND h.b = f.fb
 """
 
 
-@_q("streaming_decontaminate_bloom", _sdecon_sql())
+@query("streaming_decontaminate_bloom", _sdecon_sql())
 def streaming_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental streaming decontamination executed as a REAL
     Structured Streaming query (file source, foreachBatch sink,
@@ -714,7 +703,7 @@ def _sminhash_sql() -> str:
     return _inc_minhash_sql()
 
 
-@_q("streaming_minhash_refresh", _sminhash_sql())
+@query("streaming_minhash_refresh", _sminhash_sql())
 def streaming_minhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing MinHash band index maintained by a REAL Structured
     Streaming query: the corpus arrives as a file-source stream (one

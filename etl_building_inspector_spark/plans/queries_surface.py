@@ -18,19 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -38,7 +26,7 @@ def _q(name: str, sql: str | None = None):
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "setop_intersect",
     """
 SELECT CAST(o_custkey AS BIGINT) AS cust_key FROM orders WHERE o_orderstatus = 'O'
@@ -57,7 +45,7 @@ def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.intersect(f)
 
 
-@_q(
+@query(
     "setop_except",
     """
 SELECT CAST(c_custkey AS BIGINT) AS cust_key FROM customer
@@ -75,7 +63,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@_q(
+@query(
     "setop_semi_anti",
     """
 SELECT CAST(c_custkey AS BIGINT) AS cust_key,
@@ -107,7 +95,7 @@ def setop_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "pivot_status_by_segment",
     """
 SELECT c.c_mktsegment AS segment,
@@ -137,7 +125,7 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "agg_cube",
     """
 SELECT o_orderstatus, o_orderpriority,
@@ -163,7 +151,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "asof_join_click_purchase",
     """
 WITH purchases AS (
@@ -238,7 +226,7 @@ def asof_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "string_functions",
     """
 SELECT CAST(c_custkey AS BIGINT) AS cust_key,
@@ -272,7 +260,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "date_functions",
     """
 SELECT CAST(o_orderkey AS BIGINT) AS order_key,
@@ -301,7 +289,7 @@ def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "json_extraction",
     """
 SELECT CAST(event_id AS BIGINT) AS event_id,
@@ -323,7 +311,7 @@ def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "agg_stats_exact",
     """
 WITH sums AS (
@@ -372,7 +360,7 @@ def agg_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "window_rank_battery",
     """
 SELECT CAST(o_custkey AS BIGINT) AS cust_key,
@@ -415,7 +403,7 @@ def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q("agg_approx_sketches")
+@query("agg_approx_sketches")
 def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scalar output columns ONLY: the driver canonicalizer sorts cell
     # values with pandas and cannot hash array cells, so the quartile
@@ -466,7 +454,7 @@ FROM done
 """
 
 
-@_q("p7_base62_surrogate", _b62_sql())
+@query("p7_base62_surrogate", _b62_sql())
 def p7_base62_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .._dist import ensure_workers_can_import
     from ..functions.ids import base62_of_hex, md5_surrogate

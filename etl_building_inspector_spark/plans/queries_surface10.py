@@ -17,19 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 SESSION_GAP_MIN = 30
@@ -74,7 +62,7 @@ FROM sess GROUP BY user_id, sid
 """
 
 
-@_q("events_session_window_native", _SESSION_WINDOW_SQL)
+@query("events_session_window_native", _SESSION_WINDOW_SQL)
 def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session aggregation through Spark's NATIVE
     session_window -- the identical operator a readStream job would
@@ -135,7 +123,7 @@ ORDER BY n_triangles DESC, vertex LIMIT {CLUSTERING_TOP_K}
 """
 
 
-@_q("graph_local_clustering", _LOCAL_CLUSTERING_SQL)
+@query("graph_local_clustering", _LOCAL_CLUSTERING_SQL)
 def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 vertices of the co-purchase graph by local triangle
     count, with the exact clustering-coefficient rationals (triangles,
@@ -193,7 +181,7 @@ ORDER BY event_type, day
 """
 
 
-@_q("dq_volume_anomaly_daily", _VOLUME_ANOMALY_SQL)
+@query("dq_volume_anomaly_daily", _VOLUME_ANOMALY_SQL)
 def dq_volume_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily ingest-volume anomaly flags: a day is anomalous when its
     row count more than doubles or halves against the EXACT median of
@@ -284,7 +272,7 @@ WHERE tag = 1 AND (prev_click_id IS NOT NULL OR next_click_id IS NOT NULL)
 """
 
 
-@_q("asof_join_nearest", _ASOF_NEAREST_SQL)
+@query("asof_join_nearest", _ASOF_NEAREST_SQL)
 def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-in-time as-of join: each purchase matched to its
     closest click in either direction (per user), tie going to the

@@ -17,19 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 REPEAT_WINDOW_DAYS = 7
@@ -66,7 +54,7 @@ WHERE abs(date_diff('day', a.day, b.day)) <= {REPEAT_WINDOW_DAYS}
 """
 
 
-@_q("dq_rapid_repeat_orders", _REPEAT_SQL)
+@query("dq_rapid_repeat_orders", _REPEAT_SQL)
 def dq_rapid_repeat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-payment audit: order pairs from the same customer
     within 7 days whose amounts agree within 5% (cross-multiplied --
@@ -149,7 +137,7 @@ FROM joined GROUP BY lag ORDER BY lag
 """
 
 
-@_q("timeseries_xcorr_lags", _XCORR_SQL)
+@query("timeseries_xcorr_lags", _XCORR_SQL)
 def timeseries_xcorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Does click volume lead purchase volume, and by how many days?
     Exact integer correlation sufficient statistics between the two
@@ -243,7 +231,7 @@ ORDER BY level
 """
 
 
-@_q("privacy_generalization_ladder", _KANON_LADDER_SQL)
+@query("privacy_generalization_ladder", _KANON_LADDER_SQL)
 def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity (k=10) at three quasi-identifier granularities:
     (nation, segment) -> nation -> region. Per level: group count,
@@ -319,7 +307,7 @@ FROM ranked GROUP BY ym ORDER BY ym
 """
 
 
-@_q("orders_ship_latency_percentiles", _LATENCY_SQL)
+@query("orders_ship_latency_percentiles", _LATENCY_SQL)
 def orders_ship_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p50/p90/max order->ship latency (days) per order month.
     Percentile = the value at rn == ceil(p*n) ((n+1) DIV 2 and

@@ -15,19 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 DECAY_HALF_LIFE_DAYS = 30  # value halves every 30 days of age
@@ -64,7 +52,7 @@ FROM contrib GROUP BY o_custkey
 """
 
 
-@_q("customer_decayed_value_fixedpoint", _DECAY_SQL)
+@query("customer_decayed_value_fixedpoint", _DECAY_SQL)
 def customer_decayed_value_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-decayed customer value with a 30-day half life, in
     exact integer fixed point: each order contributes
@@ -121,7 +109,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@_q("mv_distinct_delta_maintenance", _MV_DISTINCT_SQL)
+@query("mv_distinct_delta_maintenance", _MV_DISTINCT_SQL)
 def mv_distinct_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a count-distinct MV: the refreshed
     per-type distinct-user count splits exactly into base (first seen

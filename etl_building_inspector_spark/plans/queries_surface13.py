@@ -16,19 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 SLA_DAYS = 30
@@ -42,7 +30,7 @@ GAP_BUCKETS = (
 )
 
 
-@_q(
+@query(
     "orders_fill_rate_sla",
     f"""
 SELECT o.o_orderpriority AS priority,
@@ -84,7 +72,7 @@ def orders_fill_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "window_first_last_value_battery",
     """
 WITH w AS (
@@ -141,7 +129,7 @@ def window_first_last_value_battery(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@_q(
+@query(
     "window_ratio_to_report",
     """
 WITH rev AS (
@@ -190,7 +178,7 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "window_lead_lag_battery",
     """
 WITH monthly AS (
@@ -246,7 +234,7 @@ def window_lead_lag_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("suppkey", "ym")
 
 
-@_q(
+@query(
     "dq_money_precision_audit",
     """
 SELECT 'o_totalprice' AS col, CAST(count(*) AS BIGINT) AS n_rows,
@@ -324,7 +312,7 @@ GROUP BY bucket ORDER BY bucket
 """
 
 
-@_q("events_gap_time_buckets", _gap_bucket_sql())
+@query("events_gap_time_buckets", _gap_bucket_sql())
 def events_gap_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event gap distribution in fixed human-scale buckets
     (<1s, 1-10s, 10-60s, 1-10m, 10-60m, >1h) -- the data behind
@@ -348,7 +336,7 @@ def events_gap_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "asof_join_forward",
     """
 WITH u AS (
@@ -420,7 +408,7 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "revenue_concentration_hhi",
     f"""
 WITH per_supp AS (
@@ -475,7 +463,7 @@ def revenue_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "orders_weekday_profile",
     """
 WITH d AS (
@@ -515,7 +503,7 @@ def orders_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "lineitem_return_rate_by_nation",
     """
 SELECT CAST(s.s_nationkey AS BIGINT) AS nationkey,
@@ -557,7 +545,7 @@ def lineitem_return_rate_by_nation(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_q(
+@query(
     "customers_monthly_lifecycle",
     """
 WITH cm AS (
@@ -622,7 +610,7 @@ def customers_monthly_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "cohort_time_to_first_purchase",
     """
 WITH firsts AS (

@@ -8,19 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, register_views
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -44,7 +32,7 @@ GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
 """
 
 
-@_q("sql_api_q3", _Q3_SQL)
+@query("sql_api_q3", _Q3_SQL)
 def sql_api_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same text runs on both engines: spark.sql IS the oracle SQL
     (modulo nothing -- Catalyst and DuckDB both speak this query)."""
@@ -57,7 +45,7 @@ def sql_api_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "array_function_battery",
     """
 WITH t AS (
@@ -101,7 +89,7 @@ def array_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "null_semantics_battery",
     """
 SELECT CAST(o_orderkey AS BIGINT) AS order_key,
@@ -139,7 +127,7 @@ def null_semantics_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "window_frames_battery",
     """
 SELECT CAST(l_suppkey AS BIGINT) AS supp_key,
@@ -194,7 +182,7 @@ def window_frames_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "conditional_agg_battery",
     """
 SELECT l_returnflag,
@@ -262,7 +250,7 @@ def _customer_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return changed.unionByName(new)
 
 
-@_q("merge_upsert", _MERGE_SQL)
+@query("merge_upsert", _MERGE_SQL)
 def merge_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scd import merge_upsert
 
@@ -308,7 +296,7 @@ FROM (
 """
 
 
-@_q("scd2_dimension", _SCD2_SQL)
+@query("scd2_dimension", _SCD2_SQL)
 def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scd import scd2_apply
 
@@ -345,7 +333,7 @@ def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "range_join_events",
     """
 SELECT CAST(a.event_id AS BIGINT) AS id_a,
@@ -398,7 +386,7 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "hypertable_rollup_daily",
     """
 SELECT time_bucket(INTERVAL '1 day', ts) AS bucket_start,

@@ -8,19 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, register_views
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -28,7 +16,7 @@ def _q(name: str, sql: str | None = None):
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "unpivot_metrics",
     """
 SELECT CAST(l_orderkey AS BIGINT) AS order_key,
@@ -82,7 +70,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """
 
 
-@_q("agg_grouping_sets", _GROUPING_SETS_SQL)
+@query("agg_grouping_sets", _GROUPING_SETS_SQL)
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(_GROUPING_SETS_SQL)
@@ -94,7 +82,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "window_distribution",
     """
 SELECT CAST(o_custkey AS BIGINT) AS cust_key,
@@ -124,7 +112,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "regexp_battery",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -155,7 +143,7 @@ def regexp_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "map_column_ops",
     """
 SELECT CAST(event_id AS BIGINT) AS event_id,
@@ -197,7 +185,7 @@ WHERE o.o_totalprice > (
 """
 
 
-@_q("correlated_scalar_subquery", _CORRELATED_SQL)
+@query("correlated_scalar_subquery", _CORRELATED_SQL)
 def correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders 50% above their customer's average order value. The
     correlated scalar subquery decorrelates into an aggregate + join;
@@ -228,7 +216,7 @@ LATERAL (SELECT o_orderkey, o_totalprice FROM orders
 """
 
 
-@_q("lateral_topk_orders", _LATERAL_SQL)
+@query("lateral_topk_orders", _LATERAL_SQL)
 def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(_LATERAL_SQL)
@@ -242,7 +230,7 @@ def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "variant_extraction",
     """
 SELECT CAST(event_id AS BIGINT) AS event_id,
@@ -271,7 +259,7 @@ def variant_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "j_skew_salted_join",
     """
 SELECT CAST(l.l_orderkey AS BIGINT) AS order_key,
@@ -303,7 +291,7 @@ def j_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "agg_skew_salted",
     """
 SELECT event_type,

@@ -22,19 +22,7 @@ from ..operators.sampling import (
     hash_split,
 )
 from ..sources.tables import load_table, register_views
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +43,7 @@ HAVING sum(CAST(round(l.l_extendedprice * 100, 0) AS BIGINT)) * 25 >
 """
 
 
-@_q("sql_api_q11ish", _Q11_SQL)
+@query("sql_api_q11ish", _Q11_SQL)
 def sql_api_q11ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brands holding >4% of total revenue -- Q11's "important stock"
     shape. Catalyst evaluates the uncorrelated scalar subquery once
@@ -90,7 +78,7 @@ LIMIT 50
 """
 
 
-@_q("sql_api_q21ish", _Q21_SQL)
+@query("sql_api_q21ish", _Q21_SQL)
 def sql_api_q21ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers who shipped the strictly-last line of multi-supplier
     finished orders (Q21's "kept the order waiting" shape, adapted to
@@ -128,7 +116,7 @@ GROUP BY c.c_mktsegment
 """
 
 
-@_q("sql_api_q22ish", _Q22_SQL)
+@query("sql_api_q22ish", _Q22_SQL)
 def sql_api_q22ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Well-funded customers with no OPEN orders (Q22 without the
     phone prefixes the fixture lacks): CTE + two uncorrelated scalar
@@ -146,7 +134,7 @@ def sql_api_q22ish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "sample_bottomk",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
@@ -168,7 +156,7 @@ def sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "sample_group_bottomk",
     """
 SELECT doc_id, source, rn FROM (
@@ -192,7 +180,7 @@ def sample_group_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "split_train_valid_test",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
@@ -215,7 +203,7 @@ def split_train_valid_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "sample_reservoir_merge",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
@@ -255,7 +243,7 @@ def sample_reservoir_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "text_ngram_topk",
     """
 SELECT gram, CAST(count(*) AS BIGINT) AS n
@@ -304,7 +292,7 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "graph_triangle_count",
     """
 WITH e AS (
@@ -344,7 +332,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "sample_weighted",
     """
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -394,7 +382,7 @@ WHERE cum_tokens <= 1500
 """
 
 
-@_q("budget_fill_by_quality", _BUDGET_SQL)
+@query("budget_fill_by_quality", _BUDGET_SQL)
 def budget_fill_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fill a 1500-token budget per source, admitting longer (proxy:
     higher-quality) documents first. The running sum is a single
@@ -426,7 +414,7 @@ def budget_fill_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "agg_histogram",
     """
 SELECT bucket,
@@ -540,7 +528,7 @@ def _copurchase_sym_edges(
     return sym
 
 
-@_q("graph_pagerank", _pagerank_sql())
+@query("graph_pagerank", _pagerank_sql())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four fixed-point PageRank iterations over part co-purchases --
     the relevance prior of a near-dup/citation graph. See
@@ -556,7 +544,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@query(
     "graph_degree_distribution",
     """
 WITH e0 AS (
@@ -632,7 +620,7 @@ FROM lp{rounds}"""
     return "".join(parts)
 
 
-@_q("graph_label_propagation", _lpa_sql())
+@query("graph_label_propagation", _lpa_sql())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation over the
     co-purchase graph -- {rounds} unrolled rounds, each adopting the
@@ -714,7 +702,7 @@ FROM edges{rounds} GROUP BY s"""
     return "".join(parts)
 
 
-@_q("graph_kcore", _kcore_sql())
+@query("graph_kcore", _kcore_sql())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{k}-core of the co-purchase graph by iterative peeling: each
     round drops nodes with degree < k and every edge touching them
@@ -783,7 +771,7 @@ QUALIFY rk <= {k}
 """
 
 
-@_q("graph_common_neighbors_topk", _common_neighbors_sql())
+@query("graph_common_neighbors_topk", _common_neighbors_sql())
 def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} link-prediction candidates per node: rank NON-adjacent
     pairs (u < v) by common-neighbor count. The wedge join runs only
@@ -874,7 +862,7 @@ QUALIFY rk <= {k}
 """
 
 
-@_q("graph_neighbor_jaccard_topk", _neighbor_jaccard_sql())
+@query("graph_neighbor_jaccard_topk", _neighbor_jaccard_sql())
 def graph_neighbor_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} link candidates per node by neighbor JACCARD (not raw
     common-neighbor count): intersection from the capped-middle wedge
@@ -963,7 +951,7 @@ FROM sums
 """
 
 
-@_q("graph_degree_assortativity", _ASSORT_SQL)
+@query("graph_degree_assortativity", _ASSORT_SQL)
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-assortativity coefficient (do hubs link to hubs?) over
     the co-purchase graph: two broadcast-degree joins onto the edge

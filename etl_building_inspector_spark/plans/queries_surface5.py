@@ -20,19 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 _CENTS = "CAST(round(%s * 100, 0) AS BIGINT)"
@@ -80,7 +68,7 @@ SELECT * FROM (
 """
 
 
-@_q("funnel_stages", _FUNNEL_SQL)
+@query("funnel_stages", _FUNNEL_SQL)
 def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four stage timestamps as window aggregates over ONE
     user_id partition: t1 = min signup ts, t2 = min view ts > t1, ...
@@ -145,7 +133,7 @@ GROUP BY 1, 2
 """
 
 
-@_q("cohort_retention", _COHORT_SQL)
+@query("cohort_retention", _COHORT_SQL)
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     month_num = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("int")
@@ -195,7 +183,7 @@ FROM runs GROUP BY user_id
 """
 
 
-@_q("streaks_gaps_islands", _STREAK_SQL)
+@query("streaks_gaps_islands", _STREAK_SQL)
 def streaks_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     days = events.select(
@@ -250,7 +238,7 @@ WHERE (v.best_cheaper IS NULL OR v.best_cheaper < p.size)
 """
 
 
-@_q("skyline_price_size", _SKYLINE_SQL)
+@query("skyline_price_size", _SKYLINE_SQL)
 def skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     pts = part.select(
@@ -311,7 +299,7 @@ SELECT path, occurrences FROM (
 """
 
 
-@_q("event_path_topk", _PATH_SQL)
+@query("event_path_topk", _PATH_SQL)
 def event_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -364,7 +352,7 @@ GROUP BY 1
 """
 
 
-@_q("attribution_last_touch", _ATTR_SQL)
+@query("attribution_last_touch", _ATTR_SQL)
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = (
@@ -439,7 +427,7 @@ FROM planned GROUP BY part_month, bin
 """
 
 
-@_q("compaction_bin_plan", _COMPACT_SQL)
+@query("compaction_bin_plan", _COMPACT_SQL)
 def compaction_bin_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     files = li.groupBy(
@@ -493,7 +481,7 @@ FROM ranked GROUP BY o_orderpriority
 """
 
 
-@_q("median_exact_groups", _MEDIAN_SQL)
+@query("median_exact_groups", _MEDIAN_SQL)
 def median_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
@@ -546,7 +534,7 @@ _PROFILE_SQL = (
 )
 
 
-@_q("profile_columns", _PROFILE_SQL)
+@query("profile_columns", _PROFILE_SQL)
 def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n_rows")]
@@ -589,7 +577,7 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-@_q("incremental_agg_merge", _INC_SQL)
+@query("incremental_agg_merge", _INC_SQL)
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
@@ -671,7 +659,7 @@ SELECT * FROM (
 """
 
 
-@_q("funnel_stages_windowed", _FUNNEL_WIN_SQL)
+@query("funnel_stages_windowed", _FUNNEL_WIN_SQL)
 def funnel_stages_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
@@ -769,7 +757,7 @@ FROM ranked GROUP BY transition_order, transition
 """
 
 
-@_q("funnel_time_to_convert", _TTC_SQL)
+@query("funnel_time_to_convert", _TTC_SQL)
 def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
@@ -861,7 +849,7 @@ GROUP BY 1
 """
 
 
-@_q("attribution_first_touch", _ATTR_FIRST_SQL)
+@query("attribution_first_touch", _ATTR_FIRST_SQL)
 def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = (
@@ -949,7 +937,7 @@ FROM per_session GROUP BY entry, exit
 """
 
 
-@_q("session_entry_exit", _ENTRY_EXIT_SQL)
+@query("session_entry_exit", _ENTRY_EXIT_SQL)
 def session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -989,7 +977,7 @@ def session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "intervals_merge_overlaps",
     """
 WITH iv AS (
@@ -1083,7 +1071,7 @@ def intervals_merge_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "weighted_median_exact",
     """
 WITH w AS (
@@ -1187,7 +1175,7 @@ SELECT CAST(-1 AS BIGINT) AS file_id, CAST(0 AS BIGINT) AS n_rows_before,
 """
 
 
-@_q("merge_on_files_cow", _MERGE_COW_SQL)
+@query("merge_on_files_cow", _MERGE_COW_SQL)
 def merge_on_files_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copy-on-write MERGE file plan: which files must be rewritten to
     apply an upsert changeset, which survive untouched, and the one
@@ -1281,7 +1269,7 @@ GROUP BY 1
 """
 
 
-@_q("attribution_linear_touch", _ATTR_LINEAR_SQL)
+@query("attribution_linear_touch", _ATTR_LINEAR_SQL)
 def attribution_linear_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-credit multi-touch attribution over a 3-day lookback.
     Join shape: purchases LEFT range-join touches on user_id (SMJ on

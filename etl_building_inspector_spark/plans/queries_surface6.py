@@ -18,19 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -56,7 +44,7 @@ HAVING count(*) >= {BASKET_MIN_SUPPORT}
 """
 
 
-@_q("basket_pair_support", _BASKET_SQL)
+@query("basket_pair_support", _BASKET_SQL)
 def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
@@ -111,7 +99,7 @@ GROUP BY 1
 """
 
 
-@_q("snapshot_diff", _DIFF_SQL)
+@query("snapshot_diff", _DIFF_SQL)
 def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
@@ -170,7 +158,7 @@ GROUP BY 1
 """
 
 
-@_q("rolling_7d_active_users", _WAU_SQL)
+@query("rolling_7d_active_users", _WAU_SQL)
 def rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     du = events.select(F.to_date("ts").alias("d"), "user_id").distinct()
@@ -221,7 +209,7 @@ FROM (
 """
 
 
-@_q("skew_key_diagnostics", _SKEW_SQL)
+@query("skew_key_diagnostics", _SKEW_SQL)
 def skew_key_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -288,7 +276,7 @@ SELECT * FROM (
 """
 
 
-@_q("dq_constraint_checks", _DQ_SQL)
+@query("dq_constraint_checks", _DQ_SQL)
 def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -373,7 +361,7 @@ FROM spine s LEFT JOIN rev r
 """
 
 
-@_q("densify_date_spine", _SPINE_SQL)
+@query("densify_date_spine", _SPINE_SQL)
 def densify_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -437,7 +425,7 @@ FROM monthly
 """
 
 
-@_q("mom_revenue_growth", _MOM_SQL)
+@query("mom_revenue_growth", _MOM_SQL)
 def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -497,7 +485,7 @@ FROM clicks c ASOF LEFT JOIN purchases p
 """
 
 
-@_q("asof_join_tolerance", _ASOF_TOL_SQL)
+@query("asof_join_tolerance", _ASOF_TOL_SQL)
 def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -591,7 +579,7 @@ FROM walk GROUP BY node
 """
 
 
-@_q("sql_recursive_reachability", _RCTE_SQL)
+@query("sql_recursive_reachability", _RCTE_SQL)
 def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import register_views
 
@@ -630,7 +618,7 @@ FROM swept GROUP BY l_suppkey
 """
 
 
-@_q("max_concurrent_intervals", _SWEEP_SQL)
+@query("max_concurrent_intervals", _SWEEP_SQL)
 def max_concurrent_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -691,7 +679,7 @@ FROM rel GROUP BY nationkey
 """
 
 
-@_q("regression_slope_by_nation", _SLOPE_SQL)
+@query("regression_slope_by_nation", _SLOPE_SQL)
 def regression_slope_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -758,7 +746,7 @@ GROUP BY user_id
 """
 
 
-@_q("time_weighted_value", _TWAP_SQL)
+@query("time_weighted_value", _TWAP_SQL)
 def time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -815,7 +803,7 @@ FROM keyed GROUP BY 1
 """
 
 
-@_q("zorder_bucket_stats", _ZORDER_SQL)
+@query("zorder_bucket_stats", _ZORDER_SQL)
 def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_partkey") % 1024
@@ -850,7 +838,7 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "median_exact_udaf",
     """
 WITH ranked AS (
@@ -933,7 +921,7 @@ FROM lineitem GROUP BY l_linestatus
 """
 
 
-@_q("try_function_battery", _TRY_SQL)
+@query("try_function_battery", _TRY_SQL)
 def try_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
@@ -979,7 +967,7 @@ FROM seq WHERE next_id IS NOT NULL AND next_id - id > 1
 """
 
 
-@_q("id_gap_ranges", _GAPS_SQL)
+@query("id_gap_ranges", _GAPS_SQL)
 def id_gap_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1028,7 +1016,7 @@ WHERE p.n_classes = u.n_classes
 """
 
 
-@_q("relational_division", _DIVISION_SQL)
+@query("relational_division", _DIVISION_SQL)
 def relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     universe = orders.agg(
@@ -1080,7 +1068,7 @@ CROSS JOIN tot t
 """
 
 
-@_q("basket_pair_lift", _LIFT_SQL)
+@query("basket_pair_lift", _LIFT_SQL)
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
@@ -1162,7 +1150,7 @@ FROM coded GROUP BY 1
 """
 
 
-@_q("rfm_segmentation", _RFM_SQL)
+@query("rfm_segmentation", _RFM_SQL)
 def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1226,7 +1214,7 @@ GROUP BY d.label
 """
 
 
-@_q("join_null_safe", _NULLSAFE_SQL)
+@query("join_null_safe", _NULLSAFE_SQL)
 def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     o = orders.select(
@@ -1290,7 +1278,7 @@ GROUP BY r.pri
 """
 
 
-@_q("outlier_iqr_by_group", _IQR_SQL)
+@query("outlier_iqr_by_group", _IQR_SQL)
 def outlier_iqr_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1353,7 +1341,7 @@ FROM orders
 """
 
 
-@_q("provenance_file_counts", _PROV_SQL)
+@query("provenance_file_counts", _PROV_SQL)
 def provenance_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -1393,7 +1381,7 @@ FROM per_day
 """
 
 
-@_q("cumulative_unique_users", _CUMUSERS_SQL)
+@query("cumulative_unique_users", _CUMUSERS_SQL)
 def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1433,7 +1421,7 @@ GROUP BY prev, cur
 """
 
 
-@_q("status_transition_matrix", _TRANS_SQL)
+@query("status_transition_matrix", _TRANS_SQL)
 def status_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1484,7 +1472,7 @@ FROM (SELECT rk, total FROM ranked WHERE 5 * cum >= 4 * total),
 """
 
 
-@_q("revenue_concentration_8020", _CONC_SQL)
+@query("revenue_concentration_8020", _CONC_SQL)
 def revenue_concentration_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1562,7 +1550,7 @@ GROUP BY d.event_type
 """
 
 
-@_q("outlier_mad_by_group", _MAD_SQL)
+@query("outlier_mad_by_group", _MAD_SQL)
 def outlier_mad_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-MAD outliers per event type. Plan: two window-rank passes
     over the SAME event_type partitioning (AQE reuses the shuffle) +
@@ -1644,7 +1632,7 @@ FROM aged GROUP BY 1, 2
 """
 
 
-@_q("orders_backlog_aging", _AGING_SQL)
+@query("orders_backlog_aging", _AGING_SQL)
 def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open ('O') orders bucketed by age at the dataset's horizon.
     The horizon max(o_orderdate) joins in as a broadcast one-row
@@ -1697,7 +1685,7 @@ GROUP BY e.event_type, x.h
 """
 
 
-@_q("dq_freshness_by_type", _FRESHNESS_SQL)
+@query("dq_freshness_by_type", _FRESHNESS_SQL)
 def dq_freshness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag of each event type's latest event behind the dataset
     horizon, in whole minutes (integer microsecond arithmetic -- the

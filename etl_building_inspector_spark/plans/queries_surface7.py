@@ -32,19 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +65,7 @@ ORDER BY relation
 """
 
 
-@_q("dq_referential_integrity", _REF_INTEGRITY_SQL)
+@query("dq_referential_integrity", _REF_INTEGRITY_SQL)
 def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FK orphan audit across the star schema: each relation is a
     LEFT ANTI join counting child rows whose parent key is missing.
@@ -138,7 +126,7 @@ ORDER BY constraint_name
 """
 
 
-@_q("dq_uniqueness_violations", _UNIQUENESS_SQL)
+@query("dq_uniqueness_violations", _UNIQUENESS_SQL)
 def dq_uniqueness_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Primary-key uniqueness audit: per declared key, how many key
     VALUES occur more than once. Each check is a single map-side-
@@ -198,7 +186,7 @@ FROM w ORDER BY day
 """
 
 
-@_q("timeseries_ewma_bounded", _EWMA_SQL)
+@query("timeseries_ewma_bounded", _EWMA_SQL)
 def timeseries_ewma_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of daily revenue with
     power-of-two weights over a bounded 8-row window: numerator and
@@ -280,7 +268,7 @@ FROM o GROUP BY day ORDER BY day
 """
 
 
-@_q("timeseries_ohlc_daily", _OHLC_SQL)
+@query("timeseries_ohlc_daily", _OHLC_SQL)
 def timeseries_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC bars over the event stream: open/close picked by
     row_number under (ts, event_id) -- deterministic even with tied
@@ -331,7 +319,7 @@ FROM l WHERE forecast_cents IS NOT NULL ORDER BY day
 """
 
 
-@_q("timeseries_seasonal_naive_error", _SEASONAL_SQL)
+@query("timeseries_seasonal_naive_error", _SEASONAL_SQL)
 def timeseries_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive (lag-7) forecast backtest over daily revenue:
     per-day absolute error in exact integer cents. The pattern under
@@ -379,7 +367,7 @@ ORDER BY o_orderkey
 """
 
 
-@_q("sample_systematic", _SYSTEMATIC_SQL)
+@query("sample_systematic", _SYSTEMATIC_SQL)
 def sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every k-th row in md5-hash order: exact 1/k sample, fully
     deterministic, engine-portable. The global row_number is the one
@@ -419,7 +407,7 @@ FROM events GROUP BY 1 ORDER BY day
 """
 
 
-@_q("pivot_event_counts", _PIVOT_SQL)
+@query("pivot_event_counts", _PIVOT_SQL)
 def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.groupBy(day).pivot(type, DECLARED_VALUES).count(): with the
     value list declared, Spark skips the extra distinct-collection
@@ -481,7 +469,7 @@ ORDER BY nation, p
 """
 
 
-@_q("percentiles_exact_battery", _pct_sql())
+@query("percentiles_exact_battery", _pct_sql())
 def percentiles_exact_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p25/p50/p75 of customer balance per nation via the explicit
     linear-interpolation formula (both engines evaluate the SAME
@@ -555,7 +543,7 @@ ORDER BY priority
 """
 
 
-@_q("mv_join_delta_maintenance", _IVM_SQL)
+@query("mv_join_delta_maintenance", _IVM_SQL)
 def mv_join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintain an aggregated join view under two-sided deltas via the
     IVM identity: split orders (key % 7 == 0 -> delta) and lineitem
@@ -626,7 +614,7 @@ FROM e
 """
 
 
-@_q("window_range_frames", _RANGE_FRAMES_SQL)
+@query("window_range_frames", _RANGE_FRAMES_SQL)
 def window_range_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-1-hour per-user sliding sum/count via RANGE frames
     over integer epoch seconds -- the event-time window shape ROWS
@@ -677,7 +665,7 @@ ORDER BY priority
 """
 
 
-@_q("agg_mode_exact", _MODE_SQL)
+@query("agg_mode_exact", _MODE_SQL)
 def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group mode (count desc, value asc): the
     window formulation both engines evaluate identically, vs the
@@ -724,7 +712,7 @@ FROM s ORDER BY user_id
 """
 
 
-@_q("events_sequence_pattern", _SEQ_SQL)
+@query("events_sequence_pattern", _SEQ_SQL)
 def events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user behavioral-pattern count: order events (ts, event_id),
     reduce each to its initial letter, count non-overlapping
@@ -798,7 +786,7 @@ ORDER BY user_id
 """
 
 
-@_q("intervals_intersection_total", _INTERSECT_SQL)
+@query("intervals_intersection_total", _INTERSECT_SQL)
 def intervals_intersection_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-algebra intersection: merge each event-derived
     interval set per user (cumulative-max islands, window-only -- no
@@ -883,7 +871,7 @@ ORDER BY day
 """
 
 
-@_q("audience_overlap_daily", _AUDIENCE_SQL)
+@query("audience_overlap_daily", _AUDIENCE_SQL)
 def audience_overlap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day audience accounting (active / retained / new) via
     a self-join of the DISTINCT (day, user) activity table against
@@ -974,7 +962,7 @@ ORDER BY user_id
 """
 
 
-@_q("dq_event_order_inversions", _INVERSIONS_SQL)
+@query("dq_event_order_inversions", _INVERSIONS_SQL)
 def dq_event_order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late/out-of-order arrival audit per user: ingestion order
     (event_id) vs event time, counting backward steps and the worst
@@ -1055,7 +1043,7 @@ ORDER BY f.day
 """
 
 
-@_q("timeseries_decompose_weekly", _DECOMP_SQL)
+@query("timeseries_decompose_weekly", _DECOMP_SQL)
 def timeseries_decompose_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trend + weekly-seasonal decomposition in the exact integer
     domain until the final divisions: centered 7-row trend sum,
@@ -1141,7 +1129,7 @@ ORDER BY cust_key
 """
 
 
-@_q("scd2_as_of_read", _SCD2_ASOF_SQL)
+@query("scd2_as_of_read", _SCD2_ASOF_SQL)
 def scd2_as_of_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time dimension reconstruction from SCD2 history
     (valid_from <= T < valid_to): every key appears exactly once with

@@ -17,19 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 # shared constants
@@ -63,7 +51,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-@_q("histogram_equi_depth", _EQUI_SQL)
+@query("histogram_equi_depth", _EQUI_SQL)
 def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (quantile-bucket) histogram of order totals: ntile
     over (cents, orderkey) -- the tiebreak makes bucket membership
@@ -126,7 +114,7 @@ ORDER BY custkey
 """
 
 
-@_q("customer_interpurchase_stats", _INTERP_SQL)
+@query("customer_interpurchase_stats", _INTERP_SQL)
 def customer_interpurchase_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer inter-purchase gap statistics (repeat-purchase
     cadence): one lag window partitioned by customer, one groupBy --
@@ -192,7 +180,7 @@ ORDER BY event_type, day
 """
 
 
-@_q("timeseries_zscore_anomaly", _ZSCORE_SQL)
+@query("timeseries_zscore_anomaly", _ZSCORE_SQL)
 def timeseries_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-revenue anomaly flags per event type: baseline = the 7
     trailing OBSERVED days (a ROWS frame over the per-day aggregate --
@@ -273,7 +261,7 @@ ORDER BY custkey
 """
 
 
-@_q("bitemporal_as_of_join", _BITEMPORAL_SQL)
+@query("bitemporal_as_of_join", _BITEMPORAL_SQL)
 def bitemporal_as_of_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitemporal point-in-time read: the dimension value valid at V
     as KNOWN at transaction time T. The valid-interval chain (lead
@@ -351,7 +339,7 @@ ORDER BY event_type
 """
 
 
-@_q("dq_distribution_drift", _DRIFT_SQL)
+@query("dq_distribution_drift", _DRIFT_SQL)
 def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Early-vs-late value-distribution drift per event type, as
     exact-ppm total-variation distance over fixed-width buckets. One
@@ -438,7 +426,7 @@ FROM m ORDER BY cohort_ym, age_months
 """
 
 
-@_q("cohort_ltv_curve", _LTV_SQL)
+@query("cohort_ltv_curve", _LTV_SQL)
 def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative lifetime value by acquisition cohort and age: first
     purchase month defines the cohort, every later order lands at its
@@ -517,7 +505,7 @@ FROM t ORDER BY digit
 """
 
 
-@_q("dq_benford_first_digit", _BENFORD_SQL)
+@query("dq_benford_first_digit", _BENFORD_SQL)
 def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-digit (Benford) audit of order totals: observed vs
     expected digit frequency in exact ppm, expected values baked in as
@@ -595,7 +583,7 @@ FROM w GROUP BY event_type ORDER BY event_type
 """
 
 
-@_q("incremental_agg_retract", _RETRACT_SQL)
+@query("incremental_agg_retract", _RETRACT_SQL)
 def incremental_agg_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge a correction feed into a running aggregate via weighted
     deltas: count and sum absorb (-1, +1) pairs directly, no base
@@ -650,7 +638,7 @@ FROM d GROUP BY diff_digits ORDER BY diff_digits
 """
 
 
-@_q("dq_cross_table_reconciliation", _RECON_SQL)
+@query("dq_cross_table_reconciliation", _RECON_SQL)
 def dq_cross_table_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header-vs-detail reconciliation histogram: per order, the
     lineitem rollup (exact BIGINT at 1e4 scale via per-factor integer
@@ -720,7 +708,7 @@ ORDER BY node
 """
 
 
-@_q("hierarchy_rollup_cost", _HIER_SQL)
+@query("hierarchy_rollup_cost", _HIER_SQL)
 def hierarchy_rollup_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subtree cost rollup over the implicit decimal hierarchy
     (parent = key DIV 10): each row explodes its arithmetic ancestor

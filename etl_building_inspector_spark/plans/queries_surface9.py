@@ -18,19 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 NORM_OUTLIER_PCT = 1  # top 1% by norm per label
@@ -69,7 +57,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@_q("timeseries_acf_lag1", _ACF_SQL)
+@query("timeseries_acf_lag1", _ACF_SQL)
 def timeseries_acf_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation sufficient statistics per event_type over
     daily totals. Per-row values are rounded to integer units FIRST
@@ -133,7 +121,7 @@ SELECT event_type, day, 'max' AS kind,
 """
 
 
-@_q("timeseries_downsample_minmax", _DOWNSAMPLE_SQL)
+@query("timeseries_downsample_minmax", _DOWNSAMPLE_SQL)
 def timeseries_downsample_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downsample each (event_type, day) bucket to exactly its min and
     max rows -- extremes survive, which is the property plotting and
@@ -208,7 +196,7 @@ ORDER BY label, rank
 """
 
 
-@_q("emb_norm_percentile_outliers", _NORM_OUTLIER_SQL)
+@query("emb_norm_percentile_outliers", _NORM_OUTLIER_SQL)
 def emb_norm_percentile_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top ceil(1%) of vectors per label by squared L2 norm --
     degenerate/corrupted embeddings (all-large or denormal activations)
@@ -277,7 +265,7 @@ FROM grid GROUP BY nationkey ORDER BY nationkey
 """
 
 
-@_q("privacy_t_closeness", _TCLOSENESS_SQL)
+@query("privacy_t_closeness", _TCLOSENESS_SQL)
 def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness per quasi-identifier group (nation): total
     variation distance between the group's market-segment distribution
@@ -361,7 +349,7 @@ ORDER BY timeout_s
 """
 
 
-@_q("sessionization_gap_sensitivity", _gap_sensitivity_sql())
+@query("sessionization_gap_sensitivity", _gap_sensitivity_sql())
 def sessionization_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session counts at 10/30/60-minute timeouts from ONE pass: a
     gap-sessionization's session count is n_users + (gaps > timeout),

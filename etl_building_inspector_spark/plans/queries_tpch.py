@@ -28,19 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from .registry import query
 
 
 def _rev_e4(price="l_extendedprice", disc="l_discount"):
@@ -58,7 +46,7 @@ _REV_E4_SQL = "CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGI
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q2_best_supplier",
     f"""
 WITH sp AS (
@@ -135,7 +123,7 @@ def tpch_q2_best_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q4_order_priority_exists",
     """
 SELECT o_orderpriority AS priority, CAST(count(*) AS BIGINT) AS order_count
@@ -175,7 +163,7 @@ def tpch_q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q5_local_supplier_volume",
     f"""
 SELECT n_name AS nation, CAST(sum({_REV_E4_SQL}) AS BIGINT) AS revenue_e4
@@ -231,7 +219,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q6_forecast_revenue",
     """
 SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000, 0) AS BIGINT)) AS BIGINT) AS revenue_delta_e4,
@@ -273,7 +261,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q7_volume_shipping",
     f"""
 SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
@@ -340,7 +328,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q8_market_share",
     f"""
 WITH mkt AS (
@@ -418,7 +406,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q9_profit_by_nation_year",
     f"""
 SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS order_year,
@@ -463,7 +451,7 @@ def tpch_q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q10_returned_items",
     f"""
 WITH r AS (
@@ -524,7 +512,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q12_shipping_delay_buckets",
     """
 SELECT o_orderpriority AS priority,
@@ -561,7 +549,7 @@ def tpch_q12_shipping_delay_buckets(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q13_order_count_distribution",
     """
 WITH per_cust AS (
@@ -598,7 +586,7 @@ def tpch_q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataF
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q14_promo_share",
     f"""
 SELECT
@@ -636,7 +624,7 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q15_top_supplier",
     f"""
 WITH rev AS (
@@ -684,7 +672,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q16_supplier_variety",
     """
 SELECT p_brand AS brand, p_type AS type, CAST(p_size AS BIGINT) AS size,
@@ -726,7 +714,7 @@ def tpch_q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q17_small_quantity_revenue",
     f"""
 WITH b AS (
@@ -774,7 +762,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q18_large_volume_customers",
     """
 WITH big AS (
@@ -824,7 +812,7 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q19_disjunctive_predicates",
     f"""
 SELECT CAST(sum({_REV_E4_SQL}) AS BIGINT) AS revenue_e4,
@@ -861,7 +849,7 @@ def tpch_q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-@_q(
+@query(
     "tpch_q20_dominant_suppliers",
     """
 WITH wl AS (

@@ -1,15 +1,23 @@
-"""Unified query registry: every ``queries_*`` module's QUERIES and
-ORACLES merged for the driver contract (__spark_entry__.queries /
-oracle_sql).
+"""The query registry: every query of the driver contract
+(__spark_entry__.queries / oracle_sql) is registered here.
 
-Every registered callable is wrapped to release operator-internal
+A query module adds a query with the ``query`` decorator::
+
+    from .registry import query
+
+    @query("my_query", MY_QUERY_SQL)   # the SQL is its DuckDB oracle
+    def my_query(spark, sf_dir): ...
+
+``QUERIES`` holds each query wrapped to release operator-internal
 persisted blocks (operators/_cache.py) BEFORE building its plan: the
 driver runs many queries (200+ registered) in one long-lived session
 and never calls release_persisted() itself, so without this hook the
 self-join caches (LSH buckets, jaccard shingles, CC edge lists)
 accumulate until a default-sized heap OOMs. Releasing at next-query
 entry is safe because the driver materializes each result before
-invoking the next query.
+invoking the next query. The decorator returns the function itself,
+so a query that builds another one calls it directly and never
+through the wrapper.
 
 Order is ``HEAD``, then every other query in module order: the
 ``queries_*`` file names sorted naturally (core, domain, llm, llm2 ..
@@ -107,6 +115,26 @@ def _released(fn):
     return wrapped
 
 
+QUERIES: dict = {}
+ORACLES: dict[str, str] = {}
+
+
+def query(name: str, sql: str | None = None):
+    """Decorator: register the function as query ``name``, with its
+    DuckDB oracle ``sql`` if given, and return the function unchanged.
+    A name can be registered once only."""
+
+    def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = _released(fn)
+        if sql is not None:
+            ORACLES[name] = sql
+        return fn
+
+    return deco
+
+
 def _natural(name: str) -> list:
     return [int(p) if p.isdigit() else p for p in re.split(r"(\d+)", name)]
 
@@ -116,14 +144,10 @@ _modules = sorted(
      if m.name.startswith("queries_")),
     key=_natural,
 )
-_all: dict = {}
-ORACLES: dict[str, str] = {}
 for _name in _modules:
-    _mod = importlib.import_module(f".{_name}", __package__)
-    _all.update({k: _released(v) for k, v in _mod.QUERIES.items()})
-    ORACLES.update(_mod.ORACLES)
+    importlib.import_module(f".{_name}", __package__)
 
-assert len(HEAD) == len(set(HEAD)) == 50 and set(HEAD) <= set(_all), (
+assert len(HEAD) == len(set(HEAD)) == 50 and set(HEAD) <= set(QUERIES), (
     "HEAD must name 50 unique registered queries"
 )
-QUERIES: dict = {n: _all[n] for n in HEAD} | _all
+QUERIES = {n: QUERIES[n] for n in HEAD} | QUERIES

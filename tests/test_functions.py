@@ -109,31 +109,6 @@ def test_minhash_jaccard_correlation(spark):
     assert agree_13 == 0
 
 
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    """Salting must not change join semantics, only shuffle spread."""
-    from etl_building_inspector_spark.operators.joins import salted_join
-    from etl_building_inspector_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = (
-        li.join(orders, "l_orderkey")
-        .groupBy("l_orderkey")
-        .count()
-        .collect()
-    )
-    salted = (
-        salted_join(li, orders, "l_orderkey", salt=4)
-        .groupBy("l_orderkey")
-        .count()
-        .collect()
-    )
-    assert sorted((r.l_orderkey, r["count"]) for r in plain) == sorted(
-        (r.l_orderkey, r["count"]) for r in salted
-    )
-
 
 def test_approx_error_bounds(spark, sf_dir):
     """Sketch aggregates have no portable oracle; pin their error

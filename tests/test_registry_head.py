@@ -11,7 +11,9 @@ from __future__ import annotations
 import hashlib
 import json
 
-from etl_building_inspector_spark.plans.registry import ORACLES, QUERIES
+import pytest
+
+from etl_building_inspector_spark.plans.registry import ORACLES, QUERIES, query
 
 HEAD = [
     "dedup_embedding_cosine",
@@ -94,3 +96,10 @@ def test_oracle_sql_unchanged():
 def test_every_query_carries_the_release_wrapper():
     unwrapped = [n for n, q in QUERIES.items() if not hasattr(q, "__wrapped__")]
     assert not unwrapped
+
+
+def test_duplicate_registration_is_rejected():
+    before = dict(QUERIES)
+    with pytest.raises(ValueError):
+        query("flagship_enrich")(lambda s, d: None)
+    assert QUERIES == before
