@@ -36,8 +36,9 @@ def _norm(a: Column) -> Column:
 
 
 def _cosine(a: Column, b: Column) -> Column:
-    """Cosine of two array columns, dot / (norm * norm): the expression
-    every HOF cosine in this module builds, so plans stay identical."""
+    """JVM-native cosine of two array columns, dot / (norm * norm): the
+    one cosine expression of the HOF paths (cosine_arrow is its
+    bit-identical Python kernel)."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 

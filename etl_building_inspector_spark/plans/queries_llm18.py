@@ -142,16 +142,14 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     x-per-row filter, not a shuffle. This is the exact baseline the
     bucketed variants (dedup_embedding_cosine_lsh, ann_cosine_ivf)
     trade recall against."""
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import _cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < RANGE_SEARCH_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
     c = emb.select(F.col("vec_id").alias("vec_id"), "embedding")
-    cos = _dot(F.col("qe"), F.col("embedding")) / (
-        _norm(F.col("qe")) * _norm(F.col("embedding"))
-    )
+    cos = _cosine(F.col("qe"), F.col("embedding"))
     return (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))

@@ -260,15 +260,13 @@ def emb_cosine_histogram_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     side stays broadcastable; the histogram needs only ~1e5 pairs for
     a stable shape, not a fixed FRACTION."""
     emb = load_table(spark, sf_dir, "embeddings")
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import _cosine
 
     a = emb.filter(F.col("vec_id") % COSINE_HIST_MOD == 0).select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")
     )
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (
-        _norm(F.col("ea")) * _norm(F.col("eb"))
-    )
+    cos = _cosine(F.col("ea"), F.col("eb"))
     pairs = (
         b.join(
             F.broadcast(a),

@@ -199,15 +199,13 @@ def ann_topk_margin_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     justifies a score cutoff or a larger k before trusting retrieval.
     Cosines are the shared sequential fold; the margin is one
     subtraction of two per-row-deterministic doubles."""
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import _cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < MARGIN_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
-    cos = _dot(F.col("qe"), F.col("embedding")) / (
-        _norm(F.col("qe")) * _norm(F.col("embedding"))
-    )
+    cos = _cosine(F.col("qe"), F.col("embedding"))
     scored = (
         emb.select(F.col("vec_id").alias("c_id"), "embedding")
         .crossJoin(F.broadcast(q))
@@ -761,15 +759,13 @@ def ann_radius_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- how fast the neighborhood shrinks as the radius tightens, the
     data behind ann_range_search's threshold. Broadcast query block,
     corpus streams once."""
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import _cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
-    cos = _dot(F.col("qe"), F.col("embedding")) / (
-        _norm(F.col("qe")) * _norm(F.col("embedding"))
-    )
+    cos = _cosine(F.col("qe"), F.col("embedding"))
     scored = (
         emb.select(F.col("vec_id").alias("c_id"), "embedding")
         .crossJoin(F.broadcast(q))

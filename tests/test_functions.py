@@ -109,7 +109,6 @@ def test_minhash_jaccard_correlation(spark):
     assert agree_13 == 0
 
 
-
 def test_approx_error_bounds(spark, sf_dir):
     """Sketch aggregates have no portable oracle; pin their error
     against exact answers instead (HLL rsd default 5%; KLL median
