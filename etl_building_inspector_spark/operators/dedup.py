@@ -764,7 +764,10 @@ def minhash_band_index(
     )
     return buckets.groupBy("band", "key").agg(
         F.count("*").cast("long").alias("n_index_docs"),
-        F.min(id_col).cast("long").alias("first_match_id"),
+        # cast BEFORE the min, as the streaming refresh does: string
+        # ids must take the numeric min ("9" < "10"), not the
+        # lexicographic one
+        F.min(F.col(id_col).cast("long")).alias("first_match_id"),
     )
 
 

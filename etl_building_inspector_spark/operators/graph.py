@@ -360,6 +360,9 @@ def sssp_bounded(
         .withColumn("dist", F.lit(0).cast("long"))
     )
     frontier = dist
+    # the checkpointed frame behind `dist`: after round 1 `dist` is a
+    # select over it, which free_local_checkpoint cannot resolve
+    held = dist
     for _ in range(max_hops):
         cand = (
             sym.join(frontier, sym["s"] == frontier["node"])
@@ -387,7 +390,8 @@ def sssp_bounded(
             )
         )
         n_improved = merged.filter(F.col("improved")).count()
-        free_local_checkpoint(dist)
+        free_local_checkpoint(held)
+        held = merged
         if n_improved == 0:
             return merged.select("node", "dist")
         dist = merged.select("node", "dist")

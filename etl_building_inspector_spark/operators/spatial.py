@@ -10,11 +10,14 @@ exact test). The Spark-first re-expression:
   * the R-tree bbox prefilter -> a grid-cell equi-join conjunct
     (polygons exploded to covered cells, points to their cell);
   * the exact test -> an even-odd ray-cast implemented as PURE COLUMN
-    EXPRESSIONS (filter/size over the ring's edge list) -- JVM-side,
+    EXPRESSIONS (filter/size over the rings' edge list) -- JVM-side,
     whole-stage-codegen'd, no Python UDF, and expressible 1:1 in the
     DuckDB oracle.
 
-Two physical strategies, same semantics:
+Polygons are GeoJSON Polygons: array<array<array<double>>>, the outer
+ring first, then any holes. A hole-free polygon is a one-ring array.
+
+Two physical strategies for point-in-polygon, same semantics:
   spatial_join_broadcast -- polygons broadcast, equi-join on layer_id
     only. Right when the polygon side fits in memory (the reference's
     own regime).
@@ -22,25 +25,25 @@ Two physical strategies, same semantics:
     hash join on a fine key. The 100 TB path: no broadcast limit, skew
     bounded by cell size; a point lives in exactly one cell so no
     dedup of matches is needed.
+
+Polygon-polygon joins share one filter-refine shape (_grid_pair_join):
+both sides explode to the grid cells their bbox covers (grid_cells),
+equi-join on (layer_id, cx, cy), dedup the pairs, then run the exact
+predicate on the candidates only.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def point_in_polygon(px: Column, py: Column, ring: Column) -> Column:
-    """Even-odd ray cast: count ring edges crossed by the +x ray from
-    (px, py); odd -> inside. `ring` is array<array<double>> with the
-    first vertex repeated last (GeoJSON closed ring).
-
-    All arithmetic is closed-form column math, so Spark and the DuckDB
-    twin produce bit-identical booleans. The horizontal-edge division
-    is guarded with when() (no short-circuit guarantees inside
-    higher-order lambdas under ANSI mode).
-    """
-    edges = F.zip_with(
+def _ring_edges(ring: Column) -> Column:
+    """array<struct<ax,ay,bx,by>> of directed edges for a CLOSED ring
+    (first vertex repeated last) of [x, y] points."""
+    return F.zip_with(
         F.slice(ring, 1, F.size(ring) - 1),
         F.slice(ring, 2, F.size(ring) - 1),
         lambda a, b: F.struct(
@@ -51,23 +54,20 @@ def point_in_polygon(px: Column, py: Column, ring: Column) -> Column:
         ),
     )
 
-    def crosses(e: Column) -> Column:
-        straddles = (e.getField("ay") > py) != (e.getField("by") > py)
-        x_at_y = e.getField("ax") + (py - e.getField("ay")) * (
-            e.getField("bx") - e.getField("ax")
-        ) / (e.getField("by") - e.getField("ay"))
-        return F.when(straddles, px < x_at_y).otherwise(F.lit(False))
-
-    n_crossings = F.size(F.filter(edges, crosses))
-    return n_crossings % 2 == 1
-
 
 def point_in_polygon_with_holes(px: Column, py: Column, polygon: Column) -> Column:
-    """Even-odd test over ALL rings of a GeoJSON polygon (outer ring +
-    holes): total crossing parity flips inside a hole, which is exactly
-    even-odd semantics. `polygon` is array<array<array<double>>>.
+    """Even-odd ray cast over ALL rings of a GeoJSON polygon (outer
+    ring + holes): count the edges the +x ray from (px, py) crosses;
+    odd -> inside. Total crossing parity flips inside a hole, which is
+    exactly even-odd semantics. `polygon` is array<array<array<double>>>
+    of closed rings (first vertex repeated last).
 
-    Expression SHAPE matters here (VERDICT r6 #2): the obvious form --
+    All arithmetic is closed-form column math, so Spark and the DuckDB
+    twin produce bit-identical booleans. The horizontal-edge division
+    is guarded with when() (no short-circuit guarantees inside
+    higher-order lambdas under ANSI mode).
+
+    Expression SHAPE matters here: the obvious form --
     transform(polygon, ring -> size(filter(zip_with(...), crosses)))
     then aggregate -- nests a crosses-lambda that captures the OUTER
     px/py inside a transform lambda, a shape Janino rejects
@@ -78,24 +78,10 @@ def point_in_polygon_with_holes(px: Column, py: Column, polygon: Column) -> Colu
     spurious cross-ring edges), then run a single-level filter: parity
     of crossings over the concatenated edge list == summed per-ring
     parity. The inner zip_with lambda touches only its own `ring`
-    variable; only the single outer filter captures px/py -- the exact
-    two-level shape of point_in_polygon, which whole-stage-codegens.
-    See SCALING.md 'Janino-safe HOF shapes'."""
-    edges = F.flatten(
-        F.transform(
-            polygon,
-            lambda ring: F.zip_with(
-                F.slice(ring, 1, F.size(ring) - 1),
-                F.slice(ring, 2, F.size(ring) - 1),
-                lambda a, b: F.struct(
-                    a.getItem(0).alias("ax"),
-                    a.getItem(1).alias("ay"),
-                    b.getItem(0).alias("bx"),
-                    b.getItem(1).alias("by"),
-                ),
-            ),
-        )
-    )
+    variable; only the single outer filter captures px/py, a two-level
+    shape that whole-stage-codegens. See SCALING.md 'Janino-safe HOF
+    shapes'."""
+    edges = F.flatten(F.transform(polygon, _ring_edges))
 
     def crosses(e: Column) -> Column:
         straddles = (e.getField("ay") > py) != (e.getField("by") > py)
@@ -113,14 +99,25 @@ def _bbox(ring: Column) -> tuple[Column, Column, Column, Column]:
     return F.array_min(xs), F.array_max(xs), F.array_min(ys), F.array_max(ys)
 
 
+def _outer_ring(polygon: Column) -> Column:
+    """The outer ring, whose bbox bounds the whole polygon (holes only
+    subtract area). F.get (0-based, NULL out-of-bounds) rather than
+    try_element_at: ElementAt's null-check codegen emits a forward
+    reference when its child is a wide inline expression that Catalyst
+    splits across generated functions -- Janino rejects it ('not an
+    rvalue') and the whole projection falls back to interpreted mode.
+    GetArrayItem codegen is split-safe. See SCALING.md 'Janino-safe
+    HOF shapes'."""
+    return F.get(polygon, F.lit(0))
+
+
 def spatial_join_broadcast(
     points: DataFrame,
     polygons: DataFrame,
     point_col: str = "point",
-    ring_col: str = "ring",
+    polygon_col: str = "polygon",
     layer_col: str = "layer_id",
     how: str = "inner",
-    polygon_col: str | None = None,
 ) -> DataFrame:
     """Equi-join on layer + ray-cast predicate, polygon side broadcast.
 
@@ -131,36 +128,14 @@ def spatial_join_broadcast(
     The bbox containment conjuncts come FIRST: they are cheap scalar
     compares that eliminate ~99% of in-layer pairs before the ray-cast
     runs -- the columnar analog of indexed-geo's R-tree-then-exact-test
-    (geo-indices.js:34,:48; measured 5x on the bench).
-
-    `polygon_col` (full GeoJSON Polygon, array<array<array<double>>>)
-    switches the exact test to holes-aware even-odd parity over ALL
-    rings (geo-indices.js:38-50 honors holes: a point in a courtyard
-    hole is OUTSIDE). The bbox still comes from the OUTER ring alone
-    -- holes only subtract area, so the outer bbox stays a sound
-    prefilter. Mutually exclusive with `ring_col` semantics: when set,
-    `ring_col` is ignored.
+    (geo-indices.js:34,:48; measured 5x on the bench). The exact test
+    is holes-aware even-odd parity over ALL rings (geo-indices.js:38-50
+    honors holes: a point in a courtyard hole is OUTSIDE); the bbox
+    comes from the outer ring alone.
     """
     px = F.col(f"{point_col}")[0]
     py = F.col(f"{point_col}")[1]
-    if polygon_col is not None:
-        # F.get (0-based, NULL out-of-bounds) rather than
-        # try_element_at: ElementAt's null-check codegen emits a
-        # forward reference when its child is a wide inline expression
-        # that Catalyst splits across generated functions -- Janino
-        # rejects it ('not an rvalue') and the whole projection falls
-        # back to interpreted mode. GetArrayItem codegen is
-        # split-safe. See SCALING.md 'Janino-safe HOF shapes'.
-        bbox_ring = F.get(polygons[polygon_col], F.lit(0))
-        exact = lambda staged: point_in_polygon_with_holes(  # noqa: E731
-            px, py, staged[polygon_col]
-        )
-    else:
-        bbox_ring = polygons[ring_col]
-        exact = lambda staged: point_in_polygon(  # noqa: E731
-            px, py, staged[ring_col]
-        )
-    xmin, xmax, ymin, ymax = _bbox(bbox_ring)
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(polygons[polygon_col]))
     polys_staged = (
         polygons.withColumn("__xmin", xmin)
         .withColumn("__xmax", xmax)
@@ -173,26 +148,24 @@ def spatial_join_broadcast(
         & (px <= polys_staged["__xmax"])
         & (py >= polys_staged["__ymin"])
         & (py <= polys_staged["__ymax"])
-        & exact(polys_staged)
+        & point_in_polygon_with_holes(px, py, polys_staged[polygon_col])
     )
     return points.join(F.broadcast(polys_staged), cond, how).drop(
         "__xmin", "__xmax", "__ymin", "__ymax"
     )
 
 
-def adaptive_cell_size(
-    polygons: DataFrame, ring_col: str = "ring"
-) -> float:
+def adaptive_cell_size(polygons: DataFrame, polygon_col: str = "polygon") -> float:
     """Derive the grid cell size from build-side bbox statistics: ONE
-    aggregate over the polygons (mean bbox width/height), cell = the
-    larger mean extent. The average polygon then covers ~2x2 cells
-    (bounded fan-out in the explode) while a cell stays small enough
-    that the equi-join prefilter keeps its selectivity -- the columnar
-    analog of the reference R-tree's auto-adaptation
+    aggregate over the polygons (mean outer-ring bbox width/height),
+    cell = the larger mean extent. The average polygon then covers
+    ~2x2 cells (bounded fan-out in the explode) while a cell stays
+    small enough that the equi-join prefilter keeps its selectivity --
+    the columnar analog of the reference R-tree's auto-adaptation
     (geo-indices.js:25-36). The single collected row is a plan-time
     scalar, same class of driver-side constant as KMeans centroids in
     cosine_topk_ivf."""
-    xmin, xmax, ymin, ymax = _bbox(F.col(ring_col))
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col(polygon_col)))
     row = polygons.agg(
         F.avg(xmax - xmin).alias("dx"), F.avg(ymax - ymin).alias("dy")
     ).collect()[0]
@@ -205,40 +178,28 @@ def spatial_join_grid(
     polygons: DataFrame,
     cell_size: float | None = None,
     point_col: str = "point",
-    ring_col: str = "ring",
+    polygon_col: str = "polygon",
     layer_col: str = "layer_id",
-    polygon_col: str | None = None,
 ) -> DataFrame:
     """Shuffle-based spatial join keyed by (layer, grid cell).
 
-    Polygons explode to every cell their bbox covers (the R-tree bbox
-    prefilter, turned into join-key fan-out); each point hashes to
-    exactly one cell, so matches are already distinct. Inner join only
-    -- callers needing left-outer semantics anti-join the matches back
-    (see plans/pipeline.py), because a left join on the exploded cell
-    key would duplicate misses per cell.
+    Polygons explode to every cell their outer ring's bbox covers (the
+    R-tree bbox prefilter, turned into join-key fan-out; holes only
+    subtract area, so outer-ring coverage stays sound); each point
+    hashes to exactly one cell, so matches are already distinct. The
+    refine is the same holes-aware parity as the broadcast join, which
+    keeps hole semantics on the 100 TB no-broadcast path. Inner join
+    only -- callers needing left-outer semantics anti-join the matches
+    back (see plans/pipeline.py), because a left join on the exploded
+    cell key would duplicate misses per cell.
 
     `cell_size=None` (default) auto-adapts from build-side bbox stats
     (adaptive_cell_size); pass a float to override.
-
-    `polygon_col` (full multi-ring GeoJSON Polygon) switches the
-    refine step to holes-aware parity (point_in_polygon_with_holes);
-    cells and bbox derive from the OUTER ring (holes only subtract
-    area, so outer-bbox cell coverage stays sound). This keeps hole
-    parity on the 100 TB no-broadcast path (VERDICT r4 #7).
     """
-    if polygon_col is not None:
-        # F.get, not try_element_at -- same Janino split-safety note
-        # as in spatial_join_broadcast above.
-        polygons = polygons.withColumn(
-            "__outer_ring", F.get(F.col(polygon_col), F.lit(0))
-        )
-        bbox_source_col = "__outer_ring"
-    else:
-        bbox_source_col = ring_col
+    polygons = polygons.withColumn("__outer_ring", _outer_ring(F.col(polygon_col)))
     if cell_size is None:
-        cell_size = adaptive_cell_size(polygons, bbox_source_col)
-    xmin, xmax, ymin, ymax = _bbox(polygons[bbox_source_col])
+        cell_size = adaptive_cell_size(polygons, polygon_col)
+    xmin, xmax, ymin, ymax = _bbox(polygons["__outer_ring"])
     cs = F.lit(float(cell_size))
     cells = F.flatten(
         F.transform(
@@ -274,20 +235,37 @@ def spatial_join_grid(
         & (pts_staged["__pcell"] == polys_staged["__cell"]),
         "inner",
     )
-    if polygon_col is not None:
-        refine = point_in_polygon_with_holes(
-            pts_staged[point_col].getItem(0),
-            pts_staged[point_col].getItem(1),
-            polys_staged[polygon_col],
-        )
-        return joined.filter(refine).drop("__pcell", "__cell", "__outer_ring")
-    return joined.filter(
-        point_in_polygon(
-            pts_staged[point_col].getItem(0),
-            pts_staged[point_col].getItem(1),
-            polys_staged[ring_col],
-        )
-    ).drop("__pcell", "__cell")
+    refine = point_in_polygon_with_holes(
+        pts_staged[point_col].getItem(0),
+        pts_staged[point_col].getItem(1),
+        polys_staged[polygon_col],
+    )
+    return joined.filter(refine).drop("__pcell", "__cell", "__outer_ring")
+
+
+def grid_cells(
+    df: DataFrame, x0: Column, x1: Column, y0: Column, y1: Column, cell: int
+) -> DataFrame:
+    """One row per (row, cx, cy) grid cell the box [x0, x1] x [y0, y1]
+    covers: two explodes of floor(coordinate / cell) ranges. The filter
+    side of every polygon-pair join -- a shape's fan-out is bounded by
+    its extent over `cell`, and two shapes can only meet in a cell they
+    both cover."""
+    return df.withColumn(
+        "cx",
+        F.explode(
+            F.sequence(
+                F.floor(x0 / cell).cast("long"), F.floor(x1 / cell).cast("long")
+            )
+        ),
+    ).withColumn(
+        "cy",
+        F.explode(
+            F.sequence(
+                F.floor(y0 / cell).cast("long"), F.floor(y1 / cell).cast("long")
+            )
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -349,13 +327,51 @@ def convex_contains(outer: Column, inner: Column) -> Column:
     still counts as contained, matching the closed semantics of
     convex_intersects. Pure integer cross products -- exact and
     engine-portable (the DuckDB twin replays the same arithmetic).
-    This is the containment predicate VERDICT r8 #6 flagged as the
-    missing companion to the SAT intersection join."""
+    The containment companion of the SAT intersection join."""
     edge_idx = F.sequence(F.lit(0), F.size(outer) - 2)
     return F.forall(
         edge_idx,
         lambda i: F.forall(inner, lambda v: _cross_sign(outer, i, v) >= 0),
     )
+
+
+def _ring_cells(df: DataFrame, id_col: str, cell: int) -> DataFrame:
+    """(id, layer_id, ring, cx, cy): one row per grid cell the bbox of
+    the integer ring `ring` covers."""
+    xs = F.transform(F.col("ring"), lambda v: F.element_at(v, 1))
+    ys = F.transform(F.col("ring"), lambda v: F.element_at(v, 2))
+    boxed = (
+        df.select(F.col(id_col), "layer_id", "ring")
+        .withColumn("__x0", F.array_min(xs))
+        .withColumn("__x1", F.array_max(xs))
+        .withColumn("__y0", F.array_min(ys))
+        .withColumn("__y1", F.array_max(ys))
+    )
+    cells = grid_cells(
+        boxed, F.col("__x0"), F.col("__x1"), F.col("__y0"), F.col("__y1"), cell
+    )
+    return cells.select(id_col, "layer_id", "ring", "cx", "cy")
+
+
+def _grid_pair_join(
+    a: DataFrame,
+    b: DataFrame,
+    cell: int,
+    a_id: str,
+    b_id: str,
+    refine: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """The filter-refine polygon-pair join. Inputs carry (id, layer_id,
+    ring) with ring = array<array<long>>, closed. Filter: both sides
+    explode to the grid cells their ring's bbox covers, equi-join on
+    (layer_id, cx, cy), dedup pairs. Refine: `refine(a's ring, b's
+    ring)` on the candidates only. 100 TB shape: bounded per-shape
+    cell fan-out, one hash shuffle on the cell key, a map-side refine
+    predicate, never an all-pairs nested loop."""
+    ac = _ring_cells(a, a_id, cell)
+    bc = _ring_cells(b, b_id, cell).withColumnRenamed("ring", "ring_b")
+    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates([a_id, b_id])
+    return cand.where(refine(F.col("ring"), F.col("ring_b"))).select(a_id, b_id)
 
 
 def convex_contains_join(
@@ -365,49 +381,11 @@ def convex_contains_join(
     a_id: str = "a_id",
     b_id: str = "b_id",
 ) -> DataFrame:
-    """Filter-refine containment join: pairs (a, b) where convex ring
-    `a` fully contains ring `b`. Filter: b's bbox cells must be a
-    subset of cells a covers, so the same grid equi-join as
-    convex_sat_join over-generates candidates and the refine prunes;
-    the candidate set is identical to the intersection join's (a
-    contained polygon always shares cells). Same 100 TB shape:
-    bounded per-shape cell fanout, one hash shuffle on (layer, cell),
-    map-side refine predicate."""
-    def with_cells(df, idc, ring_out):
-        xs = F.transform(F.col("ring"), lambda v: F.element_at(v, 1))
-        ys = F.transform(F.col("ring"), lambda v: F.element_at(v, 2))
-        return (
-            df.withColumn("__x0", F.array_min(xs))
-            .withColumn("__x1", F.array_max(xs))
-            .withColumn("__y0", F.array_min(ys))
-            .withColumn("__y1", F.array_max(ys))
-            .withColumn(
-                "cx",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__x0") / cell).cast("long"),
-                        F.floor(F.col("__x1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .withColumn(
-                "cy",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__y0") / cell).cast("long"),
-                        F.floor(F.col("__y1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .select(idc, "layer_id", F.col("ring").alias(ring_out), "cx", "cy")
-        )
-
-    ac = with_cells(a.select(F.col(a_id), "layer_id", "ring"), a_id, "ring_a")
-    bc = with_cells(b.select(F.col(b_id), "layer_id", "ring"), b_id, "ring_b")
-    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates([a_id, b_id])
-    return cand.where(
-        convex_contains(F.col("ring_a"), F.col("ring_b"))
-    ).select(a_id, b_id)
+    """Containment join: pairs (a, b) where convex ring `a` fully
+    contains ring `b`. A contained polygon always shares cells with its
+    container, so the grid filter's candidates (the same as the
+    intersection join's) are a superset and convex_contains prunes."""
+    return _grid_pair_join(a, b, cell, a_id, b_id, convex_contains)
 
 
 def convex_sat_join(
@@ -417,56 +395,15 @@ def convex_sat_join(
     a_id: str = "a_id",
     b_id: str = "b_id",
 ) -> DataFrame:
-    """Filter-refine convex-polygon intersection join. Inputs carry
-    (id, layer_id, ring) with ring = array<array<long>> closed CCW.
-    Filter: both sides explode to grid cells covered by their bbox
-    (computed from the ring itself), equi-join on (layer_id, cx, cy),
-    dedup pairs. Refine: the exact SAT test. Same 100 TB shape as the
-    PIP grid join -- bounded per-shape cell fanout, one hash shuffle
-    on the cell key, refine is a map-side predicate."""
-    def with_cells(df, idc):
-        xs = F.transform(F.col("ring"), lambda v: F.element_at(v, 1))
-        ys = F.transform(F.col("ring"), lambda v: F.element_at(v, 2))
-        return (
-            df.withColumn("__x0", F.array_min(xs))
-            .withColumn("__x1", F.array_max(xs))
-            .withColumn("__y0", F.array_min(ys))
-            .withColumn("__y1", F.array_max(ys))
-            .withColumn(
-                "cx",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__x0") / cell).cast("long"),
-                        F.floor(F.col("__x1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .withColumn(
-                "cy",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__y0") / cell).cast("long"),
-                        F.floor(F.col("__y1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .select(idc, "layer_id", "ring", "cx", "cy")
-        )
-
-    ac = with_cells(a.select(F.col(a_id), "layer_id", "ring"), a_id)
-    bc = with_cells(
-        b.select(F.col(b_id), "layer_id", F.col("ring").alias("ring")), b_id
-    ).withColumnRenamed("ring", "ring_b")
-    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates([a_id, b_id])
-    return cand.where(
-        convex_intersects(F.col("ring"), F.col("ring_b"))
-    ).select(a_id, b_id)
+    """Convex-polygon intersection join: the grid filter refined by the
+    exact SAT test (convex_intersects). Rings are closed and CCW."""
+    return _grid_pair_join(a, b, cell, a_id, b_id, convex_intersects)
 
 
 # ---------------------------------------------------------------------------
-# SIMPLE (possibly non-convex) polygon intersection join (VERDICT r9
-# #5b). The SAT pair above covers convex rings only; real building
-# footprints (reference J3, geo-indices.js:38-50) are non-convex.
+# SIMPLE (possibly non-convex) polygon intersection join. The SAT pair
+# above covers convex rings only; real building footprints (reference
+# J3, geo-indices.js:38-50) are non-convex.
 # Exact decomposition for simple closed rings A, B:
 #   A ∩ B != empty  <=>  some edge of A intersects some edge of B
 #                        OR vertex0(A) inside B  (A wholly within B)
@@ -476,21 +413,6 @@ def convex_sat_join(
 # same math bit-for-bit. Orientation-agnostic: neither leg assumes
 # CCW, unlike the convex SAT/containment predicates.
 # ---------------------------------------------------------------------------
-
-
-def _ring_edges(ring: Column) -> Column:
-    """array<struct<ax,ay,bx,by>> of directed edges for a CLOSED ring
-    (first vertex repeated last) of [x, y] integer points."""
-    return F.zip_with(
-        F.slice(ring, 1, F.size(ring) - 1),
-        F.slice(ring, 2, F.size(ring) - 1),
-        lambda a, b: F.struct(
-            a.getItem(0).alias("ax"),
-            a.getItem(1).alias("ay"),
-            b.getItem(0).alias("bx"),
-            b.getItem(1).alias("by"),
-        ),
-    )
 
 
 def _orient(ox: Column, oy: Column, px: Column, py: Column, qx: Column, qy: Column) -> Column:
@@ -535,13 +457,13 @@ def segments_intersect(e1: Column, e2: Column) -> Column:
 
 
 def point_in_polygon_int(px: Column, py: Column, ring: Column) -> Column:
-    """STRICT even-odd ray cast over an integer ring -- the exact
-    twin of point_in_polygon without its double division: px < x_at_y
-    is evaluated as sign(by - ay) * [(ax-px)(by-ay) + (py-ay)(bx-ax)]
-    > 0, pure int64. Boundary points return false (strict); callers
-    needing closed semantics get boundary contact from the edge test
-    (a vertex ON the other ring's edge is a degenerate segment
-    intersection)."""
+    """STRICT even-odd ray cast over one integer ring -- the exact twin
+    of point_in_polygon_with_holes' crossing test without its double
+    division: px < x_at_y is evaluated as
+    sign(by - ay) * [(ax-px)(by-ay) + (py-ay)(bx-ax)] > 0, pure int64.
+    Boundary points return false (strict); callers needing closed
+    semantics get boundary contact from the edge test (a vertex ON the
+    other ring's edge is a degenerate segment intersection)."""
     edges = _ring_edges(ring)
 
     def crossed(e: Column) -> Column:
@@ -576,48 +498,9 @@ def simple_polygon_intersect_join(
     a_id: str = "a_id",
     b_id: str = "b_id",
 ) -> DataFrame:
-    """Filter-refine intersection join for simple (possibly
-    NON-convex) polygons: the same grid-cell equi-join filter as
-    convex_sat_join (bbox cells from the ring itself, one hash
-    shuffle on (layer_id, cx, cy), bounded per-shape fanout), refined
-    by the exact polygons_intersect predicate map-side. The refine is
+    """Intersection join for simple (possibly NON-convex) polygons: the
+    grid filter refined by polygons_intersect. The refine is
     O(|edges_a| x |edges_b|) per CANDIDATE pair -- candidates are the
     tiny grid-collision fraction of the cross product, where bounded
     HOF evaluation beats any unrolled form."""
-    def with_cells(df, idc):
-        xs = F.transform(F.col("ring"), lambda v: F.element_at(v, 1))
-        ys = F.transform(F.col("ring"), lambda v: F.element_at(v, 2))
-        return (
-            df.withColumn("__x0", F.array_min(xs))
-            .withColumn("__x1", F.array_max(xs))
-            .withColumn("__y0", F.array_min(ys))
-            .withColumn("__y1", F.array_max(ys))
-            .withColumn(
-                "cx",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__x0") / cell).cast("long"),
-                        F.floor(F.col("__x1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .withColumn(
-                "cy",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("__y0") / cell).cast("long"),
-                        F.floor(F.col("__y1") / cell).cast("long"),
-                    )
-                ),
-            )
-            .select(idc, "layer_id", "ring", "cx", "cy")
-        )
-
-    ac = with_cells(a.select(F.col(a_id), "layer_id", "ring"), a_id)
-    bc = with_cells(
-        b.select(F.col(b_id), "layer_id", "ring"), b_id
-    ).withColumnRenamed("ring", "ring_b")
-    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates([a_id, b_id])
-    return cand.where(
-        polygons_intersect(F.col("ring"), F.col("ring_b"))
-    ).select(a_id, b_id)
+    return _grid_pair_join(a, b, cell, a_id, b_id, polygons_intersect)

@@ -17,10 +17,17 @@ rows-only fallback SURVEY anticipated.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.spatial import spatial_join_broadcast, spatial_join_grid
+from ..operators.spatial import (
+    convex_contains_join,
+    convex_sat_join,
+    grid_cells,
+    simple_polygon_intersect_join,
+    spatial_join_broadcast,
+    spatial_join_grid,
+)
 from ..sources.tables import load_table
 from .registry import query
 
@@ -28,22 +35,36 @@ from .registry import query
 # --- Spark-side synthesized geometry ---------------------------------------
 
 
-def _synth_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = load_table(spark, sf_dir, "supplier")
-    cx = (F.col("s_suppkey") % 40).cast("double") * 10
-    cy = F.expr("s_suppkey DIV 40").cast("double") * 10
-    r = (F.lit(3) + F.col("s_suppkey") % 4).cast("double")
-    ring = F.array(
+def _diamond(cx: Column, cy: Column, r: Column) -> Column:
+    """Closed CCW diamond ring of radius r around (cx, cy)."""
+    return F.array(
         F.array(cx + r, cy),
         F.array(cx, cy + r),
         F.array(cx - r, cy),
         F.array(cx, cy - r),
         F.array(cx + r, cy),
     )
+
+
+def _synth_polygons(
+    spark: SparkSession, sf_dir: str, hole: bool = False
+) -> DataFrame:
+    """One supplier diamond per row as a GeoJSON Polygon; with `hole`,
+    a concentric hole of radius 1 + s_suppkey % 4 as its second ring.
+    Every point-in-polygon query builds its polygons here, so queries
+    sharing an oracle cannot drift apart."""
+    sup = load_table(spark, sf_dir, "supplier")
+    cx = (F.col("s_suppkey") % 40).cast("double") * 10
+    cy = F.expr("s_suppkey DIV 40").cast("double") * 10
+    r = (F.lit(3) + F.col("s_suppkey") % 4).cast("double")
+    rings = [_diamond(cx, cy, r)]
+    if hole:
+        h = (F.lit(1) + F.col("s_suppkey") % 4).cast("double")
+        rings.append(_diamond(cx, cy, h))
     return sup.select(
         F.col("s_suppkey").cast("long").alias("poly_id"),
         (F.col("s_nationkey") % 5).cast("long").alias("layer_id"),
-        ring.alias("ring"),
+        F.array(*rings).alias("polygon"),
     )
 
 
@@ -88,47 +109,43 @@ points AS (
 )
 """
 
-# even-odd ray cast, identical arithmetic to operators/spatial.py
-_PIP_SQL = """
-(len(list_filter(
-  list_transform(generate_series(1, len(ring) - 1),
-    i -> {'ax': ring[i][1], 'ay': ring[i][2], 'bx': ring[i+1][1], 'by': ring[i+1][2]}),
+
+def _crossings_sql(ring: str) -> str:
+    """Edges of `ring` crossed by the +x ray from (px, py): the even-odd
+    ray cast, identical arithmetic to operators/spatial.py."""
+    return f"""len(list_filter(
+  list_transform(generate_series(1, len({ring}) - 1),
+    i -> {{'ax': {ring}[i][1], 'ay': {ring}[i][2], 'bx': {ring}[i+1][1], 'by': {ring}[i+1][2]}}),
   e -> CASE WHEN (e.ay > py) <> (e.by > py)
        THEN px < e.ax + (py - e.ay) * (e.bx - e.ax) / (e.by - e.ay)
-       ELSE false END)) % 2) = 1
+       ELSE false END))"""
+
+
+_PIP_SQL = f"""
+({_crossings_sql("ring")} % 2) = 1
 """
 
-
-@query(
-    "spatial_pip_join",
-    f"""
+_PIP_JOIN_SQL = f"""
 WITH {_POLYS_SQL.strip()}, {_POINTS_SQL.strip()}
 SELECT p.point_id, g.poly_id
 FROM points p JOIN polys g
   ON p.layer_id = g.layer_id
 WHERE {_PIP_SQL}
-""",
-)
+"""
+
+
+@query("spatial_pip_join", _PIP_JOIN_SQL)
 def spatial_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast strategy: polygons broadcast, equi-join on layer +
     codegen'd ray-cast predicate (reference J3 semantics: one-to-many,
     all containing polygons match)."""
     points = _synth_points(spark, sf_dir)
     polys = _synth_polygons(spark, sf_dir)
-    out = spatial_join_broadcast(points, polys, "point", "ring", "layer_id")
+    out = spatial_join_broadcast(points, polys)
     return out.select("point_id", "poly_id")
 
 
-@query(
-    "spatial_pip_join_grid",
-    f"""
-WITH {_POLYS_SQL.strip()}, {_POINTS_SQL.strip()}
-SELECT p.point_id, g.poly_id
-FROM points p JOIN polys g
-  ON p.layer_id = g.layer_id
-WHERE {_PIP_SQL}
-""",
-)
+@query("spatial_pip_join_grid", _PIP_JOIN_SQL)
 def spatial_pip_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid strategy: same semantics, shuffle join on (layer, cell) --
     the 100 TB path (no broadcast limit). Same oracle as the broadcast
@@ -155,9 +172,7 @@ def spatial_pip_nomatch_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     297-304): points contained by nothing emit a log record."""
     points = _synth_points(spark, sf_dir)
     polys = _synth_polygons(spark, sf_dir)
-    matched = spatial_join_broadcast(
-        points, polys, "point", "ring", "layer_id", how="left"
-    )
+    matched = spatial_join_broadcast(points, polys, how="left")
     return matched.filter(F.col("poly_id").isNull()).select(
         F.concat(F.lit("Can't find polygon for point "), F.col("point_id")).alias(
             "error"
@@ -297,7 +312,67 @@ def spatial_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BBOX_CELL = 10
 
 
+def _box_cells_sql(
+    side: str, src: str, cols: str, box: tuple[str, str, str, str], cell: int
+) -> str:
+    """CTEs `{side}1`/`{side}_cells`: every row of `src` (kept columns
+    `cols`) unnested to each grid cell its box (x0, x1, y0, y1) covers."""
+    x0, x1, y0, y1 = box
+    return f"""{side}1 AS (
+  SELECT {cols},
+         unnest(generate_series({x0} // {cell}, {x1} // {cell})) AS cx
+  FROM {src}),
+{side}_cells AS (
+  SELECT {cols}, cx,
+         unnest(generate_series({y0} // {cell}, {y1} // {cell})) AS cy
+  FROM {side}1)"""
+
+
+def _ring_cells_sql(side: str, src: str, id_col: str, ring: str, cell: int) -> str:
+    """CTEs `{side}1`/`{side}_cells`: every row of `src` unnested to each
+    grid cell the bbox of its integer ring `ring` covers."""
+
+    def span(k: int) -> str:
+        return (
+            f"generate_series(list_min(list_transform({ring}, v -> v[{k}])) // {cell},\n"
+            f"                                "
+            f"list_max(list_transform({ring}, v -> v[{k}])) // {cell})"
+        )
+
+    cols = f"{id_col}, layer_id, {ring}"
+    return f"""{side}1 AS (
+  SELECT {cols},
+         unnest({span(1)}) AS cx
+  FROM {src}),
+{side}_cells AS (
+  SELECT {cols}, cx,
+         unnest({span(2)}) AS cy
+  FROM {side}1)"""
+
+
+def _grid_cand_sql(a_cells: str, b_cells: str, cols: str) -> str:
+    """The twins' filter stage: both sides' cell CTEs, then CTE `cand`,
+    the (layer, cell) equi-join deduplicated to distinct pairs."""
+    return f"""{a_cells},
+{b_cells},
+cand AS (
+  SELECT DISTINCT {cols}
+  FROM a_cells a JOIN b_cells b
+    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)"""
+
+
 def _bbox_sql(cell: int = _BBOX_CELL) -> str:
+    cand = _grid_cand_sql(
+        _box_cells_sql(
+            "a", "sup_box", "a_id, layer_id, ax0, ax1, ay0, ay1",
+            ("ax0", "ax1", "ay0", "ay1"), cell,
+        ),
+        _box_cells_sql(
+            "b", "part_box", "b_id, layer_id, bx0, bx1, by0, by1",
+            ("bx0", "bx1", "by0", "by1"), cell,
+        ),
+        "a_id, b_id, ax0, ax1, ay0, ay1, bx0, bx1, by0, by1",
+    )
     return f"""
 WITH sup_box AS (
   SELECT CAST(s_suppkey AS BIGINT) AS a_id,
@@ -315,26 +390,7 @@ part_box AS (
          CAST((p_partkey // 40 % 25) * 10 + 2 - (1 + p_partkey % 3) AS BIGINT) AS by0,
          CAST((p_partkey // 40 % 25) * 10 + 2 + (1 + p_partkey % 3) AS BIGINT) AS by1
   FROM part),
-a1 AS (
-  SELECT a_id, layer_id, ax0, ax1, ay0, ay1,
-         unnest(generate_series(ax0 // {cell}, ax1 // {cell})) AS cx
-  FROM sup_box),
-a_cells AS (
-  SELECT a_id, layer_id, ax0, ax1, ay0, ay1, cx,
-         unnest(generate_series(ay0 // {cell}, ay1 // {cell})) AS cy
-  FROM a1),
-b1 AS (
-  SELECT b_id, layer_id, bx0, bx1, by0, by1,
-         unnest(generate_series(bx0 // {cell}, bx1 // {cell})) AS cx
-  FROM part_box),
-b_cells AS (
-  SELECT b_id, layer_id, bx0, bx1, by0, by1, cx,
-         unnest(generate_series(by0 // {cell}, by1 // {cell})) AS cy
-  FROM b1),
-cand AS (
-  SELECT DISTINCT a_id, b_id, ax0, ax1, ay0, ay1, bx0, bx1, by0, by1
-  FROM a_cells a JOIN b_cells b
-    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)
+{cand}
 SELECT a_id AS poly_id, b_id AS box_id
 FROM cand
 WHERE ax0 <= bx1 AND bx0 <= ax1 AND ay0 <= by1 AND by0 <= ay1
@@ -353,8 +409,8 @@ def spatial_bbox_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell key, and the dedup-before-test bounds duplicate candidates
     from boxes spanning several shared cells. No nested-loop anywhere
     -- this is the polygon-polygon generalization of the PIP grid
-    strategy (operators/spatial.py:145-229) and the standard
-    spatial-join decomposition on a cluster."""
+    strategy (operators/spatial.py::spatial_join_grid) and the
+    standard spatial-join decomposition on a cluster."""
     sup = load_table(spark, sf_dir, "supplier")
     r = F.lit(3) + F.col("s_suppkey") % 4
     acx = (F.col("s_suppkey") % 40) * 10
@@ -379,32 +435,13 @@ def spatial_bbox_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (bcy - h).cast("long").alias("by0"),
         (bcy + h).cast("long").alias("by1"),
     )
-    cell = _BBOX_CELL
-
-    def cells(df, x0, x1, y0, y1):
-        return df.withColumn(
-            "cx",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col(x0) / cell).cast("long"),
-                    F.floor(F.col(x1) / cell).cast("long"),
-                )
-            ),
-        ).withColumn(
-            "cy",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col(y0) / cell).cast("long"),
-                    F.floor(F.col(y1) / cell).cast("long"),
-                )
-            ),
-        )
-
-    ac = cells(a, "ax0", "ax1", "ay0", "ay1")
-    bc = cells(b, "bx0", "bx1", "by0", "by1")
-    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates(
-        ["a_id", "b_id"]
+    ac = grid_cells(
+        a, F.col("ax0"), F.col("ax1"), F.col("ay0"), F.col("ay1"), _BBOX_CELL
     )
+    bc = grid_cells(
+        b, F.col("bx0"), F.col("bx1"), F.col("by0"), F.col("by1"), _BBOX_CELL
+    )
+    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates(["a_id", "b_id"])
     hit = cand.where(
         (F.col("ax0") <= F.col("bx1"))
         & (F.col("bx0") <= F.col("ax1"))
@@ -417,19 +454,30 @@ def spatial_bbox_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact polygon-polygon intersection join (VERDICT r3 #4): the
-# J3-grid generalization's final step. Candidates from shared grid
-# cells (the bbox stage above), then the exact separating-axis test.
-# A-side = supplier DIAMONDS (convex quads, edge normals (1,1) and
-# (1,-1)); B-side = part RECTANGLES (normals (1,0),(0,1)) -- so SAT
-# needs exactly 4 axes: x, y, x+y, x-y. Closed intervals (touching
-# counts as intersecting); all-integer projections -> exact on both
-# engines. Reference anchor: geo-indices.js:38-50 (R-tree candidate
-# stage, then exact geometry test).
+# Exact polygon-polygon intersection join: the J3-grid
+# generalization's final step. Candidates from shared grid cells (the
+# bbox stage above), then the exact separating-axis test. A-side =
+# supplier DIAMONDS (convex quads, edge normals (1,1) and (1,-1));
+# B-side = part RECTANGLES (normals (1,0),(0,1)) -- so SAT needs
+# exactly 4 axes: x, y, x+y, x-y. Closed intervals (touching counts as
+# intersecting); all-integer projections -> exact on both engines.
+# Reference anchor: geo-indices.js:38-50 (R-tree candidate stage, then
+# exact geometry test).
 # ---------------------------------------------------------------------------
 
 
 def _poly_intersect_sql(cell: int = _BBOX_CELL) -> str:
+    cand = _grid_cand_sql(
+        _box_cells_sql(
+            "a", "dia", "poly_id, layer_id, acx, acy, r",
+            ("(acx - r)", "(acx + r)", "(acy - r)", "(acy + r)"), cell,
+        ),
+        _box_cells_sql(
+            "b", "rect", "box_id, layer_id, bx0, bx1, by0, by1",
+            ("bx0", "bx1", "by0", "by1"), cell,
+        ),
+        "poly_id, box_id, acx, acy, r, bx0, bx1, by0, by1",
+    )
     return f"""
 WITH dia AS (
   SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
@@ -446,26 +494,7 @@ rect AS (
          CAST((p_partkey // 40 % 25) * 10 + 2 - (1 + p_partkey % 3) AS BIGINT) AS by0,
          CAST((p_partkey // 40 % 25) * 10 + 2 + (1 + p_partkey % 3) AS BIGINT) AS by1
   FROM part),
-a1 AS (
-  SELECT poly_id, layer_id, acx, acy, r,
-         unnest(generate_series((acx - r) // {cell}, (acx + r) // {cell})) AS cx
-  FROM dia),
-a_cells AS (
-  SELECT poly_id, layer_id, acx, acy, r, cx,
-         unnest(generate_series((acy - r) // {cell}, (acy + r) // {cell})) AS cy
-  FROM a1),
-b1 AS (
-  SELECT box_id, layer_id, bx0, bx1, by0, by1,
-         unnest(generate_series(bx0 // {cell}, bx1 // {cell})) AS cx
-  FROM rect),
-b_cells AS (
-  SELECT box_id, layer_id, bx0, bx1, by0, by1, cx,
-         unnest(generate_series(by0 // {cell}, by1 // {cell})) AS cy
-  FROM b1),
-cand AS (
-  SELECT DISTINCT poly_id, box_id, acx, acy, r, bx0, bx1, by0, by1
-  FROM a_cells a JOIN b_cells b
-    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)
+{cand}
 SELECT poly_id, box_id
 FROM cand
 WHERE bx0 <= acx + r AND acx - r <= bx1
@@ -518,41 +547,12 @@ def spatial_polygon_intersect_join(spark: SparkSession, sf_dir: str) -> DataFram
         (bcy - h).cast("long").alias("by0"),
         (bcy + h).cast("long").alias("by1"),
     )
-    cell = _BBOX_CELL
-
-    def grid(df, x0, x1, y0, y1):
-        return df.withColumn(
-            "cx",
-            F.explode(
-                F.sequence(
-                    F.floor(x0 / cell).cast("long"),
-                    F.floor(x1 / cell).cast("long"),
-                )
-            ),
-        ).withColumn(
-            "cy",
-            F.explode(
-                F.sequence(
-                    F.floor(y0 / cell).cast("long"),
-                    F.floor(y1 / cell).cast("long"),
-                )
-            ),
-        )
-
-    ac = grid(
-        a,
-        F.col("acx") - F.col("r"),
-        F.col("acx") + F.col("r"),
-        F.col("acy") - F.col("r"),
-        F.col("acy") + F.col("r"),
-    )
-    bc = grid(b, F.col("bx0"), F.col("bx1"), F.col("by0"), F.col("by1"))
-    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates(
-        ["poly_id", "box_id"]
-    )
     ax, ay, rr = F.col("acx"), F.col("acy"), F.col("r")
     bx0, bx1 = F.col("bx0"), F.col("bx1")
     by0, by1 = F.col("by0"), F.col("by1")
+    ac = grid_cells(a, ax - rr, ax + rr, ay - rr, ay + rr, _BBOX_CELL)
+    bc = grid_cells(b, bx0, bx1, by0, by1, _BBOX_CELL)
+    cand = ac.join(bc, ["layer_id", "cx", "cy"]).dropDuplicates(["poly_id", "box_id"])
     sat = (
         (bx0 <= ax + rr)
         & (ax - rr <= bx1)
@@ -576,18 +576,7 @@ def spatial_polygon_intersect_join(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def _convex_sat_sql(cell: int = _BBOX_CELL) -> str:
-    # cross((p[i+1]-p[i]), (v-p[i])) < 0  == v strictly outside edge i
-    def sep(p: str, q: str) -> str:
-        return (
-            f"len(list_filter(generate_series(1, len({p}) - 1), i -> "
-            f"len(list_filter({q}, v -> "
-            f"({p}[i+1][1] - {p}[i][1]) * (v[2] - {p}[i][2]) - "
-            f"({p}[i+1][2] - {p}[i][2]) * (v[1] - {p}[i][1]) < 0)) = len({q}))) > 0"
-        )
-
-    return f"""
-WITH dia AS (
+_DIA_TRI_SQL = """dia AS (
   SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
          CAST(s_nationkey % 5 AS BIGINT) AS layer_id,
          [[cx + r, cy], [cx, cy + r], [cx - r, cy], [cx, cy - r], [cx + r, cy]] AS ra
@@ -604,50 +593,46 @@ tri AS (
                CAST((p_partkey % 40) * 10 + 2 AS BIGINT) AS cx,
                CAST((p_partkey // 40 % 25) * 10 + 2 AS BIGINT) AS cy,
                CAST(1 + p_partkey % 3 AS BIGINT) AS h
-        FROM part)),
-a1 AS (
-  SELECT poly_id, layer_id, ra,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[1])) // {cell},
-                                list_max(list_transform(ra, v -> v[1])) // {cell})) AS cx
-  FROM dia),
-a_cells AS (
-  SELECT poly_id, layer_id, ra, cx,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[2])) // {cell},
-                                list_max(list_transform(ra, v -> v[2])) // {cell})) AS cy
-  FROM a1),
-b1 AS (
-  SELECT tri_id, layer_id, rb,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[1])) // {cell},
-                                list_max(list_transform(rb, v -> v[1])) // {cell})) AS cx
-  FROM tri),
-b_cells AS (
-  SELECT tri_id, layer_id, rb, cx,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[2])) // {cell},
-                                list_max(list_transform(rb, v -> v[2])) // {cell})) AS cy
-  FROM b1),
-cand AS (
-  SELECT DISTINCT poly_id, tri_id, ra, rb
-  FROM a_cells a JOIN b_cells b
-    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)
+        FROM part))"""
+
+
+def _convex_pair_sql(cell: int, predicate: str) -> str:
+    """Diamond (ra) x triangle (rb) pairs passing `predicate` among the
+    grid-cell candidates: the twin of both convex joins."""
+    cand = _grid_cand_sql(
+        _ring_cells_sql("a", "dia", "poly_id", "ra", cell),
+        _ring_cells_sql("b", "tri", "tri_id", "rb", cell),
+        "poly_id, tri_id, ra, rb",
+    )
+    return f"""
+WITH {_DIA_TRI_SQL},
+{cand}
 SELECT poly_id, tri_id
 FROM cand
-WHERE NOT ({sep("ra", "rb")}) AND NOT ({sep("rb", "ra")})
+WHERE {predicate}
 """
 
 
-@query("spatial_convex_sat_join", _convex_sat_sql())
-def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shape-AGNOSTIC exact convex intersection join: supplier
-    diamonds vs part triangles through
-    operators/spatial.py::convex_sat_join -- grid-cell filter, then
-    the full separating-axis test over BOTH rings' edge normals (the
-    triangle contributes non-axis-aligned axes the specialized
-    diamond/rect query can't express). Closed CCW integer rings;
-    touching counts as intersecting (strict outside test). The DuckDB
-    twin evaluates the identical cross-product arithmetic via list
-    comprehensions, so the value-hash check is exact."""
-    from ..operators.spatial import convex_sat_join
+def _convex_sat_sql(cell: int = _BBOX_CELL) -> str:
+    # cross((p[i+1]-p[i]), (v-p[i])) < 0  == v strictly outside edge i
+    def sep(p: str, q: str) -> str:
+        return (
+            f"len(list_filter(generate_series(1, len({p}) - 1), i -> "
+            f"len(list_filter({q}, v -> "
+            f"({p}[i+1][1] - {p}[i][1]) * (v[2] - {p}[i][2]) - "
+            f"({p}[i+1][2] - {p}[i][2]) * (v[1] - {p}[i][1]) < 0)) = len({q}))) > 0"
+        )
 
+    return _convex_pair_sql(
+        cell, f"NOT ({sep('ra', 'rb')}) AND NOT ({sep('rb', 'ra')})"
+    )
+
+
+def _diamonds_and_triangles(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Supplier diamonds (poly_id) and part triangles (tri_id) as closed
+    CCW integer rings: the fixture both convex joins share."""
     sup = load_table(spark, sf_dir, "supplier")
     r = (F.lit(3) + F.col("s_suppkey") % 4).cast("long")
     cx = ((F.col("s_suppkey") % 40) * 10).cast("long")
@@ -655,13 +640,7 @@ def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dia = sup.select(
         F.col("s_suppkey").cast("long").alias("poly_id"),
         (F.col("s_nationkey") % 5).cast("long").alias("layer_id"),
-        F.array(
-            F.array(cx + r, cy),
-            F.array(cx, cy + r),
-            F.array(cx - r, cy),
-            F.array(cx, cy - r),
-            F.array(cx + r, cy),
-        ).alias("ring"),
+        _diamond(cx, cy, r).alias("ring"),
     )
     part = load_table(spark, sf_dir, "part")
     h = (F.lit(1) + F.col("p_partkey") % 3).cast("long")
@@ -677,6 +656,21 @@ def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(bx + h, by),
         ).alias("ring"),
     )
+    return dia, tri
+
+
+@query("spatial_convex_sat_join", _convex_sat_sql())
+def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shape-AGNOSTIC exact convex intersection join: supplier
+    diamonds vs part triangles through
+    operators/spatial.py::convex_sat_join -- grid-cell filter, then
+    the full separating-axis test over BOTH rings' edge normals (the
+    triangle contributes non-axis-aligned axes the specialized
+    diamond/rect query can't express). Closed CCW integer rings;
+    touching counts as intersecting (strict outside test). The DuckDB
+    twin evaluates the identical cross-product arithmetic via list
+    comprehensions, so the value-hash check is exact."""
+    dia, tri = _diamonds_and_triangles(spark, sf_dir)
     return convex_sat_join(
         dia, tri, cell=_BBOX_CELL, a_id="poly_id", b_id="tri_id"
     )
@@ -693,14 +687,6 @@ def spatial_convex_sat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pip_holes_sql() -> str:
-    def crossings(ring: str) -> str:
-        return f"""len(list_filter(
-  list_transform(generate_series(1, len({ring}) - 1),
-    i -> {{'ax': {ring}[i][1], 'ay': {ring}[i][2], 'bx': {ring}[i+1][1], 'by': {ring}[i+1][2]}}),
-  e -> CASE WHEN (e.ay > py) <> (e.by > py)
-       THEN px < e.ax + (py - e.ay) * (e.bx - e.ax) / (e.by - e.ay)
-       ELSE false END))"""
-
     return f"""
 WITH polys AS (
   SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
@@ -718,35 +704,8 @@ WITH polys AS (
 {_POINTS_SQL.strip()}
 SELECT p.point_id, g.poly_id
 FROM points p JOIN polys g ON p.layer_id = g.layer_id
-WHERE (({crossings("g.outer_ring")}) + ({crossings("g.hole_ring")})) % 2 = 1
+WHERE (({_crossings_sql("g.outer_ring")}) + ({_crossings_sql("g.hole_ring")})) % 2 = 1
 """
-
-
-def _holes_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared polygon synthesis for BOTH pip-holes strategies: one
-    supplier diamond (radius r) with a concentric hole (radius h),
-    full GeoJSON multi-ring shape. Kept in ONE place so the two
-    queries sharing the oracle can never drift apart."""
-    sup = load_table(spark, sf_dir, "supplier")
-    cx = (F.col("s_suppkey") % 40).cast("double") * 10
-    cy = F.expr("s_suppkey DIV 40").cast("double") * 10
-    r = (F.lit(3) + F.col("s_suppkey") % 4).cast("double")
-    h = (F.lit(1) + F.col("s_suppkey") % 4).cast("double")
-
-    def diamond(ccx, ccy, rad):
-        return F.array(
-            F.array(ccx + rad, ccy),
-            F.array(ccx, ccy + rad),
-            F.array(ccx - rad, ccy),
-            F.array(ccx, ccy - rad),
-            F.array(ccx + rad, ccy),
-        )
-
-    return sup.select(
-        F.col("s_suppkey").cast("long").alias("poly_id"),
-        (F.col("s_nationkey") % 5).cast("long").alias("layer_id"),
-        F.array(diamond(cx, cy, r), diamond(cx, cy, h)).alias("polygon"),
-    )
 
 
 @query("spatial_pip_holes_join", _pip_holes_sql())
@@ -755,18 +714,17 @@ def spatial_pip_holes_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape geo-indices.js actually indexes): even-odd crossings
     summed over the outer ring AND the hole ring, so hole-interior
     points correctly fail. Broadcast strategy through
-    operators/spatial.py::spatial_join_broadcast(polygon_col=...):
-    the operator stages the OUTER ring's bbox on the broadcast side
-    and puts the four scalar conjuncts BEFORE the multi-ring even-odd
-    HOF. Without that prefilter this query was the r4 bench's one
-    weak row (layer-only blocking -> ~3M candidate pairs at sf0.1,
-    20.9 s warm; VERDICT r4 #2 -- fixed to ~1 s). bbox containment is
-    implied by point-in-polygon, so the DuckDB oracle is unchanged.
-    Reference anchor: geo-indices.js:34,:48 --
-    bbox-prefilter-then-exact-test is the reference's own design."""
-    polys = _holes_polys(spark, sf_dir)
+    operators/spatial.py::spatial_join_broadcast: the operator stages
+    the OUTER ring's bbox on the broadcast side and puts the four
+    scalar conjuncts BEFORE the multi-ring even-odd HOF. Without that
+    prefilter, layer-only blocking leaves ~3M candidate pairs at sf0.1
+    (20.9 s warm, against ~1 s with it). bbox containment is implied
+    by point-in-polygon, so the DuckDB oracle is unchanged. Reference
+    anchor: geo-indices.js:34,:48 -- bbox-prefilter-then-exact-test is
+    the reference's own design."""
+    polys = _synth_polygons(spark, sf_dir, hole=True)
     points = _synth_points(spark, sf_dir)
-    out = spatial_join_broadcast(points, polys, polygon_col="polygon")
+    out = spatial_join_broadcast(points, polys)
     return out.select("point_id", "poly_id")
 
 
@@ -777,12 +735,12 @@ def spatial_pip_holes_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on (layer_id, cell), cells derived from the OUTER ring's
     bbox (holes only subtract area, so outer coverage stays sound),
     refine = holes-aware even-odd parity. This is the 100 TB path for
-    full GeoJSON Polygon semantics (VERDICT r4 #7): no broadcast
-    limit, skew bounded by cell size, a point lives in exactly one
-    cell so matches are already distinct."""
-    polys = _holes_polys(spark, sf_dir)
+    full GeoJSON Polygon semantics: no broadcast limit, skew bounded
+    by cell size, a point lives in exactly one cell so matches are
+    already distinct."""
+    polys = _synth_polygons(spark, sf_dir, hole=True)
     points = _synth_points(spark, sf_dir)
-    out = spatial_join_grid(points, polys, polygon_col="polygon")
+    out = spatial_join_grid(points, polys)
     return out.select("point_id", "poly_id")
 
 
@@ -974,8 +932,8 @@ def spatial_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Convex polygon-polygon CONTAINMENT join (VERDICT r8 #6: the SAT
-# intersection join existed; containment was the missing predicate).
+# Convex polygon-polygon CONTAINMENT join: the companion predicate of
+# the SAT intersection join.
 # Supplier diamonds as the outer rings, part triangles as the inner
 # candidates -- the same fixture geometry as spatial_convex_sat_join,
 # so containment pairs are a strict subset of its intersections and
@@ -993,53 +951,7 @@ def _convex_contains_sql(cell: int = _BBOX_CELL) -> str:
         "(ra[i+1][2] - ra[i][2]) * (v[1] - ra[i][1]) >= 0)) = len(rb))) "
         "= len(ra) - 1"
     )
-    return f"""
-WITH dia AS (
-  SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
-         CAST(s_nationkey % 5 AS BIGINT) AS layer_id,
-         [[cx + r, cy], [cx, cy + r], [cx - r, cy], [cx, cy - r], [cx + r, cy]] AS ra
-  FROM (SELECT s_suppkey, s_nationkey,
-               CAST((s_suppkey % 40) * 10 AS BIGINT) AS cx,
-               CAST((s_suppkey // 40) * 10 AS BIGINT) AS cy,
-               CAST(3 + s_suppkey % 4 AS BIGINT) AS r
-        FROM supplier)),
-tri AS (
-  SELECT CAST(p_partkey AS BIGINT) AS tri_id,
-         CAST(p_partkey % 5 AS BIGINT) AS layer_id,
-         [[cx + h, cy], [cx - h, cy + h], [cx - h, cy - h], [cx + h, cy]] AS rb
-  FROM (SELECT p_partkey,
-               CAST((p_partkey % 40) * 10 + 2 AS BIGINT) AS cx,
-               CAST((p_partkey // 40 % 25) * 10 + 2 AS BIGINT) AS cy,
-               CAST(1 + p_partkey % 3 AS BIGINT) AS h
-        FROM part)),
-a1 AS (
-  SELECT poly_id, layer_id, ra,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[1])) // {cell},
-                                list_max(list_transform(ra, v -> v[1])) // {cell})) AS cx
-  FROM dia),
-a_cells AS (
-  SELECT poly_id, layer_id, ra, cx,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[2])) // {cell},
-                                list_max(list_transform(ra, v -> v[2])) // {cell})) AS cy
-  FROM a1),
-b1 AS (
-  SELECT tri_id, layer_id, rb,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[1])) // {cell},
-                                list_max(list_transform(rb, v -> v[1])) // {cell})) AS cx
-  FROM tri),
-b_cells AS (
-  SELECT tri_id, layer_id, rb, cx,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[2])) // {cell},
-                                list_max(list_transform(rb, v -> v[2])) // {cell})) AS cy
-  FROM b1),
-cand AS (
-  SELECT DISTINCT poly_id, tri_id, ra, rb
-  FROM a_cells a JOIN b_cells b
-    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)
-SELECT poly_id, tri_id
-FROM cand
-WHERE {contains}
-"""
+    return _convex_pair_sql(cell, contains)
 
 
 @query("spatial_convex_contains_join", _convex_contains_sql())
@@ -1053,44 +965,14 @@ def spatial_convex_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs are a subset of the SAT join's intersections by definition;
     tests/test_r9_properties.py pins that inclusion plus a brute-force
     geometric recompute."""
-    from ..operators.spatial import convex_contains_join
-
-    sup = load_table(spark, sf_dir, "supplier")
-    r = (F.lit(3) + F.col("s_suppkey") % 4).cast("long")
-    cx = ((F.col("s_suppkey") % 40) * 10).cast("long")
-    cy = (F.expr("s_suppkey DIV 40") * 10).cast("long")
-    dia = sup.select(
-        F.col("s_suppkey").cast("long").alias("poly_id"),
-        (F.col("s_nationkey") % 5).cast("long").alias("layer_id"),
-        F.array(
-            F.array(cx + r, cy),
-            F.array(cx, cy + r),
-            F.array(cx - r, cy),
-            F.array(cx, cy - r),
-            F.array(cx + r, cy),
-        ).alias("ring"),
-    )
-    part = load_table(spark, sf_dir, "part")
-    h = (F.lit(1) + F.col("p_partkey") % 3).cast("long")
-    bx = ((F.col("p_partkey") % 40) * 10 + 2).cast("long")
-    by = ((F.expr("p_partkey DIV 40") % 25) * 10 + 2).cast("long")
-    tri = part.select(
-        F.col("p_partkey").cast("long").alias("tri_id"),
-        (F.col("p_partkey") % 5).cast("long").alias("layer_id"),
-        F.array(
-            F.array(bx + h, by),
-            F.array(bx - h, by + h),
-            F.array(bx - h, by - h),
-            F.array(bx + h, by),
-        ).alias("ring"),
-    )
+    dia, tri = _diamonds_and_triangles(spark, sf_dir)
     return convex_contains_join(
         dia, tri, cell=_BBOX_CELL, a_id="poly_id", b_id="tri_id"
     )
 
 
 # ---------------------------------------------------------------------------
-# SIMPLE (non-convex) polygon intersection join (VERDICT r9 #5b).
+# SIMPLE (non-convex) polygon intersection join.
 # Supplier DARTS (concave quadrilateral, notch at the top) against
 # part L-SHAPES (concave hexagon) -- the convex SAT predicate is
 # invalid for both shapes, so this exercises the full edge-crossing +
@@ -1156,6 +1038,11 @@ def _simple_poly_intersect_sql(cell: int = _BBOX_CELL) -> str:
         f" OR ({_pip_strict_sql('ra[1][1]', 'ra[1][2]', 'rb')})"
         f" OR ({_pip_strict_sql('rb[1][1]', 'rb[1][2]', 'ra')})"
     )
+    cand = _grid_cand_sql(
+        _ring_cells_sql("a", "dart", "poly_id", "ra", cell),
+        _ring_cells_sql("b", "ell", "shape_id", "rb", cell),
+        "poly_id, shape_id, ra, rb",
+    )
     return f"""
 WITH dart AS (
   SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
@@ -1176,30 +1063,7 @@ ell AS (
                CAST((p_partkey // 40 % 25) * 10 + 2 AS BIGINT) AS by,
                CAST(2 + p_partkey % 3 AS BIGINT) AS w
         FROM part)),
-a1 AS (
-  SELECT poly_id, layer_id, ra,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[1])) // {cell},
-                                list_max(list_transform(ra, v -> v[1])) // {cell})) AS cx
-  FROM dart),
-a_cells AS (
-  SELECT poly_id, layer_id, ra, cx,
-         unnest(generate_series(list_min(list_transform(ra, v -> v[2])) // {cell},
-                                list_max(list_transform(ra, v -> v[2])) // {cell})) AS cy
-  FROM a1),
-b1 AS (
-  SELECT shape_id, layer_id, rb,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[1])) // {cell},
-                                list_max(list_transform(rb, v -> v[1])) // {cell})) AS cx
-  FROM ell),
-b_cells AS (
-  SELECT shape_id, layer_id, rb, cx,
-         unnest(generate_series(list_min(list_transform(rb, v -> v[2])) // {cell},
-                                list_max(list_transform(rb, v -> v[2])) // {cell})) AS cy
-  FROM b1),
-cand AS (
-  SELECT DISTINCT poly_id, shape_id, ra, rb
-  FROM a_cells a JOIN b_cells b
-    ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)
+{cand}
 SELECT poly_id, shape_id
 FROM cand
 WHERE {intersects}
@@ -1217,8 +1081,6 @@ def spatial_simple_poly_intersect_join(spark: SparkSession, sf_dir: str) -> Data
     inputs the predicate agrees with convex_intersects (pinned in
     tests/test_r10_properties.py along with a no-grid brute-force
     recompute of this query)."""
-    from ..operators.spatial import simple_polygon_intersect_join
-
     sup = load_table(spark, sf_dir, "supplier")
     r = (F.lit(3) + F.col("s_suppkey") % 4).cast("long")
     cx = ((F.col("s_suppkey") % 40) * 10).cast("long")

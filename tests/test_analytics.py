@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_building_inspector_spark.operators.graph import sssp_bounded
@@ -69,6 +70,20 @@ def test_sssp_undirected_and_early_stop(spark):
         for r in sssp_bounded(edges, _seeds(spark, [4]), max_hops=5).collect()
     }
     assert out == {4: 0, 5: 7}
+
+
+@pytest.mark.parametrize("max_hops", [2, 4, 6])
+def test_sssp_frees_each_superseded_round(spark, max_hops):
+    """Every round frees the checkpoint it supersedes, so only the
+    returned frame's blocks stay live however many rounds ran."""
+    from etl_building_inspector_spark.operators import _cache
+
+    _cache.release_persisted()
+    # a 7-node path: each of the first 6 rounds improves one more node
+    edges = _edges(spark, [(i, i + 1, 1) for i in range(6)])
+    sssp_bounded(edges, _seeds(spark, [0]), max_hops=max_hops)
+    assert len(_cache._CHECKPOINTED) == 1
+    _cache.release_persisted()
 
 
 # --- skyline ----------------------------------------------------------------

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from etl_building_inspector_spark.operators.dedup import (
+    minhash_band_index,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_hamming_pairs,
@@ -46,6 +47,21 @@ def test_minhash_cap_bounds_hot_buckets(spark, boilerplate_docs):
     assert not any(a < 30 and b < 30 for a, b in capped_pairs)
     # ...but the genuine rare-bucket near-dup pair survives
     assert (100, 101) in capped_pairs
+
+
+def test_minhash_band_index_string_and_long_ids_agree(spark):
+    """The batch index takes the min over ids cast to long, like the
+    streaming refresh: duplicates "9" and "10" key first_match_id 9
+    whether the ids are strings or longs."""
+    rows = [(9, DOC_A), (10, DOC_A), (200, DOC_C)]
+    as_long = spark.createDataFrame(rows, "doc_id long, text string")
+    as_str = spark.createDataFrame(
+        [(str(i), t) for i, t in rows], "doc_id string, text string"
+    )
+    by_long = sorted(map(tuple, minhash_band_index(as_long, "text", "doc_id").collect()))
+    by_str = sorted(map(tuple, minhash_band_index(as_str, "text", "doc_id").collect()))
+    assert by_str == by_long
+    assert {r[3] for r in by_long} == {9, 200}
 
 
 def test_jaccard_df_cap_bounds_hot_shingles(spark, boilerplate_docs):

@@ -7,7 +7,6 @@ import json
 from pyspark.sql import functions as F
 
 from etl_building_inspector_spark.operators.spatial import (
-    point_in_polygon,
     point_in_polygon_with_holes,
 )
 from etl_building_inspector_spark.sources.geojson import (
@@ -111,9 +110,9 @@ def test_point_in_polygon_with_holes(spark):
         "y",
         "expected",
         point_in_polygon_with_holes(F.col("x"), F.col("y"), poly).alias("got"),
-        point_in_polygon(F.col("x"), F.col("y"), poly.getItem(0)).alias(
-            "outer_only"
-        ),
+        point_in_polygon_with_holes(
+            F.col("x"), F.col("y"), F.array(poly.getItem(0))
+        ).alias("outer_only"),
     ).collect()
     for r in got:
         assert r.got == r.expected, (r.x, r.y)

@@ -11,6 +11,16 @@ import pytest
 from etl_building_inspector_spark.plans.registry import QUERIES
 
 
+# grid-pair spatial joins -> realized Exchange count of the executed plan
+GRID_PAIR_EXCHANGES = {
+    "spatial_convex_contains_join": 2,
+    "spatial_simple_poly_intersect_join": 2,
+    "spatial_convex_sat_join": 2,
+    "spatial_bbox_intersect_join": 2,
+    "spatial_polygon_intersect_join": 2,
+}
+
+
 def _executed(spark, name, sf_dir):
     return (
         QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
@@ -85,7 +95,8 @@ def test_spatial_holes_compiles_no_interpreted_fallback(spark, sf_dir):
             "spatial_pip_holes_join",
             "spatial_pip_join",
             "spatial_pip_join_grid",
-            "spatial_convex_sat_join",
+            "spatial_pip_nomatch_log",
+            *GRID_PAIR_EXCHANGES,
         ):
             QUERIES[name](spark, sf_dir).collect()
     finally:
@@ -486,26 +497,16 @@ def test_pack_bucketed_greedy_single_exchange(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_convex_contains_join_is_grid_equi(spark, sf_dir):
-    """The containment join must keep the SAT join's filter-refine
-    shape: a hash equi-join on (layer, cell) -- never an all-pairs
-    nested loop -- with the vertex-in-halfplane refine as a
-    post-join predicate."""
-    plan = _executed(spark, "spatial_convex_contains_join", sf_dir)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Exchange") <= 2, plan
-
-
-def test_simple_poly_intersect_join_is_grid_equi(spark, sf_dir):
-    """The non-convex join must keep the filter-refine shape: a hash
+@pytest.mark.parametrize("name", sorted(GRID_PAIR_EXCHANGES))
+def test_grid_pair_join_is_grid_equi(spark, sf_dir, name):
+    """Every polygon-pair join keeps the filter-refine shape: a hash
     equi-join on (layer, cell) -- never an all-pairs nested loop --
-    with the edge-crossing/containment refine as a post-join
-    predicate (same contract as the convex SAT/containment pins)."""
-    plan = _executed(spark, "spatial_simple_poly_intersect_join", sf_dir)
+    with the exact refine (SAT, containment, edge-crossing or
+    interval test) as a post-join predicate."""
+    plan = _executed(spark, name, sf_dir)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("Exchange") <= 2, plan
+    assert plan.count("Exchange") == GRID_PAIR_EXCHANGES[name], plan
 
 
 def test_minhash_index_refresh_bounded_shuffles(spark, sf_dir):
