@@ -19,7 +19,7 @@ but comparisons should happen on the integer micros.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -31,10 +31,3 @@ def epoch_micros(col: Column | str) -> Column:
     # cast through TIMESTAMP: identity for TIMESTAMP, UTC-wall-clock
     # for NTZ under the pinned session tz; unix_micros is then exact.
     return F.unix_micros(c.cast("timestamp"))
-
-
-def epoch_seconds(col: Column | str) -> Column:
-    """Seconds since epoch as DOUBLE (microsecond resolution preserved:
-    2024-era micros ~1.7e15 < 2^53, so the division is exact enough for
-    bucketing; use epoch_micros for comparisons)."""
-    return epoch_micros(col).cast("double") / F.lit(1e6)

@@ -25,23 +25,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-    ]
-)
-
-MEDIA = T.StructType(
-    [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("meta", MEDIA_META, True),
-    ]
-)
 
 try:  # the real decoder would be PIL; not present in this container
     from PIL import Image  # noqa: F401
@@ -49,25 +32,6 @@ try:  # the real decoder would be PIL; not present in this container
     HAVE_PIL = True
 except ImportError:
     HAVE_PIL = False
-
-
-def synth_media(df: DataFrame, key_col: str) -> DataFrame:
-    """Attach a deterministic fake media column (bytes derived from the
-    key via md5) -- stands in for reading real blobs; keeps tests and
-    fixtures reproducible."""
-    payload = F.repeat(F.md5(F.col(key_col).cast("string")), 4)
-    return df.withColumn(
-        "media",
-        F.struct(
-            F.encode(payload, "utf-8").alias("bytes"),
-            F.lit("image/png").alias("mime"),
-            F.struct(
-                (F.col(key_col) % 64 + 1).cast("int").alias("width"),
-                (F.col(key_col) % 48 + 1).cast("int").alias("height"),
-                F.lit(None).cast("int").alias("duration_ms"),
-            ).alias("meta"),
-        ),
-    )
 
 
 _FEATURE_SCHEMA = "key long, n_bytes long, content_hash string, mean_byte double"
@@ -161,77 +125,6 @@ def decode_image(df: DataFrame, key_col: str = "key") -> DataFrame:
     return slim.mapInPandas(kernel, schema=_DECODE_SCHEMA)
 
 
-_RESIZE_SCHEMA = (
-    "key long, width int, height int, bytes binary, resize_error string"
-)
-
-
-def resize_image(
-    df: DataFrame, width: int, height: int, key_col: str = "key"
-) -> DataFrame:
-    """Image resize as an Arrow-batched mapInPandas kernel: binary in,
-    binary out, per-row errors in `resize_error` (never a task
-    failure). With PIL present the kernel is a real thumbnail encode;
-    without codecs (this container) it is a DETERMINISTIC fake -- the
-    output bytes are a pure function of (input bytes, target size) so
-    tests pin the plumbing (schema, fan-through, batch shape, error
-    channel) identically in both environments.
-
-    Scale notes: the binary column rides Arrow zero-copy into the
-    worker; output partitioning is unchanged (narrow); target-size
-    constants fold into the closure, not the data.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if HAVE_PIL:
-            import io
-
-            from PIL import Image as _Image
-
-            def one(b: bytes) -> tuple:
-                try:
-                    with _Image.open(io.BytesIO(b)) as im:
-                        out = im.resize((width, height))
-                        buf = io.BytesIO()
-                        out.save(buf, format=im.format or "PNG")
-                        return width, height, buf.getvalue(), None
-                except Exception as e:
-                    return None, None, None, f"{type(e).__name__}: {e}"
-
-        else:
-
-            def one(b: bytes) -> tuple:
-                # deterministic fake: content-addressed pseudo-pixels,
-                # same length law a real encoder would respect
-                h = hashlib.md5(
-                    b + f":{width}x{height}".encode()
-                ).digest()
-                fake = (h * ((width * height) // len(h) + 1))[
-                    : width * height
-                ]
-                return width, height, fake, None
-
-        for pdf in batches:
-            r = pdf["bytes"].map(one)
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "width": r.map(lambda t: t[0]),
-                    "height": r.map(lambda t: t[1]),
-                    "bytes": r.map(lambda t: t[2]),
-                    "resize_error": r.map(lambda t: t[3]),
-                }
-            )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    slim = df.select(
-        F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
-    )
-    return slim.mapInPandas(kernel, schema=_RESIZE_SCHEMA)
-
-
 _FRAME_SCHEMA = "key long, frame_idx int, frame binary, ts_ms int"
 
 
@@ -286,94 +179,6 @@ def sample_frames(
         F.col("media.meta.duration_ms").alias("duration_ms"),
     )
     return slim.mapInPandas(kernel, schema=_FRAME_SCHEMA)
-
-
-# --- codec-free header sniffing --------------------------------------------
-
-_HEADER_SCHEMA = (
-    "key long, format string, width int, height int, parse_error string"
-)
-
-
-def parse_image_header(one: bytes):
-    """Pure-Python image header parser: PNG (IHDR), GIF (logical
-    screen descriptor), JPEG (SOF segment scan). No codec library --
-    dimensions come from the container header bytes, which is all a
-    catalog/dedup pass needs (decode stays behind HAVE_PIL). Returns
-    (format, width, height, error)."""
-    try:
-        if one[:8] == b"\x89PNG\r\n\x1a\n":
-            if one[12:16] != b"IHDR" or len(one) < 24:
-                return ("png", None, None, "truncated IHDR")
-            w = int.from_bytes(one[16:20], "big")
-            h = int.from_bytes(one[20:24], "big")
-            return ("png", w, h, None)
-        if one[:6] in (b"GIF87a", b"GIF89a"):
-            if len(one) < 10:
-                return ("gif", None, None, "truncated LSD")
-            w = int.from_bytes(one[6:8], "little")
-            h = int.from_bytes(one[8:10], "little")
-            return ("gif", w, h, None)
-        if one[:2] == b"\xff\xd8":
-            i = 2
-            while i + 9 < len(one):
-                if one[i] != 0xFF:
-                    return ("jpeg", None, None, "bad segment marker")
-                # JPEG allows runs of 0xFF fill bytes before a marker
-                # (ITU T.81 B.1.1.2); skip them or a fill byte would be
-                # read as marker 0xFF with a bogus length.
-                while i + 9 < len(one) and one[i + 1] == 0xFF:
-                    i += 1
-                marker = one[i + 1]
-                if 0xC0 <= marker <= 0xCF and marker not in (
-                    0xC4,
-                    0xC8,
-                    0xCC,
-                ):
-                    h = int.from_bytes(one[i + 5 : i + 7], "big")
-                    w = int.from_bytes(one[i + 7 : i + 9], "big")
-                    return ("jpeg", w, h, None)
-                if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                    # TEM / RSTn are standalone markers with no length
-                    # field; reading a "length" there would skip past
-                    # (or into) the real SOF.
-                    i += 2
-                    continue
-                seg_len = int.from_bytes(one[i + 2 : i + 4], "big")
-                i += 2 + seg_len
-            return ("jpeg", None, None, "no SOF segment")
-        return (None, None, None, "unknown magic")
-    except Exception as ex:  # malformed blobs must not kill the task
-        return (None, None, None, f"parse failure: {ex}")
-
-
-def sniff_image_headers(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """mapInPandas over the binary column running the codec-free
-    header parser: the catalog pass that works in ANY environment
-    (unlike decode_image's HAVE_PIL gate). Arrow-batched; only
-    (key, bytes) ships to Python, and only the first KB of each blob
-    is touched."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf["bytes"].map(lambda b: parse_image_header(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "format": parsed.map(lambda t: t[0]),
-                    "width": parsed.map(lambda t: t[1]),
-                    "height": parsed.map(lambda t: t[2]),
-                    "parse_error": parsed.map(lambda t: t[3]),
-                }
-            )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    slim = df.select(
-        F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
-    )
-    return slim.mapInPandas(kernel, schema=_HEADER_SCHEMA)
 
 
 # --- audio: fixed-size window features --------------------------------------

@@ -19,7 +19,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._cache import release_persisted, track_persist  # noqa: F401 (re-export)
+from ._cache import track_persist
 from ._parallel import fan_out_scan
 
 
@@ -474,11 +474,7 @@ def cosine_topk_lsh(
 def _probe_cells(q: DataFrame, centers: list, n_probe: int) -> DataFrame:
     """Route each query row (query_id, __qvec) to its n_probe nearest
     centroids: euclidean distance^2 to every centroid as literal
-    arrays, array_sort on (dist, idx) structs, slice, explode. The
-    SINGLE implementation shared by cosine_topk_ivf (inline fit) and
-    probe_ivf_index (persisted index) -- their exact-reproduction
-    contract (test_ivf_index_persist_probe_matches_inline) depends on
-    this block staying identical for both."""
+    arrays, array_sort on (dist, idx) structs, slice, explode."""
     centers_lit = F.array(
         *[
             F.struct(
@@ -730,99 +726,6 @@ def cosine_topk_ivf_sampled(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
-
-
-def kmeans_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    rounds: int = 3,
-):
-    """Multi-round distributed KMeans (Lloyd) entirely on DataFrames:
-    init = first k vectors by id (deterministic), then per round one
-    broadcast argmin assignment + one (cluster, dim) re-aggregation --
-    the iterated form of queries_llm4.kmeans_lloyd_round. Centroids
-    live driver-side as a k x dim literal table (k*dim is tiny by
-    definition); the corpus is only ever scanned, never shuffled by
-    more than the posexplode agg. Returns (assignments DataFrame,
-    [inertia per round]): Lloyd guarantees inertia is non-increasing,
-    which the convergence test pins.
-    """
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    # 2 + 2*rounds separate actions consume `vecs` (first(), init
-    # collect, per-round assignment + mean recomputation): persist the
-    # fanned-out projection so the scan + fan-out repartition run once,
-    # not once per action (ADVICE r10 #3). track_persist: the registry
-    # wrapper / bench release it between queries.
-    from ._cache import track_persist
-
-    vecs = track_persist(
-        fan_out_scan(
-            df.select(
-                F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-            )
-        )
-    )
-    row = vecs.first()
-    if row is None:
-        raise ValueError("kmeans_fit: empty input DataFrame")
-    dim = len(row["v"])
-    # deterministic init: the k lowest-id vectors
-    init = vecs.orderBy("id").limit(k).collect()
-    centroids = [[float(x) for x in r["v"]] for r in init]
-
-    def centroid_df():
-        return spark.createDataFrame(
-            [(i, centroids[i]) for i in range(len(centroids))],
-            f"cid int, cv array<double>",
-        )
-
-    d2 = F.aggregate(
-        F.zip_with(
-            F.transform("v", lambda x: x.cast("double")),
-            "cv",
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    inertias: list[float] = []
-    assign = None
-    for _ in range(rounds):
-        dists = vecs.crossJoin(F.broadcast(centroid_df())).select(
-            "id", "v", "cid", d2.alias("d2")
-        )
-        assign = dists.groupBy("id").agg(
-            F.min(F.struct("d2", "cid")).alias("b")
-        ).select("id", F.col("b.cid").alias("cid"), F.col("b.d2").alias("d2"))
-        inertias.append(
-            assign.agg(F.sum("d2").alias("s")).collect()[0]["s"]
-        )
-        # recompute means: posexplode + (cid, dim) agg, k*dim rows back
-        new = (
-            vecs.join(assign.select("id", "cid"), "id")
-            .select(
-                "cid",
-                F.posexplode(
-                    F.transform("v", lambda x: x.cast("double"))
-                ).alias("d", "x"),
-            )
-            .groupBy("cid", "d")
-            .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
-            .collect()
-        )
-        by_cid: dict = {}
-        for r in new:
-            by_cid.setdefault(r["cid"], [0.0] * dim)[r["d"]] = (
-                r["sx"] / r["n"]
-            )
-        centroids = [
-            by_cid.get(i, centroids[i]) for i in range(len(centroids))
-        ]
-    return assign, inertias
 
 
 # ---------------------------------------------------------------------------
@@ -1088,111 +991,6 @@ def pq_adc_topk(
 # the probe so the expensive step amortizes across probe jobs and
 # sessions.
 # ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    seed: int = 42,
-) -> dict:
-    """Fit the coarse quantizer and persist the index:
-    path/centroids.parquet (cell, centroid) -- KB-sized -- and
-    path/vectors.parquet partitionBy(cell) -- the corpus laid out so a
-    probe of cell c READS ONLY cell c's directory (real partition
-    pruning, the on-disk analog of the inverted file). One clustering
-    + one narrow assignment pass; returns cell-occupancy stats (the
-    balance check an operator would alert on -- a fat cell means the
-    quantizer needs re-training or more centroids)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus_v = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).withColumn("__v", array_to_vector(F.col("vec").cast("array<double>")))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="__v").fit(corpus_v)
-    assigned = model.transform(corpus_v).select(
-        "vec_id", "vec", F.col("prediction").alias("cell")
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        path + "/vectors.parquet"
-    )
-    spark = corpus.sparkSession
-    centers = [
-        (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    spark.createDataFrame(
-        centers, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids.parquet")
-    occ = (
-        spark.read.parquet(path + "/vectors.parquet")
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    # occupancy over ALL centroids: an empty cluster writes no
-    # partition directory, so it never appears in the scan -- but an
-    # empty cell is exactly the imbalance the stats exist to surface
-    by_cell = {r["cell"]: r["n"] for r in occ}
-    sizes = [by_cell.get(c, 0) for c in range(n_centroids)]
-    return {
-        "n_centroids": n_centroids,
-        "n_vectors": sum(sizes),
-        "cell_min": min(sizes),
-        "cell_max": max(sizes),
-    }
-
-
-def probe_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Top-k cosine against a PERSISTED IVF index: centroids load
-    driver-side (KB), each query keeps its n_probe nearest cells, and
-    the probe joins the broadcast query set against the cell-
-    partitioned vectors -- the scan touches ~n_probe/n_centroids of
-    the index, and identical (centroids, n_probe, k) reproduce
-    cosine_topk_ivf's exact results without refitting anything."""
-    centers = [
-        c
-        for _, c in sorted(
-            (r["cell"], r["centroid"])
-            for r in spark.read.parquet(path + "/centroids.parquet").collect()
-        )
-    ]
-    q = _probe_cells(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        ),
-        centers,
-        n_probe,
-    )
-    vectors = spark.read.parquet(path + "/vectors.parquet").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("__cvec"), "cell"
-    )
-    joined = vectors.join(F.broadcast(q), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    sim = joined.select(
-        "query_id",
-        "neighbor_id",
-        _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 def cosine_topk_ivf_pq(

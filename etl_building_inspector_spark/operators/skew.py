@@ -91,43 +91,3 @@ def salted_twophase_agg(
             for name, (_, merge) in aggs.items()
         ]
     )
-
-
-def auto_salt_factor(
-    df: DataFrame,
-    key: str,
-    target_rows_per_task: int = 5_000_000,
-    max_salts: int = 64,
-) -> int:
-    """Size S from the key histogram instead of guessing: one
-    map-side-combinable count per key collapsed to the single hottest
-    count (a one-row collect -- metadata-sized, same contract as the
-    maintenance listings), then S = ceil(hottest / target) clamped to
-    [1, max_salts]. The clamp matters: S multiplies the small side's
-    shuffle volume in salted_join, so runaway skew should surface as
-    a visible cost decision, not a silent 10_000-way replication."""
-    row = (
-        df.groupBy(key)
-        .agg(F.count("*").alias("n"))
-        .agg(F.max("n").alias("hottest"))
-        .collect()[0]
-    )
-    hottest = row["hottest"] or 0
-    s = max(1, -(-hottest // target_rows_per_task))  # ceil div
-    return min(s, max_salts)
-
-
-def salted_join_auto(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_from: str,
-    target_rows_per_task: int = 5_000_000,
-) -> DataFrame:
-    """salted_join with S measured from the data (auto_salt_factor).
-    S == 1 (no skew worth paying for) degrades to the plain join --
-    zero replication cost on well-behaved keys."""
-    s = auto_salt_factor(big, key, target_rows_per_task)
-    if s == 1:
-        return big.join(small, key)
-    return salted_join(big, small, key, salt_from, n_salts=s)

@@ -18,7 +18,6 @@ polymorphism (both verified against Spark 4's Jackson parser):
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,42 +103,6 @@ RAW_SHEETS = T.StructType(
 )
 
 
-def featurecollection_to_jsonl(src: str, dst: str, seq_start: int = 0) -> int:
-    """Landing-side convert: one GeoJSON FeatureCollection document ->
-    JSONL, one feature per line (driver-side, runs once per download;
-    the cluster never touches the unsplittable original). Each line is
-    stamped with an explicit `_seq` file-order column (see
-    landing._seq_line); for multi-file landing dirs chain the counter:
-    n = featurecollection_to_jsonl(a, f1); featurecollection_to_jsonl(
-    b, f2, seq_start=n)."""
-    with open(src) as f:
-        doc = json.load(f)
-    feats = doc.get("features", [])
-    with open(dst, "w") as out:
-        for i, feat in enumerate(feats):
-            out.write(
-                json.dumps({"_seq": seq_start + i, **feat}, separators=(",", ":"))
-                + "\n"
-            )
-    return len(feats)
-
-
-def write_geojson_featurecollection(
-    lines_df: DataFrame, out_path: str, line_col: str = "value"
-) -> int:
-    """Export-parity writer (reference S5): wrap feature JSON lines into
-    one valid GeoJSON FeatureCollection document. Collect-based by
-    design -- a single JSON doc is a driver-side artifact; cluster-scale
-    exports stay JSONL."""
-    rows = lines_df.select(line_col).collect()
-    with open(out_path, "w") as f:
-        f.write('{"type":"FeatureCollection","features":[\n')
-        for i, r in enumerate(rows):
-            f.write(("," if i else "") + r[0] + "\n")
-        f.write("]}\n")
-    return len(rows)
-
-
 def read_consolidated(spark: SparkSession, path: str) -> DataFrame:
     """Scan consolidated features. `_seq` drives keep-first dedup
     determinism (reference D1 is first-in-FILE-order,
@@ -193,57 +156,3 @@ def parse_addresses(raw: F.Column) -> F.Column:
         raw.isNotNull() & raw.startswith("["),
         F.from_json(raw, T.ArrayType(ADDRESS_ENTRY)),
     )
-
-
-def read_jsonl_with_quarantine(
-    spark: SparkSession, path: str, schema
-) -> tuple[DataFrame, DataFrame]:
-    """Schema'd JSONL scan that QUARANTINES malformed lines instead of
-    nulling them silently (PERMISSIVE default) or killing the job
-    (FAILFAST). Returns (good_rows, quarantined) where quarantined
-    carries the raw offending line for replay/repair.
-
-    This is the reference's logs-as-data discipline (S10,
-    building-inspector.js:129-136 -- bad input becomes a record, the
-    job continues) applied to the INGEST boundary: at 100 TB some
-    landed lines WILL be truncated or malformed, and the difference
-    between a job that quarantines 0.001% and one that dies at hour
-    six is this split.
-
-    Mechanics: a TEXT scan (splittable, one raw line per row) +
-    `from_json`, which yields NULL for a syntactically-invalid line.
-    This deliberately avoids the json reader's
-    columnNameOfCorruptRecord route: Spark refuses plans that
-    reference ONLY the corrupt column from a raw scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) and its
-    documented workaround is cache() -- caching a 100 TB landing scan
-    is not an ingest pattern. Here both outputs are plain column
-    predicates over one codegen'd from_json pass. from_json signals
-    BOTH syntactic corruption and per-field type mismatches through
-    its corrupt-record field (an all-null struct is not
-    distinguishable otherwise), so a line whose value cannot coerce
-    to the declared type ({"id": "abc"} against id LONG) is ALSO
-    quarantined -- deliberately: a type-drifted feed should surface
-    as quarantine volume with the raw lines preserved for replay
-    after a schema fix, not as silent NULLs corrupting aggregates
-    downstream. Structural drift that still parses (missing fields,
-    extra fields) stays on the good side with NULLs, which is
-    dq_constraint_checks territory."""
-    from pyspark.sql import types as T
-
-    with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt", T.StringType())]
-    )
-    raw = spark.read.text(path).select(
-        F.col("value").alias("raw_line"),
-        F.input_file_name().alias("src_file"),
-        F.from_json(
-            F.col("value"),
-            with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("data"),
-    )
-    bad = F.col("data").isNull() | F.col("data._corrupt").isNotNull()
-    good = raw.where(~bad).select("data.*").drop("_corrupt")
-    quarantined = raw.where(bad).select("raw_line", "src_file")
-    return good, quarantined

@@ -3,9 +3,9 @@ STREAM, and each micro-batch's mergeable Bloom filter incrementally
 quarantines more of the (static) training corpus (VERDICT r9 #5c --
 wiring queries_llm23's mergeable blooms into the streaming family).
 
-foreachBatch is the right sink for the same reason as streaming/cdc:
-the per-batch work (build the batch bloom, screen only the
-STILL-CLEAN corpus docs, confirm-join exactly) is stateful table
+foreachBatch is the right sink because the per-batch work (build
+the batch bloom, screen only the STILL-CLEAN corpus docs,
+confirm-join exactly) is stateful table
 maintenance that declarative streaming sinks can't express. The
 running quarantine set is the cross-batch state; because a doc is
 screened only while clean, each batch's cost is O(|batch suite| +

@@ -84,164 +84,6 @@ def session_windows(
     )
 
 
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running event count + value total, emitted on every update.
-
-    This is the escape hatch for stateful semantics the built-in
-    windowed aggs can't express (reference analog: none -- the
-    reference is stateless batch; north-star requirement). State is one
-    tiny row per user; the watermark-less variant here suits bounded
-    replays, production would add timeouts to expire state.
-    """
-    from pyspark.sql.streaming.state import GroupState
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(events.sparkSession)
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
-def expiring_sessions(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Timeout-expired sessionization via applyInPandasWithState +
-    EventTimeTimeout: the state-lifecycle twin of session_windows().
-
-    Per-user state is one (start, end, n) triple. Each update merges
-    the batch's events and re-arms an event-time timeout at
-    session_end + gap; when the watermark passes that point the
-    timeout FIRES, the closed session is emitted exactly once (append
-    semantics), and state.remove() drops the row — so state is
-    O(users active within the gap horizon), never O(all users ever).
-    This is the pattern for custom stateful ops the built-in
-    session_window can't express (e.g. sessions that also carry
-    running custom aggregates or emit side records on close)."""
-    from pyspark.sql.streaming.state import GroupState
-
-    gap_us = _duration_to_us(gap)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.TimestampType()),
-            T.StructField("session_end", T.TimestampType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("start_us", T.LongType()),
-            T.StructField("end_us", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            start_us, end_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.to_datetime(start_us, unit="us")],
-                    "session_end": [pd.to_datetime(end_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-            return
-        start_us, end_us, n = (
-            state.get if state.exists else (None, None, 0)
-        )
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            ts_us = pdf["ts"].astype("int64") // 1000  # ns -> us
-            lo, hi = int(ts_us.min()), int(ts_us.max())
-            start_us = lo if start_us is None else min(start_us, lo)
-            end_us = hi if end_us is None else max(end_us, hi)
-            n += len(pdf)
-        state.update((start_us, end_us, n))
-        # close the session once the watermark passes end + gap
-        state.setTimeoutTimestamp((end_us + gap_us) // 1000)
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series([], dtype="int64"),
-                "session_start": pd.Series([], dtype="datetime64[us]"),
-                "session_end": pd.Series([], dtype="datetime64[us]"),
-                "n_events": pd.Series([], dtype="int64"),
-            }
-        )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(events.sparkSession)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )
-
-
-def _duration_to_us(s: str) -> int:
-    """'30 minutes' -> microseconds (the tiny subset of Spark's
-    CalendarInterval grammar these operators use)."""
-    qty, unit = s.split()
-    per = {
-        "second": 1_000_000,
-        "seconds": 1_000_000,
-        "minute": 60_000_000,
-        "minutes": 60_000_000,
-        "hour": 3_600_000_000,
-        "hours": 3_600_000_000,
-        "day": 86_400_000_000,
-        "days": 86_400_000_000,
-    }[unit]
-    return int(qty) * per
-
-
 def streaming_dedup(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -329,116 +171,3 @@ def run_to_memory(df: DataFrame, name: str, mode: str = "complete") -> DataFrame
 def run_to_memory_append(df: DataFrame, name: str) -> DataFrame:
     """run_to_memory with append mode (kept as a named entry point)."""
     return run_to_memory(df, name, mode="append")
-
-
-def stream_stream_left_outer_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join: every click, with its in-horizon
-    purchase when one arrives, or NULL purchase columns once the
-    watermark PROVES none can. The null-emission is the subtle part:
-    an unmatched left row cannot be emitted when seen (a match may
-    still arrive); Spark holds it in state and emits the null-padded
-    row only when the watermark passes click_ts + horizon. Same
-    time-range predicate as the inner variant -- the range condition
-    is what lets Spark bound BOTH the match state and the
-    outer-row-buffer, so state stays O(events per horizon)."""
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")
-        ),
-        "left_outer",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "click_ts",
-        "purchase_id",
-        "purchase_ts",
-    )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The transformWithStateInPandas (Spark 4) version of
-    running_user_totals: a StatefulProcessor with an explicit
-    ValueState handle instead of applyInPandasWithState's packed
-    tuple. Same semantics -- per-user running count/total emitted on
-    every update -- but the new API brings named state variables,
-    independent TTLs per state var, and timer callbacks; this is the
-    forward-looking home for custom stateful operators (the old API
-    stays for compatibility).
-
-    ENV-GATED: the TWS python<->JVM protocol is protobuf-encoded and
-    this container ships no google.protobuf -- the import probe below
-    raises eagerly (tests skip-if-missing, like PIL decode); under a
-    protobuf-equipped cluster the operator runs as written."""
-    from google.protobuf import descriptor  # noqa: F401  (env probe)
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._state.get() if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(events.sparkSession)
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -4,8 +4,8 @@ signature index by merge -- the streaming twin of
 dedup_minhash_index_refresh the way streaming/decon.py is the
 streaming twin of decontaminate_incremental_bloom.
 
-foreachBatch is the right sink for the same reason as streaming/cdc
-and streaming/decon: the per-batch work (build the batch's band
+foreachBatch is the right sink for the same reason as
+streaming/decon: the per-batch work (build the batch's band
 index, merge it into the standing index) is stateful table
 maintenance. Unlike the decon case there is NO driver-side result
 state at all -- the cross-batch state is the index DataFrame itself,

@@ -1,16 +1,9 @@
-"""Source/sink breadth: CSV/JSON/ORC round-trip conformance, training
-shard layout, and observe-based telemetry."""
+"""Source/sink breadth: CSV/JSON/ORC round-trip conformance."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_building_inspector_spark.operators.observe import observe_quality
-from etl_building_inspector_spark.sources.shards import (
-    read_training_shards,
-    shard_of,
-    write_training_shards,
-)
 from etl_building_inspector_spark.sources.tables import (
     load_table,
     read_table,
@@ -53,65 +46,6 @@ def test_orc_predicate_pushdown(spark, sf_dir, tmp_path):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "orc" in plan.lower()
     assert "lt(doc_id,10)" in plan.replace(" ", "") or "doc_id" in plan
-
-
-def test_training_shards_layout(spark, sf_dir, tmp_path):
-    """Hive-partitioned lang/shard layout; ONE file per directory
-    (repartition on the partition keys); deterministic membership;
-    lossless round trip; partition-pruned reads."""
-    import glob
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, "doc_id", "lang", n_shards=4)
-
-    part_dirs = glob.glob(f"{out}/lang=*/shard=*")
-    assert len(part_dirs) > 0
-    for d in part_dirs:
-        files = [f for f in glob.glob(f"{d}/*.parquet")]
-        assert len(files) == 1, d  # one task per (lang, shard)
-
-    back = spark.read.parquet(out).drop("shard")
-    # partition columns come back as read types; compare on values
-    assert back.count() == docs.count()
-    assert _same(
-        docs.select("doc_id", "text"), back.select("doc_id", "text")
-    )
-
-    # deterministic membership: recomputing the shard expression on the
-    # read-back data reproduces the directory assignment
-    recheck = spark.read.parquet(out).withColumn(
-        "expect", shard_of("doc_id", 4)
-    )
-    assert recheck.filter(F.col("shard") != F.col("expect")).count() == 0
-
-    # pruned read returns exactly that stratum
-    some_lang = docs.select("lang").first()[0]
-    pruned = read_training_shards(spark, out, lang=some_lang)
-    assert (
-        pruned.count()
-        == docs.filter(F.col("lang") == some_lang).count()
-    )
-
-
-def test_observe_quality_metrics(spark, sf_dir):
-    """observe() metrics equal a direct aggregate, computed with zero
-    extra scans (they ride the materializing job)."""
-    docs = load_table(spark, sf_dir, "documents")
-    observed, obs = observe_quality(
-        docs,
-        "docs_quality",
-        null_cols=("lang",),
-        bounds={"n_chars": (1, 10_000)},
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    want_rows = docs.count()
-    want_nulls = docs.filter(F.col("lang").isNull()).count()
-    want_oob = docs.filter(~F.col("n_chars").between(1, 10_000)).count()
-    assert m["n_rows"] == want_rows
-    assert m["null_lang"] == want_nulls
-    assert m["oob_n_chars"] == want_oob
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path_factory):

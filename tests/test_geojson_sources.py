@@ -1,41 +1,13 @@
-"""GeoJSON source/export round-trips and multi-ring point-in-polygon."""
+"""GeoJSON landing order and multi-ring point-in-polygon."""
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import functions as F
 
 from etl_building_inspector_spark.operators.spatial import (
     point_in_polygon_with_holes,
 )
-from etl_building_inspector_spark.sources.geojson import (
-    featurecollection_to_jsonl,
-    write_geojson_featurecollection,
-)
-
-
-def test_featurecollection_jsonl_roundtrip(tmp_path, spark):
-    doc = {
-        "type": "FeatureCollection",
-        "features": [
-            {"type": "Feature", "properties": {"id": i}} for i in range(5)
-        ],
-    }
-    src = tmp_path / "fc.geojson"
-    src.write_text(json.dumps(doc))
-    jsonl = tmp_path / "fc.jsonl"
-    assert featurecollection_to_jsonl(str(src), str(jsonl)) == 5
-    lines = jsonl.read_text().splitlines()
-    assert len(lines) == 5 and json.loads(lines[3])["properties"]["id"] == 3
-
-    # export back: JSONL lines -> one valid FeatureCollection
-    df = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    out = tmp_path / "export.geojson"
-    assert write_geojson_featurecollection(df, str(out)) == 5
-    doc2 = json.loads(out.read_text())
-    assert doc2["type"] == "FeatureCollection"
-    assert sorted(f["properties"]["id"] for f in doc2["features"]) == list(range(5))
+from etl_building_inspector_spark.sources.landing import download_unpaginated
 
 
 def test_seq_deterministic_across_multifile_landing(tmp_path, spark):
@@ -67,10 +39,12 @@ def test_seq_deterministic_across_multifile_landing(tmp_path, spark):
                 }
             )
             expected_first.setdefault(bid, marker)
-        src = tmp_path / f"src{fi}.json"
-        src.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
-        seq += featurecollection_to_jsonl(
-            str(src), str(landing / f"part{fi}.jsonl"), seq_start=seq
+        doc = {"type": "FeatureCollection", "features": feats}
+        seq += download_unpaginated(
+            f"src{fi}",
+            str(landing / f"part{fi}.jsonl"),
+            fetch_json=lambda u: doc,
+            seq_start=seq,
         )
 
     df = read_consolidated(spark, str(landing))
@@ -135,42 +109,3 @@ def test_grid_and_broadcast_spatial_join_agree(spark, sf_dir):
         for r in spatial_pip_join_grid(spark, sf_dir).collect()
     }
     assert bc == gr and len(bc) > 0
-
-
-def test_jsonl_quarantine_splits_corrupt_lines(spark, tmp_path_factory):
-    """Malformed JSONL lines land in the quarantine side with their
-    raw text; good rows parse cleanly; nothing is silently dropped."""
-    from pyspark.sql import types as T
-
-    from etl_building_inspector_spark.sources.geojson import (
-        read_jsonl_with_quarantine,
-    )
-
-    d = tmp_path_factory.mktemp("quarantine")
-    p = d / "data.jsonl"
-    lines = [
-        '{"id": 1, "name": "ok"}',
-        '{"id": 2, "name": "also ok"}',
-        '{"id": 3, "name": "trunca',          # truncated JSON
-        'not json at all',                     # garbage
-        '{"id": "abc", "name": "typedrift"}',  # type mismatch -> quarantine
-        '{"name": "no id field"}',             # missing field -> good, NULL id
-        '{"id": 4, "name": "fine"}',
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    good, quarantined = read_jsonl_with_quarantine(spark, str(p), schema)
-    g = good.collect()
-    q = quarantined.collect()
-    assert {r["id"] for r in g} == {1, 2, 4, None}  # missing field -> good
-    assert "no id field" in {r["name"] for r in g}
-    assert "_corrupt" not in good.columns
-    assert len(q) == 3  # two malformed + one type-drifted
-    raws = {r["raw_line"] for r in q}
-    assert 'not json at all' in raws
-    assert any("trunca" in r for r in raws)
-    assert any("typedrift" in r for r in raws)  # type mismatch quarantines
-    assert all(r["src_file"].endswith("data.jsonl") for r in q)
-    assert len(g) + len(q) == len(lines)

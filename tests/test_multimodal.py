@@ -11,15 +11,28 @@ from pyspark.sql import functions as F
 from etl_building_inspector_spark.operators.multimodal import (
     decode_image,
     extract_media_features,
-    synth_media,
 )
 from etl_building_inspector_spark.sources.tables import load_table
 
 
 @pytest.fixture(scope="module")
 def media_df(spark, sf_dir):
+    """A deterministic fake media column (bytes derived from the key via
+    md5): stands in for reading real blobs."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return synth_media(docs, "doc_id")
+    payload = F.repeat(F.md5(F.col("doc_id").cast("string")), 4)
+    return docs.withColumn(
+        "media",
+        F.struct(
+            F.encode(payload, "utf-8").alias("bytes"),
+            F.lit("image/png").alias("mime"),
+            F.struct(
+                (F.col("doc_id") % 64 + 1).cast("int").alias("width"),
+                (F.col("doc_id") % 48 + 1).cast("int").alias("height"),
+                F.lit(None).cast("int").alias("duration_ms"),
+            ).alias("meta"),
+        ),
+    )
 
 
 def test_media_schema(media_df):
@@ -85,28 +98,6 @@ def test_decode_image_real_kernel(spark):
     assert got[2].width is None and got[2].decode_error is not None
 
 
-def test_resize_plumbing(spark, media_df):
-    """resize: schema contract, 1:1 fan-through, deterministic bytes
-    (same inputs -> same output whether the kernel is PIL or the
-    content-addressed fake), and bytes being a function of target
-    size."""
-    from etl_building_inspector_spark.operators.multimodal import (
-        resize_image,
-    )
-
-    a = resize_image(media_df, 8, 6, key_col="doc_id")
-    rows = {r.key: r for r in a.collect()}
-    assert len(rows) == media_df.count()
-    for r in rows.values():
-        assert (r.width, r.height) == (8, 6)
-        assert r.resize_error is None
-        assert isinstance(r.bytes, (bytes, bytearray)) and len(r.bytes) > 0
-    again = {r.key: r for r in resize_image(media_df, 8, 6, key_col="doc_id").collect()}
-    assert all(again[k].bytes == rows[k].bytes for k in rows)
-    other = {r.key: r for r in resize_image(media_df, 4, 4, key_col="doc_id").collect()}
-    assert any(other[k].bytes != rows[k].bytes for k in rows)
-
-
 def test_sample_frames_fanout(spark, media_df):
     """frame sampling: one row per every_ms instant of duration_ms
     (1->N fan-out), deterministic frame bytes, images (null duration)
@@ -138,120 +129,6 @@ def test_sample_frames_fanout(spark, media_df):
     one = sample_frames(media_df, every_ms=1000, key_col="doc_id")
     counts = one.groupBy("key").count().collect()
     assert all(r["count"] == 1 for r in counts)
-
-
-def _png_bytes(w: int, h: int) -> bytes:
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + b"\x08\x02\x00\x00\x00"
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + len(ihdr).to_bytes(4, "big")
-        + b"IHDR"
-        + ihdr
-        + b"\x00\x00\x00\x00"
-    )
-
-
-def _gif_bytes(w: int, h: int) -> bytes:
-    return b"GIF89a" + w.to_bytes(2, "little") + h.to_bytes(2, "little") + b"\x00" * 4
-
-
-def _jpeg_bytes(w: int, h: int) -> bytes:
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0"
-        + (17).to_bytes(2, "big")
-        + b"\x08"
-        + h.to_bytes(2, "big")
-        + w.to_bytes(2, "big")
-        + b"\x03" + b"\x00" * 9
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def test_parse_image_header_kernel_pure():
-    """Header parsing needs NO codec: real container bytes for all
-    three formats, plus malformed blobs that must degrade to an error
-    column instead of raising."""
-    from etl_building_inspector_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    assert parse_image_header(_png_bytes(640, 480)) == ("png", 640, 480, None)
-    assert parse_image_header(_gif_bytes(13, 7)) == ("gif", 13, 7, None)
-    assert parse_image_header(_jpeg_bytes(320, 200)) == ("jpeg", 320, 200, None)
-    fmt, w, h, err = parse_image_header(b"not an image at all")
-    assert (fmt, w, h) == (None, None, None) and err
-    fmt, w, h, err = parse_image_header(b"\x89PNG\r\n\x1a\nXXXX")
-    assert fmt == "png" and err
-
-
-def test_parse_jpeg_fill_bytes_and_standalone_markers():
-    """ITU T.81 B.1.1.2: markers may be preceded by any number of 0xFF
-    fill bytes, and TEM (0x01) / RSTn (0xD0-0xD7) carry no length
-    field. Both used to desync the SOF scan (bogus seg_len read)."""
-    from etl_building_inspector_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0"
-        + (17).to_bytes(2, "big")
-        + b"\x08"
-        + (99).to_bytes(2, "big")
-        + (77).to_bytes(2, "big")
-        + b"\x03" + b"\x00" * 9
-    )
-    # fill bytes before the SOF marker
-    filled = b"\xff\xd8" + app0 + b"\xff\xff\xff" + sof0 + b"\xff\xd9"
-    assert parse_image_header(filled) == ("jpeg", 77, 99, None)
-    # standalone TEM and RST1 markers (no length) before the SOF
-    standalone = b"\xff\xd8" + b"\xff\x01" + b"\xff\xd1" + app0 + sof0 + b"\xff\xd9"
-    assert parse_image_header(standalone) == ("jpeg", 77, 99, None)
-
-
-def test_kmeans_fit_empty_input_raises_clearly(spark):
-    import pytest
-
-    from etl_building_inspector_spark.operators.similarity import kmeans_fit
-
-    empty = spark.createDataFrame([], "id long, emb array<double>")
-    with pytest.raises(ValueError, match="empty input"):
-        kmeans_fit(empty, "emb", "id", k=2, rounds=1)
-
-
-def test_sniff_image_headers_distributed(spark):
-    """The mapInPandas wrapper ships real header bytes through the
-    media struct and returns per-key dimensions."""
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.multimodal import (
-        sniff_image_headers,
-    )
-
-    rows = [
-        (1, _png_bytes(100, 50)),
-        (2, _gif_bytes(8, 9)),
-        (3, _jpeg_bytes(64, 32)),
-        (4, b"garbage"),
-    ]
-    df = spark.createDataFrame(rows, "key long, raw binary").select(
-        "key",
-        F.struct(
-            F.col("raw").alias("bytes"),
-            F.lit("application/octet-stream").alias("mime"),
-        ).alias("media"),
-    )
-    got = {
-        r["key"]: (r["format"], r["width"], r["height"])
-        for r in sniff_image_headers(df).collect()
-    }
-    assert got == {
-        1: ("png", 100, 50),
-        2: ("gif", 8, 9),
-        3: ("jpeg", 64, 32),
-        4: (None, None, None),
-    }
 
 
 def test_audio_energy_windows_kernel(spark):

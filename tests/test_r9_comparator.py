@@ -108,8 +108,9 @@ def test_rowdigest_order_insensitive_and_sensitive_to_change():
     over the row multiset, respect duplicates, and flip on any single
     cell change."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from oracle_check import RowDigest, canon
 
     rows = [(1, "a", canon(1.5)), (2, "b", canon(float("nan"))), (1, "a", canon(1.5))]

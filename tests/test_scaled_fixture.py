@@ -9,16 +9,18 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 
 SRC = "/root/testdata/sf0.001"
+TOOL = Path(__file__).resolve().parents[1] / "tools" / "make_scaled_fixture.py"
 
 
 def _build(tmp_path, factor=2):
     dst = str(tmp_path / "derived")
     subprocess.run(
-        [sys.executable, "/root/repo/tools/make_scaled_fixture.py", SRC, dst, str(factor)],
+        [sys.executable, str(TOOL), SRC, dst, str(factor)],
         check=True,
         capture_output=True,
     )

@@ -246,64 +246,6 @@ def test_ivf_sampled_recall_reasonable(spark, emb):
     assert recall >= 0.5
 
 
-def test_kmeans_fit_inertia_non_increasing(spark, sf_dir):
-    """Lloyd's algorithm guarantee: each assignment+recenter round can
-    only lower (never raise) total within-cluster squared distance.
-    Pins the iterated loop built on the same broadcast-argmin /
-    re-aggregation plan as the registered single round."""
-    from etl_building_inspector_spark.operators.similarity import kmeans_fit
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assign, inertias = kmeans_fit(emb, k=8, rounds=3)
-    assert len(inertias) == 3
-    for a, b in zip(inertias, inertias[1:]):
-        assert b <= a * (1 + 1e-9), inertias
-    # every vector assigned to exactly one of the k clusters
-    n = emb.count()
-    assert assign.count() == n
-    assert assign.select("cid").distinct().count() <= 8
-
-
-def test_ivf_index_persist_probe_matches_inline(spark, sf_dir, tmp_path_factory):
-    """Index lifecycle: build_ivf_index persists centroids + a
-    cell-partitioned corpus; probe_ivf_index reproduces the inline
-    cosine_topk_ivf results EXACTLY (same seed/centroids/n_probe) in
-    a plan that reads only probed cells. Layout check: one directory
-    per cell."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.similarity import (
-        build_ivf_index,
-        cosine_topk_ivf,
-        probe_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.orderBy("vec_id").limit(5)
-    idx = str(tmp_path_factory.mktemp("ivf")) + "/index"
-
-    stats = build_ivf_index(emb, idx, n_centroids=8, seed=42)
-    assert stats["n_vectors"] == emb.count()
-    assert stats["cell_min"] >= 1
-    cells = [
-        d for d in os.listdir(idx + "/vectors.parquet") if d.startswith("cell=")
-    ]
-    assert len(cells) == 8  # the on-disk inverted file
-
-    from_index = probe_ivf_index(spark, idx, queries, k=3, n_probe=3)
-    inline = cosine_topk_ivf(emb, queries, k=3, n_probe=3, n_centroids=8, seed=42)
-    a = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in from_index.collect()}
-    b = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in inline.collect()}
-    assert a == b and len(a) > 0
-
-    # the probe plan reads the partitioned index, filtered on cell
-    plan = from_index._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_ivf_pq_consistent_with_pq_adc(spark, sf_dir):
     """IVF-PQ shares the PQ codebooks with ann_cosine_pq_adc: any
     (query, neighbor) pair surfaced by BOTH must carry the IDENTICAL

@@ -67,42 +67,3 @@ def test_derived_salt_spreads_and_is_deterministic(spark):
     # deterministic: same inputs -> same salts on recompute
     again = {r.s: r.n for r in salts.groupBy("s").agg(F.count("*").alias("n")).collect()}
     assert hist == again
-
-
-def test_auto_salt_factor_sizes_from_histogram(spark, sf_dir):
-    """S is derived from the hottest key's row count: a skewed frame
-    (one key holding half the rows) gets S > 1 at a small target; a
-    uniform frame gets S == 1; results equal the plain join either
-    way."""
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.skew import (
-        auto_salt_factor,
-        salted_join_auto,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
-    )
-    # manufacture skew: fold most keys onto one hot key
-    skewed = li.withColumn(
-        "k",
-        F.when(F.col("l_orderkey") % 2 == 0, F.lit(0)).otherwise(
-            F.col("l_orderkey")
-        ),
-    )
-    n_hot = skewed.where(F.col("k") == 0).count()
-    target = max(1, n_hot // 4)
-    s = auto_salt_factor(skewed, "k", target_rows_per_task=target)
-    assert 4 <= s <= 5  # ceil(n_hot / (n_hot//4))
-
-    uniform = li.withColumn("k", F.col("l_orderkey"))
-    assert auto_salt_factor(uniform, "k", target_rows_per_task=10**9) == 1
-
-    dim = skewed.select("k").distinct().withColumn("tag", F.concat(F.lit("d"), F.col("k")))
-    got = salted_join_auto(
-        skewed, dim, "k", salt_from="l_linenumber", target_rows_per_task=target
-    )
-    want = skewed.join(dim, "k")
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0

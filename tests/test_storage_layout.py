@@ -5,9 +5,6 @@ actually elides the exchanges / prunes the scan."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from etl_building_inspector_spark.sources.tables import load_table
@@ -167,121 +164,6 @@ def test_sql_cache_table_in_memory_scan(spark, sf_dir):
     assert not spark.catalog.isCached("nation_cache_test")
 
 
-def test_compact_small_files_roundtrip(spark, sf_dir, tmp_path_factory):
-    """Executor for the compaction plan: a directory littered with
-    small files rewrites to ~target-sized files, data bit-identical."""
-    from etl_building_inspector_spark.operators.maintenance import (
-        compact_parquet_dir,
-        list_parquet_files,
-        plan_bins,
-    )
-
-    base = str(tmp_path_factory.mktemp("compact"))
-    littered, compacted = base + "/in", base + "/out"
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.repartition(40).write.parquet(littered)  # simulate small-file litter
-
-    files = list_parquet_files(spark, littered)
-    assert len(files) >= 30
-
-    # bin plan invariants: deterministic, every file assigned, bins
-    # contiguous from 0
-    plan = plan_bins(files, target_bytes=64 * 1024)
-    assert set(plan) == {f for f, _ in files}
-    assert sorted(set(plan.values())) == list(range(max(plan.values()) + 1))
-
-    stats = compact_parquet_dir(
-        spark, littered, compacted, target_bytes=64 * 1024
-    )
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] <= stats["n_bins"]
-    # The sizing contract must actually hold: EXACTLY one output file
-    # per planned bin (the hash-preimage remap guarantees a 1:1
-    # bin->partition route; plain repartition(n, bin) collides ~37%
-    # of bins and a degenerate NULL-key binning collapses to 1-2
-    # files -- both previously passed the old inequalities).
-    assert stats["n_bins"] >= 5, "fixture should plan several bins"
-    assert stats["files_after"] == stats["n_bins"]
-
-    a = spark.read.parquet(littered)
-    b = spark.read.parquet(compacted)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_merge_on_files_cow_roundtrip(spark, sf_dir, tmp_path_factory):
-    """COW MERGE executor: only files containing matched keys are
-    rewritten; kept + rewritten + appended reconstructs exactly the
-    logical upsert of the whole table."""
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import (
-        merge_on_files,
-    )
-
-    base = str(tmp_path_factory.mktemp("cow"))
-    base_dir, out_dir = base + "/base", base + "/delta"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # range-cluster keys so an update hits few files (the COW premise)
-    orders.repartitionByRange(20, "o_orderkey").write.parquet(base_dir)
-
-    # changeset: update 30 clustered keys' status, insert 5 new keys
-    upd = (
-        spark.read.parquet(base_dir)
-        .orderBy("o_orderkey")
-        .limit(30)
-        .withColumn("o_orderstatus", F.lit("U"))
-    )
-    ins = (
-        spark.read.parquet(base_dir)
-        .orderBy(F.desc("o_orderkey"))
-        .limit(5)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 100000000)
-        .withColumn("o_orderstatus", F.lit("I"))
-    )
-    updates = upd.unionByName(ins)
-    updates.persist().count()
-
-    stats = merge_on_files(
-        spark, base_dir, out_dir, updates, "o_orderkey", ["o_orderstatus"]
-    )
-    # the 30 updated keys are range-clustered -> only a few of the 20
-    # files contain them; the COW contract is rewritten << total
-    assert stats["files_rewritten"] >= 1
-    assert stats["files_rewritten"] < stats["files_total"]
-    assert stats["files_kept"] + stats["files_rewritten"] == stats["files_total"]
-    assert stats["rows_inserted"] == 5
-
-    # reconstruct the post-commit table: kept + rewritten + appended
-    parts = list(stats["kept"])
-    if stats["rewritten_dir"]:
-        parts.append(stats["rewritten_dir"])
-    if stats["appended_dir"]:
-        parts.append(stats["appended_dir"])
-    final = spark.read.parquet(*parts)
-
-    # expected: classic MERGE semantics over the whole base
-    b = spark.read.parquet(base_dir).alias("b")
-    u = updates.alias("u")
-    merged = b.join(u, F.col("b.o_orderkey") == F.col("u.o_orderkey"), "left")
-    cols = [
-        (
-            F.coalesce(F.col("u.o_orderstatus"), F.col("b.o_orderstatus")).alias(
-                "o_orderstatus"
-            )
-            if c == "o_orderstatus"
-            else F.col("b." + c).alias(c)
-        )
-        for c in b.columns
-    ]
-    expected = merged.select(cols).unionByName(ins.select(b.columns))
-
-    assert final.count() == expected.count()
-    assert final.exceptAll(expected).count() == 0
-    assert expected.exceptAll(final).count() == 0
-    updates.unpersist()
-
-
 def test_schema_evolution_merge_and_prune(spark, sf_dir, tmp_path_factory):
     """A long-lived table whose later files added a column: mergeSchema
     reconciles (old files read NULL for the new column), and a query
@@ -306,242 +188,3 @@ def test_schema_evolution_merge_and_prune(spark, sf_dir, tmp_path_factory):
 
     schema = next(s for s in _re.findall(r"ReadSchema: struct<([^>]*)", qe))
     assert "iso_code" not in schema  # evolution must not break pruning
-
-
-def test_zorder_rewrite_prunes_both_dimensions(spark, sf_dir, tmp_path_factory):
-    """After the z-order rewrite, a point predicate on EITHER key
-    overlaps only a small fraction of files (by min/max span), while
-    the unclustered layout overlaps nearly all -- the measurable
-    pruning win the rewrite exists for. Data bit-identical."""
-    from etl_building_inspector_spark.operators.maintenance import (
-        zorder_rewrite,
-    )
-
-    base = str(tmp_path_factory.mktemp("zorder"))
-    in_dir, out_dir = base + "/in", base + "/z"
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-    li.repartition(16).write.parquet(in_dir)  # hash layout: no locality
-
-    # l_orderkey's range far exceeds 2^bits: this is exactly the case
-    # the range normalization exists for (a low-bits mask interleaves
-    # noise and clusters nothing -- found by plan review, round 4)
-    stats = zorder_rewrite(
-        spark, in_dir, out_dir, "l_orderkey", "l_partkey", n_files=16
-    )
-    assert stats["files"] >= 8
-
-    def overlap_fraction(spans, col_min, col_max, probe):
-        hit = sum(1 for s in spans if s[col_min] <= probe <= s[col_max])
-        return hit / len(spans)
-
-    # probe a mid-range value on each dimension (its own dimension's
-    # span distribution -- probing x values against y spans tests
-    # nothing)
-    xs = sorted(s["x_min"] for s in stats["spans"])
-    ys = sorted(s["y_min"] for s in stats["spans"])
-    probe_x = xs[len(xs) // 2]
-    probe_y = ys[len(ys) // 2]
-    fx = overlap_fraction(stats["spans"], "x_min", "x_max", probe_x)
-    fy = overlap_fraction(stats["spans"], "y_min", "y_max", probe_y)
-
-    # unclustered baseline: per-file spans of the hash layout
-    base_spans = (
-        spark.read.parquet(in_dir)
-        .groupBy(F.input_file_name())
-        .agg(
-            F.min("l_orderkey").alias("x_min"),
-            F.max("l_orderkey").alias("x_max"),
-            F.min("l_partkey").alias("y_min"),
-            F.max("l_partkey").alias("y_max"),
-        )
-        .collect()
-    )
-    bx = overlap_fraction([r.asDict() for r in base_spans], "x_min", "x_max", probe_x)
-    assert bx >= 0.9  # hash layout: essentially every file spans every key
-    assert fx <= 0.6 and fy <= 0.6  # z layout prunes on BOTH dimensions
-    assert fx < bx
-
-    a = spark.read.parquet(in_dir)
-    b = spark.read.parquet(out_dir)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_merge_on_files_cow_semantics_edges(spark, sf_dir, tmp_path_factory):
-    """MERGE contract edges: duplicate changeset keys raise (a real
-    MERGE's multiple-source-rows error); a NARROW changeset (key +
-    set_cols only) still appends its inserts, schema-aligned with
-    typed NULLs; a set-to-NULL update actually nulls the field."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import (
-        merge_on_files,
-    )
-
-    base = str(tmp_path_factory.mktemp("cow2"))
-    base_dir = base + "/base"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.repartitionByRange(8, "o_orderkey").write.parquet(base_dir)
-    first_keys = [
-        r["o_orderkey"]
-        for r in spark.read.parquet(base_dir).orderBy("o_orderkey").limit(3).collect()
-    ]
-
-    # duplicate key in changeset -> loud failure
-    dup = spark.createDataFrame(
-        [(first_keys[0], "U"), (first_keys[0], "V")],
-        "o_orderkey long, o_orderstatus string",
-    )
-    with pytest.raises(Exception, match="multiple changeset rows"):
-        merge_on_files(
-            spark, base_dir, base + "/d1", dup, "o_orderkey", ["o_orderstatus"]
-        )
-
-    # narrow changeset: 2 updates (one sets NULL) + 1 insert
-    narrow = spark.createDataFrame(
-        [(first_keys[1], "U"), (first_keys[2], None), (999999999, "I")],
-        "o_orderkey long, o_orderstatus string",
-    )
-    stats = merge_on_files(
-        spark, base_dir, base + "/d2", narrow, "o_orderkey", ["o_orderstatus"]
-    )
-    assert stats["rows_inserted"] == 1  # narrow schema must NOT drop inserts
-    appended = spark.read.parquet(stats["appended_dir"])
-    ins = appended.collect()[0]
-    assert ins["o_orderkey"] == 999999999 and ins["o_orderstatus"] == "I"
-    assert ins["o_custkey"] is None  # typed NULL for absent columns
-
-    rewritten = spark.read.parquet(stats["rewritten_dir"])
-    got = {
-        r["o_orderkey"]: r["o_orderstatus"]
-        for r in rewritten.where(
-            F.col("o_orderkey").isin(first_keys[1], first_keys[2])
-        ).collect()
-    }
-    assert got[first_keys[1]] == "U"
-    assert got[first_keys[2]] is None  # set-to-NULL applies, not coalesced away
-
-
-def test_merge_on_files_duplicate_insert_keys_are_legal(spark, sf_dir, tmp_path_factory):
-    """Two NOT-matched changeset rows with the same new key are plain
-    inserts (legal MERGE input) -- both append; the cardinality guard
-    fires only for MATCHED duplicates."""
-    from etl_building_inspector_spark.operators.maintenance import (
-        merge_on_files,
-    )
-
-    base = str(tmp_path_factory.mktemp("cow3"))
-    base_dir = base + "/base"
-    spark.read.parquet(f"{sf_dir}/orders.parquet").repartitionByRange(
-        4, "o_orderkey"
-    ).write.parquet(base_dir)
-    ins_only = spark.createDataFrame(
-        [(888888888, "A"), (888888888, "B")],
-        "o_orderkey long, o_orderstatus string",
-    )
-    stats = merge_on_files(
-        spark, base_dir, base + "/d", ins_only, "o_orderkey", ["o_orderstatus"]
-    )
-    assert stats["rows_inserted"] == 2
-    assert stats["files_rewritten"] == 0
-
-
-def test_merge_on_files_update_type_aligned_to_base(spark, sf_dir, tmp_path_factory):
-    """ADVICE r4: a changeset whose set_col arrives NARROWER than the
-    base column (int vs long) must not make the rewritten files'
-    schema drift from the kept files -- the matched branch casts to
-    the base type exactly like the insert alignment does."""
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import (
-        merge_on_files,
-    )
-
-    base = str(tmp_path_factory.mktemp("cowtype"))
-    base_dir, out_dir = base + "/base", base + "/delta"
-    spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")  # v: LONG
-    ).repartitionByRange(4, "k").write.parquet(base_dir)
-
-    updates = spark.createDataFrame(
-        [(3, 7), (42, 9)], "k long, v int"  # v arrives as INT
-    )
-    stats = merge_on_files(spark, base_dir, out_dir, updates, "k", ["v"])
-    assert stats["files_rewritten"] >= 1
-
-    rewritten = spark.read.parquet(stats["rewritten_dir"])
-    kept = spark.read.parquet(*stats["kept"])
-    assert dict(rewritten.dtypes)["v"] == dict(kept.dtypes)["v"] == "bigint"
-    # kept + rewritten read TOGETHER without schema conflict, values right
-    together = spark.read.parquet(*(list(stats["kept"]) + [stats["rewritten_dir"]]))
-    got = {r.k: r.v for r in together.where(F.col("k").isin(3, 42, 5)).collect()}
-    assert got == {3: 7, 42: 9, 5: 50}
-
-
-def test_merge_on_files_uncastable_update_raises(spark, sf_dir, tmp_path_factory):
-    """An update value that cannot cast to the base column type must
-    fail the MERGE (real MERGE raises a type error), never silently
-    null the matched rows (ANSI is off in this session, so a bare
-    cast would)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import (
-        merge_on_files,
-    )
-
-    base = str(tmp_path_factory.mktemp("cowbad"))
-    base_dir, out_dir = base + "/base", base + "/delta"
-    spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    ).write.parquet(base_dir)
-
-    updates = spark.createDataFrame([(3, "7x")], "k long, v string")
-    with _pytest.raises(ValueError, match="does not cast"):
-        merge_on_files(spark, base_dir, out_dir, updates, "k", ["v"])
-
-
-def test_vacuum_plan_and_execute(spark, sf_dir, tmp_path_factory):
-    """VACUUM lifecycle: orphan part files (failed writes / superseded
-    COW rewrites) are planned by manifest diff and deleted; a manifest
-    referencing an absent file blocks execution."""
-    import os
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import (
-        list_parquet_files,
-        vacuum_execute,
-        vacuum_plan,
-    )
-
-    d = str(tmp_path_factory.mktemp("vac")) + "/t"
-    spark.range(0, 100).select(F.col("id").alias("k")).repartition(4).write.parquet(d)
-    files = sorted(f for f, _ in list_parquet_files(spark, d))
-    assert len(files) == 4
-    live, orphaned = files[:3], files[3:]
-
-    plan = vacuum_plan(spark, d, live)
-    assert [os.path.basename(f) for f in plan["orphans"]] == [
-        os.path.basename(f) for f in orphaned
-    ]
-    assert plan["missing"] == []
-    assert len(plan["live"]) == 3
-
-    n = vacuum_execute(spark, plan)
-    assert n == 1
-    left = sorted(f for f, _ in list_parquet_files(spark, d))
-    assert left == live
-    # live rows all survive
-    assert spark.read.parquet(*live).count() == sum(
-        spark.read.parquet(f).count() for f in live
-    )
-
-    # manifest pointing at a deleted file -> plan flags missing, execute refuses
-    plan2 = vacuum_plan(spark, d, orphaned)
-    assert plan2["missing"] and plan2["orphans"]
-    with _pytest.raises(ValueError, match="refusing to vacuum"):
-        vacuum_execute(spark, plan2)

@@ -52,43 +52,6 @@ def test_streaming_session_windows(spark, event_dir):
     assert total == spark.read.parquet(event_dir).count()
 
 
-def test_stateful_running_totals(spark, event_dir):
-    """applyInPandasWithState: final per-user state must equal the
-    batch aggregate (update mode -> last emit per user wins)."""
-    from etl_building_inspector_spark.streaming.events import running_user_totals
-
-    stream = read_event_stream(spark, event_dir)
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # last emitted row per user = final state
-    emitted = spark.sql("SELECT * FROM user_totals").collect()
-    final = {}
-    for r in emitted:  # memory sink appends in emit order per batch
-        cur = final.get(r.user_id)
-        if cur is None or r.n_events >= cur.n_events:
-            final[r.user_id] = r
-    batch = {
-        r.user_id: r
-        for r in spark.read.parquet(event_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert set(final) == set(batch)
-    for uid, r in final.items():
-        assert r.n_events == batch[uid].n
-        assert r.total_value == pytest.approx(batch[uid].tv)
-
-
 def test_watermark_drops_late_data(spark, tmp_path_factory):
     """Append-mode window agg across micro-batches: an event far older
     than the advanced watermark must be dropped; windows close and emit
@@ -165,62 +128,6 @@ def test_foreach_batch_exactly_once_sink(spark, event_dir, tmp_path_factory):
     src_count = spark.read.parquet(event_dir).count()
     assert written.count() == src_count
     assert written.select("event_id").distinct().count() == src_count
-
-
-def test_expiring_sessions_timeout_lifecycle(spark, tmp_path_factory):
-    """applyInPandasWithState + EventTimeTimeout: a session is emitted
-    exactly once when the watermark passes session_end + gap (state
-    removed), and a still-open session is NOT emitted."""
-    import datetime as dt
-
-    from etl_building_inspector_spark.streaming.events import expiring_sessions
-
-    d = str(tmp_path_factory.mktemp("sess_events"))
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-
-    # batch 1: user 1 (two events 10 min apart => one session), user 2
-    write_batch([
-        (1, t0, 1, "click", 1.0, "{}"),
-        (2, t0 + dt.timedelta(minutes=10), 1, "click", 1.0, "{}"),
-        (3, t0, 2, "click", 1.0, "{}"),
-    ])
-    stream = spark.readStream.schema(schema).parquet(d)
-    q = (
-        expiring_sessions(stream, gap="30 minutes", watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("exp_sessions")
-        .start()
-    )
-    try:
-        q.processAllAvailable()  # watermark still at batch-0 floor
-        # batch 2: user 3 far in the future -> watermark for the NEXT
-        # batch jumps past user 1/2's session_end + gap
-        write_batch([(4, t0 + dt.timedelta(hours=5), 3, "click", 1.0, "{}")])
-        q.processAllAvailable()
-        # batch 3: nudge event time forward so batch 3 runs with the
-        # advanced watermark and fires the timeouts for users 1 and 2
-        # (user 3's timeout at 5:31 stays unexpired: watermark 4:51)
-        write_batch([(5, t0 + dt.timedelta(hours=5, minutes=1), 3, "click", 1.0, "{}")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = {r.user_id: r for r in spark.sql("SELECT * FROM exp_sessions").collect()}
-    assert set(rows) == {1, 2}, f"expected closed sessions for 1,2 got {sorted(rows)}"
-    assert rows[1].session_start == t0
-    assert rows[1].session_end == t0 + dt.timedelta(minutes=10)
-    assert rows[1].n_events == 2
-    assert rows[2].session_start == rows[2].session_end == t0
-    assert rows[2].n_events == 1
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path_factory):
@@ -331,195 +238,6 @@ def test_stream_stream_join_matches_batch(spark, event_dir):
     assert len(want) > 0
 
 
-def test_scd2_streaming_cdc(spark, tmp_path_factory):
-    """foreachBatch SCD2 maintenance: two micro-batches of updates
-    produce versioned snapshots whose final state equals applying the
-    updates in batch order (history closed, latest open); re-delivered
-    epochs are no-ops (epoch gating)."""
-    import datetime as dt
-
-    from etl_building_inspector_spark.streaming.cdc import (
-        init_dim,
-        read_dim,
-        scd2_foreach_batch,
-    )
-
-    dim_dir = str(tmp_path_factory.mktemp("dim"))
-    src = str(tmp_path_factory.mktemp("cdc_updates"))
-    init_dim(
-        spark.createDataFrame(
-            [(1, "alpha"), (2, "beta")], "k long, attr string"
-        ),
-        dim_dir,
-    )
-    schema = "k long, attr string, __effective timestamp"
-    t1 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    t2 = dt.datetime(2024, 1, 1, 11, 0, 0)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write_batch([(1, "alpha2", t1)])
-    stream = spark.readStream.schema(schema).parquet(src)
-    fb = scd2_foreach_batch(dim_dir, "k")
-    q = stream.writeStream.foreachBatch(fb).start()
-    try:
-        q.processAllAvailable()
-        write_batch([(1, "alpha3", t2), (3, "gamma", t2)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    dim = read_dim(spark, dim_dir)
-    cur = {r.k: r.attr for r in dim.filter("is_current").collect()}
-    assert cur == {1: "alpha3", 2: "beta", 3: "gamma"}
-    hist1 = sorted(
-        (r.attr, r.valid_to)
-        for r in dim.filter("k = 1 AND NOT is_current").collect()
-    )
-    assert [a for a, _ in hist1] == ["alpha", "alpha2"]
-    assert [vt for _, vt in hist1] == [t1, t2]  # closed at update times
-    # re-delivery of an already-committed epoch is a no-op
-    from etl_building_inspector_spark.streaming.cdc import latest_version
-
-    v_before = latest_version(dim_dir)
-    batch1 = spark.read.parquet(src).limit(1)
-    fb(batch1, 0)  # epoch 0 already committed
-    assert latest_version(dim_dir) == v_before
-
-
-def test_pointintime_enrich_slowly_changing_dim(spark, tmp_path_factory):
-    """Streaming enrichment against a dim that changes MID-STREAM must
-    be point-in-time correct: each event joins the dim version valid at
-    its own event time, and batches after the dim update see the new
-    version only for events timestamped after the change."""
-    import datetime as dt
-
-    from etl_building_inspector_spark.streaming.cdc import (
-        init_dim,
-        pointintime_enrich_foreach_batch,
-        scd2_foreach_batch,
-    )
-
-    dim_dir = str(tmp_path_factory.mktemp("ptdim"))
-    src = str(tmp_path_factory.mktemp("pt_events"))
-    out = str(tmp_path_factory.mktemp("pt_out"))
-    init_dim(
-        spark.createDataFrame([(1, "bronze"), (2, "gold")], "k long, tier string"),
-        dim_dir,
-    )
-    t1 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    t2 = dt.datetime(2024, 1, 1, 11, 0, 0)
-    t3 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "event_id long, k long, ts timestamp"
-
-    def write_events(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    write_events([(100, 1, t1), (101, 2, t1)])
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream.writeStream.foreachBatch(
-        pointintime_enrich_foreach_batch(dim_dir, "k", "ts", out)
-    ).start()
-    try:
-        q.processAllAvailable()
-        # dim changes at t2: user 1 bronze -> silver
-        upd = spark.createDataFrame([(1, "silver", t2)],
-                                    "k long, tier string, __effective timestamp")
-        scd2_foreach_batch(dim_dir, "k")(upd, 0)
-        # batch 2 carries one event BEFORE the change and one after
-        write_events([(102, 1, t1), (103, 1, t3), (104, 9, t3)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = {r.event_id: r.tier for r in spark.read.parquet(out + "/epoch=*").collect()}
-    assert rows[100] == "bronze"  # enriched before the change
-    assert rows[101] == "gold"
-    assert rows[102] == "bronze"  # late event: version valid at t1, not current
-    assert rows[103] == "silver"  # post-change event gets the new version
-    assert rows[104] is None  # unknown key survives (left join)
-
-
-def test_stream_stream_left_outer_emits_nulls_after_watermark(
-    spark, tmp_path_factory
-):
-    """LEFT OUTER stream-stream join: a click with an in-horizon
-    purchase emits the pair; a click with none must STILL emit -- with
-    null purchase columns -- but only after the watermark proves no
-    match can arrive. A second micro-batch far in the future advances
-    the watermark to force that closure."""
-    import datetime as dt
-
-    from etl_building_inspector_spark.streaming.events import (
-        stream_stream_left_outer_join,
-    )
-
-    d = str(tmp_path_factory.mktemp("louter_events"))
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    # user 1: click + purchase 10 min later (match)
-    # user 2: click, never purchases (must emit null-padded)
-    write_batch([
-        (1, t0, 1, "click", 1.0, "{}"),
-        (2, t0 + dt.timedelta(minutes=10), 1, "purchase", 5.0, "{}"),
-        (3, t0, 2, "click", 1.0, "{}"),
-    ])
-
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(d)
-    clicks = stream.filter(F.col("event_type") == "click")
-    purchases = stream.filter(F.col("event_type") == "purchase")
-    joined = stream_stream_left_outer_join(
-        clicks, purchases, horizon="1 hour", watermark="10 minutes"
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("louter")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # push the watermark far past click_ts + horizon + watermark.
-        # BOTH event types must advance: the query watermark is the MIN
-        # across the two watermarked inputs, so a click-only batch
-        # leaves the purchase side's (and thus the global) watermark
-        # stuck at the first batch.
-        write_batch([
-            (99, t0 + dt.timedelta(days=2), 9, "click", 0.0, "{}"),
-            (98, t0 + dt.timedelta(days=2), 9, "purchase", 0.0, "{}"),
-        ])
-        q.processAllAvailable()
-        # one more nudge batch: outer-row emission happens in the
-        # micro-batch AFTER the one that advanced the watermark
-        write_batch([
-            (100, t0 + dt.timedelta(days=2, minutes=1), 9, "click", 0.0, "{}"),
-            (101, t0 + dt.timedelta(days=2, minutes=1), 9, "purchase", 0.0, "{}"),
-        ])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM louter").collect()
-    got = {(r.click_id, r.purchase_id) for r in rows}
-    assert (1, 2) in got  # matched pair
-    assert (3, None) in got  # unmatched click emitted null-padded
-
-
 def test_statestore_reader_exposes_agg_state(spark, tmp_path_factory):
     """Spark 4 state-store data source: the state of a running
     streaming aggregation read back as a BATCH DataFrame from the
@@ -559,65 +277,6 @@ def test_statestore_reader_exposes_agg_state(spark, tmp_path_factory):
     state = spark.read.format("statestore").load(ckpt)
     got = {r["key"]["user_id"]: r["value"]["count"] for r in state.collect()}
     assert got == {1: 2, 2: 1}
-
-
-def _has_protobuf() -> bool:
-    # transformWithState's python<->JVM protocol is protobuf-encoded;
-    # this container ships no google.protobuf (and pip install is
-    # unavailable), so the TWS surface is env-gated like PIL decode
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="google.protobuf missing: transformWithState protocol unavailable",
-)
-def test_transform_with_state_matches_batch_totals(spark, event_dir):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor): final
-    per-user totals must equal the batch aggregate, same contract as
-    the applyInPandasWithState twin (test_stateful_running_totals)."""
-    from etl_building_inspector_spark.streaming.events import (
-        read_event_stream,
-        running_user_totals_tws,
-    )
-
-    totals = running_user_totals_tws(read_event_stream(spark, event_dir))
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_totals")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # update mode may emit several rows per user across batches; the
-    # running count is monotone, so the emission with MAX n_events per
-    # user is the final one (collect() row order from the memory sink
-    # is NOT guaranteed to follow micro-batch emission order).
-    emitted = spark.sql("SELECT * FROM tws_totals").collect()
-    final = {}
-    for r in emitted:
-        if r.user_id not in final or r.n_events > final[r.user_id][0]:
-            final[r.user_id] = (r.n_events, r.total_value)
-    batch = {
-        r.user_id: (r.n, r.v)
-        for r in spark.read.parquet(event_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-        .collect()
-    }
-    assert set(final) == set(batch)
-    for uid, (n, v) in batch.items():
-        fn, fv = final[uid]
-        assert fn == n
-        assert abs(fv - v) < 1e-6
 
 
 def test_session_window_exact_gap_boundary_merges(spark, tmp_path):
@@ -746,90 +405,6 @@ def test_checkpoint_restart_no_double_count(spark, sf_dir, tmp_path_factory):
         .collect()
     }
     assert got == expect
-
-
-def test_streaming_foreachbatch_merge_lifecycle(spark, tmp_path_factory):
-    """Streaming upsert sink: a file-source stream of changesets is
-    applied through foreachBatch -> merge_on_files (the COW MERGE
-    executor), each micro-batch committing a new table version (kept +
-    rewritten + appended). The final version must equal the classic
-    MERGE of all changesets over the original base -- the
-    streaming-ingest lifecycle that connects the streaming surface to
-    the maintenance executors."""
-    import pyspark.sql.functions as F
-
-    from etl_building_inspector_spark.operators.maintenance import merge_on_files
-
-    root = str(tmp_path_factory.mktemp("fbm"))
-    base0 = root + "/base_v0"
-    spark.range(100).select(
-        F.col("id").alias("key"), (F.col("id") * 10).alias("val")
-    ).repartitionByRange(4, "key").write.parquet(base0)
-
-    # two changeset arrivals (disjoint keys -> final state is batch-
-    # order independent): updates + one insert each
-    upd_dir = root + "/updates"
-    b1 = spark.range(10, 15).select(
-        F.col("id").alias("key"), (F.col("id") + 1000).alias("val")
-    ).unionByName(
-        spark.createDataFrame([(1000, 1)], "key long, val long")
-    )
-    b1.coalesce(1).write.mode("append").parquet(upd_dir)
-    b2 = spark.range(20, 25).select(
-        F.col("id").alias("key"), (F.col("id") + 2000).alias("val")
-    ).unionByName(
-        spark.createDataFrame([(2000, 2)], "key long, val long")
-    )
-    b2.coalesce(1).write.mode("append").parquet(upd_dir)
-
-    state = {"base": base0, "versions": 0}
-
-    def apply_batch(batch_df, epoch_id):
-        if batch_df.isEmpty():
-            return
-        out = f"{root}/delta_v{epoch_id}"
-        stats = merge_on_files(
-            batch_df.sparkSession, state["base"], out, batch_df, "key", ["val"]
-        )
-        parts = list(stats["kept"])
-        if stats["rewritten_dir"]:
-            parts.append(stats["rewritten_dir"])
-        if stats["appended_dir"]:
-            parts.append(stats["appended_dir"])
-        new_base = f"{root}/base_v{epoch_id + 1}"
-        batch_df.sparkSession.read.parquet(*parts).write.parquet(new_base)
-        state["base"] = new_base
-        state["versions"] += 1
-
-    stream = (
-        spark.readStream.schema("key long, val long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(upd_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", root + "/ckpt")
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout with the query
-        # still running -- failing HERE beats racing the asserts below
-        # against an in-flight batch
-        assert q.awaitTermination(120), "stream did not drain in 120s"
-    finally:
-        q.stop()
-    assert state["versions"] >= 1  # maxFilesPerTrigger may still batch
-
-    final = {
-        r.key: r.val for r in spark.read.parquet(state["base"]).collect()
-    }
-    expected = {k: k * 10 for k in range(100)}
-    expected.update({k: k + 1000 for k in range(10, 15)})
-    expected.update({k: k + 2000 for k in range(20, 25)})
-    expected[1000] = 1
-    expected[2000] = 2
-    assert final == expected
 
 
 def test_late_data_drop_metric_matches_prediction(spark, sf_dir):

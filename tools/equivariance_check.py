@@ -51,10 +51,11 @@ Default queries: graph_kcore graph_label_propagation graph_pagerank
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries_llm._docs_with_dups offsets synthetic mutated dups by this;
 # cohort decomposition below requires max derived doc_id < DUP_OFFSET

@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # above this many rows per side, switch from exact Counter compare to
 # the streaming digest (memory stays bounded; diff samples are lost);

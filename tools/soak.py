@@ -5,7 +5,7 @@ oracles starving an iterative-CTE oracle into a disk-death) cannot
 recur, and soak forensics never again depend on what survived a
 `tail -40`.
 
-Resource rule (ROUND_NOTES r9, "Checker-resource guidance"):
+Resource rule (docs/history/ROUND_NOTES.md r9, "Checker-resource guidance"):
   - QUADRATIC-SHINGLE oracles (self-join pair enumeration over
     exploded shingles -- the only family whose DuckDB plans
     bad-alloc under the default 80%-of-RAM budget instead of
@@ -45,9 +45,9 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
+sys.path.insert(0, REPO)
 
 # -- family membership (names, with prefix fallbacks below) ---------------
 
