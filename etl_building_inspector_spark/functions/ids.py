@@ -49,10 +49,3 @@ def md5_surrogate(*cols: Column | str, sep: str = ",") -> Column:
     whole-stage codegen)."""
     return F.md5(F.concat_ws(sep, *[F.col(c) if isinstance(c, str) else c for c in cols]))
 
-
-def synth_id(prefix: str, *parts: Column | str, sep: str = "-") -> Column:
-    """String-interpolated id like ``mapwarper/{map_id}`` or
-    ``{building_id}-{i+1}`` (building-inspector.js:144, :190, :198)."""
-    cols = [F.col(p) if isinstance(p, str) else p for p in parts]
-    joined = F.concat_ws(sep, *[c.cast("string") for c in cols])
-    return F.concat(F.lit(prefix), joined)

@@ -65,15 +65,22 @@ def free_local_checkpoint(df: DataFrame) -> None:
     """Drop a checkpointed DataFrame's blocks NOW (the df becomes
     unusable -- only call on superseded intermediates). The analyzed
     plan of a localCheckpoint()ed frame is a LogicalRDD; its .rdd()
-    is the materialized RDD holding the blocks."""
+    is the materialized RDD holding the blocks.
+
+    `df` must be a handle returned by track_local_checkpoint[_lazy]
+    and not yet freed. Anything else raises ValueError: a view derived
+    from a handle (select/filter) has no blocks of its own, so freeing
+    it would free nothing, and a second free is a lifecycle bug."""
+    for i, held in enumerate(_CHECKPOINTED):
+        if held is df:
+            del _CHECKPOINTED[i]
+            break
+    else:
+        raise ValueError("not a live tracked localCheckpoint handle")
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass  # plan shape changed across Spark versions: leak, don't crash
-    try:
-        _CHECKPOINTED.remove(df)
-    except ValueError:
-        pass
 
 
 def release_persisted() -> int:

@@ -7,6 +7,8 @@ explicit order column + row_number window for deterministic semantics.
 
 Extensions (training-data pipeline, 100 TB design notes inline):
 exact hash dedup, MinHash+LSH near-dup, SimHash, n-gram Jaccard.
+These generate near-dup PAIRS; turning pairs into groups (connected
+components, incremental merge) is iterative and lives in graph.py.
 All hash functions are md5-derived so every operator has an exact
 DuckDB-SQL oracle (engine-portable hashing, no F.hash/xxhash64 which
 differ across engines).
@@ -417,219 +419,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over an undirected pair graph by min-label
-    propagation: every node's label converges to the smallest node id
-    reachable from it. Returns (node, component).
-
-    This is the dedup-clustering step that turns near-dup PAIRS (from
-    MinHash-LSH / Jaccard / embedding-LSH) into groups: keep
-    min(component), drop the rest.
-
-    Scale: each round is one shuffle join (symmetrized edges against
-    current labels) plus an algebraic min-aggregate — the classic
-    iterative-CC shape (Hash-to-Min, Vassilvitskii et al.); rounds
-    needed = graph diameter, and near-dup graphs are shallow (clusters
-    are cliques-ish, diameter 2-3). localCheckpoint() per round cuts
-    the lineage so plan size stays O(1) in rounds instead of
-    exponential; convergence is detected with a count of changed
-    labels — a scalar aggregate per round, the one legitimate
-    driver-side action in an iterative algorithm.
-    """
-    from ._cache import (
-        free_local_checkpoint,
-        track_local_checkpoint,
-        track_local_checkpoint_lazy,
-    )
-
-    # symmetrize in ONE pass over `edges` (explode of a 2-struct
-    # array), not a self-union: the union form evaluated the whole
-    # upstream pair pipeline TWICE when `sym` first materializes --
-    # for the CC consumers that upstream is the full minhash
-    # signature + banded self-join build, the dominant cost of the
-    # query (r11 optimization round, guide 2.4: don't compute things
-    # twice). Same multiset of (s, d) rows, order-insensitive
-    # consumers (distinct, equi-joins, min-aggregates).
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
-                F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
-            )
-        ).alias("__e")
-    ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
-    sym = track_persist(sym)
-    checkpointed = track_local_checkpoint(
-        sym.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    labels = checkpointed
-    # NOTE (r10 optimization round, measured and REVERTED): hinting the
-    # node-sized sides broadcast per round (the checkpointed labels
-    # carry no stats, so the planner can't choose it) A/B'd 0.82-0.97x
-    # -- the per-round broadcast build + the node-count job cost more
-    # than the AQE-coalesced tiny shuffles they replaced. The shuffle
-    # plan stays.
-    for _ in range(max_iter):
-        neigh_min = (
-            sym.join(labels, sym["d"] == labels["node"])
-            .groupBy("s")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        # LAZY checkpoint + the convergence count as its materializing
-        # action: one Spark job per round instead of two (VERDICT r10
-        # #3 -- the count is a full scan, so every partition is
-        # computed and cached before the previous round is freed).
-        updated = track_local_checkpoint_lazy(
-            labels.join(neigh_min, labels["node"] == neigh_min["s"], "left")
-            .select(
-                "node",
-                "comp",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-                ).alias("new_comp"),
-            )
-        )
-        changed = updated.filter(F.col("new_comp") != F.col("comp")).count()
-        # `updated` is now fully materialized; the previous round's
-        # blocks are dead weight -- free them so an iterative run
-        # holds at most 2 rounds of state, not O(rounds) (which
-        # evicted live caches in long sessions).
-        free_local_checkpoint(checkpointed)
-        checkpointed = updated
-        labels = updated.select("node", F.col("new_comp").alias("comp"))
-        if changed == 0:
-            break
-    # the final round's checkpoint stays tracked: release_persisted()
-    # frees it after the caller materializes the result.
-    return labels.select(F.col("node"), F.col("comp").alias("component"))
-
-
-def connected_components_alternating(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14). Same (node, component=min reachable id) contract as
-    connected_components(); different scale profile.
-
-    Why a second algorithm: min-label propagation needs rounds ~ graph
-    DIAMETER and re-shuffles the FULL edge set every round — fine for
-    shallow near-dup cliques, wrong for long chains (transitive dup
-    paths) or high-degree hubs. Large-star/small-star converges in
-    O(log n) rounds regardless of diameter, and each round REWRITES
-    the edge set toward stars, so the shuffled volume shrinks as it
-    converges instead of staying constant.
-
-    Per round, two pure groupBy+join passes over the current edges:
-      large-star: every neighbor v > u links to min(N(u) ∪ {u})
-      small-star: every neighbor v ≤ u links to min(N⁻(u) ∪ {u})
-    Both are map-side-combinable min-aggregates keyed by node — no
-    driver-side state beyond the scalar convergence count.
-    """
-    from ._cache import (
-        free_local_checkpoint,
-        track_local_checkpoint,
-        track_local_checkpoint_lazy,
-    )
-
-    # checkpoint the edge input ONCE: both the node set and the
-    # canonical edge set below otherwise re-evaluate the whole
-    # upstream pair pipeline (for the CC consumers that is the full
-    # minhash signature + banded self-join build -- guide 2.4: don't
-    # compute things twice)
-    ein = track_local_checkpoint(
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-    )
-    nodes = track_local_checkpoint(
-        ein.select(F.explode(F.array("u", "v")).alias("node")).distinct()
-    )
-    e0 = ein.filter(F.col("u") != F.col("v"))
-    # canonical orientation (hi, lo): dedups the undirected edge set
-    cur = track_local_checkpoint(
-        e0.select(
-            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
-        ).distinct()
-    )
-    free_local_checkpoint(ein)  # nodes + cur hold everything needed
-    cur_count = None  # carried scalar: saves a recount job per round
-    for _ in range(max_iter):
-        sym = cur.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            cur.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        # large-star: m(u) = min over N(u) ∪ {u}; attach every LARGER
-        # neighbor to it. Keeps hub fan-out bounded: a degree-k node
-        # emits k edges total, never k² candidate pairs.
-        lmin = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", "u").alias("m"))
-        )
-        large = (
-            sym.join(lmin, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-        )
-        # small-star over the large-star output: m(hi) = min smaller
-        # neighbor; re-link every smaller neighbor AND hi itself to m.
-        smin = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = (
-            large.join(smin, "hi")
-            .select(F.col("lo").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .unionByName(
-                smin.select(F.col("hi").alias("a"), F.col("m").alias("b"))
-            )
-            .select(
-                F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-            )
-            .distinct()
-        )
-        # LAZY checkpoint: the cardinality count below is the
-        # materializing action (one job instead of a dedicated
-        # checkpoint job + a count job). The previous round's count is
-        # carried as a scalar, saving its recount job; the exceptAll
-        # probe only runs when the cardinalities tie (i.e. near
-        # convergence). VERDICT r10 #3.
-        nxt = track_local_checkpoint_lazy(small)
-        nxt_count = nxt.count()
-        if cur_count is None:
-            cur_count = cur.count()
-        # converged iff the (distinct, canonical) edge sets are equal:
-        # same cardinality and nothing new.
-        changed = (
-            nxt_count != cur_count
-            or nxt.exceptAll(cur).limit(1).count() > 0
-        )
-        free_local_checkpoint(cur)
-        cur = nxt
-        cur_count = nxt_count
-        if not changed:
-            break
-    # converged: `cur` is a forest of stars (hi -> component min).
-    # Isolated original nodes (self-loop-only inputs) label themselves.
-    out = (
-        nodes.join(cur, nodes["node"] == cur["hi"], "left")
-        .select(
-            "node", F.coalesce(F.col("lo"), F.col("node")).alias("component")
-        )
-    )
-    return out
-
-
 def jaccard_prefix_filter_pairs(
     df: DataFrame,
     text_col: str,
@@ -813,72 +602,3 @@ def probe_minhash_band_index(
         F.sum("n_index_docs").cast("long").alias("n_index_docs"),
         F.min("first_match_id").cast("long").alias("first_match_id"),
     )
-
-
-def merge_components(
-    base_assign: DataFrame,
-    delta_edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """INCREMENTAL connected components: refresh a standing component
-    assignment with a batch of new edges WITHOUT re-running CC over
-    the full graph -- the clustering twin of
-    merge_minhash_band_indexes (indexes arrive in batches; so do the
-    near-dup edges they imply).
-
-    `base_assign` is a prior connected_components() output
-    (node, component) with min-id labels; `delta_edges` is the new
-    pair batch (may touch base nodes, brand-new nodes, or bridge two
-    existing components -- the r8 over-merge class this operator must
-    get exactly right). Exactness argument: map each delta endpoint
-    through the base assignment (identity for unseen nodes) and run
-    CC on that REDUCED graph, whose nodes are base component labels
-    and new node ids. Merged components of the full graph correspond
-    1:1 to components of the reduced graph, and because a base label
-    is the min id of its base component, the reduced min-label is the
-    global min id -- so relabeling base rows through the reduced
-    result reproduces connected_components(base ∪ delta) exactly
-    (pinned in tests/test_r10b_properties.py, and at the query level
-    dedup_cluster_incremental shares dedup_cluster_assign's
-    recursive-CTE rebuild oracle: merge == rebuild).
-
-    Scale: the reduced graph has <= |delta| edges over (touched
-    components ∪ new nodes) -- a daily refresh costs CC on the DELTA,
-    not the corpus. The relabel is one join keyed on component;
-    untouched assignments stream through unchanged. The standing
-    assignment is the persisted artifact between runs (bucket it by
-    `node` and the probe/relabel joins co-locate).
-    """
-    m = base_assign.select("node", "component")
-    e = delta_edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
-    mu = m.select(F.col("node").alias("__u"), F.col("component").alias("__cu"))
-    mv = m.select(F.col("node").alias("__v"), F.col("component").alias("__cv"))
-    reduced = (
-        e.join(mu, "__u", "left")
-        .join(mv, "__v", "left")
-        .select(
-            F.coalesce("__cu", F.col("__u")).alias("s"),
-            F.coalesce("__cv", F.col("__v")).alias("d"),
-        )
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
-    cc2 = connected_components(reduced, "s", "d")
-    lab = cc2.select(
-        F.col("node").alias("__old"), F.col("component").alias("__new")
-    )
-    relabeled = (
-        base_assign.join(lab, base_assign["component"] == lab["__old"], "left")
-        .select(
-            "node",
-            F.coalesce("__new", F.col("component")).alias("component"),
-        )
-    )
-    # reduced-graph nodes that are NOT base nodes are the genuinely
-    # new ones (a base component LABEL is itself a base node, so the
-    # anti-join keeps exactly the new ids)
-    new_nodes = cc2.join(m.select("node"), "node", "left_anti").select(
-        "node", "component"
-    )
-    return relabeled.unionByName(new_nodes)

@@ -1,24 +1,33 @@
-"""Bounded graph traversal: BFS hop distance from a seed set.
+"""Graph algorithms over undirected edge lists: triangle counts, and
+the iterative family -- connected components (min-label and
+alternating star), incremental CC merge, PageRank and hop-bounded
+shortest paths (a BFS is the unit-weight case).
 
-The frontier/delta-iteration shape — the third iterative-graph pattern
-next to min-label CC (diameter rounds, full edge set each round) and
-alternating star CC (log rounds, shrinking edges). BFS only ever joins
-the CURRENT FRONTIER against the edges: per round the shuffled volume
-is O(frontier ∂ edges), not O(all edges), which is what makes k-hop
-queries (contamination blast radius, near-dup neighborhoods, related-
-document expansion) cheap even on a 100 TB-scale pair graph — the
-frontier decays after the first hops in power-law graphs.
+Every iterative algorithm runs through ONE round loop, `_rounds`:
 
-Per round: one equi-join (frontier → neighbors) + one left-anti join
-(drop already-visited) + a distinct. All shuffles key on node id.
-localCheckpoint per round cuts lineage; superseded rounds' blocks are
-freed (operators/_cache contract). max_hops bounds state and rounds —
-the BFS twin of a watermark.
+  * each round's frame is localCheckpointed, so plan size stays O(1)
+    in rounds instead of growing with the lineage;
+  * the round's single full-scan action (a convergence count, or the
+    eager checkpoint's own count when the round count is fixed)
+    materializes it -- one action per round, no separate checkpoint
+    job;
+  * only after that action is the superseded round freed: the
+    checkpoint handle itself, never a view derived from it (a view
+    has no blocks of its own to free). A run holds at most two rounds
+    of blocks and returns with exactly one live; release_persisted()
+    frees that one after the caller materializes the result
+    (operators/_cache contract).
+
+All shuffles key on node id; every relaxation is an equi-join plus an
+algebraic min/sum aggregate, and integer arithmetic keeps results
+exact and engine-portable (each query has a DuckDB twin).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._cache import (
@@ -27,6 +36,57 @@ from ._cache import (
     track_local_checkpoint_lazy,
     track_persist,
 )
+
+
+def _symmetric(
+    edges: DataFrame, src: Column, dst: Column, *payload: Column
+) -> DataFrame:
+    """Both directions of every edge as (s, d, *payload), in ONE pass
+    over `edges`: an explode of a two-struct array, not a self-union.
+    The union form evaluated the upstream edge pipeline twice when the
+    result first materialized -- for the near-dup graphs that upstream
+    is the minhash pair build, the dominant cost of the query. Same
+    multiset of rows; every consumer is order-insensitive (distinct,
+    equi-joins, min-aggregates). Payload columns must be aliased."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(src.alias("s"), dst.alias("d"), *payload),
+                F.struct(dst.alias("s"), src.alias("d"), *payload),
+            )
+        ).alias("__e")
+    ).select("__e.*")
+
+
+def _rounds(
+    start: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+) -> DataFrame:
+    """The round loop of every iterative algorithm here: checkpoint
+    `start` eagerly, then run up to `max_rounds` rounds of
+    `state = step(state)` and return the last state (a checkpoint).
+
+    With `converged`, each round's frame is checkpointed lazily and
+    `converged(new, old)` is the round's action: it must begin with a
+    full scan of `new` (a count over it or a filter of it), which
+    materializes every partition, and it stops the loop by returning
+    True. Without it the round count is fixed, and the eager
+    checkpoint's own count is the round's action. Either way `old` is
+    freed only after the action, so no round reads a freed block."""
+    state = track_local_checkpoint(start)
+    for _ in range(max_rounds):
+        if converged is None:
+            nxt, done = track_local_checkpoint(step(state)), False
+        else:
+            nxt = track_local_checkpoint_lazy(step(state))
+            done = converged(nxt, state)
+        free_local_checkpoint(state)
+        state = nxt
+        if done:
+            break
+    return state
 
 
 def triangle_count(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -174,6 +234,230 @@ def local_triangle_counts(
     )
 
 
+def connected_components(
+    edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Connected components over an undirected pair graph by min-label
+    propagation: every node's label converges to the smallest node id
+    reachable from it. Returns (node, component).
+
+    This is the dedup-clustering step that turns near-dup PAIRS (from
+    MinHash-LSH / Jaccard / embedding-LSH) into groups: keep
+    min(component), drop the rest.
+
+    Scale: each round is one shuffle join (symmetrized edges against
+    current labels) plus an algebraic min-aggregate — the classic
+    iterative-CC shape (Hash-to-Min, Vassilvitskii et al.); rounds
+    needed = graph diameter, and near-dup graphs are shallow (clusters
+    are cliques-ish, diameter 2-3). Convergence is a count of changed
+    labels -- a scalar aggregate per round, the one legitimate
+    driver-side action in an iterative algorithm.
+    """
+    sym = track_persist(_symmetric(edges, F.col(src), F.col(dst)))
+    # NOTE (r10 optimization round, measured and REVERTED): hinting the
+    # node-sized sides broadcast per round (the checkpointed labels
+    # carry no stats, so the planner can't choose it) A/B'd 0.82-0.97x
+    # -- the per-round broadcast build + the node-count job cost more
+    # than the AQE-coalesced tiny shuffles they replaced. The shuffle
+    # plan stays.
+
+    def step(cur: DataFrame) -> DataFrame:
+        labels = cur.select("node", "comp")
+        neigh_min = (
+            sym.join(labels, sym["d"] == labels["node"])
+            .groupBy("s")
+            .agg(F.min("comp").alias("nmin"))
+        )
+        return labels.join(neigh_min, labels["node"] == neigh_min["s"], "left").select(
+            "node",
+            F.col("comp").alias("old"),
+            F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias(
+                "comp"
+            ),
+        )
+
+    labels = _rounds(
+        sym.select(F.col("s").alias("node"))
+        .distinct()
+        .withColumn("comp", F.col("node")),
+        step,
+        max_iter,
+        lambda new, _: new.filter(F.col("comp") != F.col("old")).count() == 0,
+    )
+    return labels.select("node", F.col("comp").alias("component"))
+
+
+def connected_components_alternating(
+    edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Connected components by alternating large-star / small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14). Same (node, component=min reachable id) contract as
+    connected_components(); different scale profile.
+
+    Why a second algorithm: min-label propagation needs rounds ~ graph
+    DIAMETER and re-shuffles the FULL edge set every round — fine for
+    shallow near-dup cliques, wrong for long chains (transitive dup
+    paths) or high-degree hubs. Large-star/small-star converges in
+    O(log n) rounds regardless of diameter, and each round REWRITES
+    the edge set toward stars, so the shuffled volume shrinks as it
+    converges instead of staying constant.
+
+    Per round, two pure groupBy+join passes over the current edges:
+      large-star: every neighbor v > u links to min(N(u) ∪ {u})
+      small-star: every neighbor v ≤ u links to min(N⁻(u) ∪ {u})
+    Both are map-side-combinable min-aggregates keyed by node — no
+    driver-side state beyond the scalar convergence count.
+    """
+    # checkpoint the edge input ONCE: the node set and the canonical
+    # edge set below otherwise each re-evaluate the whole upstream
+    # pair pipeline (for the CC consumers, the minhash signature +
+    # banded self-join build). Both checkpoints stay tracked until
+    # release_persisted(), with the query's other intermediates.
+    ein = track_local_checkpoint(
+        edges.select(
+            F.col(src).cast("long").alias("u"),
+            F.col(dst).cast("long").alias("v"),
+        )
+    )
+    nodes = track_local_checkpoint(
+        ein.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    )
+
+    def step(cur: DataFrame) -> DataFrame:
+        sym = cur.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
+            cur.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
+        )
+        # large-star: m(u) = min over N(u) ∪ {u}; attach every LARGER
+        # neighbor to it. Keeps hub fan-out bounded: a degree-k node
+        # emits k edges total, never k² candidate pairs.
+        lmin = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mv"))
+            .select("u", F.least("mv", "u").alias("m"))
+        )
+        large = (
+            sym.join(lmin, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
+            .filter(F.col("hi") != F.col("lo"))
+        )
+        # small-star over the large-star output: m(hi) = min smaller
+        # neighbor; re-link every smaller neighbor AND hi itself to m.
+        smin = large.groupBy("hi").agg(F.min("lo").alias("m"))
+        return (
+            large.join(smin, "hi")
+            .select(F.col("lo").alias("a"), F.col("m").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .unionByName(smin.select(F.col("hi").alias("a"), F.col("m").alias("b")))
+            .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
+            .distinct()
+        )
+
+    sizes: list[int] = []  # each round's edge count, carried: no recounts
+
+    def converged(new: DataFrame, old: DataFrame) -> bool:
+        n = new.count()
+        if not sizes:
+            sizes.append(old.count())
+        # the (distinct, canonical) edge sets are equal: same
+        # cardinality and nothing new; the exceptAll probe only runs
+        # when the cardinalities tie (i.e. near convergence)
+        same = n == sizes[-1] and new.exceptAll(old).limit(1).count() == 0
+        sizes.append(n)
+        return same
+
+    # canonical orientation (hi, lo): dedups the undirected edge set
+    cur = _rounds(
+        ein.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo"))
+        .distinct(),
+        step,
+        max_iter,
+        converged,
+    )
+    # converged: `cur` is a forest of stars (hi -> component min).
+    # Isolated original nodes (self-loop-only inputs) label themselves.
+    return nodes.join(cur, nodes["node"] == cur["hi"], "left").select(
+        "node", F.coalesce(F.col("lo"), F.col("node")).alias("component")
+    )
+
+
+def merge_components(
+    base_assign: DataFrame,
+    delta_edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+) -> DataFrame:
+    """INCREMENTAL connected components: refresh a standing component
+    assignment with a batch of new edges WITHOUT re-running CC over
+    the full graph -- the clustering twin of
+    dedup.merge_minhash_band_indexes (indexes arrive in batches; so do
+    the near-dup edges they imply).
+
+    `base_assign` is a prior connected_components() output
+    (node, component) with min-id labels; `delta_edges` is the new
+    pair batch (may touch base nodes, brand-new nodes, or bridge two
+    existing components -- the r8 over-merge class this operator must
+    get exactly right). Exactness argument: map each delta endpoint
+    through the base assignment (identity for unseen nodes) and run
+    CC on that REDUCED graph, whose nodes are base component labels
+    and new node ids. Merged components of the full graph correspond
+    1:1 to components of the reduced graph, and because a base label
+    is the min id of its base component, the reduced min-label is the
+    global min id -- so relabeling base rows through the reduced
+    result reproduces connected_components(base ∪ delta) exactly
+    (pinned in tests/test_r10b_properties.py, and at the query level
+    dedup_cluster_incremental shares dedup_cluster_assign's
+    recursive-CTE rebuild oracle: merge == rebuild).
+
+    Scale: the reduced graph has <= |delta| edges over (touched
+    components ∪ new nodes) -- a daily refresh costs CC on the DELTA,
+    not the corpus. The relabel is one join keyed on component;
+    untouched assignments stream through unchanged. The standing
+    assignment is the persisted artifact between runs (bucket it by
+    `node` and the probe/relabel joins co-locate).
+    """
+    m = base_assign.select("node", "component")
+    e = delta_edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+    mu = m.select(F.col("node").alias("__u"), F.col("component").alias("__cu"))
+    mv = m.select(F.col("node").alias("__v"), F.col("component").alias("__cv"))
+    reduced = (
+        e.join(mu, "__u", "left")
+        .join(mv, "__v", "left")
+        .select(
+            F.coalesce("__cu", F.col("__u")).alias("s"),
+            F.coalesce("__cv", F.col("__v")).alias("d"),
+        )
+        .filter(F.col("s") != F.col("d"))
+        .distinct()
+    )
+    cc2 = connected_components(reduced, "s", "d")
+    lab = cc2.select(
+        F.col("node").alias("__old"), F.col("component").alias("__new")
+    )
+    relabeled = (
+        base_assign.join(lab, base_assign["component"] == lab["__old"], "left")
+        .select(
+            "node",
+            F.coalesce("__new", F.col("component")).alias("component"),
+        )
+    )
+    # reduced-graph nodes that are NOT base nodes are the genuinely
+    # new ones (a base component LABEL is itself a base node, so the
+    # anti-join keeps exactly the new ids)
+    new_nodes = cc2.join(m.select("node"), "node", "left_anti").select(
+        "node", "component"
+    )
+    return relabeled.unionByName(new_nodes)
+
+
 def pagerank_integer(
     edges: DataFrame,
     src: str = "s",
@@ -199,9 +483,8 @@ def pagerank_integer(
     (shuffle keyed on src, or map-side if edges are pre-partitioned by
     src and reused across iterations -- the persisted edge set keeps
     its partitioning) plus one partial-aggregated shuffle on dst.
-    localCheckpoint per round truncates the 5-deep lineage; superseded
-    rounds' blocks are freed. n and base are scalar driver values
-    (one count action), not per-row state.
+    n and base are scalar driver values (one count action), not
+    per-row state.
     """
     e = (
         edges.select(
@@ -222,10 +505,8 @@ def pagerank_integer(
     n = nodes.count()
     r0 = scale // n
     base = (15 * r0) // 100
-    ranks = track_local_checkpoint(
-        nodes.withColumn("r", F.lit(r0).cast("long"))
-    )
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             e.join(ranks, e["s"] == ranks["node"])
             .join(outdeg, "s")
@@ -236,80 +517,12 @@ def pagerank_integer(
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
-        nxt = track_local_checkpoint(
-            nodes.join(contrib, "node", "left").select(
-                "node",
-                (F.lit(base) + F.coalesce(F.col("c"), F.lit(0)))
-                .cast("long")
-                .alias("r"),
-            )
+        return nodes.join(contrib, "node", "left").select(
+            "node",
+            (F.lit(base) + F.coalesce(F.col("c"), F.lit(0))).cast("long").alias("r"),
         )
-        free_local_checkpoint(ranks)
-        ranks = nxt
-    return ranks
 
-
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_hops: int = 3,
-) -> DataFrame:
-    """Minimum hop distance (0..max_hops) from any seed node over the
-    undirected `edges` graph. Returns (node, hops); nodes further than
-    max_hops (or unreachable) are absent. `seeds` must have one
-    column; seed nodes get hops=0 whether or not they appear in
-    edges."""
-    # symmetrize in ONE pass (explode, not self-union): the union form
-    # evaluated the upstream edge pipeline twice when `sym` first
-    # materializes -- for the near-dup seed graphs that upstream is
-    # the minhash pair build, the dominant cost (guide 2.4)
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col(src).cast("long").alias("s"),
-                    F.col(dst).cast("long").alias("d"),
-                ),
-                F.struct(
-                    F.col(dst).cast("long").alias("s"),
-                    F.col(src).cast("long").alias("d"),
-                ),
-            )
-        ).alias("__e")
-    ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
-    sym = track_persist(sym)
-    frontier = track_local_checkpoint(
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("long"))
-    )
-    visited = frontier
-    for h in range(1, max_hops + 1):
-        # LAZY checkpoint + the emptiness probe as its materializing
-        # action: one job instead of a checkpoint job + a probe job
-        # per hop (the count is a full scan by design -- a limit(1)
-        # would leave missing partitions; VERDICT r10 #3)
-        nxt = track_local_checkpoint_lazy(
-            sym.join(frontier, sym["s"] == frontier["node"])
-            .select(F.col("d").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(h).cast("long"))
-        )
-        if nxt.count() == 0:
-            free_local_checkpoint(nxt)
-            break
-        new_visited = track_local_checkpoint(visited.unionByName(nxt))
-        # the union is materialized; the per-round pieces are now dead
-        free_local_checkpoint(visited)
-        if frontier is not visited:
-            free_local_checkpoint(frontier)
-        free_local_checkpoint(nxt)
-        visited = new_visited
-        frontier = new_visited.filter(F.col("hops") == h)
-    return visited
+    return _rounds(nodes.withColumn("r", F.lit(r0).cast("long")), step, iterations)
 
 
 def sssp_bounded(
@@ -317,65 +530,49 @@ def sssp_bounded(
     seeds: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    weight: str = "w",
+    weight: str | Column = "w",
     max_hops: int = 3,
 ) -> DataFrame:
     """Single-source (multi-seed) shortest path with integer weights,
     bounded to paths of <= max_hops edges: Bellman-Ford as a frontier
     delta iteration. Returns (node, dist) -- the minimum total weight
     over any qualifying path from any seed; unreachable-within-bound
-    nodes are absent.
+    nodes are absent. `weight` is a column name or a Column; with
+    F.lit(1) this is a BFS and `dist` is the minimum hop count.
+    `seeds` must have one column; seed nodes get dist=0 whether or
+    not they appear in edges.
 
     Per round, only nodes IMPROVED last round join the edges (the
     classic delta optimization): relaxation volume is
-    O(frontier ∂ edges), and the frontier shrinks as distances settle.
-    All shuffles key on node id; integer weights keep min() exact and
+    O(frontier ∂ edges), not O(all edges), and the frontier shrinks as
+    distances settle -- which is what makes k-hop queries
+    (contamination blast radius, near-dup neighborhoods) cheap even on
+    a huge pair graph. Integer weights keep min() exact and
     engine-portable. The hop bound is both the convergence guarantee
     (negative weights impossible here, but cycles are) and the state
-    bound -- the SSSP twin of bfs_hops' max_hops.
+    bound.
     """
-    # symmetrize in ONE pass (explode, not self-union) -- see bfs_hops
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col(src).cast("long").alias("s"),
-                    F.col(dst).cast("long").alias("d"),
-                    F.col(weight).cast("long").alias("w"),
-                ),
-                F.struct(
-                    F.col(dst).cast("long").alias("s"),
-                    F.col(src).cast("long").alias("d"),
-                    F.col(weight).cast("long").alias("w"),
-                ),
-            )
-        ).alias("__e")
-    ).select(
-        F.col("__e.s").alias("s"), F.col("__e.d").alias("d"), F.col("__e.w").alias("w")
+    w = F.col(weight) if isinstance(weight, str) else weight
+    sym = track_persist(
+        _symmetric(
+            edges,
+            F.col(src).cast("long"),
+            F.col(dst).cast("long"),
+            w.cast("long").alias("w"),
+        )
     )
-    sym = track_persist(sym)
-    dist = track_local_checkpoint(
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-    )
-    frontier = dist
-    # the checkpointed frame behind `dist`: after round 1 `dist` is a
-    # select over it, which free_local_checkpoint cannot resolve
-    held = dist
-    for _ in range(max_hops):
+
+    def step(cur: DataFrame) -> DataFrame:
+        frontier = cur.filter(F.col("improved")).select("node", "dist")
         cand = (
             sym.join(frontier, sym["s"] == frontier["node"])
             .select(F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("nd"))
             .groupBy("node")
             .agg(F.min("nd").alias("nd"))
         )
-        # LAZY checkpoint + the improved-count as its materializing
-        # action: one job per round instead of two (the count is a
-        # full scan over `merged`, so every partition is cached before
-        # the previous round is freed; VERDICT r10 #3)
-        merged = track_local_checkpoint_lazy(
-            dist.join(cand, "node", "full_outer")
+        return (
+            cur.select("node", "dist")
+            .join(cand, "node", "full_outer")
             .select(
                 "node",
                 F.least(
@@ -389,11 +586,17 @@ def sssp_bounded(
                 ).alias("improved"),
             )
         )
-        n_improved = merged.filter(F.col("improved")).count()
-        free_local_checkpoint(held)
-        held = merged
-        if n_improved == 0:
-            return merged.select("node", "dist")
-        dist = merged.select("node", "dist")
-        frontier = merged.filter(F.col("improved")).select("node", "dist")
-    return dist
+
+    out = _rounds(
+        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
+        .distinct()
+        .select(
+            "node",
+            F.lit(0).cast("long").alias("dist"),
+            F.lit(True).alias("improved"),
+        ),
+        step,
+        max_hops,
+        lambda new, _: new.filter(F.col("improved")).count() == 0,
+    )
+    return out.select("node", "dist")

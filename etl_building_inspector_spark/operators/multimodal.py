@@ -9,12 +9,11 @@ just bytes to Tungsten; column pruning skips them when not selected --
 which is exactly why media belongs in its OWN columns, never inside a
 JSON blob).
 
-Decode / feature-extraction runs as Arrow-batched mapInPandas: one
-Python worker per partition, zero-copy binary transfer. The actual
-codecs (PIL/ffmpeg) are NOT in this container, so decode_image is a
-deterministic stub behind try-import -- the Spark-side plumbing
-(schema, batch iteration, partitioning) is real and tested; swap the
-kernel body for a real codec in production.
+Kernels run as Arrow-batched mapInPandas: one Python worker per
+partition, zero-copy binary transfer. The package depends on no
+codec (PIL/ffmpeg): frame sampling emits content-addressed stubs, and audio energy and aHash are exact byte arithmetic -- the
+Spark-side plumbing (schema, batch iteration, partitioning) is real
+and tested; swap a kernel body for a real codec in production.
 """
 
 from __future__ import annotations
@@ -26,105 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # the real decoder would be PIL; not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
-_FEATURE_SCHEMA = "key long, n_bytes long, content_hash string, mean_byte double"
-
-
-def extract_media_features(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """mapInPandas feature extraction over the binary column.
-
-    The kernel here computes cheap stand-in features (size, hash, mean
-    byte value). With PIL installed it would decode and measure real
-    images -- the surrounding plumbing (Arrow batches, schema contract,
-    per-partition iteration) is identical either way.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            byts = pdf["bytes"]
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "n_bytes": byts.map(len),
-                    "content_hash": byts.map(
-                        lambda b: hashlib.md5(b).hexdigest()
-                    ),
-                    "mean_byte": byts.map(
-                        lambda b: sum(b) / len(b) if len(b) else 0.0
-                    ),
-                }
-            )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    slim = df.select(
-        F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
-    )
-    return slim.mapInPandas(kernel, schema=_FEATURE_SCHEMA)
-
-
-_DECODE_SCHEMA = "key long, width int, height int, mode string, decode_error string"
-
-
-def decode_image(df: DataFrame, key_col: str = "key") -> DataFrame:
-    """Real decode kernel behind the HAVE_PIL gate (VERDICT r01 item 9):
-    PIL.Image.open over each binary cell inside an Arrow-batched
-    mapInPandas -- per-row failures land in `decode_error` instead of
-    failing the partition (at 100 TB some blobs WILL be corrupt; a
-    task retry loop on bad data is the classic pipeline killer).
-
-    Raises NotImplementedError only when no codec is importable (this
-    container); the test suite runs the kernel when PIL exists and
-    skips otherwise (tests/test_multimodal.py).
-    """
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; container ships none -- "
-            "extract_media_features() demonstrates the identical "
-            "mapInPandas plumbing with a stub kernel"
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image as _Image
-
-        def one(b: bytes) -> tuple:
-            try:
-                with _Image.open(io.BytesIO(b)) as im:
-                    return im.width, im.height, im.mode, None
-            except Exception as e:  # corrupt blob -> row-level error
-                return None, None, None, f"{type(e).__name__}: {e}"
-
-        for pdf in batches:
-            decoded = pdf["bytes"].map(one)
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "width": decoded.map(lambda t: t[0]),
-                    "height": decoded.map(lambda t: t[1]),
-                    "mode": decoded.map(lambda t: t[2]),
-                    "decode_error": decoded.map(lambda t: t[3]),
-                }
-            )
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    slim = df.select(
-        F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
-    )
-    return slim.mapInPandas(kernel, schema=_DECODE_SCHEMA)
-
-
 _FRAME_SCHEMA = "key long, frame_idx int, frame binary, ts_ms int"
 
 
@@ -135,8 +35,8 @@ def sample_frames(
     1->N fan-out shape that distinguishes video from image kernels --
     mapInPandas yields more rows than it consumes). Sample instants
     are every `every_ms` over meta.duration_ms; the frame decode at
-    each instant is env-gated like decode_image (no ffmpeg in this
-    container), so the kernel emits a deterministic content-addressed
+    each instant needs a codec the package does not depend on
+    (ffmpeg), so the kernel emits a deterministic content-addressed
     frame stub per instant -- the fan-out arithmetic, schema, and
     partition behavior are the real thing.
 
@@ -194,8 +94,8 @@ def audio_energy_windows(
     DSP (RMS/energy per frame). Treating the blob as unsigned 8-bit
     PCM, each window emits its exact integer energy (sum of squared
     sample values); the last partial window keeps its true n_bytes.
-    No codec needed: the arithmetic is bytes-in, BIGINT-out, so unlike
-    decode_image this kernel is fully value-checkable in the oracle.
+    No codec needed: the arithmetic is bytes-in, BIGINT-out, so this
+    kernel is fully value-checkable in the oracle.
 
     At scale the window features are what flows downstream (VAD,
     loudness normalization, silence trimming all reduce over them);

@@ -19,14 +19,10 @@ stratified_sample):
   range -- a pure narrow projection. The split survives re-sharding,
   backfills, and engine swaps, unlike randomSplit() whose assignment
   depends on partitioning.
-- ``reservoir_sample``: true seeded reservoir for when the sample must
-  be RANDOM across seeds (bottom-k is frozen by its salt). Two-stage:
-  each task draws per-row uniforms from a partition-seeded RNG and
-  keeps its k smallest (bounded O(k) state via mapInPandas), then a
-  TakeOrdered over the <= k*P survivors picks the global k smallest
-  uniforms -- which is exactly a uniform k-sample without replacement.
-  Deterministic for a fixed (seed, partitioning); different seeds give
-  independent samples.
+- ``reservoir_sample_deterministic``: the reservoir STRUCTURE (per-task
+  O(k) state via mapInPandas, then a merge of the partial reservoirs)
+  with a hash priority, so the sample is bottom-k's and
+  partitioning-independent.
 """
 
 from __future__ import annotations
@@ -94,45 +90,6 @@ def hash_split(
     for name, hi in sorted(boundaries.items(), key=lambda kv: kv[1], reverse=True):
         expr = F.lit(name) if expr is None else F.when(pct < hi, F.lit(name)).otherwise(expr)
     return df.withColumn("split", expr)
-
-
-def reservoir_sample(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
-    """Seeded uniform k-sample without replacement (distributed
-    reservoir). Stage 1 (mapInPandas, O(k) state per task): draw one
-    uniform per row from RandomState(seed ^ partition_id) and keep the
-    partition's k smallest. Stage 2: global bottom-k on the uniform =
-    TakeOrdered over <= k*P candidate rows. Sorting rows by i.i.d.
-    uniforms is a uniformly random permutation, so the k smallest are
-    a uniform k-subset; keeping each partition's local k first loses
-    nothing because the global k smallest are the k smallest within
-    their own partitions too."""
-    from pyspark import TaskContext
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("__u", DoubleType())]
-    )
-
-    def local_reservoir(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pid = TaskContext.get().partitionId()
-        rng = np.random.RandomState((seed ^ (pid * 0x9E3779B1)) & 0x7FFFFFFF)
-        kept: pd.DataFrame | None = None
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__u"] = rng.random_sample(len(pdf))
-            kept = pdf if kept is None else pd.concat([kept, pdf], ignore_index=True)
-            if len(kept) > k:
-                kept = kept.nsmallest(k, "__u")
-        if kept is not None and len(kept) > 0:
-            yield kept
-
-    candidates = df.mapInPandas(local_reservoir, schema=out_schema)
-    return candidates.orderBy(F.col("__u").asc()).limit(k).drop("__u")
 
 
 def reservoir_sample_deterministic(

@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import LANG_STOPWORDS, quality_features, tokens
-from ..operators.dedup import connected_components, minhash_lsh_pairs
+from ..operators.dedup import minhash_lsh_pairs
+from ..operators.graph import connected_components
 from ..operators.similarity import quantize_int8_stats
 from ..operators.textops import (
     PII_EMAIL_RE,
@@ -358,7 +359,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(component) per group, drop the rest). The DuckDB oracle is a
     recursive CTE computing min-reachable-id — exact CC semantics, so
     the iterative Spark algorithm is value-checked end-to-end. See
-    operators/dedup.connected_components for the per-round shape."""
+    operators/graph.connected_components for the per-round shape."""
     docs = _docs_with_dups(spark, sf_dir)
     # cap MUST match the oracle's _minhash_lsh_sql() default: the
     # uncapped graph has extra hot-bucket edges that over-merge
@@ -380,10 +381,10 @@ def dedup_cluster_assign_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ALTERNATING large-star/small-star algorithm instead of
     min-label propagation — O(log n) rounds independent of graph
     diameter, edge set shrinks toward stars each round (see
-    operators/dedup.connected_components_alternating). Shares the
+    operators/graph.connected_components_alternating). Shares the
     exact recursive-CTE oracle, so both iterative strategies are
     value-checked against the same CC semantics."""
-    from ..operators.dedup import connected_components_alternating
+    from ..operators.graph import connected_components_alternating
 
     docs = _docs_with_dups(spark, sf_dir)
     # cap MUST match the oracle's _minhash_lsh_sql() default: the
@@ -513,10 +514,11 @@ FROM walk GROUP BY node
 @query("graph_bfs_hops", _bfs_sql())
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min hop distance (<= BFS_MAX_HOPS) from seed docs over the
-    MinHash-LSH pair graph — frontier-only delta iteration
-    (operators/graph.bfs_hops); the oracle replays it as a bounded
-    recursive CTE with min(dist)."""
-    from ..operators.graph import bfs_hops
+    MinHash-LSH pair graph — unit-weight bounded Bellman-Ford
+    (operators/graph.sssp_bounded), whose distances are exactly the
+    min hop counts; the oracle replays it as a bounded recursive CTE
+    with min(dist)."""
+    from ..operators.graph import sssp_bounded
 
     docs = _docs_with_dups(spark, sf_dir)
     # cap MUST match the oracle's _minhash_lsh_sql() default: the
@@ -527,10 +529,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", max_bucket_width=MINHASH_BUCKET_CAP
     ).select("id_a", "id_b")
     seeds = docs.filter(F.col("doc_id") % BFS_SEED_MOD == 0).select("doc_id")
-    out = bfs_hops(pairs, seeds, max_hops=BFS_MAX_HOPS)
+    out = sssp_bounded(pairs, seeds, weight=F.lit(1), max_hops=BFS_MAX_HOPS)
     return out.select(
         F.col("node").cast("long").alias("doc_id"),
-        F.col("hops").cast("long").alias("hops"),
+        F.col("dist").cast("long").alias("hops"),
     )
 
 

@@ -4,7 +4,7 @@ head-window slot + SCALING.md entry per query):
 
 - dedup_cluster_incremental: INCREMENTAL connected components -- the
   standing component assignment absorbs a batch of new near-dup edges
-  via operators/dedup.merge_components instead of re-running CC over
+  via operators/graph.merge_components instead of re-running CC over
   the full pair graph. Shares dedup_cluster_assign's recursive-CTE
   rebuild oracle, so hash equality IS the merge == rebuild proof at
   the query level (the operator-level pin, including the
@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import connected_components, merge_components, minhash_lsh_pairs
+from ..operators.dedup import minhash_lsh_pairs
+from ..operators.graph import connected_components, merge_components
 from ..operators.textops import collocation_pmi
 from ..operators._cache import track_persist
 from ..sources.tables import load_table
@@ -52,7 +53,7 @@ from .registry import query
 def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering contract as dedup_cluster_assign, computed
     INCREMENTALLY: CC over yesterday's edges, then
-    operators/dedup.merge_components absorbs today's edge batch by
+    operators/graph.merge_components absorbs today's edge batch by
     running CC on the REDUCED graph (base component labels + new
     nodes; <= |delta| edges) and relabeling through it.
 

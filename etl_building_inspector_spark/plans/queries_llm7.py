@@ -522,11 +522,11 @@ FROM comp ORDER BY entity_key
 @query("er_resolution_clusters", _er_clusters_sql())
 def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive entity merge: min-label connected components over
-    the blocked fuzzy-match pair graph (operators/dedup.py CC --
+    the blocked fuzzy-match pair graph (operators/graph.py CC --
     per-round one shuffle join, diameter-bounded; ER match graphs are
     shallow near-cliques). Output: (entity_key, canonical_key) for
     every entity that participates in at least one match."""
-    from ..operators.dedup import connected_components
+    from ..operators.graph import connected_components
 
     pairs = queries_llm5.er_blocked_fuzzy_match(spark, sf_dir)
     cc = connected_components(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
+from .queries_surface4 import COPURCHASE_EDGES_SQL
 from .registry import query
 
 
@@ -99,10 +100,7 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LOCAL_CLUSTERING_SQL = f"""
 WITH e AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ), tri AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM e e1 JOIN e e2 ON e2.u = e1.v

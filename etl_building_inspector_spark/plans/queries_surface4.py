@@ -291,15 +291,20 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count, O(m^1.5) bound instead of sum(deg^2).
 # ---------------------------------------------------------------------------
 
+# The body of the co-purchase edge CTE that every oracle over this
+# graph starts from: one undirected edge (u < v) per pair of distinct
+# parts bought in the same order.
+COPURCHASE_EDGES_SQL = """  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
+                  greatest(a.l_partkey, b.l_partkey) AS v
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey"""
+
 
 @query(
     "graph_triangle_count",
-    """
+    f"""
 WITH e AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 )
 SELECT CAST(count(*) AS BIGINT) AS n_triangles
 FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
@@ -468,10 +473,7 @@ def _pagerank_sql(iterations: int = _PR_ITER, scale: int = _PR_SCALE) -> str:
     parts = [
         f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 nodes AS (SELECT DISTINCT s AS node FROM e),
@@ -546,12 +548,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_distribution",
-    """
+    f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s FROM e0 UNION ALL SELECT v AS s FROM e0)
 SELECT degree, CAST(count(*) AS BIGINT) AS n_nodes
@@ -585,12 +584,9 @@ _LPA_ROUNDS = 2
 
 def _lpa_sql(rounds: int = _LPA_ROUNDS) -> str:
     parts = [
-        """
+        f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 nodes AS (SELECT DISTINCT s AS node FROM e),
@@ -675,12 +671,9 @@ _KCORE_ROUNDS = 3
 
 def _kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     parts = [
-        """
+        f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 edges0 AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0)"""
     ]
@@ -747,10 +740,7 @@ _CN_HUB_CAP = 100
 def _common_neighbors_sql(k: int = _CN_TOPK, cap: int = _CN_HUB_CAP) -> str:
     return f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 mid AS (SELECT s AS m FROM e GROUP BY s HAVING count(*) <= {cap}),
@@ -830,10 +820,7 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neighbor_jaccard_sql(k: int = _CN_TOPK, cap: int = _CN_HUB_CAP) -> str:
     return f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 deg AS (SELECT s AS node, count(*) AS deg FROM e GROUP BY s),
@@ -924,12 +911,9 @@ def graph_neighbor_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inputs -- sqrt is correctly rounded per IEEE-754.
 # ---------------------------------------------------------------------------
 
-_ASSORT_SQL = """
+_ASSORT_SQL = f"""
 WITH e0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+{COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 deg AS (SELECT s AS node, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY s),

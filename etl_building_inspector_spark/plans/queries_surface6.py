@@ -546,9 +546,10 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frequently-paired part (recommendation-expansion shape). The SAME
 # SQL text runs on Spark and DuckDB; the hop bound terminates the
 # recursion on both engines. Spark executes each recursion step as a
-# joined micro-plan -- the declarative twin of operators/graph.bfs_hops'
-# frontier iteration (which remains the scale path: the CTE recurses
-# over ALL accumulated rows, the frontier loop only over improvements).
+# joined micro-plan -- the declarative twin of the unit-weight
+# operators/graph.sssp_bounded frontier iteration (which remains the
+# scale path: the CTE recurses over ALL accumulated rows, the frontier
+# loop only over improvements).
 # ---------------------------------------------------------------------------
 
 _RCTE_SQL = """

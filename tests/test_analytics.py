@@ -10,7 +10,13 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etl_building_inspector_spark.operators.graph import sssp_bounded
+from etl_building_inspector_spark.operators.graph import (
+    connected_components,
+    connected_components_alternating,
+    merge_components,
+    pagerank_integer,
+    sssp_bounded,
+)
 from etl_building_inspector_spark.plans.queries_surface5 import (
     compaction_bin_plan,
     funnel_stages,
@@ -72,18 +78,52 @@ def test_sssp_undirected_and_early_stop(spark):
     assert out == {4: 0, 5: 7}
 
 
-@pytest.mark.parametrize("max_hops", [2, 4, 6])
-def test_sssp_frees_each_superseded_round(spark, max_hops):
-    """Every round frees the checkpoint it supersedes, so only the
-    returned frame's blocks stay live however many rounds ran."""
+@pytest.mark.parametrize(
+    "case", [2, 4, 6, "cc", "cc_alternating", "merge_components", "pagerank"]
+)
+def test_sssp_frees_each_superseded_round(spark, case):
+    """Every round of every iterative graph operator frees the
+    checkpoint it supersedes, so only the returned frame's blocks stay
+    live however many rounds ran (an int case is sssp_bounded with
+    that max_hops). Alternating CC also keeps its edge-input and
+    node-set checkpoints until release_persisted(). Reading the result
+    afterwards proves the live checkpoint is the one it reads."""
     from etl_building_inspector_spark.operators import _cache
 
     _cache.release_persisted()
-    # a 7-node path: each of the first 6 rounds improves one more node
+    # a 7-node path: each of the first 6 rounds settles one more node
     edges = _edges(spark, [(i, i + 1, 1) for i in range(6)])
-    sssp_bounded(edges, _seeds(spark, [0]), max_hops=max_hops)
-    assert len(_cache._CHECKPOINTED) == 1
+    if isinstance(case, int):
+        out, live = sssp_bounded(edges, _seeds(spark, [0]), max_hops=case), 1
+    elif case == "cc":
+        out, live = connected_components(edges), 1
+    elif case == "cc_alternating":
+        out, live = connected_components_alternating(edges), 3
+    elif case == "merge_components":
+        base = spark.createDataFrame(
+            [(i, 0) for i in range(4)], "node long, component long"
+        )
+        out, live = merge_components(base, edges.filter("id_a >= 3")), 1
+    else:
+        out, live = pagerank_integer(edges, "id_a", "id_b", iterations=3), 1
+    assert len(_cache._CHECKPOINTED) == live
+    assert out.count() > 0
     _cache.release_persisted()
+
+
+def test_free_local_checkpoint_rejects_views_and_second_free(spark):
+    """Only a live tracked handle can be freed: a view derived from it
+    has no blocks of its own, and a second free is a lifecycle bug."""
+    from etl_building_inspector_spark.operators import _cache
+
+    _cache.release_persisted()
+    held = _cache.track_local_checkpoint(spark.range(5))
+    with pytest.raises(ValueError):
+        _cache.free_local_checkpoint(held.select("id"))
+    assert len(_cache._CHECKPOINTED) == 1 and _cache._CHECKPOINTED[0] is held
+    _cache.free_local_checkpoint(held)
+    with pytest.raises(ValueError):
+        _cache.free_local_checkpoint(held)
 
 
 # --- skyline ----------------------------------------------------------------

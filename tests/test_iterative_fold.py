@@ -1,17 +1,19 @@
-"""Focused value tests for the r11 iterative-operator rewrite
-(operators/dedup.connected_components[_alternating], operators/graph
-.bfs_hops / .sssp_bounded):
+"""Focused value tests for the iterative graph operators in
+operators/graph.py: connected_components[_alternating] and
+sssp_bounded, whose unit-weight case is the BFS behind
+graph_bfs_hops. Each runs through the one round loop, graph._rounds:
 
-  * symmetrization by explode-of-2-structs (was: self-union, which
+  * edges are symmetrized by an explode of two structs (a self-union
     evaluated the upstream edge pipeline twice on first
     materialization);
-  * lazy localCheckpoint with the per-round convergence count as the
-    materializing action (one Spark job per round instead of two);
+  * each round's frame is checkpointed lazily, and the round's
+    convergence count is the action that materializes it (one action
+    per round);
+  * the superseded round is freed only after that action;
   * alternating CC carries the previous round's cardinality as a
     scalar instead of recounting.
 
-These change HOW each round executes, not what it computes -- pinned
-here on hand-built graphs chosen for the rewrite's edge cases: chains
+The hand-built graphs are chosen for the loop's edge cases: chains
 longer than the typical near-dup diameter (many rounds, so the
 carried-count/lazy-fold path repeats), isolated self-loop nodes (kept
 by the node set, absent from the canonical edge set), multi-component
@@ -57,7 +59,7 @@ GRAPH = CHAIN + [(1, 2), (2, 3), (1, 3), (50, 50), (40, 41), (41, 40)]
 
 def test_connected_components_chain_and_selfloop(spark):
     from etl_building_inspector_spark.operators._cache import release_persisted
-    from etl_building_inspector_spark.operators.dedup import connected_components
+    from etl_building_inspector_spark.operators.graph import connected_components
 
     got = {
         r["node"]: r["component"]
@@ -69,7 +71,7 @@ def test_connected_components_chain_and_selfloop(spark):
 
 def test_connected_components_alternating_matches(spark):
     from etl_building_inspector_spark.operators._cache import release_persisted
-    from etl_building_inspector_spark.operators.dedup import (
+    from etl_building_inspector_spark.operators.graph import (
         connected_components_alternating,
     )
 
@@ -83,12 +85,14 @@ def test_connected_components_alternating_matches(spark):
 
 def test_bfs_hops_chain(spark):
     from etl_building_inspector_spark.operators._cache import release_persisted
-    from etl_building_inspector_spark.operators.graph import bfs_hops
+    from etl_building_inspector_spark.operators.graph import sssp_bounded
 
     seeds = spark.createDataFrame([(10,)], "node long")
     got = {
-        r["node"]: r["hops"]
-        for r in bfs_hops(_edges(spark, CHAIN), seeds, max_hops=3).collect()
+        r["node"]: r["dist"]
+        for r in sssp_bounded(
+            _edges(spark, CHAIN), seeds, weight=F.lit(1), max_hops=3
+        ).collect()
     }
     # undirected chain from 10: exactly hops 0..3 survive the bound
     assert got == {10: 0, 11: 1, 12: 2, 13: 3}

@@ -1,17 +1,11 @@
-"""Multimodal plumbing tests: binary media columns + mapInPandas
-feature extraction (decode stubbed per the environment contract)."""
+"""Multimodal plumbing tests: binary media columns and the
+mapInPandas kernels (frame sampling, audio energy windows, aHash)."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
-from etl_building_inspector_spark.operators.multimodal import (
-    decode_image,
-    extract_media_features,
-)
 from etl_building_inspector_spark.sources.tables import load_table
 
 
@@ -41,61 +35,10 @@ def test_media_schema(media_df):
     assert "mime:string" in f.replace(" ", "")
 
 
-def test_feature_extraction_deterministic(spark, media_df):
-    feats = extract_media_features(media_df, "doc_id").collect()
-    assert len(feats) == media_df.count()
-    by_key = {r.key: r for r in feats}
-    # recompute one row's features in plain python
-    expected_payload = (
-        hashlib.md5(str(0).encode()).hexdigest() * 4
-    ).encode()
-    assert by_key[0].n_bytes == len(expected_payload)
-    assert by_key[0].content_hash == hashlib.md5(expected_payload).hexdigest()
-    assert by_key[0].mean_byte == pytest.approx(
-        sum(expected_payload) / len(expected_payload)
-    )
-
-
 def test_binary_column_pruned_when_not_selected(media_df):
     # selecting only the key must not carry the binary through the plan
     plan = media_df.select("doc_id")._jdf.queryExecution().optimizedPlan().toString()
     assert "bytes" not in plan
-
-
-def test_decode_without_codec_is_explicit(media_df):
-    from etl_building_inspector_spark.operators.multimodal import HAVE_PIL
-
-    if HAVE_PIL:
-        pytest.skip("PIL present: covered by test_decode_image_real_kernel")
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_image(media_df)
-
-
-def test_decode_image_real_kernel(spark):
-    """Runs only where PIL exists: a real 1-px PNG decodes to its
-    dimensions; corrupt bytes land in decode_error instead of failing
-    the partition."""
-    from etl_building_inspector_spark.operators.multimodal import HAVE_PIL
-
-    if not HAVE_PIL:
-        pytest.skip("no PIL in this container")
-    import base64
-
-    # minimal valid 1x1 red PNG (public-domain bytes)
-    png = base64.b64decode(
-        "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR4nGP4"
-        "z8DwHwAFBQIAX8jx0gAAAABJRU5ErkJggg=="
-    )
-    rows = [(1, (png, "image/png", None)), (2, (b"not a png", "image/png", None))]
-    df = spark.createDataFrame(
-        rows,
-        "key long, media struct<bytes:binary, mime:string, "
-        "meta:struct<width:int,height:int,duration_ms:int>>",
-    )
-    got = {r.key: r for r in decode_image(df).collect()}
-    assert (got[1].width, got[1].height) == (1, 1)
-    assert got[1].decode_error is None
-    assert got[2].width is None and got[2].decode_error is not None
 
 
 def test_sample_frames_fanout(spark, media_df):

@@ -24,15 +24,10 @@ PKG_NAME = "etl_building_inspector_spark"
 PKG = REPO / PKG_NAME
 SCANNED = ("operators", "sources", "streaming", "functions")
 
-# Helpers no production code names, kept for now: each has tests of its
-# own and is mentioned only in docstrings or as a column name. Delete an
-# entry with its def; an entry that gains a caller fails the test below.
-KNOWN_UNREACHED = {
-    "etl_building_inspector_spark.functions.ids.synth_id",
-    "etl_building_inspector_spark.operators.multimodal.decode_image",
-    "etl_building_inspector_spark.operators.multimodal.extract_media_features",
-    "etl_building_inspector_spark.operators.sampling.reservoir_sample",
-}
+# Helpers that no production code names but are kept on purpose, each
+# with tests of its own (none today). Delete an entry with its def; an
+# entry that gains a caller fails the test below.
+KNOWN_UNREACHED: set[str] = set()
 
 
 def _module_name(path: Path) -> str:

@@ -40,7 +40,7 @@ def _run(spark, name):
 
 
 def test_merge_components_equals_rebuild_adversarial(spark):
-    from etl_building_inspector_spark.operators.dedup import (
+    from etl_building_inspector_spark.operators.graph import (
         connected_components,
         merge_components,
     )

@@ -1,6 +1,6 @@
-"""Sampling operators: reservoir properties, bottom-k determinism,
-split stability, and triangle-count equality on a hand-checkable
-graph."""
+"""Sampling operators: bottom-k determinism, split stability, the
+deterministic reservoir merge, and triangle-count equality on a
+hand-checkable graph."""
 
 from __future__ import annotations
 
@@ -10,46 +10,7 @@ from etl_building_inspector_spark.operators.graph import triangle_count
 from etl_building_inspector_spark.operators.sampling import (
     bottom_k_sample,
     hash_split,
-    reservoir_sample,
 )
-
-
-def test_reservoir_exact_k_and_subset(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    total = docs.count()
-    k = 37
-    s = reservoir_sample(docs.select("doc_id"), k, seed=7)
-    rows = [r.doc_id for r in s.collect()]
-    assert len(rows) == k
-    assert len(set(rows)) == k  # without replacement
-    universe = {r.doc_id for r in docs.select("doc_id").collect()}
-    assert set(rows) <= universe
-    # k > population degenerates to the full set
-    small = docs.limit(5).select("doc_id")
-    assert reservoir_sample(small, 100, seed=1).count() == min(5, total)
-
-
-def test_reservoir_deterministic_per_seed_distinct_across_seeds(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    a = {r.doc_id for r in reservoir_sample(docs, 25, seed=11).collect()}
-    b = {r.doc_id for r in reservoir_sample(docs, 25, seed=11).collect()}
-    c = {r.doc_id for r in reservoir_sample(docs, 25, seed=12).collect()}
-    assert a == b  # same seed + partitioning -> same sample
-    assert a != c  # different seed -> (a.s.) different sample
-
-
-def test_reservoir_roughly_uniform(spark, sf_dir):
-    # mean of sampled doc_ids should land near the population mean;
-    # a generous 4-sigma band keeps this non-flaky while still
-    # catching "always takes the first partition" class bugs.
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    n = docs.count()
-    k = 60
-    s = reservoir_sample(docs, k, seed=3)
-    mean = s.agg(F.avg("doc_id")).first()[0]
-    pop_mean = (n - 1) / 2
-    sigma = ((n**2 - 1) / 12) ** 0.5 / k**0.5
-    assert abs(mean - pop_mean) < 4 * sigma
 
 
 def test_bottom_k_stable_under_repartition(spark, sf_dir):

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_building_inspector_spark.operators.dedup import connected_components
+from etl_building_inspector_spark.operators.graph import connected_components
 from etl_building_inspector_spark.operators.similarity import quantize_int8_stats
 from etl_building_inspector_spark.operators.textops import (
     decontaminate_ngrams,
@@ -57,7 +57,7 @@ def test_cc_alternating_matches_min_label(spark):
     reversed/duplicated edges."""
     import random
 
-    from etl_building_inspector_spark.operators.dedup import (
+    from etl_building_inspector_spark.operators.graph import (
         connected_components_alternating,
     )
 
@@ -84,13 +84,16 @@ def test_cc_alternating_matches_min_label(spark):
 def test_bfs_hops_hand_graph(spark):
     """Path 1-2-3-4-5 with seed {1}: hops bounded at 3 (node 5 absent);
     seed isolated node 99 gets 0; unreachable component {10,11} absent."""
-    from etl_building_inspector_spark.operators.graph import bfs_hops
+    from etl_building_inspector_spark.operators.graph import sssp_bounded
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
     )
     seeds = spark.createDataFrame([(1,), (99,)], ["doc_id"])
-    out = {r.node: r.hops for r in bfs_hops(edges, seeds, max_hops=3).collect()}
+    out = {
+        r.node: r.dist
+        for r in sssp_bounded(edges, seeds, weight=F.lit(1), max_hops=3).collect()
+    }
     assert out == {1: 0, 99: 0, 2: 1, 3: 2, 4: 3}
 
 
