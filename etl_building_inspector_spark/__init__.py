@@ -10,8 +10,8 @@ the large-scale training-data-pipeline extensions (dedup, similarity
 search, text analysis, multimodal plumbing).
 
 Layout:
-    session     shared SparkSession builder tuned for local[32] tests
-                and 100 TB-cluster defaults (AQE, Arrow, UTC)
+    session     shared SparkSession builder: local[$SPARK_GRAFT_CPUS],
+                32 shuffle partitions, AQE, Arrow, UTC
     schemas     explicit StructTypes for all inputs/outputs (never
                 schema-inference on production paths)
     sources/    testdata loaders, paginated REST landing, GeoJSON scan

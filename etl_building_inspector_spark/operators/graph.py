@@ -373,11 +373,16 @@ def connected_components_alternating(
         sizes.append(n)
         return same
 
-    # canonical orientation (hi, lo): dedups the undirected edge set
+    # canonical orientation (hi, lo), self-loops dropped, NOT deduped:
+    # round 1's step reads the start only through min-aggregates and
+    # joins and ends in a distinct, so it returns the same edge set as
+    # from the deduped start, and the start's checkpoint runs no
+    # shuffle. A duplicate left in the start makes round 1's count
+    # differ from the start's, so round 1 cannot converge early.
     cur = _rounds(
-        ein.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo"))
-        .distinct(),
+        ein.filter(F.col("u") != F.col("v")).select(
+            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
+        ),
         step,
         max_iter,
         converged,

@@ -34,18 +34,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def sample_hash_u32(id_col: Column | str, salt: str) -> Column:
-    """u32(md5(salt:id)) -- the shared deterministic-sampling hash
-    (same construction as textops.stratified_sample, DuckDB twin:
-    CAST(concat('0x', substr(md5(...), 1, 8)) AS BIGINT))."""
+def _md5_key(id_col: Column | str, salt: str) -> Column:
+    """md5(salt:id) as a hex string: the one deterministic-sampling
+    hash every sampler here (and textops') derives from."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + ":"), c.cast("string"))), 1, 8),
-            16,
-            10,
-        )
-    ).cast("long")
+    return F.md5(F.concat(F.lit(salt + ":"), c.cast("string")))
+
+
+def sample_hash_u32(id_col: Column | str, salt: str) -> Column:
+    """u32(md5(salt:id)) -- the shared hash-threshold sampling value
+    (hash_split, textops.stratified_sample; DuckDB twin:
+    CAST(concat('0x', substr(md5(...), 1, 8)) AS BIGINT))."""
+    return F.conv(F.substring(_md5_key(id_col, salt), 1, 8), 16, 10).cast("long")
+
+
+def sample_order(id_col: str, salt: str) -> tuple[Column, Column]:
+    """(md5(salt:id) asc, id asc): the total order of every bottom-k
+    sample and per-group rank (bottom_k_sample, group_bottom_k,
+    textops.domain_cap, the similarity centroid and codebook
+    samples). The id tiebreak makes it total."""
+    return _md5_key(id_col, salt).asc(), F.col(id_col).asc()
 
 
 def bottom_k_sample(
@@ -54,8 +62,7 @@ def bottom_k_sample(
     """Exact-k uniform sample: the k rows with the smallest salted md5
     hash (ties broken by id for full determinism). Narrow scan +
     per-partition top-k heap (TakeOrderedAndProject)."""
-    key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-    return df.orderBy(key.asc(), F.col(id_col).asc()).limit(k)
+    return df.orderBy(*sample_order(id_col, salt)).limit(k)
 
 
 def group_bottom_k(
@@ -65,8 +72,7 @@ def group_bottom_k(
     as `rn` (1..k). One shuffle on the group key."""
     from pyspark.sql import Window
 
-    key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-    w = Window.partitionBy(group_col).orderBy(key.asc(), F.col(id_col).asc())
+    w = Window.partitionBy(group_col).orderBy(*sample_order(id_col, salt))
     return (
         df.withColumn("rn", F.row_number().over(w).cast("long"))
         .filter(F.col("rn") <= k)
@@ -111,10 +117,7 @@ def reservoir_sample_deterministic(
     from .._dist import ensure_workers_can_import
 
     ensure_workers_can_import(df.sparkSession)
-    pri = F.md5(
-        F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    )
-    with_pri = df.withColumn("__pri", pri)
+    with_pri = df.withColumn("__pri", _md5_key(id_col, salt))
 
     def local_reservoir(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kept: pd.DataFrame | None = None

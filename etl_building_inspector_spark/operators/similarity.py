@@ -6,10 +6,21 @@ join where only the query side is broadcast. The corpus is never
 shuffled and never collected, so it scales to arbitrarily large corpora
 (cost is one full scan per query batch).
 
-Scale path: LSH bucketing via random hyperplanes (SimHash for vectors)
--- corpus hashed once, queries probe only their bucket (+ optional
-multi-probe neighbors). Hyperplanes are derived deterministically from
-md5 so results are reproducible and oracle-checkable.
+Scale paths, one implementation of each stage:
+
+* LSH bucketing via random hyperplanes (SimHash for vectors): the
+  corpus is hashed once by ONE Arrow kernel (lsh_buckets), queries
+  probe only their buckets, and LSH candidates are scored by the Arrow
+  cosine kernel (cosine_arrow). Hyperplanes are derived
+  deterministically from md5, so results are reproducible and
+  oracle-checkable.
+* IVF and SemDeDup cluster on md5(salt:id)-sampled centroids
+  (_sampled_assign); PQ codebooks come from the same kind of sample
+  (sampling.bottom_k_sample).
+* Every ranked output goes through one per-query top-k tail (_topk).
+
+Everything else scores with _cosine, the JVM expression that
+cosine_arrow reproduces bit for bit.
 """
 
 from __future__ import annotations
@@ -21,6 +32,14 @@ from pyspark.sql import functions as F
 
 from ._cache import track_persist
 from ._parallel import fan_out_scan
+from .sampling import bottom_k_sample, sample_order
+
+# Adaptive-m clamp (adaptive_planes_per_table): target bucket width,
+# floor and cap of the planes-per-table count. The DuckDB twin's SQL
+# (queries_llm._adaptive_planes_cte) is generated from these values.
+LSH_TARGET_BUCKET_WIDTH = 4
+LSH_PLANES_FLOOR = 4
+LSH_PLANES_CAP = 16
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -66,7 +85,7 @@ def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFram
 
         if len(va) == 0:
             return pd.Series([], dtype="float64")
-        # widen to float64, never narrow (see lsh_buckets_arrow)
+        # widen to float64, never narrow (see lsh_buckets)
         A = np.stack(va.to_numpy()).astype(np.float64)
         B = np.stack(vb.to_numpy()).astype(np.float64)
         dot = np.zeros(len(A))
@@ -81,11 +100,19 @@ def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFram
     return df.withColumn(out, _cos(F.col(a), F.col(b)))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    # unrounded: identical sequential folds yield bit-identical doubles
-    # in Spark and the DuckDB list_reduce oracle; round() is not
-    # engine-portable at half-boundaries.
-    return df.withColumn(out, _cosine(F.col(a), F.col(b)))
+def _topk(sims: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The per-query ranking tail of every top-k search here: rank each
+    query's (query_id, neighbor_id, score) rows by score desc, then
+    neighbor_id asc (a total order, so ties are engine-portable), and
+    keep rank <= k. Returns (query_id, neighbor_id, score, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
 
 
 def cosine_topk_bruteforce(
@@ -119,14 +146,7 @@ def cosine_topk_bruteforce(
         "neighbor_id",
         _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(sim, k)
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
@@ -151,78 +171,30 @@ def lsh_buckets(
     n_tables: int = 6,
     planes_per_table: int = 4,
     dim: int = 64,
-    impl: str = "hof",
 ) -> DataFrame:
     """Multi-table random-hyperplane LSH: one (table, bucket) row per
     input row per table. Standard L-tables-of-m-planes construction --
     per-table collision prob is p^m (p = 1 - angle/pi), union over L
-    tables gives recall 1-(1-p^m)^L. Hyperplane constants are literals
-    folded into the plan; the explode is the only fan-out (x L).
+    tables gives recall 1-(1-p^m)^L.
 
-    impl='arrow' routes the plane dots through the vectorized
-    pandas_udf kernel (lsh_buckets_arrow) -- bit-identical output,
-    measured faster on wide L*m geometries where the interpreted
-    HOF fold dominates. 'hof' stays the default (zero Python
-    dependency surface for library users who never call
-    ensure_workers_can_import)."""
-    # NOT fan_out_scan'd (A/B'd in the r10 optimization round, 0.68x):
-    # the plane-dot pass over the embeddings fixture is cheap relative
-    # to the exchange it would add; the bucket self-joins downstream
-    # re-shuffle anyway
-    if impl == "arrow":
-        return lsh_buckets_arrow(df, vec_col, n_tables, planes_per_table, dim)
-    entries = []
-    for t in range(n_tables):
-        bucket = F.lit(0)
-        for p in range(planes_per_table):
-            # NOTE: the dot stays a zip_with/aggregate HOF on a literal
-            # F.array, NOT an unrolled v[0]*p0 + v[1]*p1 + ... chain.
-            # Unrolling is ~4x faster warm (plain codegen arithmetic vs
-            # interpreted HOF lambdas) but the L*m*dim-term expression
-            # trees blow up planning/codegen memory: a default 1g-heap
-            # driver session (the correctness driver's config) OOMs
-            # before stage 1. Measured, reverted.
-            plane = F.array(
-                *[F.lit(v) for v in _hyperplane(dim, t * planes_per_table + p)]
-            )
-            bit = F.when(_dot(F.col(vec_col), plane) > 0, F.lit(2**p)).otherwise(
-                F.lit(0)
-            )
-            bucket = bucket + bit
-        entries.append(
-            F.struct(F.lit(t).alias("table"), bucket.alias("bucket"))
-        )
-    return df.withColumn("__tb", F.explode(F.array(*entries))).select(
-        "*", F.col("__tb.table").alias("table"), F.col("__tb.bucket").alias("bucket")
-    ).drop("__tb")
+    All L*m plane dots for a batch of vectors run in one numpy pass
+    inside a pandas_udf. BIT-EXACT with the DuckDB oracle
+    (queries_llm._planes_cte + _buckets_cte) by construction: the
+    accumulator loops over DIMENSIONS (not planes/rows), so each scalar
+    dot is the same left-to-right IEEE sequence 0.0 + x0*p0 + x1*p1 +
+    ... that list_reduce (and F.aggregate) runs -- numpy elementwise
+    ops are per-element IEEE, and float32->float64 widening is exact.
+    No BLAS dot (pairwise/FMA reassociation) is involved. Pinned by
+    tests/test_similarity.py::test_lsh_buckets_match_duckdb_twin.
 
-
-def lsh_buckets_arrow(
-    df: DataFrame,
-    vec_col: str,
-    n_tables: int = 6,
-    planes_per_table: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Arrow-vectorized twin of lsh_buckets: all L*m plane dots for a
-    batch of vectors in one numpy pass inside a pandas_udf.
-
-    BIT-EXACT with the HOF path and the DuckDB oracle by construction:
-    the accumulator loops over DIMENSIONS (not planes/rows), so each
-    scalar dot is the same left-to-right IEEE sequence
-    0.0 + x0*p0 + x1*p1 + ... that F.aggregate and list_reduce run --
-    numpy elementwise ops are per-element IEEE, and float32->float64
-    widening is exact. No BLAS dot (pairwise/FMA reassociation) is
-    involved. Pinned by tests/test_similarity.py::
-    test_arrow_buckets_bit_identical_to_hof.
-
-    Why it's faster: Spark evaluates higher-order-function lambdas
-    interpreted per element (L*m*dim lambda dispatches per row); here
-    the same arithmetic is dim vectorized multiply-adds per Arrow
-    batch. Scale shape is unchanged -- narrow projection, the explode
-    to (table, bucket) rows happens after the kernel.
+    Why a kernel: as a JVM expression the dots are L*m*dim literal
+    multiply-adds, interpreted per element and compiled into one
+    whole-stage-codegen expression whose compile time (~3 s per fresh
+    plan, data-independent) dominated the ANN query; here the same
+    arithmetic is dim vectorized multiply-adds per Arrow batch. Scale
+    shape: a narrow projection, the explode to (table, bucket) rows
+    happens after the kernel.
     """
-    import pandas as pd  # noqa: F401 (kernel signature)
     from pyspark.sql.types import ArrayType, IntegerType
 
     from .._dist import ensure_workers_can_import
@@ -233,6 +205,10 @@ def lsh_buckets_arrow(
     plane_rows = [vec for _t, _bit, vec in planes]  # t-major, p ascending
     bit_weights = [bit for _t, bit, _vec in planes]
 
+    # NOT fan_out_scan'd (A/B'd in the r10 optimization round, 0.68x):
+    # the plane-dot pass over the embeddings fixture is cheap relative
+    # to the exchange it would add; the bucket self-joins downstream
+    # re-shuffle anyway
     @F.pandas_udf(ArrayType(IntegerType()))
     def _buckets_of(v):  # type: ignore[no-untyped-def]
         import numpy as np
@@ -245,10 +221,10 @@ def lsh_buckets_arrow(
         # widen to float64, NEVER narrow: float32 storage widens
         # exactly (same as Spark's cast('double')); synthesized
         # double-typed vectors pass through untouched. Forcing float32
-        # first would silently round double inputs the HOF path keeps.
+        # first would silently round double inputs the oracle keeps.
         e = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
         acc = np.zeros((e.shape[0], pt.shape[1]))
-        for i in range(pt.shape[0]):  # sequential over dims = HOF fold order
+        for i in range(pt.shape[0]):  # sequential over dims = SQL fold order
             acc += e[:, i : i + 1] * pt[i : i + 1, :]
         buckets = ((acc > 0) * w[None, :]).reshape(
             e.shape[0], n_tables, planes_per_table
@@ -276,18 +252,18 @@ def lsh_planes(
     return out
 
 
-def adaptive_planes_per_table(
-    n: int, target_bucket_width: int = 4, floor: int = 4, cap: int = 16
-) -> int:
+def adaptive_planes_per_table(n: int) -> int:
     """m scales with the corpus: at fixed m, bucket width grows
     linearly with n and the candidate self-join quadratically
     (candidates ~ L * n^2 / 2^m). Holding the TARGET WIDTH instead
     (m = log2(n / w)) keeps candidates ~ L * n * w / 2 -- linear in
-    corpus size, the 100 TB shape. The cap bounds plane-literal count
-    (codegen compile cost); past the cap, buy recall with L."""
+    corpus size, the 100 TB shape. The cap bounds the planes per
+    table (the bucket kernel's work per vector); past the cap, buy
+    recall with L."""
     import math
 
-    return min(cap, max(floor, math.ceil(math.log2(max(n, 2) / target_bucket_width))))
+    m = math.ceil(math.log2(max(n, 2) / LSH_TARGET_BUCKET_WIDTH))
+    return min(LSH_PLANES_CAP, max(LSH_PLANES_FLOOR, m))
 
 
 def lsh_candidate_pairs(
@@ -298,7 +274,6 @@ def lsh_candidate_pairs(
     planes_per_table: int | None = 4,
     dim: int = 64,
     max_bucket_width: int | None = None,
-    impl: str = "hof",
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) that collide in at least
     one LSH (table, bucket). The scale-safe candidate generator for
@@ -318,18 +293,16 @@ def lsh_candidate_pairs(
     """
     if planes_per_table is None:
         planes_per_table = adaptive_planes_per_table(df.count())
-    # persist the slim projection BEFORE the bucket expressions: the L*m
-    # plane dots each reference the vector column, and if the input is
-    # itself a computed column (e.g. a synthesized/normalized embedding)
-    # CollapseProject would inline that computation into every dot --
-    # the cache node is the materialization barrier (plan-shape lesson:
-    # materialize-once for higher-order-function inputs).
+    # persist the slim projection BEFORE the bucket kernel: if the
+    # input is itself a computed column (e.g. a synthesized/normalized
+    # embedding), the cache node is the materialization barrier that
+    # computes it once (plan-shape lesson: materialize-once).
     slim = track_persist(
         df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
     )
-    buckets = lsh_buckets(
-        slim, "__vec", n_tables, planes_per_table, dim, impl=impl
-    ).select("__id", "table", "bucket")
+    buckets = lsh_buckets(slim, "__vec", n_tables, planes_per_table, dim).select(
+        "__id", "table", "bucket"
+    )
     # self-join would recompute the L x m dot products per side;
     # persist the slim (id, table, bucket) projection (tracked for
     # release -- see _cache.release_persisted()).
@@ -365,7 +338,6 @@ def embedding_neardup_lsh(
     planes_per_table: int | None = 4,
     dim: int = 64,
     max_bucket_width: int | None = None,
-    impl: str = "hof",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, the 100 TB shape: LSH
     bucket candidates (equi-join, linear in collisions) -> exact cosine
@@ -374,30 +346,13 @@ def embedding_neardup_lsh(
     serves as its recall oracle in tests/test_similarity.py. Emits a
     SUBSET of the triangle's pairs (recall < 1 tuned by (L, m)), never
     a superset, and never a BroadcastNestedLoopJoin (plan-asserted).
-
-    impl='arrow' runs plane dots AND candidate cosines through the
-    vectorized Arrow kernels (bit-identical by construction — see
-    lsh_buckets_arrow / cosine_arrow)."""
+    Candidates are scored by cosine_arrow."""
     cand = lsh_candidate_pairs(
-        df,
-        vec_col,
-        id_col,
-        n_tables,
-        planes_per_table,
-        dim,
-        max_bucket_width,
-        impl=impl,
+        df, vec_col, id_col, n_tables, planes_per_table, dim, max_bucket_width
     )
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    joined = cand.join(va, "id_a").join(vb, "id_b")
-    if impl == "arrow":
-        scored = cosine_arrow(joined, "__va", "__vb", "cosine")
-    else:
-        scored = joined.withColumn(
-            "cosine",
-            _cosine(F.col("__va"), F.col("__vb")),
-        )
+    scored = cosine_arrow(cand.join(va, "id_a").join(vb, "id_b"), "__va", "__vb")
     return scored.filter(F.col("cosine") >= threshold).select(
         "id_a", "id_b", "cosine"
     )
@@ -412,7 +367,6 @@ def cosine_topk_lsh(
     n_tables: int = 6,
     planes_per_table: int = 4,
     dim: int = 64,
-    impl: str = "hof",
 ) -> DataFrame:
     """ANN top-k: candidates from any shared (table, bucket), exact
     cosine on the deduped candidate set.
@@ -421,13 +375,7 @@ def cosine_topk_lsh(
     key; candidate count drops ~2^m-fold per table. This is the 100 TB
     path: the corpus-side buckets are computed once (persist/write
     them), queries touch L buckets each, and recall is tuned with
-    (L, m) instead of memory.
-
-    impl='arrow': plane dots + candidate cosines through the vectorized
-    pandas_udf kernels (bit-identical — see lsh_buckets_arrow). The HOF
-    path folds L*m*dim literal multiply-adds into one whole-stage-
-    codegen expression whose COMPILE time dominates this query
-    (~3s per fresh plan, data-independent); the arrow plan is tiny.
+    (L, m) instead of memory. Candidates are scored by cosine_arrow.
     """
     c = lsh_buckets(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")),
@@ -435,7 +383,6 @@ def cosine_topk_lsh(
         n_tables,
         planes_per_table,
         dim,
-        impl=impl,
     )
     q = lsh_buckets(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")),
@@ -443,7 +390,6 @@ def cosine_topk_lsh(
         n_tables,
         planes_per_table,
         dim,
-        impl=impl,
     )
     joined = (
         c.join(F.broadcast(q), ["table", "bucket"])
@@ -451,24 +397,10 @@ def cosine_topk_lsh(
         # a pair can collide in several tables -> dedup before scoring
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    if impl == "arrow":
-        sim = cosine_arrow(joined, "__qvec", "__cvec", "cosine").select(
-            "query_id", "neighbor_id", "cosine"
-        )
-    else:
-        sim = joined.select(
-            "query_id",
-            "neighbor_id",
-            _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    sim = cosine_arrow(joined, "__qvec", "__cvec").select(
+        "query_id", "neighbor_id", "cosine"
     )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(sim, k)
 
 
 def _probe_cells(q: DataFrame, centers: list, n_probe: int) -> DataFrame:
@@ -557,14 +489,7 @@ def cosine_topk_ivf(
         "neighbor_id",
         _cosine(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(sim, k)
 
 
 def quantize_int8_stats(
@@ -617,37 +542,29 @@ def quantize_int8_stats(
     )
 
 
-def _ivf_sampled_candidates(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_centroids: int,
-    n_probe: int,
-    salt: str,
-) -> DataFrame:
-    """Shared IVF candidate stage (md5-sampled centroids -> corpus
-    cell assignment -> query probes -> candidate pairs). Both
-    cosine_topk_ivf_sampled and cosine_topk_ivf_pq rank over THESE
-    candidates -- one implementation, so "same cells" is a structural
-    guarantee rather than two copies staying in sync. Returns
-    (query_id, neighbor_id), self-pairs excluded.
+def _sampled_assign(
+    corpus: DataFrame, vec_col: str, id_col: str, n_centroids: int, salt: str
+) -> tuple[DataFrame, DataFrame]:
+    """The sampled-centroid stage of IVF and SemDeDup: the centroids are
+    the n_centroids corpus vectors first in md5(salt:id) order
+    (sampling.bottom_k_sample), and every corpus vector is assigned to
+    its argmax-cosine centroid (ties to the smaller cent_id). Returns
+    (cent, assign): cent is (cent_id, __cv), assign is
+    (__id, __v, cent_id).
 
-    top-n_centroids by md5 rank via sort+limit, NOT a global window:
-    Catalyst compiles orderBy+limit to TakeOrderedAndProject
-    (per-partition heap + n_centroids-row merge), while an
-    unpartitioned row_number() would drag the whole corpus through
-    one task.
+    The sample is sort+limit, NOT a global window: Catalyst compiles
+    orderBy+limit to TakeOrderedAndProject (per-partition heap +
+    n_centroids-row merge), while an unpartitioned row_number() would
+    drag the whole corpus through one task. The centroids are
+    broadcast; the assignment widens the corpus n_centroids-fold and
+    reduces it with one window keyed by id.
     """
-    cent = (
-        corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("__cv"))
-        .orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col("cent_id").cast("string"))),
-            F.col("cent_id"),
-        )
-        .limit(n_centroids)
+    cent = bottom_k_sample(
+        corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("__cv")),
+        "cent_id",
+        n_centroids,
+        salt,
     )
-
     w_assign = Window.partitionBy("__id").orderBy(
         F.col("__cc").desc(), F.col("cent_id").asc()
     )
@@ -659,8 +576,28 @@ def _ivf_sampled_candidates(
         .withColumn("__cc", _cosine(F.col("__v"), F.col("__cv")))
         .withColumn("__arnk", F.row_number().over(w_assign))
         .filter(F.col("__arnk") == 1)
-        .select(F.col("__id").alias("neighbor_id"), "cent_id")
+        .select("__id", "__v", "cent_id")
     )
+    return cent, assign
+
+
+def _ivf_sampled_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    vec_col: str,
+    id_col: str,
+    n_centroids: int,
+    n_probe: int,
+    salt: str,
+) -> DataFrame:
+    """Shared IVF candidate stage (sampled centroids -> corpus cell
+    assignment -> query probes -> candidate pairs). Both
+    cosine_topk_ivf_sampled and cosine_topk_ivf_pq rank over THESE
+    candidates -- one implementation, so "same cells" is a structural
+    guarantee rather than two copies staying in sync. Returns
+    (query_id, neighbor_id), self-pairs excluded.
+    """
+    cent, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids, salt)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("__qc").desc(), F.col("cent_id").asc()
     )
@@ -673,7 +610,9 @@ def _ivf_sampled_candidates(
         .select("query_id", "cent_id")
     )
     return (
-        probes.join(assign, "cent_id")
+        probes.join(
+            assign.select(F.col("__id").alias("neighbor_id"), "cent_id"), "cent_id"
+        )
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
@@ -718,14 +657,7 @@ def cosine_topk_ivf_sampled(
             _cosine(F.col("__qv"), F.col("__nv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(sims, k)
 
 
 # ---------------------------------------------------------------------------
@@ -746,8 +678,8 @@ def semantic_dedup_sampled(
     drop every item that has a higher-priority (smaller-id) in-cluster
     neighbor with cosine >= tau. Returns (id, cent_id, keep).
 
-    The cluster step here uses the same deterministic md5-sampled
-    centroids as cosine_topk_ivf_sampled, so the whole pipeline --
+    The cluster step is _sampled_assign, the same md5-sampled
+    centroid stage cosine_topk_ivf_sampled runs, so the whole pipeline --
     centroid choice, assignment, in-cluster pairs, prune rule -- has an
     exact DuckDB oracle (KMeans centroids would refine cluster quality
     without changing the shape).
@@ -759,28 +691,7 @@ def semantic_dedup_sampled(
     corpus (FAISS-scale runs use ~100k clusters). No broadcast of the
     corpus anywhere; the only broadcast is the k x dim centroid table.
     """
-    cent = (
-        corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("__cv"))
-        .orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col("cent_id").cast("string"))),
-            F.col("cent_id"),
-        )
-        .limit(n_centroids)
-    )
-
-    w_assign = Window.partitionBy("__id").orderBy(
-        F.col("__cc").desc(), F.col("cent_id").asc()
-    )
-    assign = (
-        fan_out_scan(
-            corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        )
-        .crossJoin(F.broadcast(cent))
-        .withColumn("__cc", _cosine(F.col("__v"), F.col("__cv")))
-        .withColumn("__arnk", F.row_number().over(w_assign))
-        .filter(F.col("__arnk") == 1)
-        .select("__id", "__v", "cent_id")
-    )
+    _, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids, salt)
     # assign feeds three consumers (pair-join sides + final output);
     # one tracked persist computes the centroid fanout ONCE instead of
     # three corpus scans (released at next query via release_persisted)
@@ -833,23 +744,15 @@ def _pq_codebook(
     Returns (sub_id, code, codeword): n_sub * codes_per_sub tiny rows.
     Production refinement is per-subspace KMeans; shape is identical.
     """
-    sample = (
-        corpus.select(F.col(id_col).alias("__sid"), F.col(vec_col).alias("__sv"))
-        .orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col("__sid").cast("string"))),
-            F.col("__sid"),
-        )
-        .limit(codes_per_sub)
+    sample = bottom_k_sample(
+        corpus.select(F.col(id_col).alias("__sid"), F.col(vec_col).alias("__sv")),
+        "__sid",
+        codes_per_sub,
+        salt,
     )
     # rank within the codes_per_sub-row sample only (window input is tiny)
     ranked = sample.withColumn(
-        "code",
-        F.row_number().over(
-            Window.orderBy(
-                F.md5(F.concat(F.lit(salt + ":"), F.col("__sid").cast("string"))),
-                F.col("__sid"),
-            )
-        ),
+        "code", F.row_number().over(Window.orderBy(*sample_order("__sid", salt)))
     )
     return ranked.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
@@ -973,24 +876,7 @@ def pq_adc_topk(
             _cosine(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF index lifecycle: build ONCE, persist, probe MANY -- the
-# production shape of IVF ANN. cosine_topk_ivf above recomputes the
-# clustering per call (fine for a one-shot query, wrong for a serving
-# or repeated-batch setting); these three split the index build from
-# the probe so the expensive step amortizes across probe jobs and
-# sessions.
-# ---------------------------------------------------------------------------
+    return _topk(sims, k, "adc_cosine")
 
 
 def cosine_topk_ivf_pq(
@@ -1040,11 +926,4 @@ def cosine_topk_ivf_pq(
             _cosine(F.col("__qv"), F.col("recon")).alias("adc_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
-    )
+    return _topk(sims, k, "adc_cosine")

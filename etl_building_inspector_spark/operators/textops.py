@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from ._parallel import fan_out_scan
+from .sampling import sample_hash_u32, sample_order
 
 # --- PII patterns (shared with the SQL oracles; RE2/Java-portable:
 # no backreferences, no lookaround) --------------------------------------
@@ -219,15 +220,7 @@ def stratified_sample(
     after repartitioning or file reordering. Thresholds are
     precomputed integer literals, so the comparison is integer-only.
     """
-    u32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u32 = sample_hash_u32(id_col, salt)
     thresholds = {s: int(r * 2**32) for s, r in rates.items()}
     thr = F.lit(int(default_rate * 2**32))
     for s, t in sorted(thresholds.items()):
@@ -599,10 +592,7 @@ def domain_cap(
     if a single domain exceeds task-memory row counts.
     """
     rk = F.row_number().over(
-        Window.partitionBy(domain_col).orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
-            F.col(id_col),
-        )
+        Window.partitionBy(domain_col).orderBy(*sample_order(id_col, salt))
     )
     return df.select(
         F.col(id_col),

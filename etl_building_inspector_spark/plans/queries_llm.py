@@ -31,6 +31,9 @@ from ..operators.dedup import (
     simhash_hamming_pairs,
 )
 from ..operators.similarity import (
+    LSH_PLANES_CAP,
+    LSH_PLANES_FLOOR,
+    LSH_TARGET_BUCKET_WIDTH,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embedding_neardup_lsh,
@@ -535,10 +538,6 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=ANN_LSH_TABLES,
         planes_per_table=ANN_LSH_PLANES,
         dim=EMB_DIM,
-        # arrow kernels: bit-identical buckets/cosines (pinned in
-        # tests); avoids the ~3s data-independent codegen compile of
-        # the 8x3x64-literal HOF expression that dominated this query.
-        impl="arrow",
     )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
@@ -658,7 +657,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold). Exact all-pairs here (oracle-checkable); at corpus
     scale the candidate set comes from lsh_buckets/cosine_topk_lsh
     instead of the triangle join -- same scoring expression."""
-    from ..operators.similarity import with_cosine
+    from ..operators.similarity import _cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     # The streamed side of an all-pairs BNLJ must be partitioned by
@@ -676,7 +675,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b")
     )
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-    scored = with_cosine(pairs, "emb_a", "emb_b", "cosine")
+    # unrounded: identical sequential folds yield bit-identical doubles
+    # in Spark and the DuckDB list_reduce oracle; round() is not
+    # engine-portable at half-boundaries.
+    scored = pairs.withColumn("cosine", _cosine(F.col("emb_a"), F.col("emb_b")))
     return scored.filter(F.col("cosine") >= 0.35).select(
         F.col("id_a").cast("long"), F.col("id_b").cast("long"), "cosine"
     )
@@ -722,18 +724,12 @@ def _emb_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(pert)
 
 
-def _adaptive_planes_cte(
-    n_tables: int,
-    src: str = "emb",
-    target_bucket_width: int = 4,
-    floor: int = 4,
-    cap: int = 16,
-    dim: int = EMB_DIM,
-) -> str:
+def _adaptive_planes_cte(n_tables: int, src: str = "emb", dim: int = EMB_DIM) -> str:
     """Planes CTE that derives m from count(*) of `src` EXACTLY as the
     engine does (similarity.adaptive_planes_per_table: m = clamp(
-    ceil(log2(max(n,2)/w)), floor, cap)), then regenerates the
-    hyperplanes in SQL from the same md5 byte stream as
+    ceil(log2(max(n,2)/w)), floor, cap), from the same three
+    similarity.LSH_* constants), then regenerates the hyperplanes in
+    SQL from the same md5 byte stream as
     similarity._hyperplane -- seed = tbl*m + p, value k of block i is
     the big-endian signed int32 at md5(f'{seed}:{i}') byte offset 4k,
     divided by 2^31 (exact in double). This retired the static-m soak
@@ -745,8 +741,8 @@ def _adaptive_planes_cte(
     assert dim % 4 == 0, "block/offset grid assumes dim % 4 == 0"
     n_blocks = dim // 4
     return f"""params AS (
-  SELECT LEAST({cap}, GREATEST({floor}, CAST(CEIL(LOG2(
-    GREATEST((SELECT count(*) FROM {src}), 2) / {float(target_bucket_width)}
+  SELECT LEAST({LSH_PLANES_CAP}, GREATEST({LSH_PLANES_FLOOR}, CAST(CEIL(LOG2(
+    GREATEST((SELECT count(*) FROM {src}), 2) / {float(LSH_TARGET_BUCKET_WIDTH)}
   )) AS INTEGER))) AS m
 ),
 seeds AS (
@@ -754,7 +750,7 @@ seeds AS (
          ts.t * params.m + ps.p AS seed
   FROM generate_series(0, {n_tables - 1}) AS ts(t)
   CROSS JOIN params
-  JOIN generate_series(0, {cap - 1}) AS ps(p) ON ps.p < params.m
+  JOIN generate_series(0, {LSH_PLANES_CAP - 1}) AS ps(p) ON ps.p < params.m
 ),
 planevals AS (
   SELECT s.tbl, s.bit, g.blk, o.off,
@@ -820,10 +816,6 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes_per_table=None,
         dim=EMB_DIM,
         max_bucket_width=NEARDUP_BUCKET_CAP,
-        # Arrow kernels for plane dots + candidate cosines: bit-exact
-        # with the HOF path / DuckDB oracle (sequential-over-dims
-        # accumulation; pinned in tests), ~2-3x warm on this query.
-        impl="arrow",
     )
     return out.select(
         F.col("id_a").cast("long").alias("id_a"),

@@ -146,7 +146,6 @@ def decontaminate_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=DECON_EMB_TABLES,
         planes_per_table=DECON_EMB_PLANES,
         dim=EMB_DIM,
-        impl="arrow",
     )
     cb = lsh_buckets(corpus, "embedding", **kw).select(
         F.col("vec_id").alias("corpus_id"),

@@ -18,17 +18,18 @@ def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
     """Build (or fetch) the shared SparkSession.
 
     Local parallelism comes from ``SPARK_GRAFT_CPUS`` (default: all
-    cores). ``spark.sql.shuffle.partitions`` is sized to the local core
-    count -- on a real cluster this is overridden by AQE coalescing,
-    which stays enabled here so plans behave the same way at 1000
-    executors.
+    cores). ``spark.sql.shuffle.partitions`` is pinned to 32 whatever
+    the core count; AQE coalescing, which stays enabled here so plans
+    behave the same way at 1000 executors, shrinks small shuffles at
+    runtime.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # shuffle sizing: ~cores locally; AQE re-coalesces at runtime so
-        # the same code scales to cluster partition counts.
+        # shuffle sizing: a fixed 32, not the core count; AQE
+        # re-coalesces at runtime so the same code scales to cluster
+        # partition counts.
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -51,7 +51,6 @@ _HEAVY_PATTERNS = [
     "test_streaming.py::test_watermark_drops_late_data",
     "test_streaming.py::test_streaming_dedup_within_watermark",
     "test_similarity.py::test_neardup_lsh_vs_triangle_oracle",
-    "test_similarity.py::test_arrow_buckets_bit_identical_to_hof",
     "test_similarity.py::test_lsh_recall_reasonable",
     "test_similarity.py::test_ivf_pq_consistent_with_pq_adc",
     "test_dedup_caps.py::test_simhash_hamming_cap_and_exact_recall",

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_building_inspector_spark.operators.similarity import with_cosine
+from etl_building_inspector_spark.operators.similarity import _cosine
 from etl_building_inspector_spark.plans import queries_llm6 as m
 from etl_building_inspector_spark.plans.registry import QUERIES
 from etl_building_inspector_spark.sources.tables import load_table
@@ -43,7 +43,9 @@ def test_decon_embedding_recall_vs_bruteforce(spark, sf_dir):
     allpairs = corpus.crossJoin(bench)
     exact = {
         r.vec_id
-        for r in with_cosine(allpairs, "embedding", "b_emb")
+        for r in allpairs.withColumn(
+            "cosine", _cosine(F.col("embedding"), F.col("b_emb"))
+        )
         .where(F.col("cosine") >= m.DECON_EMB_THRESHOLD)
         .select("vec_id")
         .distinct()

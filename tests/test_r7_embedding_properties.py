@@ -48,7 +48,7 @@ def _cos(a, b) -> float:
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
     """Pure-python twin of the md5-byte hyperplane spec
-    (operators/similarity.py:123) -- REIMPLEMENTED, not imported."""
+    (operators/similarity.py::_hyperplane) -- REIMPLEMENTED, not imported."""
     vals: list[float] = []
     i = 0
     while len(vals) < dim:

@@ -188,20 +188,38 @@ def test_ivf_recall_reasonable(spark, emb):
     assert recall >= 0.5
 
 
-def test_arrow_buckets_bit_identical_to_hof(spark, emb):
-    """The vectorized Arrow bucket kernel must emit EXACTLY the HOF
-    path's (id, table, bucket) rows — same IEEE fold order over dims
-    (float32 storage widened exactly)."""
-    from etl_building_inspector_spark.operators.similarity import (
-        lsh_buckets,
-        lsh_buckets_arrow,
+def test_lsh_buckets_match_duckdb_twin(spark, emb, sf_dir):
+    """The Arrow bucket kernel must emit EXACTLY the (id, table, bucket)
+    rows the DuckDB twin computes from the same seeds
+    (queries_llm._planes_cte + _buckets_cte, the SQL the LSH oracles
+    are built from): same IEEE fold order over dims, float32 storage
+    widened exactly. Set equality in both directions."""
+    import duckdb
+
+    from etl_building_inspector_spark.operators.similarity import lsh_buckets
+    from etl_building_inspector_spark.plans.queries_llm import (
+        _buckets_cte,
+        _planes_cte,
     )
 
-    a = lsh_buckets(emb, "embedding", 6, 8).select("vec_id", "table", "bucket")
-    b = lsh_buckets_arrow(emb, "embedding", 6, 8).select(
-        "vec_id", "table", "bucket"
+    got = {
+        (r.vec_id, r.table, r.bucket)
+        for r in lsh_buckets(emb, "embedding", 6, 8)
+        .select("vec_id", "table", "bucket")
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
     )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    want = set(
+        con.execute(
+            f"WITH {_planes_cte(6, 8)}, {_buckets_cte()} "
+            "SELECT vid, tbl, bucket FROM buckets"
+        ).fetchall()
+    )
+    assert len(want) == 6 * emb.count()
+    assert got - want == set() and want - got == set()
 
 
 def test_arrow_cosine_bit_identical_to_hof(spark, sf_dir):
@@ -209,8 +227,8 @@ def test_arrow_cosine_bit_identical_to_hof(spark, sf_dir):
     DOUBLE-typed synthesized vectors too (the kernel widens, never
     narrows — forcing float32 would round these)."""
     from etl_building_inspector_spark.operators.similarity import (
+        _cosine,
         cosine_arrow,
-        with_cosine,
     )
     from etl_building_inspector_spark.plans.queries_llm import _emb_with_dups
 
@@ -222,7 +240,9 @@ def test_arrow_cosine_bit_identical_to_hof(spark, sf_dir):
         F.col("vec_id").alias("ib"), F.col("embedding").alias("vb")
     )
     pairs = a.join(b, F.col("ia") + 1 == F.col("ib"))
-    hof = with_cosine(pairs, "va", "vb").select("ia", "ib", "cosine")
+    hof = pairs.withColumn("cosine", _cosine(F.col("va"), F.col("vb"))).select(
+        "ia", "ib", "cosine"
+    )
     arw = cosine_arrow(pairs, "va", "vb").select("ia", "ib", "cosine")
     assert hof.exceptAll(arw).count() == 0 and arw.exceptAll(hof).count() == 0
 
