@@ -43,7 +43,8 @@ def _md5_key(id_col: Column | str, salt: str) -> Column:
 
 def sample_hash_u32(id_col: Column | str, salt: str) -> Column:
     """u32(md5(salt:id)) -- the shared hash-threshold sampling value
-    (hash_split, textops.stratified_sample; DuckDB twin:
+    (hash_split, textops.stratified_sample, the mixture-resample,
+    epoch-shuffle and negative-sampling queries; DuckDB twin:
     CAST(concat('0x', substr(md5(...), 1, 8)) AS BIGINT))."""
     return F.conv(F.substring(_md5_key(id_col, salt), 1, 8), 16, 10).cast("long")
 
@@ -51,8 +52,9 @@ def sample_hash_u32(id_col: Column | str, salt: str) -> Column:
 def sample_order(id_col: str, salt: str) -> tuple[Column, Column]:
     """(md5(salt:id) asc, id asc): the total order of every bottom-k
     sample and per-group rank (bottom_k_sample, group_bottom_k,
-    textops.domain_cap, the similarity centroid and codebook
-    samples). The id tiebreak makes it total."""
+    textops.domain_cap, the similarity centroid and codebook samples,
+    the class-balanced and epoch-shuffle queries). The id tiebreak
+    makes it total."""
     return _md5_key(id_col, salt).asc(), F.col(id_col).asc()
 
 

@@ -1,15 +1,25 @@
 """The reference's `transform` step (building-inspector.js:371-412),
-re-expressed as one declarative DataFrame DAG.
+re-expressed as one declarative DataFrame DAG that, like the
+reference, reads each feature once and emits every record kind from it.
 
-Reference dataflow (SURVEY section 3):
-  Phase A: sheets + layer-boroughs loaded in memory   -> broadcast dims
-  Phase B: consolidated features -> building/address objects,
-           mapwarper relations, borough logs; polygons indexed per
-           layer                                      -> convert_consolidated
-  Phase C: toponyms -> objects/relations/logs; point-in-polygon probe
-           -> st:sameAs relations                     -> convert_toponyms
-                                                          + spatial_sameas
-  Sink: NDJSON stream of {type, obj} records          -> write_ndjson
+Dataflow (SURVEY section 3), one pass per source:
+  Phase A: sheets + layer-boroughs                    -> broadcast dims
+  Phase B: consolidated -> D1 keep-first, J1/J2 joins, polygon parse,
+           F2 filter                                  -> _enrich_consolidated
+           -> building object, 2 mapwarper st:in, borough log, and per
+           address an object + its st:in              -> _building_records
+  Phase C: toponyms -> point parse, P7 id, D2 keep-first, J1/J2 joins
+                                                      -> _enrich_toponyms
+           -> toponym object, 2 mapwarper st:in, borough log
+                                                      -> _toponym_records
+           enriched toponyms x enriched buildings: point-in-polygon
+           probe -> st:sameAs or one of two miss logs -> _same_as_records
+  Sink: the three record streams in one union         -> write_ndjson
+
+Each `_*_records` builds an array of records in the one wide shape
+(`_RECORD_COLS`) per enriched row and emits it with one inline, so a
+source is scanned and deduplicated once per consumer of its enriched
+frame (generator, probe), not once per record kind.
 
 Deviations (documented, SURVEY section 7 "hard parts" respected):
   * global output order relaxed (Spark is set-oriented; the Space/Time
@@ -27,10 +37,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.ids import base62_of_hex
 from ..operators.dedup import keep_first
 from ..operators.spatial import spatial_join_broadcast
+from ..schemas import ADDRESS_ENTRY
 from ..sources.geojson import (
     parse_addresses,
     parse_point,
@@ -87,12 +99,119 @@ def _sheet_dim(sheets_raw: DataFrame) -> DataFrame:
     )
 
 
-def convert_consolidated(
-    consolidated_raw: DataFrame, sheets_raw: DataFrame, layers: DataFrame
+# E3: every record kind shares one wide shape (building-inspector.js:
+# 315-318); fields a kind does not set stay NULL.
+_DATA = (
+    "struct<sheet_id:bigint,layer_id:bigint,map_id:int,"
+    "colors:array<string>,borough:string,number:string>"
+)
+_RECORD_COLS = {  # name -> fixed type, in output order
+    "record_type": "string",
+    "id": "string",
+    "type": "string",
+    "valid_since": "int",
+    "valid_until": "int",
+    "name": "string",
+    "data": _DATA,
+    "geom_type": "string",
+    "geom_coords_json": "string",
+    "rel_from": "string",
+    "rel_to": "string",
+    "rel_type": "string",
+    "error": "string",
+}
+
+
+def _null(c: Column | None) -> Column:
+    return F.lit(None) if c is None else c
+
+
+def _record(record_type: str, **fields: Column | None) -> Column:
+    """One record of kind `record_type` as a struct in `_RECORD_COLS`
+    order, each field cast to its fixed type (a no-op where it already
+    has it), so records of every kind fit in one array."""
+    return F.struct(
+        F.lit(record_type).alias("record_type"),
+        *(
+            _null(fields.get(c)).cast(t).alias(c)
+            for c, t in _RECORD_COLS.items()
+            if c != "record_type"
+        ),
+    )
+
+
+def _object(
+    id_: Column, type_: str, geom_type: str, geom_coords_json: Column,
+    name: Column | None = None, colors: Column | None = None,
+    number: Column | None = None,
+) -> Column:
+    """An object record of the enriched row in scope (sheet, layer,
+    mapId, year and borough come from its columns)."""
+    data = F.struct(
+        F.col("sheet_id").alias("sheet_id"),
+        F.col("layer_id").alias("layer_id"),
+        F.col("map_id").alias("map_id"),
+        _null(colors).alias("colors"),
+        F.col("borough").alias("borough"),
+        _null(number).alias("number"),
+    )
+    return _record(
+        "object",
+        id=id_,
+        type=F.lit(type_),
+        valid_since=F.col("year"),
+        valid_until=F.col("year"),
+        name=name,
+        data=data,
+        geom_type=F.lit(geom_type),
+        geom_coords_json=geom_coords_json,
+    )
+
+
+def _relation(rel_from: Column, rel_to: Column, rel_type: str) -> Column:
+    return _record(
+        "relation", rel_from=rel_from, rel_to=rel_to, rel_type=F.lit(rel_type)
+    )
+
+
+def _log(error: Column) -> Column:
+    return _record("log", error=error)
+
+
+def _emit(
+    enriched: DataFrame, object_id: Column, obj: Column,
+    more: Column | None = None,
 ) -> DataFrame:
-    """Consolidated features -> record stream (building-inspector.js:
-    94-181). Returns the wide record union; see module docstring for
-    the D1-before-F2 ordering contract."""
+    """The one generator per source: each enriched row becomes its
+    object, its two mapwarper `st:in` relations (E2, building-
+    inspector.js:183-202: mapwarper/{mapId} and mapwarper/layer-
+    {layerId}), its borough log when the layer has no borough, and the
+    records in `more`; then one inline emits them all."""
+    records = F.array(
+        obj,
+        _relation(object_id, F.concat(F.lit(f"{MAPWARPER}/"), F.col("map_id")), "st:in"),
+        _relation(
+            object_id, F.concat(F.lit(f"{MAPWARPER}/layer-"), F.col("layer_id")), "st:in"
+        ),
+        F.when(
+            F.col("borough").isNull(),
+            _log(F.concat(F.lit("Can't find borough for layer "), F.col("layer_id"))),
+        ),
+    )
+    if more is not None:
+        records = F.concat(records, more)
+    # array_compact: drop the NULL borough-log slots (and declare the
+    # array NULL-free, so inline keeps record_type non-nullable)
+    return enriched.select(F.inline(F.array_compact(records)))
+
+
+def _enrich_consolidated(
+    consolidated_raw: DataFrame, sheets_dim: DataFrame, layers: DataFrame
+) -> DataFrame:
+    """Consolidated features, enriched once (building-inspector.js:
+    94-181): D1 keep-first, then the J1 sheet and J2 borough joins,
+    the polygon parse and the F2 filter -- in that order; see the
+    module docstring for the D1-before-F2 contract."""
     feats = consolidated_raw.select(
         F.col("properties.id").alias("building_id"),
         # try_cast: parseInt-style leniency that also survives ANSI
@@ -108,7 +227,6 @@ def convert_consolidated(
     # D1: keep-first BEFORE anything else (module cache at :97-100)
     feats = keep_first(feats, keys=["building_id"], order_by=["_seq"])
 
-    sheets_dim = _sheet_dim(sheets_raw)
     enriched = feats.join(F.broadcast(sheets_dim), "sheet_id", "inner").join(
         F.broadcast(layers), "layer_id", "left"
     )
@@ -120,119 +238,61 @@ def convert_consolidated(
     # F2: degenerate outer ring (<4 coords) drops the ENTIRE feature --
     # object, relations, addresses, and the would-be borough log
     # (building-inspector.js:138-140). Runs after D1 by construction.
-    enriched = enriched.filter(
+    return enriched.filter(
         F.size(F.try_element_at(F.col("polygon"), F.lit(1))) >= 4
     )
 
-    data = F.struct(
-        F.col("sheet_id").alias("sheet_id"),
-        F.col("layer_id").alias("layer_id"),
-        F.col("map_id").alias("map_id"),
-        F.when(
+
+def _building_records(buildings: DataFrame) -> DataFrame:
+    """Consolidated records: the building object and, per address
+    (E1 + J4, building-inspector.js:143-178), an st:Address object and
+    its st:in relation to the building. Address i pairs with point
+    geometries[i+2] (1-based; geometries[1] is the polygon)."""
+    building_id = F.col("building_id").cast("string")
+    building = _object(
+        building_id,
+        "st:Building",
+        "Polygon",
+        F.col("polygon_json"),
+        colors=F.when(
             F.col("consensus_color").isNotNull(),
             F.split(F.col("consensus_color"), ","),
-        ).alias("colors"),
-        F.col("borough").alias("borough"),
-        F.lit(None).cast("string").alias("number"),
-    )
-    objects = enriched.select(
-        F.lit("object").alias("record_type"),
-        F.col("building_id").cast("string").alias("id"),
-        F.lit("st:Building").alias("type"),
-        F.col("year").alias("valid_since"),
-        F.col("year").alias("valid_until"),
-        F.lit(None).cast("string").alias("name"),
-        data.alias("data"),
-        F.lit("Polygon").alias("geom_type"),
-        F.col("polygon_json").alias("geom_coords_json"),
-        F.col("layer_id").alias("_layer_id"),
-        F.col("polygon").alias("_polygon"),
+        ),
     )
 
-    relations = _mapwarper_relations(
-        enriched, F.col("building_id").cast("string")
-    )
+    def address(a: Column, i: Column) -> Column:
+        address_id = F.concat(F.col("building_id"), F.lit("-"), i + 1)
+        point = F.try_element_at(F.col("geometries"), i + 2)
+        obj = _object(
+            address_id,
+            "st:Address",
+            "Point",
+            point.getField("coordinates"),
+            name=a.getField("flag_value"),
+            number=a.getField("flag_value"),
+        )
+        return F.array(obj, _relation(address_id, building_id, "st:in"))
 
-    logs = enriched.filter(F.col("borough").isNull()).select(
-        F.lit("log").alias("record_type"),
-        F.concat(
-            F.lit("Can't find borough for layer "), F.col("layer_id")
-        ).alias("error"),
+    no_addresses = F.array().cast(T.ArrayType(ADDRESS_ENTRY))
+    addresses = F.flatten(
+        F.transform(F.coalesce(F.col("addresses"), no_addresses), address)
     )
-
-    # E1 + J4: one row per address, point geometry positionally aligned
-    # with geometries[i+1] (building-inspector.js:143-178)
-    addr = enriched.filter(F.col("addresses").isNotNull()).select(
-        "building_id",
-        "sheet_id",
-        "layer_id",
-        "map_id",
-        "borough",
-        "year",
-        "geometries",
-        F.posexplode("addresses").alias("pos", "address"),
-    )
-    addr = addr.withColumn(
-        "point_raw",
-        F.try_element_at(F.col("geometries"), F.col("pos").cast("int") + 2),
-    ).withColumn("address_id", F.concat("building_id", F.lit("-"), F.col("pos") + 1))
-    addr_data = F.struct(
-        F.col("sheet_id").alias("sheet_id"),
-        F.col("layer_id").alias("layer_id"),
-        F.col("map_id").alias("map_id"),
-        F.lit(None).cast("array<string>").alias("colors"),
-        F.col("borough").alias("borough"),
-        F.col("address.flag_value").alias("number"),
-    )
-    addr_objects = addr.select(
-        F.lit("object").alias("record_type"),
-        F.col("address_id").alias("id"),
-        F.lit("st:Address").alias("type"),
-        F.col("year").alias("valid_since"),
-        F.col("year").alias("valid_until"),
-        F.col("address.flag_value").alias("name"),
-        addr_data.alias("data"),
-        F.lit("Point").alias("geom_type"),
-        F.col("point_raw").getField("coordinates").alias("geom_coords_json"),
-    )
-    addr_relations = addr.select(
-        F.lit("relation").alias("record_type"),
-        F.col("address_id").alias("rel_from"),
-        F.col("building_id").cast("string").alias("rel_to"),
-        F.lit("st:in").alias("rel_type"),
-    )
-
-    return _union_records([objects, relations, logs, addr_objects, addr_relations])
+    return _emit(buildings, building_id, building, addresses)
 
 
-def _mapwarper_relations(enriched: DataFrame, from_id: Column) -> DataFrame:
-    """E2: exactly two relations per object (building-inspector.js:
-    183-202): -> mapwarper/{mapId} and mapwarper/layer-{layerId}."""
-    pair = F.array(
-        F.concat(F.lit(f"{MAPWARPER}/"), F.col("map_id")),
-        F.concat(F.lit(f"{MAPWARPER}/layer-"), F.col("layer_id")),
-    )
-    return enriched.select(
-        F.lit("relation").alias("record_type"),
-        from_id.alias("rel_from"),
-        F.explode(pair).alias("rel_to"),
-        F.lit("st:in").alias("rel_type"),
-    )
-
-
-def convert_toponyms(
-    toponyms_raw: DataFrame, sheets_raw: DataFrame, layers: DataFrame
+def _enrich_toponyms(
+    toponyms_raw: DataFrame, sheets_dim: DataFrame, layers: DataFrame
 ) -> DataFrame:
-    """Toponym features -> record stream (building-inspector.js:
-    206-253). Surrogate id = toponym-{sheetId}-{base62(md5(coords))}
-    (P7, :207-209); content-hash dedup D2 keyed on it."""
+    """Toponym features, enriched once (building-inspector.js:
+    206-253): point parse, surrogate id toponym-{sheetId}-{base62(md5(
+    coords))} (P7, :207-209), D2 content-hash keep-first on it, then
+    the J1 sheet and J2 borough joins."""
     from .._dist import ensure_workers_can_import
 
     ensure_workers_can_import(toponyms_raw.sparkSession)
     feats = toponyms_raw.select(
         F.col("properties.sheet_id").alias("sheet_id"),
         F.col("properties.consensus").alias("name"),
-        F.col("geometry.type").alias("geom_type"),
         F.col("geometry.coordinates").alias("point_json"),
         F.col("_seq"),
     )
@@ -253,8 +313,7 @@ def convert_toponyms(
     # D2: keep-first on the content-addressed id (:211-214)
     feats = keep_first(feats, keys=["toponym_id"], order_by=["_seq"])
 
-    sheets_dim = _sheet_dim(sheets_raw)
-    enriched = (
+    return (
         feats.join(F.broadcast(sheets_dim), "sheet_id", "inner")
         .join(F.broadcast(layers), "layer_id", "left")
         # toponym mapId comes from the SHEET's map_id (:218), unlike
@@ -262,40 +321,17 @@ def convert_toponyms(
         .withColumn("map_id", F.col("sheet_map_id").try_cast("int"))
     )
 
-    data = F.struct(
-        F.col("sheet_id").alias("sheet_id"),
-        F.col("layer_id").alias("layer_id"),
-        F.col("map_id").alias("map_id"),
-        F.lit(None).cast("array<string>").alias("colors"),
-        F.col("borough").alias("borough"),
-        F.lit(None).cast("string").alias("number"),
+
+def _toponym_records(toponyms: DataFrame) -> DataFrame:
+    toponym_id = F.col("toponym_id")
+    obj = _object(
+        # yes, st:Building (:236)
+        toponym_id, "st:Building", "Point", F.col("point_json"), name=F.col("name")
     )
-    objects = enriched.select(
-        F.lit("object").alias("record_type"),
-        F.col("toponym_id").alias("id"),
-        F.lit("st:Building").alias("type"),  # yes, st:Building (:236)
-        F.col("year").alias("valid_since"),
-        F.col("year").alias("valid_until"),
-        F.col("name"),
-        data.alias("data"),
-        F.lit("Point").alias("geom_type"),
-        F.col("point_json").alias("geom_coords_json"),
-        F.col("layer_id").alias("_layer_id"),
-        F.col("point").alias("_point"),
-    )
-    relations = _mapwarper_relations(enriched, F.col("toponym_id"))
-    logs = enriched.filter(F.col("borough").isNull()).select(
-        F.lit("log").alias("record_type"),
-        F.concat(
-            F.lit("Can't find borough for layer "), F.col("layer_id")
-        ).alias("error"),
-    )
-    return _union_records([objects, relations, logs])
+    return _emit(toponyms, toponym_id, obj)
 
 
-def spatial_sameas(
-    toponym_records: DataFrame, building_records: DataFrame
-) -> DataFrame:
+def _same_as_records(toponyms: DataFrame, buildings: DataFrame) -> DataFrame:
     """J3 (building-inspector.js:275-325 + geo-indices.js): probe each
     toponym point against its layer's building polygons.
 
@@ -304,95 +340,45 @@ def spatial_sameas(
       0 polygons on a layer that HAS an index -> no-match log (:297-304)
       layer with no index at all -> error log (the geo-indices.js:44-46
       throw, caught at :306-313)
+    Every building row is an st:Building Polygon object (the F5
+    predicate, geo-indices.js:14-20, holds by construction) and every
+    toponym row an st:Building Point, so both sides read the enriched
+    frames directly.
     """
-    buildings = building_records.filter(
-        (F.col("record_type") == "object")
-        & (F.col("type") == "st:Building")
-        & (F.col("geom_type") == "Polygon")  # F5 predicate
-    ).select(
-        F.col("id").alias("building_id"),
-        F.col("_layer_id").alias("layer_id"),
+    points = toponyms.select("toponym_id", "layer_id", "point")
+    polygons = buildings.select(
+        F.col("building_id").cast("string").alias("building_id"),
+        "layer_id",
         # FULL polygon (all rings): geo-indices.js:38-50 honors holes
         # -- a toponym inside a courtyard hole must NOT match, so the
         # probe must not use the outer ring alone.
-        F.col("_polygon").alias("polygon"),
+        "polygon",
     )
-    toponyms = toponym_records.filter(
-        (F.col("record_type") == "object")
-        & (F.col("type") == "st:Building")
-        & (F.col("geom_type") == "Point")
-    ).select(
-        F.col("id").alias("toponym_id"),
-        F.col("_layer_id").alias("layer_id"),
-        F.col("_point").alias("point"),
+    matched = spatial_join_broadcast(points, polygons, how="left").select(
+        "toponym_id", points["layer_id"].alias("layer_id"), "building_id"
     )
-
-    matched = spatial_join_broadcast(toponyms, buildings, how="left")
-    relations = matched.filter(F.col("building_id").isNotNull()).select(
-        F.lit("relation").alias("record_type"),
-        F.col("toponym_id").alias("rel_from"),
-        F.col("building_id").alias("rel_to"),
-        F.lit("st:sameAs").alias("rel_type"),
-    )
-
     # distinguish empty-layer (throw path) from no-match
-    indexed_layers = buildings.select(
-        F.col("layer_id").alias("layer_id")
-    ).distinct()
-    misses = matched.filter(F.col("building_id").isNull()).select(
-        "toponym_id", toponyms["layer_id"].alias("layer_id")
-    )
-    misses = misses.join(
+    indexed_layers = polygons.select("layer_id").distinct()
+    probed = matched.join(
         F.broadcast(indexed_layers.withColumn("__indexed", F.lit(True))),
         "layer_id",
         "left",
     )
-    logs = misses.select(
-        F.lit("log").alias("record_type"),
+    toponym_id = F.col("toponym_id")
+    record = (
         F.when(
+            F.col("building_id").isNotNull(),
+            _relation(toponym_id, F.col("building_id"), "st:sameAs"),
+        )
+        .when(
             F.col("__indexed").isNull(),
-            F.concat(
-                F.lit("Error computing intersection for toponym "),
-                F.col("toponym_id"),
-            ),
+            _log(F.concat(F.lit("Error computing intersection for toponym "), toponym_id)),
         )
         .otherwise(
-            F.concat(
-                F.lit("Can't find building for toponym "), F.col("toponym_id")
-            )
+            _log(F.concat(F.lit("Can't find building for toponym "), toponym_id))
         )
-        .alias("error"),
     )
-    return _union_records([relations, logs])
-
-
-_RECORD_COLS = [
-    "record_type",
-    "id",
-    "type",
-    "valid_since",
-    "valid_until",
-    "name",
-    "data",
-    "geom_type",
-    "geom_coords_json",
-    "rel_from",
-    "rel_to",
-    "rel_type",
-    "error",
-]
-
-
-def _union_records(dfs: list[DataFrame]) -> DataFrame:
-    """E3: heterogeneous record kinds -> one wide union
-    (building-inspector.js:315-318), NULL-padded by name."""
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    for c in _RECORD_COLS:
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit(None))
-    return out
+    return probed.select(record.alias("r")).select("r.*")
 
 
 def transform(
@@ -402,20 +388,23 @@ def transform(
     sheets_path: str,
     layer_boroughs_path: str,
 ) -> DataFrame:
-    """Full transform: all record streams unioned (the reference writes
-    both phases to the same sink, :404-409). Returns the wide record
-    DataFrame; write with write_ndjson()."""
-    sheets_raw = read_sheets(spark, sheets_path)
+    """Full transform: every record kind of both sources, in one
+    DataFrame (the reference writes both phases to the same sink,
+    :404-409). Returns the wide record DataFrame (`_RECORD_COLS`);
+    write with write_ndjson()."""
+    sheets_dim = _sheet_dim(read_sheets(spark, sheets_path))
     layers = read_layer_boroughs(spark, layer_boroughs_path)
-    cons = convert_consolidated(
-        read_consolidated(spark, consolidated_path), sheets_raw, layers
+    buildings = _enrich_consolidated(
+        read_consolidated(spark, consolidated_path), sheets_dim, layers
     )
-    tops = convert_toponyms(
-        read_toponyms(spark, toponyms_path), sheets_raw, layers
+    toponyms = _enrich_toponyms(
+        read_toponyms(spark, toponyms_path), sheets_dim, layers
     )
-    same_as = spatial_sameas(tops, cons)
-    all_records = _union_records([cons, tops, same_as])
-    return all_records.select(*_RECORD_COLS)
+    return (
+        _building_records(buildings)
+        .unionByName(_toponym_records(toponyms))
+        .unionByName(_same_as_records(toponyms, buildings))
+    )
 
 
 def flatten_records(df: DataFrame) -> DataFrame:

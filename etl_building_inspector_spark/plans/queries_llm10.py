@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.sampling import sample_order
 from ..sources.tables import load_table
 from .queries_llm import _DOT_SQL, _TOKS
 from .registry import query
@@ -1049,10 +1050,7 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.groupBy("label").agg(F.count("*").alias("n_total"))
     cap = n.agg(F.min("n_total").alias("cap"))
-    w = Window.partitionBy("label").orderBy(
-        F.md5(F.concat(F.lit("bal:"), F.col("vec_id").cast("string"))),
-        F.col("vec_id"),
-    )
+    w = Window.partitionBy("label").orderBy(*sample_order("vec_id", "bal"))
     r = emb.select("label", "vec_id").withColumn("rk", F.row_number().over(w))
     kept = r.crossJoin(F.broadcast(cap)).where(F.col("rk") <= F.col("cap"))
     return (

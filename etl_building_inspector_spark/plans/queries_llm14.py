@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.sampling import sample_hash_u32
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm9 import _HLL_NUM, HLL_M, _hll_exprs
@@ -307,13 +308,7 @@ def corpus_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     draws = spark.range(NS_DRAWS).select(
         F.col("id").alias("draw_id"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ns:"), F.col("id").cast("string"))), 1, 8),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("u"),
+        sample_hash_u32("id", "ns").alias("u"),
     )
     placed = (
         draws.withColumn("cell", F.expr(f"u DIV {_BSZ}"))

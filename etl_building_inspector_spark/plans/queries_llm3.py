@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.packing import pack_concat_chunks, pack_greedy
+from ..operators.sampling import sample_hash_u32, sample_order
 from ..operators.textops import bloom_decontaminate, domain_cap
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
@@ -187,15 +188,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = w.crossJoin(F.broadcast(mx)).select(
         "lang", (F.col("ratio") / F.col("mx")).alias("rate")
     )
-    u32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(MIX_SALT + ":"), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u32 = sample_hash_u32("doc_id", MIX_SALT)
     return (
         docs.join(F.broadcast(rates), "lang")
         .select(
@@ -569,18 +562,13 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot promise either across partitionings. One shuffle on the
     shard key; each shard's order is a local sort, so shard files
     write out pre-sorted for sequential dataloader reads."""
-    from ..operators.sampling import sample_hash_u32
-
     docs = load_table(spark, sf_dir, "documents")
     salt = f"ep{EPOCH_SHUFFLE_SEED}"
     u32 = sample_hash_u32("doc_id", salt)
-    h = F.md5(
-        F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string"))
-    )
     from pyspark.sql import Window
 
     shard = (u32 % EPOCH_SHUFFLE_SHARDS).cast("long")
-    w = Window.partitionBy(shard).orderBy(h.asc(), F.col("doc_id").asc())
+    w = Window.partitionBy(shard).orderBy(*sample_order("doc_id", salt))
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         shard.alias("shard"),

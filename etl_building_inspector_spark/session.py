@@ -14,14 +14,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory as the driver heap cap: the JVM's
+    off-heap memory, the Python workers and the OS share the rest, so
+    the cap binds before the host runs out of memory."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(phys // 2 // 2**20, 1024)}m"
+
+
 def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
     """Build (or fetch) the shared SparkSession.
 
     Local parallelism comes from ``SPARK_GRAFT_CPUS`` (default: all
-    cores). ``spark.sql.shuffle.partitions`` is pinned to 32 whatever
-    the core count; AQE coalescing, which stays enabled here so plans
-    behave the same way at 1000 executors, shrinks small shuffles at
-    runtime.
+    cores), the driver heap cap from ``SPARK_GRAFT_DRIVER_MEM`` (a JVM
+    size such as ``6g``; default: half of physical memory).
+    ``spark.sql.shuffle.partitions`` is pinned to 32 whatever the core
+    count; AQE coalescing, which stays enabled here so plans behave
+    the same way at 1000 executors, shrinks small shuffles at runtime.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -45,7 +54,10 @@ def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
         # the DuckDB oracles expressible with try_cast.
         .config("spark.sql.ansi.enabled", "false")
         # local[N] = single JVM; driver memory is the only knob.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # nested-schema pruning ON (default, but pinned: the GeoJSON
         # structs rely on it for column pruning at scale).

@@ -3,12 +3,19 @@
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
+import os
+import re
 
 import pytest
 
-from etl_building_inspector_spark.plans.pipeline import transform, to_ndjson_line
+from etl_building_inspector_spark.plans.pipeline import (
+    to_ndjson_line,
+    transform,
+    write_ndjson,
+)
 
 from domain_fixtures import make_landing
 
@@ -32,16 +39,20 @@ def _toponym_id(sheet_id: int, coords: list[float]) -> str:
     return f"toponym-{sheet_id}-{_b62(int(h, 16))}"
 
 
-@pytest.fixture(scope="module")
-def records(spark, tmp_path_factory):
-    paths = make_landing(str(tmp_path_factory.mktemp("landing")))
-    df = transform(
+def _transform(spark, paths: dict[str, str]):
+    return transform(
         spark,
         paths["consolidated"],
         paths["toponyms"],
         paths["sheets"],
         paths["layer_boroughs"],
     )
+
+
+@pytest.fixture(scope="module")
+def records(spark, tmp_path_factory):
+    paths = make_landing(str(tmp_path_factory.mktemp("landing")))
+    df = _transform(spark, paths)
     rows = df.collect()
     return {
         "objects": [r for r in rows if r.record_type == "object"],
@@ -236,3 +247,52 @@ def test_flatten_paths_projection(records, spark):
     assert flat["1"].data_sheetId == 10
     assert flat["1-1"].data_number == "25"
     assert flat["1-1"].data_colors_0 is None
+
+
+def _plan_nodes(df) -> list[str]:
+    """Operator names of df's physical plan, one per plan-tree line."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [m.group(1) for m in re.finditer(r"(?m)^[\s:|+-]*(\w+)", plan)]
+
+
+def test_transform_plan_is_one_pass_per_source(spark, tmp_path):
+    """Each source is enriched once and every record kind comes out of
+    that frame, so the plan holds one keep-first window per use of an
+    enriched frame (consolidated: generator, probe, indexed layers;
+    toponyms: generator, probe), one id kernel per use of the toponym
+    frame, and one union of the three record streams. A branch per
+    record kind re-derives the sources and multiplies all three."""
+    paths = make_landing(str(tmp_path))
+    nodes = _plan_nodes(to_ndjson_line(_transform(spark, paths)))
+    assert nodes.count("Window") <= 5
+    assert nodes.count("ArrowEvalPython") <= 2
+    assert nodes.count("Union") <= 1
+
+
+# sha256 of the sorted NDJSON lines that transform + write_ndjson emit
+# for perfbench landings of 400 + 400 features: a change to the plan
+# must leave the output bytes as they are
+_NDJSON_SHA256 = {
+    1: "5ee2c66e621851fbb2ce3daffd9811792d1cbeaa8b46baf6ac0602fa3eb27d99",
+    2: "cbc13ca3c854c0c747c1fb801093a7a3f28c827e95fecfd116dcf41b7f36fc7d",
+}
+
+
+def _ndjson_sha256(out_dir: str) -> str:
+    lines = []
+    for part in glob.glob(os.path.join(out_dir, "record_type=*", "part-*")):
+        with open(part) as f:
+            lines += f.read().splitlines()
+    return hashlib.sha256("\n".join(sorted(lines)).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("seed", sorted(_NDJSON_SHA256))
+def test_ndjson_bytes_pinned(spark, tmp_path, seed):
+    from perfbench import landing as bench
+
+    landing = bench.make_landing(seed, 400, 400)
+    paths = landing.write(str(tmp_path / "landing"))
+    out_dir = str(tmp_path / "out")
+    write_ndjson(_transform(spark, paths), out_dir)
+    assert bench.diff(landing.expected, bench.read_output(out_dir)) == []
+    assert _ndjson_sha256(out_dir) == _NDJSON_SHA256[seed]

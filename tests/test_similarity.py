@@ -222,6 +222,83 @@ def test_lsh_buckets_match_duckdb_twin(spark, emb, sf_dir):
     assert got - want == set() and want - got == set()
 
 
+def _fold_order_embedding(plane: list[float]) -> list[float]:
+    """An embedding whose dot with `plane` is exactly 0.0 when its
+    products are summed in dimension order, and 1.0 (or 2.0) under any
+    other grouping. Three dims carry products 2^53, then 1 (its exact
+    value just above 1), then -2^53: in order, 2^53 + 1 ties to even
+    and drops the 1, so the dot is 0.0. Any other grouping keeps the 1
+    (1 - 2^53 is exact), and a fused multiply-add rounds 2^53 + 1.x up
+    to 2^53 + 2. All other dims are 0."""
+    import itertools
+    from fractions import Fraction
+
+    def factor(target: float, p: float, above: bool = False) -> float | None:
+        # x near target / p with x * p rounding to exactly target
+        x = target / p
+        for x in [x, *(np.nextafter(x, d * np.inf) for d in (-1, 1))]:
+            x = float(x)
+            if x * p == target and (not above or Fraction(x) * Fraction(p) > target):
+                return x
+        return None
+
+    big = 2.0**53
+    for i, j, k in itertools.permutations(range(len(plane)), 3):
+        xs = factor(big, plane[i]), factor(1.0, plane[j], True), factor(-big, plane[k])
+        if None not in xs:
+            v = [0.0] * len(plane)
+            v[i], v[j], v[k] = xs
+            return v
+    raise AssertionError("no dims give the fold-order products")
+
+
+def test_lsh_buckets_keep_the_dimension_fold_order(spark, tmp_path):
+    """The bucket kernel must sum each plane dot in dimension order, as
+    the DuckDB twin's list_reduce does, or it loses bit-exactness on a
+    vector that lies on a hyperplane. The one embedding here does, for
+    table 0's first plane (see _fold_order_embedding); it is the only
+    row, so the kernel's Arrow batch holds it alone."""
+    import duckdb
+
+    from etl_building_inspector_spark.operators.similarity import (
+        lsh_buckets,
+        lsh_planes,
+    )
+    from etl_building_inspector_spark.plans.queries_llm import (
+        _buckets_cte,
+        _planes_cte,
+    )
+
+    plane = lsh_planes(6, 8, 64)[0][2]
+    v = _fold_order_embedding(plane)
+    terms = [x * p for x, p in zip(v, plane) if x]
+    assert sum(terms) == 0.0 and terms[0] + (terms[1] + terms[2]) == 1.0
+
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        [(0, v)], "vec_id bigint, embedding array<double>"
+    ).write.parquet(path)
+    got = {
+        (r.vec_id, r.table, r.bucket)
+        for r in lsh_buckets(spark.read.parquet(path), "embedding", 6, 8)
+        .select("vec_id", "table", "bucket")
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    want = set(
+        con.execute(
+            f"WITH {_planes_cte(6, 8)}, {_buckets_cte()} "
+            "SELECT vid, tbl, bucket FROM buckets"
+        ).fetchall()
+    )
+    # the on-plane dot is 0.0, not > 0: table 0's first bit is off
+    assert [b % 2 for _, t, b in want if t == 0] == [0]
+    assert got == want
+
+
 def test_arrow_cosine_bit_identical_to_hof(spark, sf_dir):
     """cosine_arrow must match the HOF expression bit-for-bit on
     DOUBLE-typed synthesized vectors too (the kernel widens, never
