@@ -31,59 +31,55 @@ against the DuckDB oracles for every affected query.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
-# Logical operators that plan to an EXCHANGE (a shuffle query stage):
-# converting such a plan to an RDD to probe its partition count would,
-# under AQE, eagerly materialize every intermediate query stage, and
-# that shuffle work is discarded -- no exchange reuse across separate
-# executions (ADVICE r10 #1). fan_out_scan is FOR scan-shaped inputs;
-# when one of these appears anywhere in the analyzed plan the probe is
-# skipped and the input left alone (the heavy pass then runs at
-# whatever parallelism the upstream shuffle already established, which
-# is the right answer for a shuffled input). Narrow operators (union
-# of scans, generate/explode, sample, map-in-arrow) stay probe-able:
-# their RDD conversion builds the RDD without running any job.
-_NON_SCAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Deduplicate",
-    "Distinct",
-    "Repartition",
-    "RepartitionByExpression",
-    "Sort",
-    "GlobalLimit",
-    "Intersect",
-    "Except",
-    "Expand",
-    "FlatMapGroupsInPandas",
-    "CoGroup",
+# Logical nodes that keep a plan scan-shaped: leaf relations under
+# narrow row-level ops. Converting such a plan to an RDD to read its
+# partition count builds the RDD without running any job. Any other
+# node -- an exchange-planning one (join, aggregate, window, sort,
+# repartition, rebalance, cogroup ...) or one this list has never
+# heard of -- skips the probe: under AQE the RDD conversion would
+# eagerly materialize every intermediate query stage, and that
+# shuffle work is discarded (no exchange reuse across separate
+# executions). The heavy pass then runs at whatever
+# parallelism the upstream already established, which is the right
+# answer for a shuffled input.
+_NARROW_NODES = frozenset(
+    {
+        "Relation",
+        "LocalRelation",
+        "LogicalRDD",
+        "Range",
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "View",
+        "ResolvedHint",
+        "Union",
+        "Generate",
+        "Sample",
+        "MapInPandas",
+        "MapInArrow",
+    }
 )
 
-
-_NON_SCAN_RE = None  # compiled lazily; module import stays regex-free
+# A node's name opens its line of the plan string; nodes below the root
+# carry tree prefixes ('+- ', ':- ', ':  +- ', ...).
+_NODE_RE = re.compile(r"(?m)^[ :+-]*(\w+)")
 
 
 def _is_scan_only(df: DataFrame) -> bool:
-    """True iff the ANALYZED logical plan is a leaf relation under
-    narrow row-preserving ops only (Project/Filter/SubqueryAlias...).
-    String inspection of the analyzed plan: pure driver-side, never
-    triggers execution, and cheap for scan-shaped plans. Nodes below
-    the root carry tree prefixes ('+- ', ':- ', ':  +- ', ...), so the
-    match anchors on the prefix, not on line start."""
-    global _NON_SCAN_RE
-    if _NON_SCAN_RE is None:
-        import re
-
-        _NON_SCAN_RE = re.compile(
-            r"(?m)^[ :+-]*(?:" + "|".join(_NON_SCAN_NODES) + r")\b"
-        )
+    """True iff every node of the ANALYZED logical plan is in
+    _NARROW_NODES. String inspection of the analyzed plan: pure
+    driver-side, never triggers execution, and cheap for scan-shaped
+    plans."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:
         return False
-    return _NON_SCAN_RE.search(plan) is None
+    return set(_NODE_RE.findall(plan)) <= _NARROW_NODES
 
 
 def _references_cache(df: DataFrame) -> bool:
@@ -105,18 +101,19 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     The partition probe (`df.rdd.getNumPartitions()`) runs in two
     cases only (ADVICE r10 #1):
 
-      * the analyzed plan is scan-shaped (leaf relations under narrow
-        ops only): the RDD conversion is a few ms of driver work and
-        executes nothing;
+      * the analyzed plan is scan-shaped (every node in
+        _NARROW_NODES): the RDD conversion is a few ms of driver work
+        and executes nothing;
       * the plan reads a persist()ed intermediate (cache substitution
         yields an InMemoryRelation): under AQE the probe materializes
         the upstream stages, but that work fills the registered cache
         the operator is about to reuse, so nothing is discarded (this
         is the pipeline_corpus_curation_e2e shape, A/B-kept in r10).
 
-    For any other input (unpersisted join/aggregate/window upstream)
-    the helper is a no-op -- the probe would execute the upstream
-    stages once and throw the result away."""
+    For any other input (an unpersisted join/aggregate/window
+    upstream, or a node the allowlist does not know) the helper is a
+    no-op -- the probe could execute the upstream stages once and
+    throw the result away."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if not (_is_scan_only(df) or _references_cache(df)):

@@ -189,9 +189,11 @@ def spatial_join_grid(
     hashes to exactly one cell, so matches are already distinct. The
     refine is the same holes-aware parity as the broadcast join, which
     keeps hole semantics on the 100 TB no-broadcast path. Inner join
-    only -- callers needing left-outer semantics anti-join the matches
-    back (see plans/pipeline.py), because a left join on the exploded
-    cell key would duplicate misses per cell.
+    only, because a left join on the exploded cell key would duplicate
+    misses per cell. For left-outer semantics, left_anti-join the
+    points against the matches on the point's key and union the misses
+    back with NULL polygon columns, or, when the polygons fit a
+    broadcast, call spatial_join_broadcast(..., how="left").
 
     `cell_size=None` (default) auto-adapts from build-side bbox stats
     (adaptive_cell_size); pass a float to override.

@@ -2,14 +2,18 @@
 benchmark decontamination, PII redaction, repetition (Gopher-style)
 signals, TF-IDF term ranking, and deterministic hash-based sampling.
 
-All JVM-native column expressions / built-in joins and windows — no
-Python UDFs anywhere. Every operator's hashing is md5-derived and its
-arithmetic either integer or single-division double, so each has an
-exact DuckDB-SQL oracle (see plans/queries_llm2.py).
+All JVM-native column expressions / built-in joins and windows, except
+the Bloom screen shared by the three Bloom decontamination operators
+(batch, incremental, and streaming/decon.py): it hashes grams with
+xxhash64, probes with one Arrow pandas_udf and collects the (small)
+benchmark suite's gram pairs to the driver. Every other operator's
+hashing is md5-derived and its arithmetic either integer or
+single-division double, so each has an exact DuckDB-SQL oracle (see
+plans/queries_llm2.py); the screen is exact too (confirm join).
 
 100 TB design notes are inline per operator: the shapes here are
 broadcast-dim joins, map-side-combinable aggregations, and narrow
-projections — no all-pairs joins, no driver-side collects.
+projections — no all-pairs joins.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from ._cache import track_persist
 from ._parallel import fan_out_scan
 from .sampling import sample_hash_u32, sample_order
 
@@ -257,7 +262,9 @@ def _bloom_build(has, hbs, num_bits: int, k_hashes: int):
     """Build a bitarray Bloom filter from pre-hashed (ha, hb) int64
     arrays, fully vectorized. Driver-side: the benchmark gram set is
     the SMALL side by contract (eval suites are MBs against a 100 TB
-    corpus)."""
+    corpus). Bits are set independently per element, so the OR of two
+    filters is the filter of the union (pinned in
+    tests/test_r9_properties.py)."""
     import numpy as np
 
     bits = np.zeros((num_bits + 7) // 8, dtype=np.uint8)
@@ -271,6 +278,137 @@ def _bloom_build(has, hbs, num_bits: int, k_hashes: int):
     return bits
 
 
+# --- The Bloom screen shared by batch, incremental and streaming
+# decontamination: suite pairs are collected driver-side (eval suites
+# are MBs by contract), corpus grams are a persisted flat int64
+# projection, and bloom_screen is the one prefilter + confirm join. ---
+
+
+def suite_gram_pairs(
+    suite: DataFrame, text_col: str, n: int, tag: Column
+) -> dict:
+    """Distinct (ha, hb) gram hash pairs of a benchmark suite per value
+    of `tag`, as {int tag: (m, 2) int64 array}, in ONE Spark job.
+    Iteration yields only tags with grams; looking up any other tag
+    gives an empty (0, 2) array. Per-doc array_distinct keeps the
+    collected rows small; np.unique dedups across docs."""
+    from collections import defaultdict
+
+    import numpy as np
+
+    ha, hb = _gram_hash_pair(F.col("__g"))
+    rows = (
+        suite.select(
+            tag.alias("__tag"),
+            tokens(text_col).alias("__t"),
+        )
+        .select(
+            "__tag",
+            F.explode(
+                F.array_distinct(shingles(text_col, n, toks=F.col("__t")))
+            ).alias("__g"),
+        )
+        .select("__tag", ha.alias("__ha"), hb.alias("__hb"))
+        .collect()
+    )
+    by_tag: dict[int, list[tuple[int, int]]] = {}
+    for r in rows:
+        by_tag.setdefault(int(r["__tag"]), []).append((r["__ha"], r["__hb"]))
+    out = defaultdict(lambda: np.empty((0, 2), dtype=np.int64))
+    for t, p in by_tag.items():
+        out[t] = np.unique(np.array(p, dtype=np.int64), axis=0)
+    return out
+
+
+def corpus_gram_rows(
+    train: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """The corpus side of the screen: one persisted (id, __ha, __hb) row
+    per distinct gram of each doc, so the text is tokenized and hashed
+    ONCE however many screens and spines read it. explode_outer keeps a
+    doc with no grams as one row with NULL hashes, so per-doc spines
+    see every doc (count("__ha") is its gram count). Flat int64 rows
+    columnar-cache at ~3 words/gram; an earlier persist of the nested
+    struct-array column cost more to materialize than it saved."""
+
+    def _pair_struct(g):
+        ga, gb = _gram_hash_pair(g)
+        return F.struct(ga.alias("a"), gb.alias("b"))
+
+    tr = train.select(F.col(id_col), tokens(text_col).alias("__t")).select(
+        F.col(id_col),
+        F.transform(
+            F.array_distinct(shingles(text_col, n, toks=F.col("__t"))),
+            _pair_struct,
+        ).alias("__gh"),
+    )
+    return track_persist(
+        tr.select(id_col, F.explode_outer("__gh").alias("__e")).select(
+            id_col, F.col("__e.a").alias("__ha"), F.col("__e.b").alias("__hb")
+        )
+    )
+
+
+def bloom_screen(
+    grams: DataFrame,
+    pairs,
+    id_col: str,
+    num_bits: int,
+    k_hashes: int,
+) -> DataFrame:
+    """Per-doc confirmed hit counts (id, __hits) of corpus gram rows
+    `grams` (corpus_gram_rows, or a subset of them) against the suite
+    gram pairs `pairs` ((m, 2) int64, from suite_gram_pairs).
+
+    The pairs' Bloom filter (`num_bits/8` bytes whatever the suite
+    size) broadcasts to an Arrow pandas_udf that prefilters the corpus
+    grams with vectorized numpy bit probes, so only ~|true hits| +
+    fp_rate*|grams| rows reach the confirm join. The confirm join on
+    the 128-bit pair kills every false positive (two different grams
+    colliding on all 128 bits is the only divergence from the exact
+    join, ~|grams|*|pairs|/2^128), so the result is exact. Its build
+    side is an Arrow createDataFrame of the already-collected pairs (a
+    LocalRelation: the broadcast table is built with no Spark job; a
+    suite too big to collect would swap in an in-plan distinct and a
+    shuffle join). Docs with no hit have no row."""
+    import numpy as np
+    import pandas as pd
+
+    from .._dist import ensure_workers_can_import
+
+    spark = grams.sparkSession
+    ensure_workers_can_import(spark)
+    nb, kh = int(num_bits), int(k_hashes)
+    bc = spark.sparkContext.broadcast(
+        _bloom_build(pairs[:, 0], pairs[:, 1], nb, kh)
+    )
+
+    @F.pandas_udf("boolean")
+    def _might_contain(ha, hb):  # type: ignore[no-untyped-def]
+        arr = bc.value
+        p = _bloom_positions(
+            ha.to_numpy(dtype=np.int64), hb.to_numpy(dtype=np.int64), nb, kh
+        )
+        hit = ((arr[p >> 3] >> (p & 7).astype(np.uint8)) & 1).all(axis=1)
+        return pd.Series(hit)
+
+    confirm = spark.createDataFrame(
+        pd.DataFrame({"__ha": pairs[:, 0], "__hb": pairs[:, 1]}),
+        schema="__ha long, __hb long",
+    )
+    # the NULL guard keeps explode_outer's gram-less rows out of the
+    # Python kernel (the confirm join would drop them anyway)
+    return (
+        grams.filter(
+            F.col("__ha").isNotNull()
+            & _might_contain(F.col("__ha"), F.col("__hb"))
+        )
+        .join(F.broadcast(confirm), ["__ha", "__hb"])
+        .groupBy(id_col)
+        .agg(F.count("*").alias("__hits"))
+    )
+
+
 def bloom_decontaminate(
     train: DataFrame,
     benchmark: DataFrame,
@@ -282,125 +420,23 @@ def bloom_decontaminate(
 ) -> DataFrame:
     """Benchmark decontamination with a Bloom-filter PREFILTER and a
     confirm join on the gram's 128-bit xxhash64 pair — same output as
-    decontaminate_ngrams (bloom false positives are eliminated by the
-    confirm join; two DIFFERENT grams colliding on all 128 bits is the
-    only divergence, ~(n_train_grams * n_bench_grams)/2^128, i.e.
-    never even at 10^12 x 10^8 grams), so the exact-SQL oracle still
-    applies.
+    decontaminate_ngrams (the confirm join makes bloom_screen exact),
+    so the exact-SQL oracle still applies.
 
     Why a bloom when the broadcast semi-join already works: the
     broadcast side is the full gram set (~GBs for a large eval suite);
     the bloom is `num_bits/8` bytes regardless (128 KiB at the
     default) and the prefilter drops the overwhelmingly-clean corpus
     grams BEFORE the join, so the shuffle/probe volume collapses from
-    |train grams| to |bloom hits| ~= |true hits| + fp_rate*|grams|.
-
-    Everything after the shingle scans is integer-only (see
-    _gram_hash_pair): the train projection holds array<struct<a,b>>
-    hash pairs (fixed-width, several times smaller than gram strings),
-    the membership test is an Arrow-batched pandas_udf receiving two
-    int64 columns (vectorized numpy bit probes, no Python hashing, no
-    strings in Python at all), and the confirm side joins on the same
-    pair.
-
-    The train text is tokenized/hashed ONCE per run: the exploded
-    (id, ha, hb) int rows go through one tracked persist and serve
-    both consumers (bloom-probe branch + per-doc totals). An earlier
-    revision cached the pre-explode nested struct-array column, which
-    cost more to materialize than it saved; flat int64 rows cache
-    cheaply, and on a real cluster the single text scan is the point
-    (the scan dominates at TB scale).
+    |train grams| to |bloom hits|. One suite collect, one persisted
+    corpus gram projection (serving the screen and the per-doc
+    totals), one screen.
     """
-    import numpy as np
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(train.sparkSession)
-
-    from ._cache import track_persist
-
-    spark = train.sparkSession
-    bha, bhb = _gram_hash_pair(F.col("__g"))
-    bench_gram_hashes = (
-        benchmark.select(tokens(text_col).alias("__t"))
-        .select(
-            F.explode(
-                F.array_distinct(shingles(text_col, n, toks=F.col("__t")))
-            ).alias("__g")
-        )
-        .select(bha.alias("__ha"), bhb.alias("__hb"))
+    pairs = suite_gram_pairs(benchmark, text_col, n, F.lit(0))
+    ex = corpus_gram_rows(
+        fan_out_scan(train.select(id_col, text_col)), text_col, id_col, n
     )
-    # bloom-build job: per-doc-distinct hashes, no global dedup shuffle
-    # (setting a bloom bit twice is a no-op; numpy dedups below).
-    hash_rows = bench_gram_hashes.collect()  # small side by contract
-    pair_arr = np.unique(
-        np.array(
-            [(r["__ha"], r["__hb"]) for r in hash_rows], dtype=np.int64
-        ).reshape(-1, 2),
-        axis=0,
-    )
-    bits = _bloom_build(pair_arr[:, 0], pair_arr[:, 1], num_bits, k_hashes)
-    bc = spark.sparkContext.broadcast(bits)
-    nb, kh = int(num_bits), int(k_hashes)
-    # confirm build side: Arrow createDataFrame of the already-collected
-    # distinct pairs -> a LocalRelation, so the broadcast hash table is
-    # built driver-side with NO extra Spark job (the in-plan
-    # scan+distinct alternative costs two more jobs per run; at cluster
-    # scale with an eval suite too big to collect, swap this for the
-    # in-plan distinct + shuffle confirm join).
-    import pandas as pd
-
-    bench_pairs = spark.createDataFrame(
-        pd.DataFrame({"__ha": pair_arr[:, 0], "__hb": pair_arr[:, 1]})
-    )
-
-    @F.pandas_udf("boolean")
-    def _might_contain(ha, hb):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        arr = bc.value
-        p = _bloom_positions(
-            ha.to_numpy(dtype=np.int64), hb.to_numpy(dtype=np.int64), nb, kh
-        )
-        hit = ((arr[p >> 3] >> (p & 7).astype(np.uint8)) & 1).all(axis=1)
-        return pd.Series(hit)
-
-    def _pair_struct(g):
-        ga, gb = _gram_hash_pair(g)
-        return F.struct(ga.alias("a"), gb.alias("b"))
-
-    tr = fan_out_scan(train.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), tokens(text_col).alias("__t")
-    ).select(
-        F.col(id_col),
-        F.transform(
-            F.array_distinct(shingles(text_col, n, toks=F.col("__t"))),
-            _pair_struct,
-        ).alias("__gh"),
-    )
-    # Explode FIRST, persist the slim (id, ha, hb) int rows, and serve
-    # BOTH branches (bloom-probe path + per-doc totals) from that one
-    # cache: the text is tokenized/hashed exactly once per run. This is
-    # what an earlier persist of the nested array column attempted, where
-    # the cache materialization cost more than the recompute; flat
-    # int64 rows columnar-cache at ~3 words/gram and made the single
-    # scan a win (measured at sf0.1). explode_outer keeps
-    # zero-shingle docs (ha NULL) so the totals branch sees every doc.
-    ex = track_persist(
-        tr.select(id_col, F.explode_outer("__gh").alias("__e")).select(
-            id_col, F.col("__e.a").alias("__ha"), F.col("__e.b").alias("__hb")
-        )
-    )
-    pre = ex.filter(
-        F.col("__ha").isNotNull()
-        & _might_contain(F.col("__ha"), F.col("__hb"))
-    )
-    hits = (
-        # confirm: kills bloom FPs exactly (up to 128-bit collision)
-        pre.join(F.broadcast(bench_pairs), ["__ha", "__hb"])
-        .groupBy(id_col)
-        .agg(F.count("*").alias("__hits"))
-    )
+    hits = bloom_screen(ex, pairs[0], id_col, num_bits, k_hashes)
     totals = ex.groupBy(id_col).agg(
         F.count("__ha").cast("long").alias("n_shingles")
     )
@@ -425,132 +461,43 @@ def bloom_decontaminate_incremental(
     num_bits: int = 1 << 20,
     k_hashes: int = 5,
 ) -> DataFrame:
-    """Incremental decontamination refresh (VERDICT r8 #6): the
-    benchmark suite arrives in batches, and re-screening the corpus
-    against a NEW batch must cost O(|delta suite| + |base-clean
-    corpus|), never a from-scratch rebuild.
+    """Incremental decontamination refresh: the benchmark suite arrives
+    in batches, and re-screening the corpus against a NEW batch must
+    cost O(|delta suite| + |base-clean corpus|), never a from-scratch
+    rebuild.
 
-    Mechanics: per-batch Bloom filters over the gram hash pairs are
-    MERGEABLE (bitwise OR == the bloom of the union set, by
-    construction of _bloom_build -- pinned in tests/test_r9_properties.py), so
-    the standing corpus-screen artifact is `bloom_base | bloom_delta`
-    while the incremental pass itself probes ONLY bloom_delta and ONLY
-    the docs that cleared the base screen: a doc already quarantined
-    by the base suite never needs re-reading, and the delta bloom
-    (128 KiB) prefilters the clean corpus's grams before the (tiny)
-    exact confirm join against the delta gram pairs.
+    Mechanics: per-batch Bloom filters are MERGEABLE (OR == the bloom
+    of the union set, see _bloom_build), so the standing corpus-screen
+    artifact is `bloom_base | bloom_delta` while the incremental pass
+    itself screens ONLY the docs that cleared the base screen against
+    ONLY the delta pairs: a doc already quarantined by the base suite
+    is never re-read.
 
     Output: one row per train doc -- (id, status, n_hits) with status
     'base' (hit the base suite), 'delta' (cleared base, hit the new
-    batch -- the rows the refresh exists to find), or 'clean'. Same
-    exactness argument as bloom_decontaminate: the confirm join kills
-    bloom false positives, so the SQL twin is the plain two-batch
+    batch -- the rows the refresh exists to find), or 'clean'. The
+    screens are exact, so the SQL twin is the plain two-batch
     intersection with CASE priority base > delta.
 
-    100 TB shape: one corpus text scan (the exploded int64 gram rows
-    are persisted and serve the base probe, the delta probe, and the
-    per-doc spine); both confirm joins broadcast collected benchmark
-    pairs (eval suites are MBs by contract); the delta probe's input
-    is the base-clean subset via a broadcast-able anti-join on doc id.
+    100 TB shape: one tagged suite collect for both batches; one corpus
+    text scan (the persisted gram rows serve the base screen, the delta
+    screen and the per-doc spine); the delta screen's input is the
+    base-clean subset via a broadcast-able anti-join on doc id.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(train.sparkSession)
-
-    from ._cache import track_persist
-
-    spark = train.sparkSession
-
-    def _pairs(bench: DataFrame) -> np.ndarray:
-        ha, hb = _gram_hash_pair(F.col("__g"))
-        rows = (
-            bench.select(tokens(text_col).alias("__t"))
-            .select(
-                F.explode(
-                    F.array_distinct(shingles(text_col, n, toks=F.col("__t")))
-                ).alias("__g")
-            )
-            .select(ha.alias("__ha"), hb.alias("__hb"))
-            .collect()  # small side by contract (eval suites are MBs)
-        )
-        if not rows:
-            return np.empty((0, 2), dtype=np.int64)
-        return np.unique(
-            np.array([(r["__ha"], r["__hb"]) for r in rows], dtype=np.int64
-                     ).reshape(-1, 2),
-            axis=0,
-        )
-
-    base_arr, delta_arr = _pairs(bench_base), _pairs(bench_delta)
-    bloom_base = _bloom_build(base_arr[:, 0], base_arr[:, 1], num_bits, k_hashes)
-    bloom_delta = _bloom_build(
-        delta_arr[:, 0], delta_arr[:, 1], num_bits, k_hashes
+    suite = bench_base.select(text_col, F.lit(0).alias("__b")).unionByName(
+        bench_delta.select(text_col, F.lit(1).alias("__b"))
     )
-    bc_base = spark.sparkContext.broadcast(bloom_base)
-    bc_delta = spark.sparkContext.broadcast(bloom_delta)
-    nb, kh = int(num_bits), int(k_hashes)
-
-    def _probe_udf(bc):
-        @F.pandas_udf("boolean")
-        def _might_contain(ha, hb):  # type: ignore[no-untyped-def]
-            arr = bc.value
-            p = _bloom_positions(
-                ha.to_numpy(dtype=np.int64), hb.to_numpy(dtype=np.int64), nb, kh
-            )
-            hit = ((arr[p >> 3] >> (p & 7).astype(np.uint8)) & 1).all(axis=1)
-            return pd.Series(hit)
-
-        return _might_contain
-
-    probe_base, probe_delta = _probe_udf(bc_base), _probe_udf(bc_delta)
-
-    def _pair_struct(g):
-        ga, gb = _gram_hash_pair(g)
-        return F.struct(ga.alias("a"), gb.alias("b"))
-
-    tr = fan_out_scan(train.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), tokens(text_col).alias("__t")
-    ).select(
-        F.col(id_col),
-        F.transform(
-            F.array_distinct(shingles(text_col, n, toks=F.col("__t"))),
-            _pair_struct,
-        ).alias("__gh"),
+    pairs = suite_gram_pairs(suite, text_col, n, F.col("__b"))
+    ex = corpus_gram_rows(
+        fan_out_scan(train.select(id_col, text_col)), text_col, id_col, n
     )
-    # one text scan: flat (id, ha, hb) int rows serve all three
-    # consumers (base probe, delta probe, per-doc spine)
-    ex = track_persist(
-        tr.select(id_col, F.explode_outer("__gh").alias("__e")).select(
-            id_col, F.col("__e.a").alias("__ha"), F.col("__e.b").alias("__hb")
-        )
+    base_hits = track_persist(
+        bloom_screen(ex, pairs[0], id_col, num_bits, k_hashes)
     )
-
-    def _confirmed_hits(probe, pair_arr: np.ndarray, src: DataFrame) -> DataFrame:
-        pairs = spark.createDataFrame(
-            pd.DataFrame(
-                {"__ha": pair_arr[:, 0], "__hb": pair_arr[:, 1]}
-            ),
-            schema="__ha long, __hb long",
-        )
-        pre = src.filter(
-            F.col("__ha").isNotNull() & probe(F.col("__ha"), F.col("__hb"))
-        )
-        return (
-            pre.join(F.broadcast(pairs), ["__ha", "__hb"])
-            .groupBy(id_col)
-            .agg(F.count("*").cast("long").alias("__hits"))
-        )
-
-    base_hits = track_persist(_confirmed_hits(probe_base, base_arr, ex))
-    # the incremental pass: only base-CLEAN docs' grams probe the delta
-    # bloom (left_anti on the quarantined doc ids, broadcast-able: the
-    # anti side is the contaminated id set, small in practice; at
-    # cluster scale AQE measures it)
+    # the anti side is the contaminated id set, small in practice; at
+    # cluster scale AQE measures it
     clean_ex = ex.join(F.broadcast(base_hits.select(id_col)), id_col, "left_anti")
-    delta_hits = _confirmed_hits(probe_delta, delta_arr, clean_ex)
+    delta_hits = bloom_screen(clean_ex, pairs[1], id_col, num_bits, k_hashes)
 
     spine = ex.groupBy(id_col).agg(
         F.count("__ha").cast("long").alias("__n_shingles")
@@ -629,8 +576,6 @@ def collocation_pmi(
     TakeOrderedAndProject -- per-partition top-k, k-row merge, no
     full sort.
     """
-    from ._cache import track_persist
-
     toks = track_persist(docs.select(tokens(text_col).alias("__toks")))
     uni = track_persist(
         toks.select(F.explode("__toks").alias("tok"))

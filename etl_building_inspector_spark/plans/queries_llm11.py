@@ -290,8 +290,15 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a false positive. 100 TB shape: the filter state aggregates to at
     most BLOOM_BITS rows — broadcastable no matter the member count —
     so probing is a broadcast semi-join, and building it is one
-    map + distinct. The decontaminate_bloom operator uses this exact
-    construction; here its realized error becomes data."""
+    map + distinct. What it shares with decontaminate_bloom's filter
+    (operators/textops.py::bloom_screen) is the Bloom rule only: k
+    positions per member, and a probe hits when all k bits are set.
+    The construction differs: here the positions are k 32-bit md5
+    slices mod BLOOM_BITS and the bit set is a table of set positions;
+    the operator derives its positions from two xxhash64 columns by
+    Kirsch-Mitzenmacher double hashing into a numpy bit array. So this
+    realized rate is this filter's, not a measurement of the
+    operator's."""
     from ..functions.text import fingerprint
 
     from ..operators._cache import track_persist
