@@ -17,10 +17,14 @@ exact test). The Spark-first re-expression:
 Polygons are GeoJSON Polygons: array<array<array<double>>>, the outer
 ring first, then any holes. A hole-free polygon is a one-ring array.
 
-Two physical strategies for point-in-polygon, same semantics:
+Three physical strategies for point-in-polygon, same semantics:
+  layer_index + index_hits -- each layer's polygons collected into one
+    broadcast row; a point is probed against its layer's row in
+    place, so the point's own row carries every match (or none).
+    Right when one layer's polygons fit in a row (the reference's own
+    regime: one in-memory index per layer).
   spatial_join_broadcast -- polygons broadcast, equi-join on layer_id
-    only. Right when the polygon side fits in memory (the reference's
-    own regime).
+    only, one output row per match.
   spatial_join_grid -- both sides keyed by (layer_id, cell); shuffle
     hash join on a fine key. The 100 TB path: no broadcast limit, skew
     bounded by cell size; a point lives in exactly one cell so no
@@ -152,6 +156,45 @@ def spatial_join_broadcast(
     )
     return points.join(F.broadcast(polys_staged), cond, how).drop(
         "__xmin", "__xmax", "__ymin", "__ymax"
+    )
+
+
+def layer_index(
+    polygons: DataFrame,
+    id_col: str,
+    layer_col: str = "layer_id",
+    polygon_col: str = "polygon",
+) -> DataFrame:
+    """(layer, index): one row per layer holding every polygon of it
+    with its outer-ring bbox -- the per-layer in-memory index the
+    reference builds (geo-indices.js:22-36), small enough to broadcast
+    and probe in the point's own row with index_hits. A layer too
+    large for one row takes spatial_join_grid instead."""
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col(polygon_col)))
+    entry = F.struct(
+        F.col(id_col).alias("id"),
+        xmin.alias("xmin"),
+        xmax.alias("xmax"),
+        ymin.alias("ymin"),
+        ymax.alias("ymax"),
+        F.col(polygon_col).alias("polygon"),
+    )
+    return polygons.groupBy(layer_col).agg(F.collect_list(entry).alias("index"))
+
+
+def index_hits(index: Column, px: Column, py: Column) -> Column:
+    """The entries of a layer_index `index` whose polygon contains
+    (px, py): bbox containment first, then the holes-aware ray cast,
+    as in spatial_join_broadcast (geo-indices.js:34,:48). NULL when
+    `index` is NULL; empty when nothing contains the point, including
+    a NULL coordinate."""
+    return F.filter(
+        index,
+        lambda p: (px >= p.getField("xmin"))
+        & (px <= p.getField("xmax"))
+        & (py >= p.getField("ymin"))
+        & (py <= p.getField("ymax"))
+        & point_in_polygon_with_holes(px, py, p.getField("polygon")),
     )
 
 

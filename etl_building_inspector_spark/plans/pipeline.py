@@ -8,18 +8,20 @@ Dataflow (SURVEY section 3), one pass per source:
            F2 filter                                  -> _enrich_consolidated
            -> building object, 2 mapwarper st:in, borough log, and per
            address an object + its st:in              -> _building_records
+           -> one polygon index row per layer         -> layer_index
   Phase C: toponyms -> point parse, P7 id, D2 keep-first, J1/J2 joins
                                                       -> _enrich_toponyms
-           -> toponym object, 2 mapwarper st:in, borough log
+           -> left join to its layer's index row; the probe runs in
+           the toponym's row (J3)
+           -> toponym object, 2 mapwarper st:in, borough log, and
+           st:sameAs per containing polygon or one of two miss logs
                                                       -> _toponym_records
-           enriched toponyms x enriched buildings: point-in-polygon
-           probe -> st:sameAs or one of two miss logs -> _same_as_records
-  Sink: the three record streams in one union         -> write_ndjson
+  Sink: the two record streams in one union           -> write_ndjson
 
 Each `_*_records` builds an array of records in the one wide shape
-(`_RECORD_COLS`) per enriched row and emits it with one inline, so a
-source is scanned and deduplicated once per consumer of its enriched
-frame (generator, probe), not once per record kind.
+(`_RECORD_COLS`) per enriched row and emits it with one inline. The
+toponym side is scanned, keyed and deduplicated once; the consolidated
+side twice (records, and the index). No step runs in a Python worker.
 
 Deviations (documented, SURVEY section 7 "hard parts" respected):
   * global output order relaxed (Spark is set-oriented; the Space/Time
@@ -39,9 +41,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.ids import base62_of_hex
+from ..functions.ids import base62_of_md5
 from ..operators.dedup import keep_first
-from ..operators.spatial import spatial_join_broadcast
+from ..operators.spatial import index_hits, layer_index
 from ..schemas import ADDRESS_ENTRY
 from ..sources.geojson import (
     parse_addresses,
@@ -287,9 +289,6 @@ def _enrich_toponyms(
     206-253): point parse, surrogate id toponym-{sheetId}-{base62(md5(
     coords))} (P7, :207-209), D2 content-hash keep-first on it, then
     the J1 sheet and J2 borough joins."""
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(toponyms_raw.sparkSession)
     feats = toponyms_raw.select(
         F.col("properties.sheet_id").alias("sheet_id"),
         F.col("properties.consensus").alias("name"),
@@ -307,7 +306,7 @@ def _enrich_toponyms(
             F.lit("toponym-"),
             F.col("sheet_id"),
             F.lit("-"),
-            base62_of_hex(F.md5(coord_str)),
+            base62_of_md5(F.md5(coord_str)),
         ),
     )
     # D2: keep-first on the content-addressed id (:211-214)
@@ -322,63 +321,47 @@ def _enrich_toponyms(
     )
 
 
-def _toponym_records(toponyms: DataFrame) -> DataFrame:
-    toponym_id = F.col("toponym_id")
-    obj = _object(
-        # yes, st:Building (:236)
-        toponym_id, "st:Building", "Point", F.col("point_json"), name=F.col("name")
-    )
-    return _emit(toponyms, toponym_id, obj)
-
-
-def _same_as_records(toponyms: DataFrame, buildings: DataFrame) -> DataFrame:
-    """J3 (building-inspector.js:275-325 + geo-indices.js): probe each
-    toponym point against its layer's building polygons.
+def _toponym_records(toponyms: DataFrame, index: DataFrame) -> DataFrame:
+    """Toponym records, with J3 (building-inspector.js:275-325 +
+    geo-indices.js) probed in the toponym's own row: its point against
+    its layer's polygons (`index`, one layer_index row per layer).
 
     Three outcomes, as in the reference:
       >=1 containing polygon -> one st:sameAs relation each (:288-296)
       0 polygons on a layer that HAS an index -> no-match log (:297-304)
       layer with no index at all -> error log (the geo-indices.js:44-46
       throw, caught at :306-313)
-    Every building row is an st:Building Polygon object (the F5
-    predicate, geo-indices.js:14-20, holds by construction) and every
-    toponym row an st:Building Point, so both sides read the enriched
-    frames directly.
-    """
-    points = toponyms.select("toponym_id", "layer_id", "point")
-    polygons = buildings.select(
-        F.col("building_id").cast("string").alias("building_id"),
-        "layer_id",
-        # FULL polygon (all rings): geo-indices.js:38-50 honors holes
-        # -- a toponym inside a courtyard hole must NOT match, so the
-        # probe must not use the outer ring alone.
-        "polygon",
-    )
-    matched = spatial_join_broadcast(points, polygons, how="left").select(
-        "toponym_id", points["layer_id"].alias("layer_id"), "building_id"
-    )
-    # distinguish empty-layer (throw path) from no-match
-    indexed_layers = polygons.select("layer_id").distinct()
-    probed = matched.join(
-        F.broadcast(indexed_layers.withColumn("__indexed", F.lit(True))),
-        "layer_id",
-        "left",
-    )
+    The index is built from the enriched buildings, after F2, so a
+    layer whose polygons are all degenerate has none. Every building
+    row is an st:Building Polygon (the F5 predicate, geo-indices.js:
+    14-20, holds by construction), and the probe tests the FULL
+    polygon: a toponym in a courtyard hole matches nothing."""
     toponym_id = F.col("toponym_id")
-    record = (
+    obj = _object(
+        # yes, st:Building (:236)
+        toponym_id, "st:Building", "Point", F.col("point_json"), name=F.col("name")
+    )
+    # hits is NULL when the layer has no index, empty when no polygon
+    # contains the point
+    probed = toponyms.join(F.broadcast(index), "layer_id", "left").withColumn(
+        "hits",
+        index_hits(F.col("index"), F.get("point", 0), F.get("point", 1)),
+    )
+    hits = F.col("hits")
+    same_as = (
         F.when(
-            F.col("building_id").isNotNull(),
-            _relation(toponym_id, F.col("building_id"), "st:sameAs"),
+            hits.isNull(),
+            F.array(_log(F.concat(F.lit("Error computing intersection for toponym "), toponym_id))),
         )
         .when(
-            F.col("__indexed").isNull(),
-            _log(F.concat(F.lit("Error computing intersection for toponym "), toponym_id)),
+            F.size(hits) == 0,
+            F.array(_log(F.concat(F.lit("Can't find building for toponym "), toponym_id))),
         )
         .otherwise(
-            _log(F.concat(F.lit("Can't find building for toponym "), toponym_id))
+            F.transform(hits, lambda h: _relation(toponym_id, h.getField("id"), "st:sameAs"))
         )
     )
-    return probed.select(record.alias("r")).select("r.*")
+    return _emit(probed, toponym_id, obj, same_as)
 
 
 def transform(
@@ -400,10 +383,8 @@ def transform(
     toponyms = _enrich_toponyms(
         read_toponyms(spark, toponyms_path), sheets_dim, layers
     )
-    return (
-        _building_records(buildings)
-        .unionByName(_toponym_records(toponyms))
-        .unionByName(_same_as_records(toponyms, buildings))
+    return _building_records(buildings).unionByName(
+        _toponym_records(toponyms, layer_index(buildings, "building_id"))
     )
 
 

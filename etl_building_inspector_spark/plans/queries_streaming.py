@@ -27,52 +27,59 @@ from .registry import query
 _MEMORY_SINK_SEQ = [0]
 
 
+def _staging_dir(
+    sf_dir: str, table: str, kind: str, marker: str
+) -> tuple[str, bool]:
+    """Where the `kind` stream source staged from sf_dir's `table`
+    parquet lives, under the temp dir, and whether it is complete (it
+    holds `marker`). The key includes a fingerprint of the SOURCE
+    parquet (size + st_mtime_ns): a derived soak fixture can be REBUILT
+    under the same path, and a basename-only key then serves stale rows
+    to the stream while the batch oracle reads the new file, which
+    shows as phantom streaming failures in a derived-fixture soak.
+    st_mtime_ns, not int(st_mtime): a fixture rebuilt within the same
+    wall-clock second with an identical byte size would otherwise reuse
+    the stale staging.
+
+    When the staging is not complete yet, the stagings of older
+    fingerprints for the same basename are reaped: rebuild loops
+    (derived-fixture soaks regenerate their directory in place)
+    otherwise leak a temp dir per rebuild. Callers stage into a private
+    mkdtemp named `<dir>_stage_*` and rename it into place, so
+    concurrent runners race only on the atomic rename."""
+    import shutil
+
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        st = os.stat(src)
+        fp = f"{st.st_size}_{st.st_mtime_ns}"
+    except OSError:
+        fp = "nofp"
+    prefix = f"ebi_stream_{kind}_{os.path.basename(os.path.normpath(sf_dir)) or 'sf'}_"
+    tmp = tempfile.gettempdir()
+    d = os.path.join(tmp, prefix + fp)
+    if os.path.exists(os.path.join(d, marker)):
+        return d, True
+    for old in os.listdir(tmp):
+        if old.startswith(prefix) and "_stage_" not in old and old != prefix + fp:
+            shutil.rmtree(os.path.join(tmp, old), ignore_errors=True)
+    return d, False
+
+
 def _stream_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events fixture for the file stream source.
 
     The fixture parquet carries TIMESTAMP(NANOS), which the streaming
-    file source cannot read; rewrite once per (process, sf_dir) via
-    the batch loader, which normalizes to micros. Staging dir + rename
-    keeps concurrent runners from seeing partial files.
+    file source cannot read; rewrite once per fixture version via the
+    batch loader, which normalizes to micros.
     """
+    import shutil
+
     from ..sources.tables import load_table
 
-    # the staging cache key includes a fingerprint of the SOURCE
-    # parquet (size + mtime): a derived soak fixture can be REBUILT
-    # under the same path (round 9's stride fix did exactly that),
-    # and a basename-only key then serves stale events to the stream
-    # while the batch oracle reads the new file -- found as 4
-    # phantom streaming "failures" in the r9 sf0.3-derived soak
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        # st_mtime_ns, not int(st_mtime): a fixture rebuilt within the
-        # same wall-clock second with an identical byte size would
-        # otherwise reuse the stale staging -- the exact failure class
-        # this fingerprint exists to prevent (ADVICE r9)
-        fp = f"{st.st_size}_{st.st_mtime_ns}"
-    except OSError:
-        fp = "nofp"
-    base_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = base_tag + "_" + fp
-    d = os.path.join(tempfile.gettempdir(), f"ebi_stream_events_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        # reap stale stagings for the SAME basename before staging a
-        # new one: rebuild loops (derived-fixture soaks regenerate
-        # /tmp/sfX-derived in place) otherwise leak a tempdir per
-        # rebuild (ADVICE r9)
-        import shutil
-
-        prefix = f"ebi_stream_events_{base_tag}_"
-        for old in os.listdir(tempfile.gettempdir()):
-            if old.startswith(prefix) and "_stage_" not in old and old != f"ebi_stream_events_{tag}":
-                shutil.rmtree(
-                    os.path.join(tempfile.gettempdir(), old), ignore_errors=True
-                )
-        # private mkdtemp staging per runner (not a shared fixed name):
-        # concurrent runners race only on the atomic rename
-        stage = tempfile.mkdtemp(prefix=f"ebi_stream_events_{tag}_stage_")
+    d, ready = _staging_dir(sf_dir, "events", "events", "_SUCCESS")
+    if not ready:
+        stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
         out = os.path.join(stage, "out")
         load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(out)
         try:
@@ -420,10 +427,8 @@ def _stream_late_events_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    d = os.path.join(tempfile.gettempdir(), f"ebi_stream_late_{tag}")
-    marker = os.path.join(d, "part-0002.parquet")
-    if os.path.exists(marker):
+    d, ready = _staging_dir(sf_dir, "events", "late", "part-0002.parquet")
+    if ready:
         return d
     ev = load_table(spark, sf_dir, "events")
     splits = [
@@ -431,10 +436,7 @@ def _stream_late_events_dir(spark: SparkSession, sf_dir: str) -> str:
         ev.filter(F.col("ts") >= LATE_T1),
         ev.filter(F.col("ts") < LATE_T0),
     ]
-    # a PRIVATE staging dir per runner (mkdtemp), NOT a shared fixed
-    # name: concurrent runners each build a complete replay and race
-    # only on the final atomic rename — the loser keeps the winner's
-    stage = tempfile.mkdtemp(prefix=f"ebi_stream_late_{tag}_stage_")
+    stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
     now = time.time()
     for i, df in enumerate(splits):
         tmp = os.path.join(stage, f"w{i}")
@@ -531,30 +533,15 @@ def _stream_suite_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the benchmark suite (doc_id % DECON_BENCH_MOD == 0) as
     one parquet file per batch tag, mtimes strictly increasing in tag
     order, for the file-source stream (maxFilesPerTrigger=1 -> one
-    micro-batch per suite batch). Same fingerprint discipline as
-    _stream_events_dir: size + st_mtime_ns of the SOURCE parquet keys
-    the cache; stale stagings for the same basename are reaped."""
+    micro-batch per suite batch). Staged once per version of the
+    source parquet (_staging_dir)."""
+    import shutil
+
     from .queries_llm2 import DECON_BENCH_MOD
 
     src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}_{st.st_mtime_ns}"
-    except OSError:
-        fp = "nofp"
-    base_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = base_tag + "_" + fp
-    d = os.path.join(tempfile.gettempdir(), f"ebi_stream_suite_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
-
-        prefix = f"ebi_stream_suite_{base_tag}_"
-        for old in os.listdir(tempfile.gettempdir()):
-            if old.startswith(prefix) and "_stage_" not in old and old != f"ebi_stream_suite_{tag}":
-                shutil.rmtree(
-                    os.path.join(tempfile.gettempdir(), old), ignore_errors=True
-                )
+    d, ready = _staging_dir(sf_dir, "documents", "suite", "_SUCCESS")
+    if not ready:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -563,7 +550,7 @@ def _stream_suite_dir(spark: SparkSession, sf_dir: str) -> str:
         bench = t.to_pandas()[doc_id % DECON_BENCH_MOD == 0]
         bench["doc_id"] = bench["doc_id"].astype("int64")
         bench["batch"] = (bench["doc_id"] // DECON_BENCH_MOD) % _SDECON_BATCHES
-        stage = tempfile.mkdtemp(prefix=f"ebi_stream_suite_{tag}_stage_")
+        stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
         out = os.path.join(stage, "out")
         os.makedirs(out)
         t0 = 1_700_000_000
@@ -647,29 +634,15 @@ def _stream_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     file per batch tag (tag = doc_id % 10, nine tags), mtimes
     strictly increasing in tag order, for the file-source stream
     feeding streaming_minhash_refresh (maxFilesPerTrigger=1 -> one
-    micro-batch per tag). Same fingerprint + reap discipline as
-    _stream_suite_dir; the merge fold is order-insensitive anyway
+    micro-batch per tag), once per version of the source parquet
+    (_staging_dir); the merge fold is order-insensitive anyway
     (commutative monoid), so the staging order is a convenience, not
     a correctness dependency."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}_{st.st_mtime_ns}"
-    except OSError:
-        fp = "nofp"
-    base_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = base_tag + "_" + fp
-    d = os.path.join(tempfile.gettempdir(), f"ebi_stream_corpus_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
+    import shutil
 
-        prefix = f"ebi_stream_corpus_{base_tag}_"
-        for old in os.listdir(tempfile.gettempdir()):
-            if old.startswith(prefix) and "_stage_" not in old and old != f"ebi_stream_corpus_{tag}":
-                shutil.rmtree(
-                    os.path.join(tempfile.gettempdir(), old), ignore_errors=True
-                )
+    src = os.path.join(sf_dir, "documents.parquet")
+    d, ready = _staging_dir(sf_dir, "documents", "corpus", "_SUCCESS")
+    if not ready:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -678,7 +651,7 @@ def _stream_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
         pdf["doc_id"] = pdf["doc_id"].astype("int64")
         corpus = pdf[pdf["doc_id"] % 10 != 7].copy()
         corpus["batch"] = corpus["doc_id"] % 10
-        stage = tempfile.mkdtemp(prefix=f"ebi_stream_corpus_{tag}_stage_")
+        stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
         out = os.path.join(stage, "out")
         os.makedirs(out)
         t0 = 1_700_000_000

@@ -389,13 +389,6 @@ def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# P7 full form: md5 -> base62 surrogate key (pandas_udf kernel; no
-# DuckDB twin for base62 -> rows-only; the kernel itself is pinned by
-# tests/test_functions.py against hand-computed values).
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Approximate aggregates: no engine-portable oracle exists (HLL/KLL
 # sketches are implementation-defined), so these are rows-only driver
 # checks with error bounds pinned against exact answers in
@@ -416,6 +409,13 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         quart.getItem(0).alias("qty_p25"),
         quart.getItem(1).alias("qty_p75"),
     )
+
+
+# ---------------------------------------------------------------------------
+# P7 full form: md5 -> base62 surrogate key. Spark computes it in the
+# JVM (functions/ids.base62_of_md5); the DuckDB twin divides the same
+# 128-bit integer by 62 in a recursive CTE, an exact oracle.
+# ---------------------------------------------------------------------------
 
 
 def _b62_sql() -> str:
@@ -456,10 +456,7 @@ FROM done
 
 @query("p7_base62_surrogate", _b62_sql())
 def p7_base62_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .._dist import ensure_workers_can_import
-    from ..functions.ids import base62_of_hex, md5_surrogate
-
-    ensure_workers_can_import(spark)
+    from ..functions.ids import base62_of_md5, md5_surrogate
 
     part = load_table(spark, sf_dir, "part")
     return part.select(
@@ -468,6 +465,6 @@ def p7_base62_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("part-"),
             F.col("p_partkey"),
             F.lit("-"),
-            base62_of_hex(md5_surrogate("p_name", "p_brand")),
+            base62_of_md5(md5_surrogate("p_name", "p_brand")),
         ).alias("surrogate_id"),
     )

@@ -831,7 +831,7 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact median via a GROUPED_AGG pandas UDAF -- the same answer as
 # median_exact_groups (same oracle SQL), implemented as the fourth
 # and final sanctioned Python-kernel shape: scalar pandas_udf
-# (base62), mapInPandas (multimodal), applyInPandas[WithState]
+# (similarity kernels), mapInPandas (multimodal), applyInPandas[WithState]
 # (packing / sessions), and now grouped-agg. Arrow ships each group's
 # cents column to one Python worker; use when the aggregate genuinely
 # can't be expressed relationally -- for median it CAN (see the rank

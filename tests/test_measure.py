@@ -6,6 +6,7 @@ import importlib.util
 import os
 
 from etl_building_inspector_spark.operators import _cache, dedup
+from perfbench.probes import drain_listener_bus, read_jobs
 
 _spec = importlib.util.spec_from_file_location(
     "measure",
@@ -38,6 +39,19 @@ def test_profile_reports_jobs_with_stages(spark, sf_dir):
     assert any(j["stage_totals"] for j in jobs)
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
     measure.print_profile(QUERY, wall, jobs)
+
+
+def test_profile_counts_streaming_batch_jobs(spark, sf_dir):
+    """A streaming query's batch jobs run on the stream's thread,
+    outside the profile's job group; profile still counts every job
+    the run added to the status store."""
+    before = max(read_jobs(spark), default=-1)
+    _, jobs = measure.profile(
+        spark, sf_dir, "streaming_decontaminate_bloom", "test-measure-stream"
+    )
+    drain_listener_bus(spark)
+    assert len(jobs) == max(read_jobs(spark)) - before
+    assert len(jobs) > sum(j["group"] == "test-measure-stream" for j in jobs)
 
 
 def test_fanout_switch_round_trips():

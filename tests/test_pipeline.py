@@ -256,17 +256,110 @@ def _plan_nodes(df) -> list[str]:
 
 
 def test_transform_plan_is_one_pass_per_source(spark, tmp_path):
-    """Each source is enriched once and every record kind comes out of
-    that frame, so the plan holds one keep-first window per use of an
-    enriched frame (consolidated: generator, probe, indexed layers;
-    toponyms: generator, probe), one id kernel per use of the toponym
-    frame, and one union of the three record streams. A branch per
-    record kind re-derives the sources and multiplies all three."""
+    """Each source is read and keyed once per use of its enriched
+    frame, and every record kind comes out of that frame: one
+    keep-first window per use (consolidated: generator and polygon
+    index; toponyms: generator only, since the probe runs in the
+    toponym's row), two JSON scans of each source's side (source and
+    sheets) and no Python worker. A branch per record kind re-derives
+    the sources and multiplies all of them."""
     paths = make_landing(str(tmp_path))
-    nodes = _plan_nodes(to_ndjson_line(_transform(spark, paths)))
-    assert nodes.count("Window") <= 5
-    assert nodes.count("ArrowEvalPython") <= 2
+    df = to_ndjson_line(_transform(spark, paths))
+    nodes = _plan_nodes(df)
+    assert nodes.count("Window") <= 3
+    assert nodes.count("ArrowEvalPython") == 0
     assert nodes.count("Union") <= 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan json", plan)) <= 6
+
+
+def _edge_landing(root) -> dict[str, str]:
+    """A J3 edge-case landing: layer 200 holds two overlapping squares,
+    layer 201 only a degenerate (F2-dropped) ring, so it has no index."""
+
+    def square(lo: float, hi: float) -> list:
+        return [[[lo, lo], [hi, lo], [hi, hi], [lo, hi], [lo, lo]]]
+
+    def building(bid: int, sheet: int, polygon: list) -> dict:
+        geoms = [{"type": "Polygon", "coordinates": polygon}]
+        return {
+            "type": "Feature",
+            "properties": {"id": bid, "map_id": str(600 + sheet - 20),
+                           "sheet_id": sheet, "consensus_address": "NONE"},
+            "geometry": {"type": "GeometryCollection", "geometries": geoms},
+        }
+
+    def toponym(sheet: int, name: str, coords) -> dict:
+        return {
+            "type": "Feature",
+            "properties": {"sheet_id": sheet, "consensus": name},
+            "geometry": {"type": "Point", "coordinates": coords},
+        }
+
+    feats = {
+        "sheets": [
+            {"type": "Feature", "properties": {
+                "id": sheet, "map_id": str(600 + sheet - 20),
+                "layer": {"external_id": layer, "year": "1900"}}}
+            for sheet, layer in ((20, 200), (21, 201))
+        ],
+        "consolidated": [
+            building(30, 20, square(0.0, 4.0)),
+            building(31, 20, square(1.0, 3.0)),
+            building(32, 21, [[[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]]]),
+        ],
+        "toponyms": [
+            toponym(20, "Both", [2.0, 2.0]),
+            toponym(20, "No y", [1.0, None]),
+            toponym(20, "Unparsed", "abc"),
+            toponym(21, "No index", [2.0, 2.0]),
+        ],
+    }
+    paths = {}
+    for name, rows in feats.items():
+        paths[name] = str(root / f"{name}.jsonl")
+        with open(paths[name], "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in rows)
+    paths["layer_boroughs"] = str(root / "layer-boroughs.json")
+    with open(paths["layer_boroughs"], "w") as f:
+        json.dump([{"id": 200, "borough": "Queens"}, {"id": 201, "borough": "Bronx"}], f)
+    return paths
+
+
+def test_probe_edge_cases(spark, tmp_path):
+    """J3 outcomes on their own landing: a point in two overlapping
+    polygons gets both st:sameAs; a point with a NULL coordinate, on an
+    indexed layer, gets the no-match log; a layer whose only building
+    F2 dropped has no index, so its toponym gets the error log. A point
+    that does not parse at all hashes no coordinates, so its id is NULL
+    and so is its log's text."""
+    both = _toponym_id(20, [2.0, 2.0])
+    no_y = _toponym_id(20, [1.0])  # the id's join skips the NULL
+    no_index = _toponym_id(21, [2.0, 2.0])
+    rows = _transform(spark, _edge_landing(tmp_path)).collect()
+    got = [
+        (r.record_type, r.id, r.name, r.rel_from, r.rel_to, r.rel_type, r.error)
+        for r in rows
+        if r.rel_type != "st:in"
+    ]
+    want = [
+        ("log", None, None, None, None, None, None),
+        ("log", None, None, None, None, None, f"Can't find building for toponym {no_y}"),
+        ("log", None, None, None, None, None,
+         f"Error computing intersection for toponym {no_index}"),
+        ("object", "30", None, None, None, None, None),
+        ("object", "31", None, None, None, None, None),
+        ("object", both, "Both", None, None, None, None),
+        ("object", no_index, "No index", None, None, None, None),
+        ("object", no_y, "No y", None, None, None, None),
+        ("object", None, "Unparsed", None, None, None, None),
+        ("relation", None, None, both, "30", "st:sameAs", None),
+        ("relation", None, None, both, "31", "st:sameAs", None),
+    ]
+    none_first = lambda t: tuple((v is not None, v) for v in t)  # noqa: E731
+    assert sorted(got, key=none_first) == sorted(want, key=none_first)
+    # two st:in per object, including the unparsed toponym's
+    assert sum(r.rel_type == "st:in" for r in rows) == 2 * 6
 
 
 # sha256 of the sorted NDJSON lines that transform + write_ndjson emit

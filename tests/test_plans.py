@@ -133,8 +133,8 @@ def test_agg_single_shuffle(spark, sf_dir):
 
 
 def test_no_python_udf_on_relational_paths(spark, sf_dir):
-    """Everything except the two sanctioned kernels (base62 pandas_udf,
-    multimodal mapInPandas) must stay JVM-side."""
+    """Everything except the multimodal and IVF/LSH Python kernels
+    must stay JVM-side."""
     for name in (
         "flagship_enrich",
         "agg_pricing_summary",

@@ -512,3 +512,58 @@ def test_stream_staging_cache_invalidates_on_inplace_rewrite(spark, tmp_path):
 
     # unchanged source -> cache hit (no re-stage, same dir back)
     assert _stream_events_dir(spark, str(sf_like)) == d2
+
+
+def test_late_events_staging_follows_inplace_rewrite(spark, tmp_path):
+    """streaming_late_data_drop's three-file replay is staged per
+    version of the events parquet: rewriting the fixture at the same
+    path stages the new rows, not the first staging's, and reaps the
+    old staging."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_building_inspector_spark.plans.queries_streaming import (
+        _stream_late_events_dir,
+    )
+
+    sf_like = tmp_path / "sfTESTlate"
+    sf_like.mkdir()
+    src = str(sf_like / "events.parquet")
+
+    def write_events(first_id: int, mtime_ns: int) -> None:
+        # one row in each replay split: straggler, bulk, newest
+        ts = pa.array(
+            [1_704_067_200_000_000, 1_705_708_800_000_000, 1_706_745_600_000_000],
+            pa.timestamp("us"),
+        )
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(first_id, first_id + 3), pa.int64()),
+                "ts": ts,
+                "user_id": pa.array([1, 2, 3], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": [1.0, 2.0, 3.0],
+                "props": ["{}", "{}", "{}"],
+            }),
+            src,
+        )
+        os.utime(src, ns=(mtime_ns, mtime_ns))
+
+    def staged_ids(d: str) -> list[int]:
+        return sorted(r.event_id for r in spark.read.parquet(d).collect())
+
+    staged = []
+    try:
+        write_events(100, 1_700_000_000_000_000_000)
+        staged.append(_stream_late_events_dir(spark, str(sf_like)))
+        assert staged_ids(staged[0]) == [100, 101, 102]
+        write_events(200, 1_700_000_000_000_000_001)
+        staged.append(_stream_late_events_dir(spark, str(sf_like)))
+        assert staged_ids(staged[1]) == [200, 201, 202]
+        assert not os.path.exists(staged[0])
+    finally:
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)

@@ -23,8 +23,9 @@ package's own ``session.get_spark()``.
   ``bench.py`` headline list) into ``OUT_DIR/<query>.txt``. For
   before/after evidence, dump into ``.../before`` and ``.../after``.
 * ``profile``: ``--n`` runs per query, each under its own job group;
-  prints every job (duration, tasks) and the stages it ran (task time,
-  CPU time, tasks, shuffle write, spill) from Spark's status store.
+  prints every job the run added to Spark's status store, streaming
+  batches included (duration, tasks), and the stages it ran (task
+  time, CPU time, tasks, shuffle write, spill).
 """
 
 from __future__ import annotations
@@ -141,8 +142,13 @@ def write_plans(spark, sf_dir: str, out_dir: str, names: list[str]) -> list[str]
 
 def profile(spark, sf_dir: str, name: str, group: str) -> tuple[float, list[dict]]:
     """One ``run`` under job group ``group``: its wall seconds and its
-    jobs in id order, each with ``stage_totals`` for the stages it ran."""
+    jobs in id order, each with ``stage_totals`` for the stages it ran.
+    The jobs are every job the status store gained over the run, not
+    only the group's: a streaming query's batches run on the stream's
+    own thread, outside the caller's group, and must count too."""
     sc = spark.sparkContext
+    drain_listener_bus(spark)
+    before = max(read_jobs(spark), default=-1)
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         wall = run(spark, name, sf_dir)
@@ -152,7 +158,7 @@ def profile(spark, sf_dir: str, name: str, group: str) -> tuple[float, list[dict
     stages = read_stages(spark)
     jobs = []
     for jid, job in sorted(read_jobs(spark).items()):
-        if job["group"] != group:
+        if jid <= before:
             continue
         ran = {s: stages[s] for s in job["stages"] if stages.get(s, {}).get("ran")}
         jobs.append(dict(job, id=jid, stage_totals=ran))
