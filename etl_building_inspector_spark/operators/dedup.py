@@ -16,6 +16,9 @@ differ across engines).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -175,46 +178,60 @@ def minhash_lsh_pairs(
          bucket is hot (identical boilerplate docs).
       4. distinct pairs.
 
-    `max_bucket_width` bounds step 3's quadratic worst case: buckets
-    wider than the cap are dropped before the self-join (one
-    count-aggregate + left-semi join, both map-side-combinable). A hot
-    bucket of w boilerplate docs otherwise yields w^2/2 rows; with the
-    cap the per-bucket cost is <= cap^2/2. Dropping over-wide buckets
-    is also the semantically right boilerplate filter -- exact-identical
-    docs belong to exact_dedup, not near-dup pairing.
+    `max_bucket_width` drops over-wide buckets before step 3; see
+    _bucket_pairs for the cap.
     """
     buckets = minhash_lsh_buckets(
         df, text_col, id_col, k=k, bands=bands, shingle_n=shingle_n, sig=sig
     )
-    # self-join would otherwise recompute the whole signature pipeline
-    # for each side; persist so it runs once (tracked: see
-    # _cache.release_persisted). At cluster scale this is a small
-    # (id, band, key) projection -- memory-cheap.
-    buckets = track_persist(buckets)
-    if max_bucket_width is not None:
-        keep = (
-            buckets.groupBy("band", "key")
-            .count()
-            .filter(F.col("count") <= max_bucket_width)
-            .select("band", "key")
-        )
-        buckets = buckets.join(keep, ["band", "key"], "left_semi")
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+    return (
+        _bucket_pairs(buckets, ["band", "key"], id_col, max_bucket_width)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .distinct()
     )
-    return pairs
+
+
+def _bucket_pairs(
+    buckets: DataFrame, keys: list[str], id_col: str, max_bucket_width: int | None
+) -> DataFrame:
+    """The banded self-join behind every bucketed candidate generator:
+    rows of `buckets` that share all of `keys`, one row per ordered
+    pair a.id_col < b.id_col, with both sides' columns reachable as
+    `a.<col>` and `b.<col>`. Callers project and `distinct` (a pair
+    that collides in several buckets appears once per bucket).
+
+    `buckets` is persisted first: the self-join would otherwise
+    recompute its whole lineage (signatures, hash kernels) once per
+    side. It is tracked for release (_cache.release_persisted) and at
+    cluster scale is a slim (id, bucket) projection -- memory-cheap.
+
+    `max_bucket_width` bounds the join's quadratic worst case: buckets
+    holding more than the cap rows are dropped before the self-join
+    (one count-aggregate + left-semi join, both map-side-combinable).
+    A hot bucket of w boilerplate rows otherwise yields w(w-1)/2
+    pairs; with the cap the per-bucket cost is <= cap(cap-1)/2, and a
+    bucket of exactly `max_bucket_width` rows is kept. Dropping
+    over-wide buckets is also the semantically right boilerplate
+    filter -- exact-identical rows belong to exact_dedup, not
+    near-dup pairing.
+    """
+    buckets = track_persist(buckets)
+    if max_bucket_width is not None:
+        keep = (
+            buckets.groupBy(*keys)
+            .count()
+            .filter(F.col("count") <= max_bucket_width)
+            .select(*keys)
+        )
+        buckets = buckets.join(keep, keys, "left_semi")
+    a = buckets.alias("a")
+    b = buckets.alias("b")
+    same = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    ordered = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    return a.join(b, reduce(and_, [*same, ordered]))
 
 
 def simhash(df: DataFrame, text_col: str, bits: int = 16) -> DataFrame:
@@ -288,9 +305,8 @@ def simhash_hamming_pairs(
     Plan shape mirrors minhash_lsh_pairs: narrow signature, explode to
     one (band, slice) row per doc per band, shuffle equi-join on the
     slice key, exact popcount filter after. At 100 TB use bits=64 with
-    16-bit slices (4 bands) so buckets stay selective; the
-    max_bucket_width cap bounds the identical-boilerplate worst case
-    the same way (those belong to exact_dedup anyway).
+    16-bit slices (4 bands) so buckets stay selective;
+    `max_bucket_width` caps hot buckets as in _bucket_pairs.
     """
     assert max_hamming < bands, "banding is only lossless for hamming < bands"
     band_bits = bits // bands
@@ -311,24 +327,8 @@ def simhash_hamming_pairs(
     ).select(
         id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    buckets = track_persist(buckets)
-    if max_bucket_width is not None:
-        keep = (
-            buckets.groupBy("band", "key")
-            .count()
-            .filter(F.col("count") <= max_bucket_width)
-            .select("band", "key")
-        )
-        buckets = buckets.join(keep, ["band", "key"], "left_semi")
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _bucket_pairs(buckets, ["band", "key"], id_col, max_bucket_width)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),

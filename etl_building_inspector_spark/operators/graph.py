@@ -106,6 +106,16 @@ def triangle_count(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFram
     on node ids (shuffle-partitionable, AQE-skew-splittable); the
     closing-edge probe reuses the persisted canonical edge set.
     """
+    e, deg = _canonical_edges(edges, src, dst)
+    return _triangles(e, deg).agg(F.count("*").cast("long").alias("n_triangles"))
+
+
+def _canonical_edges(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """The undirected simple graph of `edges` as persisted distinct
+    (a, b) rows with a < b (self-loops dropped), and each node's
+    degree in it as (n, deg)."""
     e = (
         edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
@@ -121,40 +131,47 @@ def triangle_count(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFram
         .groupBy("n")
         .agg(F.count("*").alias("deg"))
     )
+    return e, deg
+
+
+def _oriented(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """Schank-Wagner orientation of the canonical edges `e`: each edge
+    as (x, y) pointing from its lower-(degree, id) endpoint to the
+    higher one, persisted for the wedge self-join."""
+    lower = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
     oriented = (
         e.join(deg.select(F.col("n").alias("a"), F.col("deg").alias("da")), "a")
         .join(deg.select(F.col("n").alias("b"), F.col("deg").alias("db")), "b")
         .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.col("a"),
-            )
-            .otherwise(F.col("b"))
-            .alias("x"),
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.col("b"),
-            )
-            .otherwise(F.col("a"))
-            .alias("y"),
+            F.when(lower, F.col("a")).otherwise(F.col("b")).alias("x"),
+            F.when(lower, F.col("b")).otherwise(F.col("a")).alias("y"),
         )
     )
-    oriented = track_persist(oriented)
-    e1 = oriented.select(F.col("x"), F.col("y"))
+    return track_persist(oriented)
+
+
+def _triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of the canonical edges `e` once, as (x, ca, cb):
+    its oriented source x and its other two vertices ca < cb. The
+    wedges are pairs of out-edges of x; the closing edge (ca, cb) is
+    probed in `e`."""
+    oriented = _oriented(e, deg)
+    e1 = oriented.select("x", "y")
     e2 = oriented.select(F.col("x").alias("x2"), F.col("y").alias("z"))
     wedges = (
         e1.join(e2, F.col("x") == F.col("x2"))
         .filter(F.col("y") < F.col("z"))  # unordered head pair, once
         .select(
-            F.least("y", "z").alias("ca"), F.greatest("y", "z").alias("cb")
+            "x",
+            F.least("y", "z").alias("ca"),
+            F.greatest("y", "z").alias("cb"),
         )
     )
-    closed = wedges.join(
+    return wedges.join(
         e, (F.col("ca") == F.col("a")) & (F.col("cb") == F.col("b"))
-    )
-    return closed.agg(F.count("*").cast("long").alias("n_triangles"))
+    ).select("x", "ca", "cb")
 
 
 def local_triangle_counts(
@@ -168,51 +185,13 @@ def local_triangle_counts(
 
     Same Schank-Wagner orientation as triangle_count (out-degree
     bounded by O(sqrt(m)), so the wedge join is O(m^1.5) not
-    sum(deg^2)); the only difference is the closing-edge join KEEPS
-    the wedge apex so each found triangle can credit all three of its
-    vertices (one explode, one count -- still equi-join-only)."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-    )
-    e = track_persist(e)
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-    )
+    sum(deg^2)) and the same triangle rows; each found triangle then
+    credits all three of its vertices (one explode, one count -- still
+    equi-join-only). The degrees are persisted: the orientation and
+    the output both read them."""
+    e, deg = _canonical_edges(edges, src, dst)
     deg = track_persist(deg)
-    lower = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        e.join(deg.select(F.col("n").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("n").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            F.when(lower, F.col("a")).otherwise(F.col("b")).alias("x"),
-            F.when(lower, F.col("b")).otherwise(F.col("a")).alias("y"),
-        )
-    )
-    oriented = track_persist(oriented)
-    e1 = oriented.select("x", "y")
-    e2 = oriented.select(F.col("x").alias("x2"), F.col("y").alias("z"))
-    wedges = (
-        e1.join(e2, F.col("x") == F.col("x2"))
-        .filter(F.col("y") < F.col("z"))
-        .select(
-            "x",
-            F.least("y", "z").alias("ca"),
-            F.greatest("y", "z").alias("cb"),
-        )
-    )
-    closed = wedges.join(
-        e, (F.col("ca") == F.col("a")) & (F.col("cb") == F.col("b"))
-    ).select("x", "ca", "cb")
+    closed = _triangles(e, deg)
     tri = (
         closed.select(
             F.explode(F.array("x", "ca", "cb")).alias("vertex")

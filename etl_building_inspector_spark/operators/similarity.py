@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ._cache import track_persist
 from ._parallel import fan_out_scan
+from .dedup import _bucket_pairs
 from .sampling import bottom_k_sample, sample_order
 
 # Adaptive-m clamp (adaptive_planes_per_table): target bucket width,
@@ -281,10 +282,7 @@ def lsh_candidate_pairs(
     key, never an all-pairs nested loop.
 
     `max_bucket_width` drops buckets wider than the cap before the
-    self-join (a hot bucket of w identical/boilerplate vectors yields
-    w^2 candidate rows; at 100 TB the cap bounds the worst bucket, and
-    dropping over-wide buckets is also what you want semantically --
-    they are boilerplate, handled by exact dedup instead).
+    self-join; see dedup._bucket_pairs for the cap.
 
     `planes_per_table=None` auto-sizes m from the corpus count
     (adaptive_planes_per_table) so average bucket width -- and with it
@@ -303,27 +301,8 @@ def lsh_candidate_pairs(
     buckets = lsh_buckets(slim, "__vec", n_tables, planes_per_table, dim).select(
         "__id", "table", "bucket"
     )
-    # self-join would recompute the L x m dot products per side;
-    # persist the slim (id, table, bucket) projection (tracked for
-    # release -- see _cache.release_persisted()).
-    buckets = track_persist(buckets)
-    if max_bucket_width is not None:
-        keep = (
-            buckets.groupBy("table", "bucket")
-            .count()
-            .filter(F.col("count") <= max_bucket_width)
-            .select("table", "bucket")
-        )
-        buckets = buckets.join(keep, ["table", "bucket"], "left_semi")
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
+        _bucket_pairs(buckets, ["table", "bucket"], "__id", max_bucket_width)
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
     )

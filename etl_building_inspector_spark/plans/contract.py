@@ -11,14 +11,18 @@ was invisible locally while fatal at the driver.
 This module is the single choke point that keeps it impossible:
 `assert_scalar_output_schema` FAILS any result schema containing a
 nested type, and is called by tools/oracle_check.py,
-tools/verify_driver_contract.py, and tests/test_contract_guard.py's
-whole-registry scan (schema analysis only -- no job runs).
+tools/verify_driver_contract.py, tests/test_queries_oracle.py and
+tests/test_contract_guard.py's whole-registry scan (schema analysis
+only -- no job runs). `canon` is the one cell canonicaliser of the
+oracle gate and the default-tier oracle test.
 
 Queries that naturally produce nested values must explode/flatten to
 scalar rows before registration (see emb_pq_encode's reshape).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -49,3 +53,21 @@ def assert_scalar_output_schema(schema: StructType, name: str) -> None:
             "hashes scalar cells only; explode or flatten to scalar "
             "rows before registering (see emb_pq_encode)."
         )
+
+
+def canon(val):
+    """Canonicalize a cell for multiset comparison.
+
+    Deliberately NO list->tuple conversion: the driver's comparator
+    hashes raw pandas cells and crashes on list values, so this
+    replica must be exactly as strict (the old tuple fallback is how
+    emb_pq_encode passed locally while dying at the driver --
+    CORRECTNESS_r05). The schema guard above rejects nested output
+    before any row is fetched; if a list ever reaches here anyway it
+    raises unhashable just like the driver would.
+    """
+    if isinstance(val, float):
+        if math.isnan(val):
+            return "NaN"
+        return repr(val)  # full precision repr: bit-exact comparison
+    return val

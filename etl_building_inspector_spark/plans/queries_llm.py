@@ -11,7 +11,7 @@ ratios/cosines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -22,6 +22,7 @@ from ..functions.text import (
     shingles,
     tokens,
 )
+from ..operators._cache import track_persist
 from ..operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -287,7 +288,10 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_total_sql(bits: int) -> str:
+    """DuckDB twin of operators/dedup.simhash over a `toks` list: the
+    sum of 2^b for every bit b whose per-token md5 votes are net
+    positive."""
     h = "CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)"
     terms = []
     for b in range(bits):
@@ -296,7 +300,11 @@ def _simhash_sql(bits: int = 16) -> str:
             f"CASE WHEN ({h} >> {b}) & 1 = 1 THEN 1 ELSE -1 END))"
         )
         terms.append(f"(CASE WHEN {vote} > 0 THEN {2**b} ELSE 0 END)")
-    total = "\n  + ".join(terms)
+    return "\n  + ".join(terms)
+
+
+def _simhash_sql(bits: int = 16) -> str:
+    total = _simhash_total_sql(bits)
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -318,15 +326,7 @@ def _simhash_pairs_sql(bits: int = 32, max_hamming: int = 3) -> str:
     """Brute-force twin of the banded hamming join: banding with
     max_hamming < bands is lossless (pigeonhole over disjoint bit
     slices), so the O(n^2) threshold join IS the exact semantics."""
-    h = "CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)"
-    terms = []
-    for b in range(bits):
-        vote = (
-            f"list_sum(list_transform(toks, tok -> "
-            f"CASE WHEN ({h} >> {b}) & 1 = 1 THEN 1 ELSE -1 END))"
-        )
-        terms.append(f"(CASE WHEN {vote} > 0 THEN {2**b} ELSE 0 END)")
-    total = "\n  + ".join(terms)
+    total = _simhash_total_sql(bits)
     return f"""
 WITH {_DOCS_WITH_DUPS_SQL.strip()},
 t AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
@@ -918,26 +918,14 @@ JOIN sh2 hb ON p.id_b = hb.doc_id
 """
 
 
-@query("dedup_minhash_calibration", _minhash_calibration_sql())
-def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Estimate-vs-exact per LSH pair. The Spark plan computes
-    signatures once (narrow fold), derives candidate pairs through
-    the banded join, then joins the pairs back to signatures and
-    DISTINCT shingle arrays -- the expensive exact intersection runs
-    only for the CANDIDATES (LSH's whole point), never all pairs.
-    MinHash over distinct shingles equals MinHash over the raw list
-    (min is idempotent to duplicates), so the estimate matches
-    dedup_minhash_lsh_pairs' machinery exactly."""
-    from ..operators.dedup import minhash_lsh_pairs, minhash_signature
-
-    k, n = 8, 3
-    docs = _docs_with_dups(spark, sf_dir)
-    dshing = docs.withColumn(
-        "shd", F.array_distinct(shingles("text", n))
-    ).select("doc_id", "shd")
-    from ..operators._cache import track_persist
-
-    # ONE signature pass shared with the LSH banding (sig= kwarg)
+def _minhash_pair_estimates(
+    docs: DataFrame, k: int, n: int
+) -> tuple[DataFrame, Column]:
+    """The capped LSH candidate pairs of `docs` (id_a, id_b) joined to
+    both sides' signatures (a_i, b_i), and the Column counting the
+    matching components (the estimate, of k). ONE signature pass is
+    shared with the banding (sig= kwarg), so the estimates describe
+    exactly the pairs the dedup sees."""
     sigs = track_persist(
         minhash_signature(docs, "text", k=k, shingle_n=n).select(
             "doc_id", *[f"minhash_{i}" for i in range(k)]
@@ -955,16 +943,33 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_b"),
         *[F.col(f"minhash_{i}").alias(f"b_{i}") for i in range(k)],
     )
-    ha = dshing.select(F.col("doc_id").alias("id_a"), F.col("shd").alias("sha"))
-    hb = dshing.select(F.col("doc_id").alias("id_b"), F.col("shd").alias("shb"))
     est = sum(
         F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
         for i in range(k)
     )
+    return pairs.join(sa, "id_a").join(sb, "id_b"), est
+
+
+@query("dedup_minhash_calibration", _minhash_calibration_sql())
+def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Estimate-vs-exact per LSH pair. The Spark plan computes
+    signatures once (narrow fold), derives candidate pairs through
+    the banded join, then joins the pairs back to signatures and
+    DISTINCT shingle arrays -- the expensive exact intersection runs
+    only for the CANDIDATES (LSH's whole point), never all pairs.
+    MinHash over distinct shingles equals MinHash over the raw list
+    (min is idempotent to duplicates), so the estimate matches
+    dedup_minhash_lsh_pairs' machinery exactly."""
+    k, n = 8, 3
+    docs = _docs_with_dups(spark, sf_dir)
+    dshing = docs.withColumn(
+        "shd", F.array_distinct(shingles("text", n))
+    ).select("doc_id", "shd")
+    pairs, est = _minhash_pair_estimates(docs, k, n)
+    ha = dshing.select(F.col("doc_id").alias("id_a"), F.col("shd").alias("sha"))
+    hb = dshing.select(F.col("doc_id").alias("id_b"), F.col("shd").alias("shb"))
     return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .join(ha, "id_a")
+        pairs.join(ha, "id_a")
         .join(hb, "id_b")
         .select(
             F.col("id_a").cast("long").alias("id_a"),

@@ -42,12 +42,12 @@ from pyspark.sql import functions as F
 from ..functions.text import LANG_STOPWORDS, fingerprint, shingles, tokens
 from ..sources.tables import load_table
 from .queries_llm import (
-    MINHASH_BUCKET_CAP,
     _DOCS_WITH_DUPS_SQL,
     _NORM,
     _TOKS,
     _docs_with_dups,
     _minhash_lsh_sql,
+    _minhash_pair_estimates,
     _shingles_sql,
     _stop_hits_sql,
 )
@@ -343,36 +343,9 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram adds one k-way comparison per candidate pair and a
     9-row aggregate — the audit is (tiny constant) + (what the dedup
     already pays)."""
-    from ..operators._cache import track_persist
-    from ..operators.dedup import minhash_lsh_pairs, minhash_signature
-
-    k, n = 8, 3
-    docs = _docs_with_dups(spark, sf_dir)
-    sigs = track_persist(
-        minhash_signature(docs, "text", k=k, shingle_n=n).select(
-            "doc_id", *[f"minhash_{i}" for i in range(k)]
-        )
-    )
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", k=k, bands=4, shingle_n=n,
-        max_bucket_width=MINHASH_BUCKET_CAP, sig=sigs,
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"minhash_{i}").alias(f"a_{i}") for i in range(k)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"minhash_{i}").alias(f"b_{i}") for i in range(k)],
-    )
-    est = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
-        for i in range(k)
-    )
+    pairs, est = _minhash_pair_estimates(_docs_with_dups(spark, sf_dir), 8, 3)
     return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(est.alias("est_matches"))
+        pairs.select(est.alias("est_matches"))
         .groupBy("est_matches")
         .agg(F.count("*").alias("n_pairs"))
         .select(

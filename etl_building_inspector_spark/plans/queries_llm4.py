@@ -10,7 +10,7 @@ queries_llm so Spark and DuckDB tokenize bit-identically.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
@@ -174,32 +174,41 @@ FROM ex GROUP BY label, dim
 """
 
 
-@query("emb_label_centroids", _CENTROID_SQL)
-def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # truncation spelled sign*floor(abs): Spark cast truncates toward
-    # zero, DuckDB CAST rounds -- this form is identical on both
-    milli = F.transform(
-        "embedding",
+def _milli(vec: str) -> Column:
+    """The array column `vec` in integer milli-units, truncated toward
+    zero. Spelled sign*floor(abs): Spark's cast truncates toward zero,
+    DuckDB's CAST rounds -- this form is identical on both."""
+    return F.transform(
+        vec,
         lambda x: (
             F.signum(x.cast("double"))
             * F.floor(F.abs(x.cast("double")) * 1000)
         ).cast("long"),
     )
-    ex = emb.select(
-        "label", F.posexplode(milli).alias("dim0", "milli")
-    ).select(
-        "label", (F.col("dim0") + 1).alias("dim"), "milli"
+
+
+def _dim_sums(rows: DataFrame, key: str, vec: Column) -> DataFrame:
+    """Per (key, dim) sum and count of the milli vectors `vec` of
+    `rows`, dims 1-based: posexplode, then one hash agg whose
+    map-side partial sums keep the shuffle at |keys| * dim rows."""
+    ex = rows.select(key, F.posexplode(vec).alias("dim0", "milli")).select(
+        key, (F.col("dim0") + 1).alias("dim"), "milli"
     )
     return ex.groupBy(
-        F.col("label").cast("int").alias("label"),
+        F.col(key).cast("int").alias(key),
         F.col("dim").cast("int").alias("dim"),
     ).agg(
         F.sum("milli").alias("sum_milli"),
         F.count("*").alias("n"),
     )
+
+
+@query("emb_label_centroids", _CENTROID_SQL)
+def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _dim_sums(emb, "label", _milli("embedding"))
 
 
 # ---------------------------------------------------------------------------
@@ -244,19 +253,17 @@ FROM (
 """
 
 
-@query("emb_assign_nearest_prototype", _PROTO_SQL)
-def emb_assign_nearest_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _nearest_prototype(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The embeddings as m (vec_id, label, mv = milli vector), and each
+    vector's nearest prototype as (vec_id, b = struct(d2, p_label)):
+    the prototype of a label is its min-vec_id member, d2 the integer
+    squared milli-distance, ties broken on the lower label."""
     from ..sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    milli = F.transform(
-        "embedding",
-        lambda x: (
-            F.signum(x.cast("double"))
-            * F.floor(F.abs(x.cast("double")) * 1000)
-        ).cast("long"),
-    )
-    m = emb.select("vec_id", "label", milli.alias("mv"))
+    m = emb.select("vec_id", "label", _milli("embedding").alias("mv"))
     # keep ONLY pid in the prototype-id set: carrying `label` through
     # would make it ambiguous when joined back against m (same lineage)
     proto_ids = (
@@ -280,6 +287,12 @@ def emb_assign_nearest_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = dists.groupBy("vec_id").agg(
         F.min(F.struct(F.col("d2"), F.col("p_label"))).alias("b")
     )
+    return m, best
+
+
+@query("emb_assign_nearest_prototype", _PROTO_SQL)
+def emb_assign_nearest_prototype(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, best = _nearest_prototype(spark, sf_dir)
     return best.select(
         "vec_id",
         F.col("b.p_label").cast("int").alias("assigned_label"),
@@ -332,45 +345,6 @@ FROM ex GROUP BY cluster, dim
 
 @query("kmeans_lloyd_round", _LLOYD_SQL)
 def kmeans_lloyd_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    milli = F.transform(
-        "embedding",
-        lambda x: (
-            F.signum(x.cast("double"))
-            * F.floor(F.abs(x.cast("double")) * 1000)
-        ).cast("long"),
-    )
-    m = emb.select("vec_id", "label", milli.alias("mv"))
-    proto_ids = (
-        m.groupBy("label").agg(F.min("vec_id").alias("pid")).select("pid")
-    )
-    protos = (
-        m.join(proto_ids, m["vec_id"] == proto_ids["pid"])
-        .select(F.col("label").alias("p_label"), F.col("mv").alias("pv"))
-    )
-    d2 = F.aggregate(
-        F.zip_with("mv", "pv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    assign = (
-        m.crossJoin(F.broadcast(protos))
-        .select("vec_id", "p_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct(F.col("d2"), F.col("p_label"))).alias("b"))
-        .select("vec_id", F.col("b.p_label").alias("cluster"))
-    )
-    ex = (
-        m.join(assign, "vec_id")
-        .select("cluster", F.posexplode("mv").alias("dim0", "milli"))
-        .select("cluster", (F.col("dim0") + 1).alias("dim"), "milli")
-    )
-    return ex.groupBy(
-        F.col("cluster").cast("int").alias("cluster"),
-        F.col("dim").cast("int").alias("dim"),
-    ).agg(
-        F.sum("milli").alias("sum_milli"),
-        F.count("*").alias("n"),
-    )
+    m, best = _nearest_prototype(spark, sf_dir)
+    assign = best.select("vec_id", F.col("b.p_label").alias("cluster"))
+    return _dim_sums(m.join(assign, "vec_id"), "cluster", F.col("mv"))

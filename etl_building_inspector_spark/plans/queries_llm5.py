@@ -373,6 +373,20 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _dense_daily(daily: DataFrame) -> DataFrame:
+    """`daily` (event_type, day, n) left-joined onto the full date
+    spine of every event_type: n is NULL on the days with no row. The
+    spine bounds are an in-plan one-row aggregate, broadcast into the
+    cross join (no driver collect)."""
+    bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
+    types = daily.select("event_type").distinct()
+    spine = types.crossJoin(F.broadcast(bounds)).select(
+        "event_type",
+        F.explode(F.sequence("lo", "hi")).alias("day"),
+    )
+    return spine.join(daily, ["event_type", "day"], "left")
+
+
 @query(
     "timeseries_gapfill_locf",
     """
@@ -416,13 +430,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("n"))
     )
-    bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    types = daily.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi")).alias("day"),
-    )
-    j = spine.join(daily, ["event_type", "day"], "left")
+    j = _dense_daily(daily)
     w = Window.partitionBy("event_type").orderBy("day")
     f = (
         j.withColumn("observed", F.col("n").isNotNull())

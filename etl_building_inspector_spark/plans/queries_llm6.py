@@ -22,6 +22,7 @@ from ..operators.dedup import minhash_signature
 from ..operators.similarity import cosine_arrow, lsh_buckets
 from ..sources.tables import load_table
 from .queries_llm import EMB_DIM, _planes_cte, _shingles_sql, _TOKS
+from .queries_llm5 import _dense_daily
 from .registry import query
 
 
@@ -444,12 +445,7 @@ def timeseries_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.count("*").cast("long").alias("n")
     )
-    bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    types = daily.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("day")
-    )
-    j = spine.join(daily, ["event_type", "day"], "left")
+    j = _dense_daily(daily)
     wb = (
         Window.partitionBy("event_type")
         .orderBy("day")

@@ -66,6 +66,33 @@ def _staging_dir(
     return d, False
 
 
+def _write_tagged_files(d: str, parts: list) -> None:
+    """Stage `parts`, (tag, pandas frame) pairs in arrival order, as
+    `b<tag>.parquet` files in `d`: mtimes strictly increasing in list
+    order (they pin the file source's order), then `_SUCCESS`. Written
+    into a private mkdtemp and renamed into place; a concurrent winner
+    of the rename has staged the same files."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
+    out = os.path.join(stage, "out")
+    os.makedirs(out)
+    t0 = 1_700_000_000
+    for i, (tag, part) in enumerate(parts):
+        fpath = os.path.join(out, f"b{tag}.parquet")
+        pq.write_table(pa.Table.from_pandas(part, preserve_index=False), fpath)
+        os.utime(fpath, ns=((t0 + i) * 10**9, (t0 + i) * 10**9))
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+    try:
+        os.rename(out, d)
+    except OSError:
+        pass  # concurrent winner already renamed; theirs is complete
+    shutil.rmtree(stage, ignore_errors=True)
+
+
 def _stream_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events fixture for the file stream source.
 
@@ -535,39 +562,21 @@ def _stream_suite_dir(spark: SparkSession, sf_dir: str) -> str:
     order, for the file-source stream (maxFilesPerTrigger=1 -> one
     micro-batch per suite batch). Staged once per version of the
     source parquet (_staging_dir)."""
-    import shutil
-
     from .queries_llm2 import DECON_BENCH_MOD
 
-    src = os.path.join(sf_dir, "documents.parquet")
     d, ready = _staging_dir(sf_dir, "documents", "suite", "_SUCCESS")
     if not ready:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
+        src = os.path.join(sf_dir, "documents.parquet")
         t = pq.read_table(src, columns=["doc_id", "text"])
         doc_id = t["doc_id"].to_pandas().astype("int64")
         bench = t.to_pandas()[doc_id % DECON_BENCH_MOD == 0]
         bench["doc_id"] = bench["doc_id"].astype("int64")
         bench["batch"] = (bench["doc_id"] // DECON_BENCH_MOD) % _SDECON_BATCHES
-        stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
-        out = os.path.join(stage, "out")
-        os.makedirs(out)
-        t0 = 1_700_000_000
-        for b in range(_SDECON_BATCHES):
-            part = bench[bench["batch"] == b]
-            fpath = os.path.join(out, f"b{b}.parquet")
-            pq.write_table(
-                pa.Table.from_pandas(part, preserve_index=False), fpath
-            )
-            # strictly increasing mtimes pin the file-source order
-            os.utime(fpath, ns=((t0 + b) * 10**9, (t0 + b) * 10**9))
-        open(os.path.join(out, "_SUCCESS"), "w").close()
-        try:
-            os.rename(out, d)
-        except OSError:
-            pass  # concurrent winner already renamed; theirs is complete
-        shutil.rmtree(stage, ignore_errors=True)
+        _write_tagged_files(
+            d, [(b, bench[bench["batch"] == b]) for b in range(_SDECON_BATCHES)]
+        )
     return d
 
 
@@ -638,35 +647,18 @@ def _stream_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     (_staging_dir); the merge fold is order-insensitive anyway
     (commutative monoid), so the staging order is a convenience, not
     a correctness dependency."""
-    import shutil
-
-    src = os.path.join(sf_dir, "documents.parquet")
     d, ready = _staging_dir(sf_dir, "documents", "corpus", "_SUCCESS")
     if not ready:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        t = pq.read_table(src, columns=["doc_id", "text"])
-        pdf = t.to_pandas()
+        src = os.path.join(sf_dir, "documents.parquet")
+        pdf = pq.read_table(src, columns=["doc_id", "text"]).to_pandas()
         pdf["doc_id"] = pdf["doc_id"].astype("int64")
-        corpus = pdf[pdf["doc_id"] % 10 != 7].copy()
-        corpus["batch"] = corpus["doc_id"] % 10
-        stage = tempfile.mkdtemp(prefix=os.path.basename(d) + "_stage_")
-        out = os.path.join(stage, "out")
-        os.makedirs(out)
-        t0 = 1_700_000_000
-        tags = sorted(corpus["batch"].unique())
-        for i, b in enumerate(tags):
-            part = corpus[corpus["batch"] == b][["doc_id", "text"]]
-            fpath = os.path.join(out, f"b{b}.parquet")
-            pq.write_table(pa.Table.from_pandas(part, preserve_index=False), fpath)
-            os.utime(fpath, ns=((t0 + i) * 10**9, (t0 + i) * 10**9))
-        open(os.path.join(out, "_SUCCESS"), "w").close()
-        try:
-            os.rename(out, d)
-        except OSError:
-            pass  # concurrent winner already renamed; theirs is complete
-        shutil.rmtree(stage, ignore_errors=True)
+        corpus = pdf[pdf["doc_id"] % 10 != 7]
+        tag = corpus["doc_id"] % 10
+        _write_tagged_files(
+            d, [(b, corpus[tag == b]) for b in sorted(tag.unique())]
+        )
     return d
 
 

@@ -151,6 +151,46 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _asof_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases (max value per user and ts, tag 0) and clicks (tag 1)
+    in one frame, each row carrying the user's latest purchase at or
+    before it: `purchase_ts` and `carried_value`, NULL when none.
+    Purchases sort before clicks at equal ts; one shuffle on user_id."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("purchase_value"))
+        .select(
+            "user_id",
+            "ts",
+            F.lit(0).alias("tag"),  # purchase sorts before click at same ts
+            F.lit(None).cast("long").alias("event_id"),
+            "purchase_value",
+        )
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id",
+        "ts",
+        F.lit(1).alias("tag"),
+        "event_id",
+        F.lit(None).cast("double").alias("purchase_value"),
+    )
+    unioned = purchases.unionByName(clicks)
+    w = Window.partitionBy("user_id").orderBy("ts", "tag").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return unioned.select(
+        "*",
+        F.last(
+            F.when(F.col("tag") == 0, F.col("ts")), ignorenulls=True
+        ).over(w).alias("purchase_ts"),
+        F.last(
+            F.when(F.col("tag") == 0, F.col("purchase_value")), ignorenulls=True
+        ).over(w).alias("carried_value"),
+    )
+
+
 @query(
     "asof_join_click_purchase",
     """
@@ -178,39 +218,7 @@ def asof_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     match. One shuffle on user_id; no range explosion -- this is the
     standard distributed as-of shape.
     """
-    ev = load_table(spark, sf_dir, "events")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-        .select(
-            "user_id",
-            "ts",
-            F.lit(0).alias("tag"),  # purchase sorts before click at same ts
-            F.lit(None).cast("long").alias("event_id"),
-            "purchase_value",
-        )
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.lit(1).alias("tag"),
-        "event_id",
-        F.lit(None).cast("double").alias("purchase_value"),
-    )
-    unioned = purchases.unionByName(clicks)
-    w = Window.partitionBy("user_id").orderBy("ts", "tag").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    carried = unioned.select(
-        "*",
-        F.last(
-            F.when(F.col("tag") == 0, F.col("ts")), ignorenulls=True
-        ).over(w).alias("purchase_ts"),
-        F.last(
-            F.when(F.col("tag") == 0, F.col("purchase_value")), ignorenulls=True
-        ).over(w).alias("carried_value"),
-    )
+    carried = _asof_carry(spark, sf_dir)
     return carried.filter(
         (F.col("tag") == 1) & F.col("purchase_ts").isNotNull()
     ).select(

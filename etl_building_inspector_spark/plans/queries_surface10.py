@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_micros
 from ..sources.tables import load_table
-from .queries_surface4 import COPURCHASE_EDGES_SQL
+from .queries_surface4 import COPURCHASE_EDGES_SQL, _co_order_edges
 from .registry import query
 
 
@@ -133,17 +133,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same argument as graph_triangle_count)."""
     from ..operators.graph import local_triangle_counts
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") != F.col("v"))
-        .select("u", "v")
-    )
-    out = local_triangle_counts(edges)
+    out = local_triangle_counts(_co_order_edges(spark, sf_dir))
     return out.orderBy(F.col("n_triangles").desc(), "vertex").limit(
         CLUSTERING_TOP_K
     )

@@ -296,8 +296,10 @@ FROM (
 """
 
 
-@query("scd2_dimension", _SCD2_SQL)
-def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD2 history of customer: every row current since 2020-01-01,
+    then one 2024-01-01 update of each c_custkey % 7 = 0 (balance
+    doubled, segment 'UPDATED') applied by scd2_apply."""
     from ..operators.scd import scd2_apply
 
     current = load_table(spark, sf_dir, "customer").select(
@@ -315,10 +317,14 @@ def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_acctbal") * 2).alias("c_acctbal"),
         F.lit("UPDATED").alias("c_mktsegment"),
     )
-    out = scd2_apply(
+    return scd2_apply(
         current, updates, "c_custkey", F.lit("2024-01-01").cast("timestamp")
     )
-    return out.select(
+
+
+@query("scd2_dimension", _SCD2_SQL)
+def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _scd2_history(spark, sf_dir).select(
         F.col("c_custkey").cast("long").alias("cust_key"),
         F.col("c_acctbal").alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),

@@ -317,15 +317,20 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     review)."""
     from ..operators.graph import triangle_count
 
+    return triangle_count(_co_order_edges(spark, sf_dir), "u", "v")
+
+
+def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v) for every ordered pair of distinct parts on one order
+    (duplicates kept; the graph operators canonicalize)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
+    return (
         a.join(b, "l_orderkey")
         .filter(F.col("u") != F.col("v"))
         .select("u", "v")
     )
-    return triangle_count(edges, "u", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -761,25 +766,18 @@ QUALIFY rk <= {k}
 """
 
 
-@query("graph_common_neighbors_topk", _common_neighbors_sql())
-def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{k} link-prediction candidates per node: rank NON-adjacent
-    pairs (u < v) by common-neighbor count. The wedge join runs only
-    through middles with degree <= {cap}: a hub of degree d produces
-    d^2/2 wedges, so capping the MIDDLE bounds the join output at
-    cap * |edges| -- linear in the graph, and dropping hub-mediated
-    wedges is also the right semantics (everyone shares the hub;
-    it predicts nothing). ONLY middles are capped: the a-side keeps
-    edges whose DEST (the middle) is low-degree, the b-side edges
-    whose SOURCE (the middle) is -- so hub endpoints u/v remain
-    eligible candidates. The oracle applies the identical rule."""
+def _link_candidates(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Each node's degree in the symmetric co-purchase edges as (s,
+    deg), and every non-adjacent pair u < v with its common-neighbor
+    count through middles of degree <= _CN_HUB_CAP as (u, v, common).
+    Only middles are capped: the a-side keeps edges whose DEST (the
+    middle) is low-degree, the b-side edges whose SOURCE is, so hub
+    endpoints u/v stay eligible."""
     e = _copurchase_sym_edges(spark, sf_dir, materialize=True)
-    mid = (
-        e.groupBy("s")
-        .agg(F.count("*").alias("deg"))
-        .where(F.col("deg") <= _CN_HUB_CAP)
-        .select(F.col("s").alias("m"))
-    )
+    deg = e.groupBy("s").agg(F.count("*").alias("deg"))
+    mid = deg.where(F.col("deg") <= _CN_HUB_CAP).select(F.col("s").alias("m"))
     eca = e.join(mid, e.d == F.col("m"), "left_semi")
     ecb = e.join(mid, e.s == F.col("m"), "left_semi")
     a = eca.select(F.col("s").alias("u"), F.col("d").alias("mm"))
@@ -791,9 +789,20 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s").alias("eu"), F.col("d").alias("ev"))
         .distinct()
     )
-    cand = cn.join(
-        e0, (cn.u == e0.eu) & (cn.v == e0.ev), "left_anti"
-    )
+    return deg, cn.join(e0, (cn.u == e0.eu) & (cn.v == e0.ev), "left_anti")
+
+
+@query("graph_common_neighbors_topk", _common_neighbors_sql())
+def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-{k} link-prediction candidates per node: rank NON-adjacent
+    pairs (u < v) by common-neighbor count. The wedge join runs only
+    through middles with degree <= {cap}: a hub of degree d produces
+    d^2/2 wedges, so capping the MIDDLE bounds the join output at
+    cap * |edges| -- linear in the graph, and dropping hub-mediated
+    wedges is also the right semantics (everyone shares the hub;
+    it predicts nothing). Only middles are capped (_link_candidates);
+    the oracle applies the identical rule."""
+    _, cand = _link_candidates(spark, sf_dir)
     w = Window.partitionBy("u").orderBy(F.desc("common"), F.asc("v"))
     return (
         cand.withColumn("rk", F.row_number().over(w))
@@ -860,21 +869,7 @@ def graph_neighbor_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and safe to rank and hash on; ties break on candidate id. Same
     join/agg scale shape as graph_common_neighbors_topk plus two
     degree joins on the pair table."""
-    e = _copurchase_sym_edges(spark, sf_dir, materialize=True)
-    deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    mid = deg.where(F.col("deg") <= _CN_HUB_CAP).select(F.col("s").alias("m"))
-    eca = e.join(mid, e.d == F.col("m"), "left_semi")
-    ecb = e.join(mid, e.s == F.col("m"), "left_semi")
-    a = eca.select(F.col("s").alias("u"), F.col("d").alias("mm"))
-    b = ecb.select(F.col("s").alias("mm2"), F.col("d").alias("v"))
-    wedge = a.join(b, (a.mm == b.mm2) & (a.u < b.v))
-    cn = wedge.groupBy("u", "v").agg(F.count("*").alias("common"))
-    e0 = (
-        e.where(F.col("s") < F.col("d"))
-        .select(F.col("s").alias("eu"), F.col("d").alias("ev"))
-        .distinct()
-    )
-    cand = cn.join(e0, (cn.u == e0.eu) & (cn.v == e0.ev), "left_anti")
+    deg, cand = _link_candidates(spark, sf_dir)
     du = deg.select(F.col("s").alias("u"), F.col("deg").alias("deg_u"))
     dv = deg.select(F.col("s").alias("v"), F.col("deg").alias("deg_v"))
     scored = (

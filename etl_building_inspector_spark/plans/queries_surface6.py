@@ -487,56 +487,18 @@ FROM clicks c ASOF LEFT JOIN purchases p
 
 @query("asof_join_tolerance", _ASOF_TOL_SQL)
 def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..functions.timeutil import epoch_micros
+    from .queries_surface import _asof_carry
 
-    ev = load_table(spark, sf_dir, "events")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-        .select(
-            "user_id",
-            "ts",
-            F.lit(0).alias("tag"),
-            F.lit(None).cast("long").alias("event_id"),
-            "purchase_value",
-        )
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.lit(1).alias("tag"),
-        "event_id",
-        F.lit(None).cast("double").alias("purchase_value"),
-    )
-    unioned = purchases.unionByName(clicks)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        "*",
-        F.last(F.when(F.col("tag") == 0, F.col("ts")), ignorenulls=True)
-        .over(w)
-        .alias("p_ts"),
-        F.last(
-            F.when(F.col("tag") == 0, F.col("purchase_value")),
-            ignorenulls=True,
-        )
-        .over(w)
-        .alias("p_val"),
-    )
-    in_tol = F.col("p_ts").isNotNull() & (
-        epoch_micros("ts") - epoch_micros("p_ts") <= ASOF_TOL_US
+    carried = _asof_carry(spark, sf_dir)
+    in_tol = F.col("purchase_ts").isNotNull() & (
+        epoch_micros("ts") - epoch_micros("purchase_ts") <= ASOF_TOL_US
     )
     return carried.filter(F.col("tag") == 1).select(
         F.col("event_id").cast("long").alias("click_id"),
         F.col("user_id").cast("long").alias("user_id"),
-        F.when(in_tol, F.col("p_ts")).alias("purchase_ts"),
-        F.when(in_tol, F.col("p_val")).alias("purchase_value"),
+        F.when(in_tol, F.col("purchase_ts")).alias("purchase_ts"),
+        F.when(in_tol, F.col("carried_value")).alias("purchase_value"),
     )
 
 

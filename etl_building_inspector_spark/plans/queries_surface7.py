@@ -1136,28 +1136,9 @@ def scd2_as_of_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 2022 state -- pre-update values for the %7 keys whose 2024
     version postdates the pivot. Completes the SCD2 lifecycle
     (build: scd2_dimension; read: this)."""
-    from ..operators.scd import scd2_apply
+    from .queries_surface2 import _scd2_history
 
-    current = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_acctbal",
-        "c_mktsegment",
-        F.lit("2020-01-01").cast("timestamp").alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    updates = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 7 == 0)
-        .select(
-            "c_custkey",
-            (F.col("c_acctbal") * 2).alias("c_acctbal"),
-            F.lit("UPDATED").alias("c_mktsegment"),
-        )
-    )
-    hist = scd2_apply(
-        current, updates, "c_custkey", F.lit("2024-01-01").cast("timestamp")
-    )
+    hist = _scd2_history(spark, sf_dir)
     pivot = F.lit("2022-06-01").cast("timestamp")
     return (
         hist.where(

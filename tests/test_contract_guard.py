@@ -11,6 +11,11 @@ column, so the class of failure cannot recur.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,3 +76,22 @@ def test_every_registered_query_has_scalar_output(spark, sf_dir):
         "registered queries with driver-uncanonicalizable output: "
         f"{offenders}"
     )
+
+
+def test_verify_driver_contract_rejects_unknown_query_before_spark():
+    """An unregistered query name exits 1 before any SparkSession: with
+    JAVA_HOME pointing nowhere, a JVM launch would end in a traceback
+    instead of the tool's own message."""
+    tool = Path(__file__).resolve().parents[1] / "tools" / "verify_driver_contract.py"
+    env = {**os.environ, "JAVA_HOME": "/nonexistent-java-home"}
+    out = subprocess.run(
+        [sys.executable, str(tool), "/nonexistent-sf", "no_such_query"],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=120,
+    )
+    assert out.returncode == 1
+    assert "unknown queries: no_such_query" in out.stdout
+    assert "Traceback" not in out.stderr
+    assert "ansi:" not in out.stdout

@@ -136,6 +136,53 @@ def test_embedding_bucket_cap(spark):
     assert (100, 101) in pairs
 
 
+W_HOT = 6
+
+
+def _minhash_hot_pairs(spark, cap):
+    df = spark.createDataFrame(
+        [(i, BOILERPLATE) for i in range(W_HOT)], "doc_id long, text string"
+    )
+    return minhash_lsh_pairs(df, "text", "doc_id", max_bucket_width=cap)
+
+
+def _simhash_hot_pairs(spark, cap):
+    df = spark.createDataFrame(
+        [(i, BOILERPLATE) for i in range(W_HOT)], "doc_id long, text string"
+    )
+    return simhash_hamming_pairs(
+        df, "text", "doc_id", bits=32, bands=4, max_hamming=3,
+        max_bucket_width=cap,
+    )
+
+
+def _embedding_hot_pairs(spark, cap):
+    from etl_building_inspector_spark.operators.similarity import (
+        lsh_candidate_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0] * 64) for i in range(W_HOT)],
+        "vec_id long, embedding array<double>",
+    )
+    return lsh_candidate_pairs(
+        df, n_tables=4, planes_per_table=6, max_bucket_width=cap
+    )
+
+
+@pytest.mark.parametrize(
+    "pairs_of", [_minhash_hot_pairs, _simhash_hot_pairs, _embedding_hot_pairs]
+)
+def test_bucket_cap_boundary(spark, pairs_of):
+    """W_HOT identical rows share one bucket in every band/table: a cap
+    equal to the bucket width keeps all W_HOT*(W_HOT-1)/2 pairs, a cap
+    one below drops them all."""
+    every = {(a, b) for a in range(W_HOT) for b in range(a + 1, W_HOT)}
+    at_cap = {(r.id_a, r.id_b) for r in pairs_of(spark, W_HOT).collect()}
+    assert at_cap == every
+    assert pairs_of(spark, W_HOT - 1).collect() == []
+
+
 # ---------------------------------------------------------------------------
 # r8 derived-soak regression: the five pair-graph CONSUMER queries
 # (connected components x2, keep-representatives, BFS, SSSP) must

@@ -18,36 +18,19 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_building_inspector_spark.plans.contract import canon  # noqa: E402
+
 # above this many rows per side, switch from exact Counter compare to
 # the streaming digest (memory stays bounded; diff samples are lost);
 # env-overridable so tests can force the digest path on small fixtures
 ROW_CAP = int(os.environ.get("ORACLE_CHECK_ROW_CAP", 5_000_000))
 _FETCH = 100_000
-
-
-def canon(val):
-    """Canonicalize a cell for multiset comparison.
-
-    Deliberately NO list->tuple conversion: the driver's comparator
-    hashes raw pandas cells and crashes on list values, so this
-    replica must be exactly as strict (the old tuple fallback is how
-    emb_pq_encode passed locally while dying at the driver --
-    CORRECTNESS_r05). The schema guard below rejects nested output
-    before any row is fetched; if a list ever reaches here anyway it
-    raises unhashable just like the driver would.
-    """
-    if isinstance(val, float):
-        if math.isnan(val):
-            return "NaN"
-        return repr(val)  # full precision repr: bit-exact comparison
-    return val
 
 
 class RowDigest:

@@ -5,6 +5,9 @@ tests under our tuned session would miss (ANSI casts, worker
 importability, cwd-dependent paths).
 
 Usage: python tools/verify_driver_contract.py [sf_dir] [query ...]
+
+With query names, runs only those; a name that is not registered
+exits 1 before any SparkSession starts.
 """
 
 from __future__ import annotations
@@ -19,9 +22,16 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     os.chdir("/tmp")  # deliberately NOT the repo root
 
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    unknown = sorted(set(sys.argv[2:]) - set(queries))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 1
+
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entrymod
     from etl_building_inspector_spark.plans.contract import (
         assert_scalar_output_schema,
     )
@@ -38,17 +48,14 @@ def main() -> int:
     assert len(rows) > 0, "entry() returned no rows"
     print(f"entry: {len(rows)} rows")
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     assert set(oracles) <= set(queries), "oracle keys not a subset of queries"
 
-    only = set(sys.argv[2:]) or set(queries)
+    names = sorted(set(sys.argv[2:]) or queries)
     failures = []
-    for name, fn in sorted(queries.items()):
-        if name not in only:
-            continue
+    for name in names:
         try:
-            df = fn(spark, sf_dir)
+            df = queries[name](spark, sf_dir)
             # driver-shape guard: nested result types crash the
             # driver's canonicalizer (plans/contract.py)
             assert_scalar_output_schema(df.schema, name)
@@ -57,7 +64,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL {name}: {str(e)[:200]}")
-    print(f"\n{len(queries)} queries, {len(failures)} failures")
+    print(f"\n{len(names)} queries, {len(failures)} failures")
     return 1 if failures else 0
 
 
