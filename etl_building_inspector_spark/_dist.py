@@ -7,6 +7,10 @@ host application's driver runs from another cwd without PYTHONPATH,
 that import fails. ensure_workers_can_import() zips the package once
 and ships it with SparkContext.addPyFile -- the standard dependency
 distribution path, and the same call a real cluster deployment needs.
+
+It is called in two places, not per kernel: ``session.get_spark`` for
+the package's own sessions, and the registry's query wrapper for a
+session the package did not build (the driver's).
 """
 
 from __future__ import annotations

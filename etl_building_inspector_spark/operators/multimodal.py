@@ -70,9 +70,6 @@ def sample_frames(
                 }
             )
 
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
     slim = df.select(
         F.col(key_col).alias("key"),
         F.col("media.bytes").alias("bytes"),
@@ -124,9 +121,6 @@ def audio_energy_windows(
                 }
             )
 
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
     slim = df.select(
         F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
     )
@@ -185,9 +179,6 @@ def image_ahash(df: DataFrame, key_col: str = "key") -> DataFrame:
                 }
             )
 
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
     slim = df.select(
         F.col(key_col).alias("key"), F.col("media.bytes").alias("bytes")
     )

@@ -109,10 +109,6 @@ def pack_greedy(
     100 TB the group is a shard/source key with bounded size — the
     same contract as any per-shard packing job.
     """
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-
     b = int(budget)
     src = df.select(
         F.col(group_col).cast("string").alias("grp"),

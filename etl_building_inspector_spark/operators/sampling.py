@@ -116,9 +116,6 @@ def reservoir_sample_deterministic(
     rows are too wide to TakeOrdered through the driver raw, or when
     the sample feeds a further distributed stage) with the bottom-k
     sample's reproducibility."""
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
     with_pri = df.withColumn("__pri", _md5_key(id_col, salt))
 
     def local_reservoir(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

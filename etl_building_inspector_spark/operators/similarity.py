@@ -75,10 +75,6 @@ def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFram
     64-element folds per row. On candidate-scoring joins (10^5-10^8
     rows at scale) the Arrow kernel does the same arithmetic as ~3*dim
     vectorized ops per batch. Narrow projection either way."""
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-
     @F.pandas_udf("double")
     def _cos(va, vb):  # type: ignore[no-untyped-def]
         import numpy as np
@@ -197,10 +193,6 @@ def lsh_buckets(
     happens after the kernel.
     """
     from pyspark.sql.types import ArrayType, IntegerType
-
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
 
     planes = lsh_planes(n_tables, planes_per_table, dim)
     plane_rows = [vec for _t, _bit, vec in planes]  # t-major, p ascending

@@ -374,10 +374,7 @@ def bloom_screen(
     import numpy as np
     import pandas as pd
 
-    from .._dist import ensure_workers_can_import
-
     spark = grams.sparkSession
-    ensure_workers_can_import(spark)
     nb, kh = int(num_bits), int(k_hashes)
     bc = spark.sparkContext.broadcast(
         _bloom_build(pairs[:, 0], pairs[:, 1], nb, kh)

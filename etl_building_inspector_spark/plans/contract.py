@@ -11,10 +11,11 @@ was invisible locally while fatal at the driver.
 This module is the single choke point that keeps it impossible:
 `assert_scalar_output_schema` FAILS any result schema containing a
 nested type, and is called by tools/oracle_check.py,
-tools/verify_driver_contract.py, tests/test_queries_oracle.py and
-tests/test_contract_guard.py's whole-registry scan (schema analysis
-only -- no job runs). `canon` is the one cell canonicaliser of the
-oracle gate and the default-tier oracle test.
+tools/verify_driver_contract.py and both per-query tests of
+tests/test_queries_oracle.py, which together cover every registered
+query. `canon` is the one cell canonicaliser, and `oracle_connection`
+the one DuckDB connection over the fixtures, of the oracle gate and
+the default-tier oracle test.
 
 Queries that naturally produce nested values must explode/flatten to
 scalar rows before registration (see emb_pq_encode's reshape).
@@ -25,6 +26,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql.types import ArrayType, MapType, StructType
+
+from ..schemas import TESTDATA_TABLES
 
 NESTED_TYPES = (ArrayType, MapType, StructType)
 
@@ -71,3 +74,16 @@ def canon(val):
             return "NaN"
         return repr(val)  # full precision repr: bit-exact comparison
     return val
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per fixture table of
+    ``sf_dir``, named as the oracle SQL names it."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

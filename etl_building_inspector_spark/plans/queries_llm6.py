@@ -702,9 +702,6 @@ def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: narrow mapInPandas, one Arrow batch per ~10k rows,
     no shuffle; per-row cost is numpy-vectorized (frombuffer +
     bincount), never a Python loop over bytes."""
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("text").rlike("^[\\x20-\\x7e]*$"))

@@ -825,10 +825,6 @@ def median_exact_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from .._dist import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-
     from pyspark.sql.functions import PandasUDFType
 
     # explicit functionType: with `from __future__ import annotations`

@@ -15,9 +15,10 @@ and never calls release_persisted() itself, so without this hook the
 self-join caches (LSH buckets, jaccard shingles, CC edge lists)
 accumulate until a default-sized heap OOMs. Releasing at next-query
 entry is safe because the driver materializes each result before
-invoking the next query. The decorator returns the function itself,
-so a query that builds another one calls it directly and never
-through the wrapper.
+invoking the next query. The wrapper also ships the package to the
+session's Python workers (_dist.py), once per application. The
+decorator returns the function itself, so a query that builds another
+one calls it directly and never through the wrapper.
 
 Order is ``HEAD``, then every other query in module order: the
 ``queries_*`` file names sorted naturally (core, domain, llm, llm2 ..
@@ -33,6 +34,7 @@ import os
 import pkgutil
 import re
 
+from .._dist import ensure_workers_can_import
 from ..operators._cache import release_persisted
 
 # The driver records correctness rows for the FIRST 50 ``queries()``
@@ -107,6 +109,9 @@ def _released(fn):
         # long-lived driver session (the correctness driver runs 50
         # queries back to back) otherwise accumulates broadcast blocks.
         gc.collect()
+        # the driver's sessions do not come from session.get_spark, so
+        # the package is shipped to their Python workers here
+        ensure_workers_can_import(spark)
         return fn(spark, sf_dir)
 
     wrapped.__name__ = fn.__name__

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ._dist import ensure_workers_can_import
+
 
 def _default_driver_memory() -> str:
     """Half of physical memory as the driver heap cap: the JVM's
@@ -31,6 +33,8 @@ def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
     ``spark.sql.shuffle.partitions`` is pinned to 32 whatever the core
     count; AQE coalescing, which stays enabled here so plans behave
     the same way at 1000 executors, shrinks small shuffles at runtime.
+    The package is shipped to the session's Python workers, so its
+    pandas_udf / mapInPandas kernels import from any cwd.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -65,4 +69,5 @@ def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_workers_can_import(spark)
     return spark

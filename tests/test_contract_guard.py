@@ -3,10 +3,9 @@
 The driver's canonicalizer hashes raw pandas cells; Array/Map/Struct
 result columns crash it even when every value is correct (the
 emb_pq_encode red row in CORRECTNESS_r05). plans/contract.py is the
-choke point; these tests pin (a) the guard rejects each nested type
-and accepts scalars, and (b) NO registered query -- the whole
-registry, schema analysis only, no jobs -- produces a nested output
-column, so the class of failure cannot recur.
+choke point; these tests pin that the guard rejects each nested type
+and accepts scalars. tests/test_queries_oracle.py runs the guard on
+every registered query.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from etl_building_inspector_spark.plans.contract import (
     assert_scalar_output_schema,
     nested_output_fields,
 )
-from etl_building_inspector_spark.plans.registry import QUERIES
 
 
 def test_guard_rejects_array_output(spark):
@@ -58,34 +56,26 @@ def test_guard_accepts_scalar_schema(spark):
     assert_scalar_output_schema(df.schema, "scalar_query")  # no raise
 
 
-def test_every_registered_query_has_scalar_output(spark, sf_dir):
-    """Whole-registry scan: .schema is analysis-only (no job runs), so
-    checking all ~350 registered queries is cheap. Any query whose
-    result schema contains a nested type would be a guaranteed red
-    driver row -- fail it here first."""
-    offenders: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        try:
-            schema = fn(spark, sf_dir).schema
-        except Exception as e:  # noqa: BLE001 -- env-gated queries skip
-            pytest.fail(f"{name}: plan analysis failed: {str(e)[:200]}")
-        bad = nested_output_fields(schema)
-        if bad:
-            offenders[name] = bad
-    assert not offenders, (
-        "registered queries with driver-uncanonicalizable output: "
-        f"{offenders}"
-    )
+TOOLS = Path(__file__).resolve().parents[1] / "tools"
 
 
-def test_verify_driver_contract_rejects_unknown_query_before_spark():
-    """An unregistered query name exits 1 before any SparkSession: with
-    JAVA_HOME pointing nowhere, a JVM launch would end in a traceback
-    instead of the tool's own message."""
-    tool = Path(__file__).resolve().parents[1] / "tools" / "verify_driver_contract.py"
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["verify_driver_contract.py", "/nonexistent-sf", "no_such_query"],
+        ["codegen_audit.py", "/nonexistent-sf", "no_such_query"],
+        ["measure.py", "--sf", "/nonexistent-sf", "time", "no_such_query"],
+    ],
+    ids=lambda argv: argv[0].removesuffix(".py"),
+)
+def test_verify_driver_contract_rejects_unknown_query_before_spark(argv):
+    """An unregistered query name exits 1 before any SparkSession, in
+    each tool that takes query names: with JAVA_HOME pointing nowhere,
+    a JVM launch would end in a traceback instead of the tool's own
+    message."""
     env = {**os.environ, "JAVA_HOME": "/nonexistent-java-home"}
     out = subprocess.run(
-        [sys.executable, str(tool), "/nonexistent-sf", "no_such_query"],
+        [sys.executable, str(TOOLS / argv[0]), *argv[1:]],
         capture_output=True,
         text=True,
         env=env,

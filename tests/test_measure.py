@@ -1,10 +1,12 @@
-"""tools/measure.py, called in-process on the shared test session."""
+"""bench.py's run harness and tools/measure.py, called in-process on
+the shared test session."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
 
+import bench
 from etl_building_inspector_spark.operators import _cache, dedup
 from perfbench.probes import drain_listener_bus, read_jobs
 
@@ -19,7 +21,7 @@ QUERY = "flagship_enrich"
 
 
 def test_run_times_and_releases(spark, sf_dir):
-    assert measure.run(spark, QUERY, sf_dir) > 0
+    assert bench.run(spark, QUERY, sf_dir) > 0
     assert not _cache._PERSISTED and not _cache._CHECKPOINTED
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
@@ -29,6 +31,34 @@ def test_plans_writes_physical_plan(spark, sf_dir, tmp_path):
     assert path.endswith(f"{QUERY}.txt")
     with open(path) as f:
         assert "Physical Plan" in f.read()
+
+
+def test_normalise_plan_maps_run_varying_numbers():
+    """Two runs of one plan that differ only in the numbers the session
+    hands out normalise to one text; a limit's argument is kept."""
+
+    def plan(i):
+        return (
+            f"(1) Project [codegen id : {i}]\n"
+            f"Output [1]: [transform(xs#{i}L, lambdafunction((lambda x_{i}#{i + 1} + 1), "
+            f"lambda x_{i}#{i + 1}, false)) AS ys#{i + 2}]\n"
+            "\n"
+            "(2) ShuffleQueryStage\n"
+            f"Output [1]: [k#{i}]\n"
+            f"Arguments: {i}\n"
+            "\n"
+            "(3) Exchange\n"
+            f"Arguments: hashpartitioning(k#{i}, 32), ENSURE_REQUIREMENTS, [plan_id={i}]\n"
+            "\n"
+            "(4) LocalLimit\n"
+            "Arguments: 5\n"
+        )
+
+    a, b = measure.normalise_plan(plan(7)), measure.normalise_plan(plan(41))
+    assert a == b
+    assert "#n" in a and "lambda x_n#n" in a and "[plan_id=n]" in a
+    assert "[codegen id : n]" in a and "Output [1]: [k#n]\nArguments: n\n" in a
+    assert a.endswith("(4) LocalLimit\nArguments: 5\n")
 
 
 def test_profile_reports_jobs_with_stages(spark, sf_dir):

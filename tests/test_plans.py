@@ -432,61 +432,6 @@ def test_source_tvd_grid_broadcasts_small_sides(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
 
 
-# Every query whose executed plan carries a BroadcastNestedLoopJoin.
-# Each is a cross against a BROADCAST tiny aggregate -- a one-row
-# total (corpus n, watermark, threshold), a k-row centroid/prototype/
-# codebook table, or a bounds/calibration grid -- never data x data
-# (audited query-by-query, VERDICT r5 "anti-pattern sweep"). A NEW
-# name appearing here must justify itself the same way before being
-# whitelisted; data-sized crosses must become equi joins instead.
-BNLJ_WHITELIST = {
-    "ann_cosine_ivf_pq", "ann_cosine_ivf_sampled", "ann_cosine_pq_adc",
-    "ann_cosine_topk", "ann_radius_sensitivity", "ann_range_search",
-    "ann_recall_eval", "ann_topk_margin_eval",
-    "ann_truncated_dim_recall_eval", "basket_pair_lift",
-    "corpus_curriculum_phases", "corpus_mixture_deficit",
-    "corpus_source_token_tvd", "corpus_token_budget_waterfill",
-    "customer_decayed_value_fixedpoint", "dedup_embedding_cosine",
-    "dedup_semantic_clusters", "dedup_shingle_size_sensitivity",
-    "dq_freshness_by_type", "emb_assign_nearest_prototype",
-    "emb_contrastive_pairs", "emb_cosine_histogram_sampled",
-    "er_blocking_strategy_eval", "events_user_lifecycle_states",
-    "file_skipping_effectiveness", "kmeans_lloyd_round",
-    "mixture_resample", "mv_distinct_delta_maintenance",
-    "orders_backlog_aging", "orders_weekday_profile",
-    "privacy_t_closeness", "revenue_concentration_8020",
-    "rolling_7d_active_users", "sample_balanced_classes",
-    "sketch_bloom_fpr_eval", "sketch_bottomk_theta_eval",
-    "sketch_kmv_merge_eval", "skew_key_diagnostics",
-    "text_collocations_pmi", "text_ngram_coverage_vs_reference",
-    "text_tfidf_topk", "text_vocab_growth_heaps", "tfidf_topk_terms",
-    "timeseries_gapfill_linear", "timeseries_gapfill_locf",
-    "timeseries_xcorr_lags",
-}
-
-
-def test_whole_registry_plan_lint(spark, sf_dir):
-    """Registry-wide scale-killer sweep (VERDICT r5 #5 consolidation):
-    NO registered query's executed plan may contain a
-    CartesianProduct, and any BroadcastNestedLoopJoin must come from
-    the audited tiny-broadcast whitelist above. This is the guard
-    that makes the per-query plan audits above hold for ALL 355
-    registered queries, including every round-5 addition, not just
-    the individually-pinned ones."""
-    cartesian, rogue_bnlj = [], []
-    for name, fn in QUERIES.items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_WHITELIST:
-            rogue_bnlj.append(name)
-    assert not cartesian, f"CartesianProduct in: {cartesian}"
-    assert not rogue_bnlj, (
-        "un-audited BroadcastNestedLoopJoin (justify + whitelist or "
-        f"rewrite as equi join): {rogue_bnlj}"
-    )
-
-
 def test_pack_bucketed_greedy_single_exchange(spark, sf_dir):
     """The applyInPandas-free packing is one hash shuffle on (source,
     bucket) -- the window -- and nothing else: rank arithmetic is

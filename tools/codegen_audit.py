@@ -1,5 +1,4 @@
-"""Registry-wide strict-codegen audit (round 7, extends VERDICT r6 #2
-beyond the spatial family).
+"""Registry-wide strict-codegen audit.
 
 A Janino compile failure does NOT fail a query -- Spark logs an
 executor-side `ERROR CodeGenerator` and silently demotes the
@@ -13,6 +12,10 @@ sf0.001, reporting exactly which queries would have fallen back.
 Usage:
     python tools/codegen_audit.py [sf_dir] [query ...]
 
+With query names, runs only those; a name that is not registered
+exits 1 before any SparkSession starts. Each query goes through
+``bench.run``.
+
 Exit 0 = every query executes under strict codegen. Known-benign
 expressions that are interpreted BY DESIGN (CodegenFallback nodes
 like higher-order functions embedded in an otherwise compiled
@@ -24,28 +27,26 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import require_registered, run, session  # noqa: E402
 from etl_building_inspector_spark.plans.registry import QUERIES  # noqa: E402
-from etl_building_inspector_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    require_registered(sys.argv[2:])
     only = set(sys.argv[2:]) or set(QUERIES)
-    spark = get_spark("codegen-audit")
+    names = [n for n in QUERIES if n in only]
+    spark = session(sf_dir)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     failed: list[tuple[str, str]] = []
-    for name, fn in QUERIES.items():
-        if name not in only:
-            continue
-        t0 = time.time()
+    for name in names:
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            print(f"COMPILED {name} [{time.time() - t0:.1f}s]", flush=True)
+            dt = run(spark, name, sf_dir)
+            print(f"COMPILED {name} [{dt:.1f}s]", flush=True)
         except Exception as ex:  # noqa: BLE001
             first = str(ex).splitlines()[0][:160]
             failed.append((name, first))
@@ -56,7 +57,7 @@ def main() -> None:
         for name, msg in failed:
             print(f"  {name}: {msg}")
         sys.exit(1)
-    print(f"ALL {len(only)} queries execute under strict codegen")
+    print(f"ALL {len(names)} queries execute under strict codegen")
 
 
 if __name__ == "__main__":

@@ -43,7 +43,7 @@ ORACLE-cost limit, not an engine one (the engine finishes each in
 well under two minutes). This check keeps the x10 soak meaningful
 for the iterative families.
 
-Usage: python tools/equivariance_check.py <derived_dir> <base_dir> <stride> [query ...]
+Usage: python tools/equivariance_check.py <derived_dir> <base_dir> [query ...]
 Default queries: graph_kcore graph_label_propagation graph_pagerank
                  graph_triangle_count dedup_cluster_assign
                  dedup_cluster_assign_lss dedup_keep_representatives
@@ -82,8 +82,7 @@ SCALAR_CHECKS = {
 # that query's node-id space. Strides are computed from the BASE
 # fixture exactly like make_scaled_fixture (power of ten above the
 # max key), so one checker invocation can mix families whose ids
-# shift by DIFFERENT strides (graph = part keys, clusters = doc ids)
-# -- a single CLI stride was the r10 near-miss this removes.
+# shift by DIFFERENT strides (graph = part keys, clusters = doc ids).
 STRIDE_SOURCE = {
     "graph_kcore": ("lineitem", "l_partkey"),
     "graph_label_propagation": ("lineitem", "l_partkey"),
@@ -271,12 +270,7 @@ def _check_consistency(name, rows, spark, derived, queries) -> tuple[bool, str]:
 def main() -> int:
     derived = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0-derived"
     base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    rest = sys.argv[3:]
-    # legacy positional stride is tolerated but IGNORED: strides are
-    # now derived per query from the base fixture (see STRIDE_SOURCE)
-    if rest and rest[0].isdigit():
-        rest = rest[1:]
-    names = rest or DEFAULT_NAMES
+    names = sys.argv[3:] or DEFAULT_NAMES
 
     from etl_building_inspector_spark.plans.registry import QUERIES
     from etl_building_inspector_spark.session import get_spark

@@ -8,10 +8,11 @@ Usage:
   python tools/measure.py [--sf SF_DIR] plans OUT_DIR [q ...]
   python tools/measure.py [--sf SF_DIR] [--n N] profile q [q ...]
 
-``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``. Every timed run goes
-through ``run``: build, action into the ``noop`` sink, then
-``release_persisted()`` and ``gc.collect()``. The session is the
-package's own ``session.get_spark()``.
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``. The session and every
+timed run are ``bench.py``'s own ``session`` and ``run``: build,
+action into the ``noop`` sink, then ``release_persisted()`` and
+``gc.collect()``. A query name that is not registered exits 1 before
+any SparkSession starts.
 
 * ``time``: each query cold, then ``--n`` warm reruns.
 * ``ab-conf``: one warm-up, then ``--n`` rounds alternating the SQL
@@ -20,8 +21,11 @@ package's own ``session.get_spark()``.
 * ``ab-fanout``: the same A/B with ``operators._parallel.fan_out_scan``
   disabled (baseline) and enabled.
 * ``plans``: ``explain("formatted")`` of each query (default: the
-  ``bench.py`` headline list) into ``OUT_DIR/<query>.txt``. For
-  before/after evidence, dump into ``.../before`` and ``.../after``.
+  ``bench.py`` headline list) into ``OUT_DIR/<query>.txt``, with the
+  numbers that vary from run to run (expression ids, lambda-variable
+  suffixes, plan ids, codegen and query-stage ids) written as ``n``.
+  For before/after evidence, dump into ``.../before`` and
+  ``.../after`` and diff.
 * ``profile``: ``--n`` runs per query, each under its own job group;
   prints every job the run added to Spark's status store, streaming
   batches included (duration, tasks), and the stages it ran (task
@@ -31,20 +35,19 @@ package's own ``session.get_spark()``.
 from __future__ import annotations
 
 import argparse
-import gc
 import os
+import re
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import HEADLINE, require_registered, run, session  # noqa: E402
 from etl_building_inspector_spark.operators import _parallel  # noqa: E402
 from etl_building_inspector_spark.operators._cache import (  # noqa: E402
     release_persisted,
 )
 from etl_building_inspector_spark.plans.registry import QUERIES  # noqa: E402
-from etl_building_inspector_spark.session import get_spark  # noqa: E402
 from perfbench.probes import (  # noqa: E402
     drain_listener_bus,
     read_jobs,
@@ -52,24 +55,24 @@ from perfbench.probes import (  # noqa: E402
 )
 
 
-def session(sf_dir: str):
-    """The package session, warmed the way bench.py warms it."""
-    spark = get_spark("measure")
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    return spark
+# Numbers a plan carries that depend on what ran before it in the
+# session, not on the plan: expression ids, lambda-variable suffixes,
+# exchange plan ids, codegen stage ids and AQE query-stage ids.
+_RUN_VARYING = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"\blambda (\w+)_\d+\b"), r"lambda \1_n"),
+    (re.compile(r"\bplan_id=\d+"), "plan_id=n"),
+    (re.compile(r"\bcodegen id : \d+"), "codegen id : n"),
+    (re.compile(r"^(\(\d+\) \w*QueryStage\n(?:.+\n)*?Arguments: )\d+$", re.M), r"\1n"),
+]
 
 
-def run(spark, name: str, sf_dir: str) -> float:
-    """Build + noop-sink action of one query; wall seconds. Releases the
-    query's tracked persists and collects garbage afterwards."""
-    t0 = time.time()
-    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    release_persisted()
-    gc.collect()
-    return dt
+def normalise_plan(plan: str) -> str:
+    """``plan`` with its run-varying numbers replaced by ``n``, so two
+    runs of one commit write identical files."""
+    for pattern, repl in _RUN_VARYING:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def _fmt(xs: list[float]) -> str:
@@ -130,7 +133,9 @@ def write_plans(spark, sf_dir: str, out_dir: str, names: list[str]) -> list[str]
     os.makedirs(out_dir, exist_ok=True)
     paths = []
     for name in names:
-        plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().explainString(mode)
+        plan = normalise_plan(
+            QUERIES[name](spark, sf_dir)._jdf.queryExecution().explainString(mode)
+        )
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)
@@ -196,6 +201,7 @@ def main() -> None:
     args = ap.parse_args()
     if not args.sf:
         ap.error("--sf or $SPARK_GRAFT_SF_DIR is required")
+    require_registered(args.queries)
 
     spark = session(args.sf)
     if args.cmd == "time":
@@ -213,8 +219,6 @@ def main() -> None:
             lambda: fanout_switch(True),
         )
     elif args.cmd == "plans":
-        from bench import HEADLINE
-
         write_plans(spark, args.sf, args.out_dir, args.queries or HEADLINE)
     else:
         for name in args.queries:

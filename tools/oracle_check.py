@@ -24,12 +24,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_building_inspector_spark.plans.contract import canon  # noqa: E402
+from etl_building_inspector_spark.plans.contract import (  # noqa: E402
+    canon,
+    oracle_connection,
+)
 
 # above this many rows per side, switch from exact Counter compare to
-# the streaming digest (memory stays bounded; diff samples are lost);
-# env-overridable so tests can force the digest path on small fixtures
-ROW_CAP = int(os.environ.get("ORACLE_CHECK_ROW_CAP", 5_000_000))
+# the streaming digest (memory stays bounded; diff samples are lost)
+ROW_CAP = 5_000_000
 _FETCH = 100_000
 
 
@@ -77,8 +79,6 @@ def compare(name: str, spark_rows, duck_rows) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import duckdb
-
     import __spark_entry__ as entrymod
     from etl_building_inspector_spark.plans.contract import (
         assert_scalar_output_schema,
@@ -96,7 +96,7 @@ def main() -> int:
     for name in sorted(unknown):
         print(f"FAIL {name}: not a registered query")
 
-    con = duckdb.connect()
+    con = oracle_connection(sf_dir)
     # soak hygiene: DuckDB's default memory_limit (80% of RAM) lets a
     # big shingle-join oracle bad-alloc instead of spilling; cap it
     # and point the spill at a roomy temp dir for derived-scale runs
@@ -106,13 +106,6 @@ def main() -> int:
     tmp = os.environ.get("ORACLE_CHECK_DUCK_TMP", "")
     if tmp:
         con.execute(f"SET temp_directory='{tmp}'")
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
     n_fail = len(unknown)
     for name, fn in sorted(queries.items()):

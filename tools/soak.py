@@ -264,7 +264,6 @@ def main() -> int:
             os.path.join(TOOLS, "equivariance_check.py"),
             derived,
             base,
-            "0",
             *eq_names,
         ],
         capture_output=True,

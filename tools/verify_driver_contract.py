@@ -23,12 +23,10 @@ def main() -> int:
     os.chdir("/tmp")  # deliberately NOT the repo root
 
     import __spark_entry__ as entrymod
+    from bench import require_registered
 
+    require_registered(sys.argv[2:])
     queries = entrymod.queries()
-    unknown = sorted(set(sys.argv[2:]) - set(queries))
-    if unknown:
-        print(f"unknown queries: {' '.join(unknown)}")
-        return 1
 
     from pyspark.sql import SparkSession
 
