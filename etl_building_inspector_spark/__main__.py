@@ -83,7 +83,7 @@ def _cmd_list(args: argparse.Namespace) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="etl_building_inspector_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
     ls = sub.add_parser("list-queries", help="list registered queries")
     ls.set_defaults(fn=_cmd_list)
 
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
     return args.fn(args)
 
 

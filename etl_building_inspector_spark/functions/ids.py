@@ -62,7 +62,7 @@ def base62_of_md5(hex_col: Column) -> Column:
     return F.regexp_replace(digits, "^0+(?=.)", "")
 
 
-def md5_surrogate(*cols: Column | str, sep: str = ",") -> Column:
-    """Content hash of the given columns -- JVM-native (stays inside
-    whole-stage codegen)."""
-    return F.md5(F.concat_ws(sep, *[F.col(c) if isinstance(c, str) else c for c in cols]))
+def md5_surrogate(*cols: Column | str) -> Column:
+    """Content hash of the given columns, comma-joined -- JVM-native
+    (stays inside whole-stage codegen)."""
+    return F.md5(F.concat_ws(",", *[F.col(c) if isinstance(c, str) else c for c in cols]))

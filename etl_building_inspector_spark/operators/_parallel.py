@@ -27,6 +27,14 @@ deterministic under retry (sortBeforeRepartition, SPARK-23207), and
 every downstream consumer is order-insensitive (aggregates, equi-joins,
 windows with total orderings), so results are bit-identical -- verified
 against the DuckDB oracles for every affected query.
+
+Call sites: the text queries in ``plans/`` fan their 1-split documents
+scan out right before a heavy narrow pass (shingle explode, per-shingle
+hashing, regex normalization), and a few operators fan out their own
+input. Each call site, and each heavy pass left without one (the
+comments in dedup.py, similarity.py and textops.py give the ratio), was
+kept by an interleaved A/B of the query with and without the fan-out
+(``tools/measure.py ab-fanout``).
 """
 
 from __future__ import annotations
@@ -99,7 +107,7 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     the expensive narrow work.
 
     The partition probe (`df.rdd.getNumPartitions()`) runs in two
-    cases only (ADVICE r10 #1):
+    cases only:
 
       * the analyzed plan is scan-shaped (every node in
         _NARROW_NODES): the RDD conversion is a few ms of driver work
@@ -108,7 +116,7 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
         yields an InMemoryRelation): under AQE the probe materializes
         the upstream stages, but that work fills the registered cache
         the operator is about to reuse, so nothing is discarded (this
-        is the pipeline_corpus_curation_e2e shape, A/B-kept in r10).
+        is the pipeline_corpus_curation_e2e shape, kept by its A/B).
 
     For any other input (an unpersisted join/aggregate/window
     upstream, or a node the allowlist does not know) the helper is a

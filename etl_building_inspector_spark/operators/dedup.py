@@ -88,7 +88,7 @@ def minhash_signature(
     # the session's cores first (guide 2.5 -- see operators/_parallel).
     # `fanout=False` for micro-batch callers (streaming index refresh):
     # a few hundred rows per batch make the exchange pure overhead
-    # (A/B'd 0.92x in the r10 optimization round).
+    # (A/B'd 0.92x).
     if fanout:
         df = fan_out_scan(df)
     sh_col = "__mh_shingles"
@@ -532,8 +532,6 @@ def minhash_band_index(
     id_col: str,
     k: int = 8,
     bands: int = 4,
-    shingle_n: int = 3,
-    fanout: bool = True,
 ) -> DataFrame:
     """The persisted artifact of an incremental near-dup pipeline:
     band buckets PRE-AGGREGATED to one row per (band, key) carrying
@@ -548,9 +546,7 @@ def minhash_band_index(
     aggregation; the result is exactly what a daily pipeline persists
     (bucketed by `key`) between runs.
     """
-    buckets = minhash_lsh_buckets(
-        df, text_col, id_col, k, bands, shingle_n, fanout=fanout
-    )
+    buckets = minhash_lsh_buckets(df, text_col, id_col, k, bands)
     return buckets.groupBy("band", "key").agg(
         F.count("*").cast("long").alias("n_index_docs"),
         # cast BEFORE the min, as the streaming refresh does: string
@@ -588,14 +584,13 @@ def probe_minhash_band_index(
     id_col: str,
     k: int = 8,
     bands: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Which NEW docs collide with the standing index, and where: one
     row per colliding doc -- (id, hit_bands, n_index_docs,
     first_match_id). The join output is <= bands x |new docs| rows
     regardless of index skew (the index side is one row per key), so
     no bucket cap is needed."""
-    bandkeys = minhash_lsh_buckets(new_docs, text_col, id_col, k, bands, shingle_n)
+    bandkeys = minhash_lsh_buckets(new_docs, text_col, id_col, k, bands)
     hits = bandkeys.join(index, ["band", "key"])
     return hits.groupBy(id_col).agg(
         F.count("*").cast("long").alias("hit_bands"),

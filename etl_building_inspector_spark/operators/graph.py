@@ -37,6 +37,10 @@ from ._cache import (
     track_persist,
 )
 
+# Round cap of both connected-components algorithms; near-dup pair
+# graphs converge in a few rounds (see connected_components).
+_CC_MAX_ROUNDS = 25
+
 
 def _symmetric(
     edges: DataFrame, src: Column, dst: Column, *payload: Column
@@ -174,9 +178,7 @@ def _triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
     ).select("x", "ca", "cb")
 
 
-def local_triangle_counts(
-    edges: DataFrame, src: str = "u", dst: str = "v"
-) -> DataFrame:
+def local_triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle counts over an undirected graph: one row
     per vertex with (vertex, degree, n_wedges, n_triangles) -- the
     local clustering coefficient's exact numerator and denominator
@@ -189,7 +191,7 @@ def local_triangle_counts(
     credits all three of its vertices (one explode, one count -- still
     equi-join-only). The degrees are persisted: the orientation and
     the output both read them."""
-    e, deg = _canonical_edges(edges, src, dst)
+    e, deg = _canonical_edges(edges, "u", "v")
     deg = track_persist(deg)
     closed = _triangles(e, deg)
     tri = (
@@ -217,7 +219,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected pair graph by min-label
     propagation: every node's label converges to the smallest node id
@@ -263,7 +264,7 @@ def connected_components(
         .distinct()
         .withColumn("comp", F.col("node")),
         step,
-        max_iter,
+        _CC_MAX_ROUNDS,
         lambda new, _: new.filter(F.col("comp") != F.col("old")).count() == 0,
     )
     return labels.select("node", F.col("comp").alias("component"))
@@ -273,7 +274,6 @@ def connected_components_alternating(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -363,7 +363,7 @@ def connected_components_alternating(
             F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
         ),
         step,
-        max_iter,
+        _CC_MAX_ROUNDS,
         converged,
     )
     # converged: `cur` is a forest of stars (hi -> component min).
@@ -512,8 +512,6 @@ def pagerank_integer(
 def sssp_bounded(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     weight: str | Column = "w",
     max_hops: int = 3,
 ) -> DataFrame:
@@ -540,8 +538,8 @@ def sssp_bounded(
     sym = track_persist(
         _symmetric(
             edges,
-            F.col(src).cast("long"),
-            F.col(dst).cast("long"),
+            F.col("id_a").cast("long"),
+            F.col("id_b").cast("long"),
             w.cast("long").alias("w"),
         )
     )

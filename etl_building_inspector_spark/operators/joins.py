@@ -19,7 +19,6 @@ def broadcast_lookup_join(
     probe: DataFrame,
     build: DataFrame,
     on: list[str] | Column,
-    how: str = "inner",
 ) -> DataFrame:
     """Broadcast hash join with the small side pinned to broadcast.
 
@@ -29,7 +28,7 @@ def broadcast_lookup_join(
     spark.sql.autoBroadcastJoinThreshold (sheets did in the reference's
     domain) while still fitting executor memory.
     """
-    return probe.join(F.broadcast(build), on, how)
+    return probe.join(F.broadcast(build), on, "inner")
 
 
 def integrity_check(probe: DataFrame, build: DataFrame, on: list[str]) -> DataFrame:

@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 DEFAULT_RESOLUTIONS = ("1 minute", "1 hour", "1 day")
 
 
-def rollup_base(events: DataFrame, resolution: str, ts_col: str = "ts") -> DataFrame:
+def rollup_base(events: DataFrame, resolution: str) -> DataFrame:
     """Finest-level rollup straight from raw events (one scan)."""
     return (
         events.groupBy(
-            F.window(ts_col, resolution).alias("w"), "event_type"
+            F.window("ts", resolution).alias("w"), "event_type"
         )
         .agg(
             F.count("*").alias("n_events"),
@@ -70,7 +70,6 @@ def rollup_coarser(finer: DataFrame, resolution: str) -> DataFrame:
 def hypertable_rollup(
     events: DataFrame,
     resolutions: tuple[str, ...] = DEFAULT_RESOLUTIONS,
-    ts_col: str = "ts",
 ) -> dict[str, DataFrame]:
     """All levels; level i>0 is computed from level i-1's partials.
     Each coarser window must be a multiple of the finer one (window
@@ -79,7 +78,7 @@ def hypertable_rollup(
     finer: DataFrame | None = None
     for res in resolutions:
         level = (
-            rollup_base(events, res, ts_col)
+            rollup_base(events, res)
             if finer is None
             else rollup_coarser(finer, res)
         )

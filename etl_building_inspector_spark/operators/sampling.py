@@ -81,23 +81,18 @@ def group_bottom_k(
     )
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str,
-    boundaries: dict[str, int] | None = None,
-    salt: str = "split",
-) -> DataFrame:
-    """Deterministic dataset split: bucket = u32(md5(salt:id)) % 100,
-    assigned to the first split whose upper boundary exceeds it.
-    Default 80/10/10 train/valid/test. Pure projection -- no shuffle,
+def hash_split(df: DataFrame, id_col: str, salt: str = "split") -> DataFrame:
+    """Deterministic 80/10/10 train/valid/test split: bucket =
+    u32(md5(salt:id)) % 100, assigned to the first split whose upper
+    boundary (80, 90, 100) exceeds it. Pure projection -- no shuffle,
     no state, replayable on any engine that has md5."""
-    if boundaries is None:
-        boundaries = {"train": 80, "valid": 90, "test": 100}
     pct = sample_hash_u32(id_col, salt) % 100
-    expr = None
-    for name, hi in sorted(boundaries.items(), key=lambda kv: kv[1], reverse=True):
-        expr = F.lit(name) if expr is None else F.when(pct < hi, F.lit(name)).otherwise(expr)
-    return df.withColumn("split", expr)
+    return df.withColumn(
+        "split",
+        F.when(pct < 80, F.lit("train")).otherwise(
+            F.when(pct < 90, F.lit("valid")).otherwise(F.lit("test"))
+        ),
+    )
 
 
 def reservoir_sample_deterministic(

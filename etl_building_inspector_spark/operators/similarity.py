@@ -42,6 +42,11 @@ LSH_TARGET_BUCKET_WIDTH = 4
 LSH_PLANES_FLOOR = 4
 LSH_PLANES_CAP = 16
 
+# md5(salt:id) sampling salts of the sampled IVF/SemDeDup centroids and
+# of the PQ codebooks; the DuckDB twins in plans/ hash the same prefixes.
+CENT_SALT = "cent"
+PQ_SALT = "pq"
+
 
 def _dot(a: Column, b: Column) -> Column:
     """JVM-native dot product over array columns (no Python): zip_with
@@ -62,7 +67,7 @@ def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
+def cosine_arrow(df: DataFrame, a: str, b: str) -> DataFrame:
     """Arrow-vectorized cosine between two array columns — bit-exact
     twin of the HOF expression dot/(sqrt(na)*sqrt(nb)) and of the
     DuckDB list_reduce oracle: the kernel accumulates over DIMENSIONS
@@ -94,7 +99,7 @@ def cosine_arrow(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFram
             nb += B[:, i] * B[:, i]
         return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
 
-    return df.withColumn(out, _cos(F.col(a), F.col(b)))
+    return df.withColumn("cosine", _cos(F.col(a), F.col(b)))
 
 
 def _topk(sims: DataFrame, k: int, score: str = "cosine") -> DataFrame:
@@ -131,10 +136,10 @@ def cosine_topk_bruteforce(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
-    # NOT fan_out_scan'd (A/B'd in the r10 optimization round): the
-    # embeddings table is narrow enough that the repartition exchange
-    # cost exceeded the parallelism win (0.93x); the window shuffle
-    # right after already spreads the ranking work
+    # NOT fan_out_scan'd (A/B'd 0.93x): the embeddings table is narrow
+    # enough that the repartition exchange cost exceeded the
+    # parallelism win; the window shuffle right after already spreads
+    # the ranking work
     joined = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
     ).crossJoin(F.broadcast(q))
@@ -198,7 +203,7 @@ def lsh_buckets(
     plane_rows = [vec for _t, _bit, vec in planes]  # t-major, p ascending
     bit_weights = [bit for _t, bit, _vec in planes]
 
-    # NOT fan_out_scan'd (A/B'd in the r10 optimization round, 0.68x):
+    # NOT fan_out_scan'd (A/B'd 0.68x):
     # the plane-dot pass over the embeddings fixture is cheap relative
     # to the exchange it would add; the bucket self-joins downstream
     # re-shuffle anyway
@@ -416,12 +421,9 @@ def _probe_cells(q: DataFrame, centers: list, n_probe: int) -> DataFrame:
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans coarse quantization of the
     corpus, queries probe their n_probe nearest centroids, exact cosine
@@ -437,9 +439,9 @@ def cosine_topk_ivf(
     from pyspark.ml.functions import array_to_vector
 
     corpus_v = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
     ).withColumn("__v", array_to_vector(F.col("__cvec").cast("array<double>")))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="__v").fit(corpus_v)
+    model = KMeans(k=n_centroids, seed=42, featuresCol="__v").fit(corpus_v)
     assigned = model.transform(corpus_v).select(
         "neighbor_id", "__cvec", F.col("prediction").alias("cell")
     )
@@ -447,7 +449,7 @@ def cosine_topk_ivf(
     centers = [list(map(float, c)) for c in model.clusterCenters()]
     q = _probe_cells(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
         ),
         centers,
         n_probe,
@@ -514,10 +516,10 @@ def quantize_int8_stats(
 
 
 def _sampled_assign(
-    corpus: DataFrame, vec_col: str, id_col: str, n_centroids: int, salt: str
+    corpus: DataFrame, vec_col: str, id_col: str, n_centroids: int
 ) -> tuple[DataFrame, DataFrame]:
     """The sampled-centroid stage of IVF and SemDeDup: the centroids are
-    the n_centroids corpus vectors first in md5(salt:id) order
+    the n_centroids corpus vectors first in md5(CENT_SALT:id) order
     (sampling.bottom_k_sample), and every corpus vector is assigned to
     its argmax-cosine centroid (ties to the smaller cent_id). Returns
     (cent, assign): cent is (cent_id, __cv), assign is
@@ -534,7 +536,7 @@ def _sampled_assign(
         corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("__cv")),
         "cent_id",
         n_centroids,
-        salt,
+        CENT_SALT,
     )
     w_assign = Window.partitionBy("__id").orderBy(
         F.col("__cc").desc(), F.col("cent_id").asc()
@@ -559,7 +561,6 @@ def _ivf_sampled_candidates(
     id_col: str,
     n_centroids: int,
     n_probe: int,
-    salt: str,
 ) -> DataFrame:
     """Shared IVF candidate stage (sampled centroids -> corpus cell
     assignment -> query probes -> candidate pairs). Both
@@ -568,7 +569,7 @@ def _ivf_sampled_candidates(
     guarantee rather than two copies staying in sync. Returns
     (query_id, neighbor_id), self-pairs excluded.
     """
-    cent, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids, salt)
+    cent, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("__qc").desc(), F.col("cent_id").asc()
     )
@@ -597,10 +598,9 @@ def cosine_topk_ivf_sampled(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    salt: str = "cent",
 ) -> DataFrame:
     """IVF ANN with DETERMINISTIC sampled centroids: the centroid set
-    is the n_centroids corpus vectors ranked first by md5(salt:id) --
+    is the n_centroids corpus vectors ranked first by md5(CENT_SALT:id) --
     an unbiased, engine-portable sample, so unlike the KMeans variant
     (cosine_topk_ivf) the whole pipeline has an exact DuckDB oracle.
     Sampled centroids are the standard cheap IVF bootstrap (KMeans
@@ -614,7 +614,7 @@ def cosine_topk_ivf_sampled(
     ~n_probe/n_centroids of the corpus.
     """
     cand = _ivf_sampled_candidates(
-        corpus, queries, vec_col, id_col, n_centroids, n_probe, salt
+        corpus, queries, vec_col, id_col, n_centroids, n_probe
     )
 
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
@@ -642,7 +642,6 @@ def semantic_dedup_sampled(
     id_col: str = "vec_id",
     n_centroids: int = 16,
     tau: float = 0.35,
-    salt: str = "cent",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): bucket
     the corpus into clusters, compare pairs ONLY within a cluster, and
@@ -662,7 +661,7 @@ def semantic_dedup_sampled(
     corpus (FAISS-scale runs use ~100k clusters). No broadcast of the
     corpus anywhere; the only broadcast is the k x dim centroid table.
     """
-    _, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids, salt)
+    _, assign = _sampled_assign(corpus, vec_col, id_col, n_centroids)
     # assign feeds three consumers (pair-join sides + final output);
     # one tracked persist computes the centroid fanout ONCE instead of
     # three corpus scans (released at next query via release_persisted)
@@ -705,9 +704,8 @@ def _pq_codebook(
     n_sub: int,
     sub_dim: int,
     codes_per_sub: int,
-    salt: str,
 ) -> DataFrame:
-    """Deterministic PQ codebooks: ONE md5(salt:id)-ranked sample of
+    """Deterministic PQ codebooks: ONE md5(PQ_SALT:id)-ranked sample of
     codes_per_sub corpus vectors (a single orderBy+limit scan --
     TakeOrderedAndProject, per-partition heaps, no global window), and
     subspace j's codewords are the j-th subvectors of that sample
@@ -719,11 +717,11 @@ def _pq_codebook(
         corpus.select(F.col(id_col).alias("__sid"), F.col(vec_col).alias("__sv")),
         "__sid",
         codes_per_sub,
-        salt,
+        PQ_SALT,
     )
     # rank within the codes_per_sub-row sample only (window input is tiny)
     ranked = sample.withColumn(
-        "code", F.row_number().over(Window.orderBy(*sample_order("__sid", salt)))
+        "code", F.row_number().over(Window.orderBy(*sample_order("__sid", PQ_SALT)))
     )
     return ranked.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
@@ -743,7 +741,6 @@ def pq_encode_sampled(
     n_sub: int = 8,
     codes_per_sub: int = 16,
     dim: int = 64,
-    salt: str = "pq",
 ) -> DataFrame:
     """Product-quantization encode (Jegou et al. 2011, public): split
     each vector into n_sub contiguous subvectors, quantize each to its
@@ -760,7 +757,7 @@ def pq_encode_sampled(
     One shuffle total (the final groupBy); everything else is map-side.
     """
     sub_dim = dim // n_sub
-    cb = _pq_codebook(corpus, vec_col, id_col, n_sub, sub_dim, codes_per_sub, salt)
+    cb = _pq_codebook(corpus, vec_col, id_col, n_sub, sub_dim, codes_per_sub)
 
     sub_ids = F.sequence(F.lit(0), F.lit(n_sub - 1))
     fanout = fan_out_scan(
@@ -820,7 +817,6 @@ def pq_adc_topk(
     n_sub: int = 8,
     codes_per_sub: int = 16,
     dim: int = 64,
-    salt: str = "pq",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: rank corpus items by
     cos(query, recon(codes)) -- the query stays full-precision, the
@@ -834,7 +830,7 @@ def pq_adc_topk(
     recall vs full-precision brute force is pinned in tests.
     """
     enc = pq_encode_sampled(
-        corpus, vec_col, id_col, n_sub=n_sub, codes_per_sub=codes_per_sub, dim=dim, salt=salt
+        corpus, vec_col, id_col, n_sub=n_sub, codes_per_sub=codes_per_sub, dim=dim
     ).select(F.col(id_col).alias("neighbor_id"), "recon")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
 
@@ -861,8 +857,6 @@ def cosine_topk_ivf_pq(
     n_sub: int = 8,
     codes_per_sub: int = 16,
     dim: int = 64,
-    cent_salt: str = "cent",
-    pq_salt: str = "pq",
 ) -> DataFrame:
     """IVF-PQ ANN: the composition that serves billion-scale indexes
     (Jegou et al. 2011's IVFADC, minus residual encoding -- codes
@@ -881,11 +875,11 @@ def cosine_topk_ivf_pq(
     """
 
     cand = _ivf_sampled_candidates(
-        corpus, queries, vec_col, id_col, n_centroids, n_probe, cent_salt
+        corpus, queries, vec_col, id_col, n_centroids, n_probe
     )
     enc = pq_encode_sampled(
         corpus, vec_col, id_col,
-        n_sub=n_sub, codes_per_sub=codes_per_sub, dim=dim, salt=pq_salt,
+        n_sub=n_sub, codes_per_sub=codes_per_sub, dim=dim,
     ).select(F.col(id_col).alias("neighbor_id"), "recon")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     sims = (

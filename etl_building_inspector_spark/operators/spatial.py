@@ -116,14 +116,10 @@ def _outer_ring(polygon: Column) -> Column:
 
 
 def spatial_join_broadcast(
-    points: DataFrame,
-    polygons: DataFrame,
-    point_col: str = "point",
-    polygon_col: str = "polygon",
-    layer_col: str = "layer_id",
-    how: str = "inner",
+    points: DataFrame, polygons: DataFrame, how: str = "inner"
 ) -> DataFrame:
-    """Equi-join on layer + ray-cast predicate, polygon side broadcast.
+    """Equi-join on `layer_id` + ray-cast predicate of `point` against
+    `polygon`, polygon side broadcast.
 
     One-to-MANY like the reference (every containing polygon matches,
     building-inspector.js:289-296). `how='left'` keeps unmatched points
@@ -137,9 +133,9 @@ def spatial_join_broadcast(
     honors holes: a point in a courtyard hole is OUTSIDE); the bbox
     comes from the outer ring alone.
     """
-    px = F.col(f"{point_col}")[0]
-    py = F.col(f"{point_col}")[1]
-    xmin, xmax, ymin, ymax = _bbox(_outer_ring(polygons[polygon_col]))
+    px = F.col("point")[0]
+    py = F.col("point")[1]
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(polygons["polygon"]))
     polys_staged = (
         polygons.withColumn("__xmin", xmin)
         .withColumn("__xmax", xmax)
@@ -147,39 +143,34 @@ def spatial_join_broadcast(
         .withColumn("__ymax", ymax)
     )
     cond = (
-        (points[layer_col] == polys_staged[layer_col])
+        (points["layer_id"] == polys_staged["layer_id"])
         & (px >= polys_staged["__xmin"])
         & (px <= polys_staged["__xmax"])
         & (py >= polys_staged["__ymin"])
         & (py <= polys_staged["__ymax"])
-        & point_in_polygon_with_holes(px, py, polys_staged[polygon_col])
+        & point_in_polygon_with_holes(px, py, polys_staged["polygon"])
     )
     return points.join(F.broadcast(polys_staged), cond, how).drop(
         "__xmin", "__xmax", "__ymin", "__ymax"
     )
 
 
-def layer_index(
-    polygons: DataFrame,
-    id_col: str,
-    layer_col: str = "layer_id",
-    polygon_col: str = "polygon",
-) -> DataFrame:
-    """(layer, index): one row per layer holding every polygon of it
+def layer_index(polygons: DataFrame, id_col: str) -> DataFrame:
+    """(layer_id, index): one row per layer holding every polygon of it
     with its outer-ring bbox -- the per-layer in-memory index the
     reference builds (geo-indices.js:22-36), small enough to broadcast
     and probe in the point's own row with index_hits. A layer too
     large for one row takes spatial_join_grid instead."""
-    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col(polygon_col)))
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col("polygon")))
     entry = F.struct(
         F.col(id_col).alias("id"),
         xmin.alias("xmin"),
         xmax.alias("xmax"),
         ymin.alias("ymin"),
         ymax.alias("ymax"),
-        F.col(polygon_col).alias("polygon"),
+        F.col("polygon").alias("polygon"),
     )
-    return polygons.groupBy(layer_col).agg(F.collect_list(entry).alias("index"))
+    return polygons.groupBy("layer_id").agg(F.collect_list(entry).alias("index"))
 
 
 def index_hits(index: Column, px: Column, py: Column) -> Column:
@@ -198,7 +189,7 @@ def index_hits(index: Column, px: Column, py: Column) -> Column:
     )
 
 
-def adaptive_cell_size(polygons: DataFrame, polygon_col: str = "polygon") -> float:
+def adaptive_cell_size(polygons: DataFrame) -> float:
     """Derive the grid cell size from build-side bbox statistics: ONE
     aggregate over the polygons (mean outer-ring bbox width/height),
     cell = the larger mean extent. The average polygon then covers
@@ -208,7 +199,7 @@ def adaptive_cell_size(polygons: DataFrame, polygon_col: str = "polygon") -> flo
     (geo-indices.js:25-36). The single collected row is a plan-time
     scalar, same class of driver-side constant as KMeans centroids in
     cosine_topk_ivf."""
-    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col(polygon_col)))
+    xmin, xmax, ymin, ymax = _bbox(_outer_ring(F.col("polygon")))
     row = polygons.agg(
         F.avg(xmax - xmin).alias("dx"), F.avg(ymax - ymin).alias("dy")
     ).collect()[0]
@@ -216,15 +207,10 @@ def adaptive_cell_size(polygons: DataFrame, polygon_col: str = "polygon") -> flo
     return max(dims) if dims else 1.0
 
 
-def spatial_join_grid(
-    points: DataFrame,
-    polygons: DataFrame,
-    cell_size: float | None = None,
-    point_col: str = "point",
-    polygon_col: str = "polygon",
-    layer_col: str = "layer_id",
-) -> DataFrame:
-    """Shuffle-based spatial join keyed by (layer, grid cell).
+def spatial_join_grid(points: DataFrame, polygons: DataFrame) -> DataFrame:
+    """Shuffle-based spatial join keyed by (layer_id, grid cell), with
+    the same `point`, `polygon` and `layer_id` columns as
+    spatial_join_broadcast.
 
     Polygons explode to every cell their outer ring's bbox covers (the
     R-tree bbox prefilter, turned into join-key fan-out; holes only
@@ -238,14 +224,11 @@ def spatial_join_grid(
     back with NULL polygon columns, or, when the polygons fit a
     broadcast, call spatial_join_broadcast(..., how="left").
 
-    `cell_size=None` (default) auto-adapts from build-side bbox stats
-    (adaptive_cell_size); pass a float to override.
+    The cell size adapts to build-side bbox stats (adaptive_cell_size).
     """
-    polygons = polygons.withColumn("__outer_ring", _outer_ring(F.col(polygon_col)))
-    if cell_size is None:
-        cell_size = adaptive_cell_size(polygons, polygon_col)
+    polygons = polygons.withColumn("__outer_ring", _outer_ring(F.col("polygon")))
     xmin, xmax, ymin, ymax = _bbox(polygons["__outer_ring"])
-    cs = F.lit(float(cell_size))
+    cs = F.lit(float(adaptive_cell_size(polygons)))
     cells = F.flatten(
         F.transform(
             F.sequence(
@@ -270,20 +253,20 @@ def spatial_join_grid(
     pts_staged = points.withColumn(
         "__pcell",
         F.struct(
-            F.floor(points[point_col].getItem(0) / cs).alias("cx"),
-            F.floor(points[point_col].getItem(1) / cs).alias("cy"),
+            F.floor(points["point"].getItem(0) / cs).alias("cx"),
+            F.floor(points["point"].getItem(1) / cs).alias("cy"),
         ),
     )
     joined = pts_staged.join(
         polys_staged,
-        (pts_staged[layer_col] == polys_staged[layer_col])
+        (pts_staged["layer_id"] == polys_staged["layer_id"])
         & (pts_staged["__pcell"] == polys_staged["__cell"]),
         "inner",
     )
     refine = point_in_polygon_with_holes(
-        pts_staged[point_col].getItem(0),
-        pts_staged[point_col].getItem(1),
-        polys_staged[polygon_col],
+        pts_staged["point"].getItem(0),
+        pts_staged["point"].getItem(1),
+        polys_staged["polygon"],
     )
     return joined.filter(refine).drop("__pcell", "__cell", "__outer_ring")
 

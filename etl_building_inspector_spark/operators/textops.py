@@ -178,7 +178,7 @@ def tfidf_topk_terms(
     lazy/distributed. The final window partitions by doc — same key as
     tf's shuffle, so no extra exchange.
     """
-    # NOT fan_out_scan'd (A/B'd 0.74x in the r10 optimization round):
+    # NOT fan_out_scan'd (A/B'd 0.74x):
     # the token explode feeds a groupBy whose shuffle already spreads
     # the aggregation; the extra exchange cost more than it saved
     toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
@@ -241,6 +241,12 @@ def _gram_hash_pair(col: Column):
     train projection, the Arrow transfer to the probe kernel, and the
     join keys are all fixed-width int64."""
     return F.xxhash64(col), F.xxhash64(F.lit("km-b"), col)
+
+
+# The Bloom filter of bloom_screen: 2^20 bits (128 KiB whatever the
+# suite size) and 5 probes per gram.
+BLOOM_BITS = 1 << 20
+BLOOM_HASHES = 5
 
 
 def _bloom_positions(ha, hb, num_bits: int, k_hashes: int):
@@ -349,18 +355,12 @@ def corpus_gram_rows(
     )
 
 
-def bloom_screen(
-    grams: DataFrame,
-    pairs,
-    id_col: str,
-    num_bits: int,
-    k_hashes: int,
-) -> DataFrame:
+def bloom_screen(grams: DataFrame, pairs, id_col: str) -> DataFrame:
     """Per-doc confirmed hit counts (id, __hits) of corpus gram rows
     `grams` (corpus_gram_rows, or a subset of them) against the suite
     gram pairs `pairs` ((m, 2) int64, from suite_gram_pairs).
 
-    The pairs' Bloom filter (`num_bits/8` bytes whatever the suite
+    The pairs' Bloom filter (BLOOM_BITS/8 bytes whatever the suite
     size) broadcasts to an Arrow pandas_udf that prefilters the corpus
     grams with vectorized numpy bit probes, so only ~|true hits| +
     fp_rate*|grams| rows reach the confirm join. The confirm join on
@@ -375,16 +375,18 @@ def bloom_screen(
     import pandas as pd
 
     spark = grams.sparkSession
-    nb, kh = int(num_bits), int(k_hashes)
     bc = spark.sparkContext.broadcast(
-        _bloom_build(pairs[:, 0], pairs[:, 1], nb, kh)
+        _bloom_build(pairs[:, 0], pairs[:, 1], BLOOM_BITS, BLOOM_HASHES)
     )
 
     @F.pandas_udf("boolean")
     def _might_contain(ha, hb):  # type: ignore[no-untyped-def]
         arr = bc.value
         p = _bloom_positions(
-            ha.to_numpy(dtype=np.int64), hb.to_numpy(dtype=np.int64), nb, kh
+            ha.to_numpy(dtype=np.int64),
+            hb.to_numpy(dtype=np.int64),
+            BLOOM_BITS,
+            BLOOM_HASHES,
         )
         hit = ((arr[p >> 3] >> (p & 7).astype(np.uint8)) & 1).all(axis=1)
         return pd.Series(hit)
@@ -412,8 +414,6 @@ def bloom_decontaminate(
     text_col: str,
     id_col: str,
     n: int = 4,
-    num_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination with a Bloom-filter PREFILTER and a
     confirm join on the gram's 128-bit xxhash64 pair — same output as
@@ -422,10 +422,10 @@ def bloom_decontaminate(
 
     Why a bloom when the broadcast semi-join already works: the
     broadcast side is the full gram set (~GBs for a large eval suite);
-    the bloom is `num_bits/8` bytes regardless (128 KiB at the
-    default) and the prefilter drops the overwhelmingly-clean corpus
-    grams BEFORE the join, so the shuffle/probe volume collapses from
-    |train grams| to |bloom hits|. One suite collect, one persisted
+    the bloom is BLOOM_BITS/8 bytes regardless (128 KiB) and the
+    prefilter drops the overwhelmingly-clean corpus grams BEFORE the
+    join, so the shuffle/probe volume collapses from |train grams| to
+    |bloom hits|. One suite collect, one persisted
     corpus gram projection (serving the screen and the per-doc
     totals), one screen.
     """
@@ -433,7 +433,7 @@ def bloom_decontaminate(
     ex = corpus_gram_rows(
         fan_out_scan(train.select(id_col, text_col)), text_col, id_col, n
     )
-    hits = bloom_screen(ex, pairs[0], id_col, num_bits, k_hashes)
+    hits = bloom_screen(ex, pairs[0], id_col)
     totals = ex.groupBy(id_col).agg(
         F.count("__ha").cast("long").alias("n_shingles")
     )
@@ -455,8 +455,6 @@ def bloom_decontaminate_incremental(
     text_col: str,
     id_col: str,
     n: int = 4,
-    num_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """Incremental decontamination refresh: the benchmark suite arrives
     in batches, and re-screening the corpus against a NEW batch must
@@ -488,13 +486,11 @@ def bloom_decontaminate_incremental(
     ex = corpus_gram_rows(
         fan_out_scan(train.select(id_col, text_col)), text_col, id_col, n
     )
-    base_hits = track_persist(
-        bloom_screen(ex, pairs[0], id_col, num_bits, k_hashes)
-    )
+    base_hits = track_persist(bloom_screen(ex, pairs[0], id_col))
     # the anti side is the contaminated id set, small in practice; at
     # cluster scale AQE measures it
     clean_ex = ex.join(F.broadcast(base_hits.select(id_col)), id_col, "left_anti")
-    delta_hits = bloom_screen(clean_ex, pairs[1], id_col, num_bits, k_hashes)
+    delta_hits = bloom_screen(clean_ex, pairs[1], id_col)
 
     spine = ex.groupBy(id_col).agg(
         F.count("__ha").cast("long").alias("__n_shingles")

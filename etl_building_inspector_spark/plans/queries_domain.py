@@ -10,7 +10,6 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .registry import query
 

@@ -11,7 +11,7 @@ ratios/cosines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -32,6 +32,7 @@ from ..operators.dedup import (
     simhash_hamming_pairs,
 )
 from ..operators.similarity import (
+    CENT_SALT,
     LSH_PLANES_CAP,
     LSH_PLANES_FLOOR,
     LSH_TARGET_BUCKET_WIDTH,
@@ -55,6 +56,24 @@ NEARDUP_THRESHOLD = 0.35
 NEARDUP_BUCKET_CAP = 32
 MINHASH_BUCKET_CAP = 16
 JACCARD_DF_CAP = 32
+# MinHash signature length and the shingle size of the MinHash and
+# n-gram Jaccard dedups; SimHash widths and the hamming bound of the
+# pair join; the Jaccard threshold.
+MINHASH_K = 8
+SHINGLE_N = 3
+SIMHASH_BITS = 16
+SIMHASH_PAIR_BITS = 32
+SIMHASH_MAX_HAMMING = 3
+JACCARD_THRESHOLD = 0.5
+# The ANN query set: vectors with vec_id < ANN_QUERIES ask for their
+# ANN_K nearest neighbours. The sampled IVF probes IVF_PROBE of
+# IVF_CENTROIDS cells: random uniform 64-dim vectors are IVF's worst
+# case (cosines concentrate near 0); 6/16 probes holds recall ~0.56 vs
+# brute force while still skipping 62% of the corpus.
+ANN_QUERIES = 10
+ANN_K = 5
+IVF_CENTROIDS = 16
+IVF_PROBE = 6
 
 
 # --- shared SQL fragments (twins of functions/text.py) ---------------------
@@ -210,14 +229,14 @@ def dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_sig_sql(k: int = 8, n: int = 3) -> str:
+def _minhash_sig_sql() -> str:
     sig_cols = ",\n  ".join(
         f"list_min(list_transform(sh, x -> substr(sha256(x), {i * 8 + 1}, 8))) AS minhash_{i}"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql("toks", n)} AS sh FROM t)
+sh AS (SELECT doc_id, {_shingles_sql("toks", SHINGLE_N)} AS sh FROM t)
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
   {sig_cols}
 FROM sh
@@ -227,10 +246,10 @@ FROM sh
 @query("dedup_minhash_signature", _minhash_sig_sql())
 def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = minhash_signature(docs, "text", k=8, shingle_n=3)
+    sig = minhash_signature(docs, "text", k=MINHASH_K, shingle_n=SHINGLE_N)
     return sig.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        *[f"minhash_{i}" for i in range(8)],
+        *[f"minhash_{i}" for i in range(MINHASH_K)],
     )
 
 
@@ -303,8 +322,8 @@ def _simhash_total_sql(bits: int) -> str:
     return "\n  + ".join(terms)
 
 
-def _simhash_sql(bits: int = 16) -> str:
-    total = _simhash_total_sql(bits)
+def _simhash_sql() -> str:
+    total = _simhash_total_sql(SIMHASH_BITS)
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -316,17 +335,17 @@ FROM t
 @query("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return simhash(docs, "text", bits=16).select(
+    return simhash(docs, "text", bits=SIMHASH_BITS).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("simhash").cast("long").alias("simhash"),
     )
 
 
-def _simhash_pairs_sql(bits: int = 32, max_hamming: int = 3) -> str:
+def _simhash_pairs_sql() -> str:
     """Brute-force twin of the banded hamming join: banding with
     max_hamming < bands is lossless (pigeonhole over disjoint bit
     slices), so the O(n^2) threshold join IS the exact semantics."""
-    total = _simhash_total_sql(bits)
+    total = _simhash_total_sql(SIMHASH_PAIR_BITS)
     return f"""
 WITH {_DOCS_WITH_DUPS_SQL.strip()},
 t AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
@@ -335,7 +354,7 @@ SELECT CAST(a.doc_id AS BIGINT) AS id_a,
        CAST(b.doc_id AS BIGINT) AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
@@ -348,18 +367,21 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate scheme has a value-exact oracle, not just recall."""
     docs = _docs_with_dups(spark, sf_dir)
     return simhash_hamming_pairs(
-        docs, "text", "doc_id", bits=32, bands=4, max_hamming=3
+        docs,
+        "text",
+        "doc_id",
+        bits=SIMHASH_PAIR_BITS,
+        bands=4,
+        max_hamming=SIMHASH_MAX_HAMMING,
     )
 
 
-def _jaccard_sql(
-    n: int = 3, threshold: float = 0.5, df_cap: int = JACCARD_DF_CAP
-) -> str:
+def _jaccard_sql() -> str:
     return f"""
 WITH {_DOCS_WITH_DUPS_SQL.strip()},
 t AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
-sh0 AS (SELECT doc_id, unnest(list_distinct({_shingles_sql("toks", n)})) AS s FROM t),
-dfreq AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= {df_cap}),
+sh0 AS (SELECT doc_id, unnest(list_distinct({_shingles_sql("toks", SHINGLE_N)})) AS s FROM t),
+dfreq AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= {JACCARD_DF_CAP}),
 sh AS (SELECT sh0.doc_id,
               CAST(concat('0x', substr(md5(sh0.s), 1, 15)) AS BIGINT) AS s
        FROM sh0 JOIN dfreq USING (s)),
@@ -374,7 +396,7 @@ SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
 FROM shared
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= {threshold}
+WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= {JACCARD_THRESHOLD}
 """
 
 
@@ -385,8 +407,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         "text",
         "doc_id",
-        shingle_n=3,
-        threshold=0.5,
+        shingle_n=SHINGLE_N,
+        threshold=JACCARD_THRESHOLD,
         max_doc_freq=JACCARD_DF_CAP,
     )
     return pairs.select(
@@ -419,7 +441,7 @@ _EMB_NORM_B = (
 )
 
 
-def _ann_sql(k: int = 5, n_queries: int = 10) -> str:
+def _ann_sql() -> str:
     dot_qc = _DOT_SQL.format(a="qe", b="ce")
     # norms via self-dot; 0.0 init matches F.aggregate's zero seed
     # (0 + x == x exactly in IEEE, so list_reduce without init agrees).
@@ -427,7 +449,7 @@ def _ann_sql(k: int = 5, n_queries: int = 10) -> str:
     dot_cc = _DOT_SQL.format(a="ce", b="ce")
     return f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-           WHERE vec_id < {n_queries}),
+           WHERE vec_id < {ANN_QUERIES}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
 sims AS (
   SELECT query_id, neighbor_id,
@@ -441,15 +463,15 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
          PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
        ) AS BIGINT) AS rank
 FROM sims
-QUALIFY rank <= {k}
+QUALIFY rank <= {ANN_K}
 """
 
 
 @query("ann_cosine_topk", _ann_sql())
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk_bruteforce(emb, queries, "embedding", "vec_id", k=5)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
+    out = cosine_topk_bruteforce(emb, queries, "embedding", "vec_id", k=ANN_K)
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
@@ -467,10 +489,10 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sets) are bit-identical.
 
 
-def _planes_cte(n_tables: int, m: int, dim: int = EMB_DIM) -> str:
+def _planes_cte(n_tables: int, m: int) -> str:
     rows = ",\n    ".join(
         f"({t}, {bit}, [" + ", ".join(repr(v) for v in vec) + "])"
-        for t, bit, vec in lsh_planes(n_tables, m, dim)
+        for t, bit, vec in lsh_planes(n_tables, m, EMB_DIM)
     )
     return f"planes(tbl, bit, vec) AS (VALUES\n    {rows})"
 
@@ -490,16 +512,11 @@ def _buckets_cte(src: str = "embeddings") -> str:
 )"""
 
 
-def _ann_lsh_sql(
-    k: int = 5,
-    n_queries: int = 10,
-    n_tables: int = ANN_LSH_TABLES,
-    m: int = ANN_LSH_PLANES,
-) -> str:
+def _ann_lsh_sql() -> str:
     return f"""
-WITH {_planes_cte(n_tables, m)},
+WITH {_planes_cte(ANN_LSH_TABLES, ANN_LSH_PLANES)},
 {_buckets_cte()},
-q AS (SELECT * FROM buckets WHERE vid < {n_queries}),
+q AS (SELECT * FROM buckets WHERE vid < {ANN_QUERIES}),
 cand AS (
   SELECT DISTINCT q.vid AS query_id, c.vid AS neighbor_id
   FROM buckets c JOIN q ON c.tbl = q.tbl AND c.bucket = q.bucket AND q.vid <> c.vid
@@ -518,7 +535,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
          PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
        ) AS BIGINT) AS rank
 FROM sims
-QUALIFY rank <= {k}
+QUALIFY rank <= {ANN_K}
 """
 
 
@@ -528,13 +545,13 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same seeds. Recall >= 0.8 vs brute force is additionally
     pinned in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
     out = cosine_topk_lsh(
         emb,
         queries,
         "embedding",
         "vec_id",
-        k=5,
+        k=ANN_K,
         n_tables=ANN_LSH_TABLES,
         planes_per_table=ANN_LSH_PLANES,
         dim=EMB_DIM,
@@ -547,9 +564,7 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_sampled_sql(
-    k: int = 5, n_queries: int = 10, nc: int = 16, n_probe: int = 6
-) -> str:
+def _ivf_sampled_sql() -> str:
     cos_ec = (
         "list_reduce([CAST(e.embedding[i] AS DOUBLE) * CAST(c.cvec[i] AS DOUBLE) "
         "for i in generate_series(1, len(e.embedding))], (x, y) -> x + y)"
@@ -564,9 +579,9 @@ def _ivf_sampled_sql(
 WITH r AS (
   SELECT vec_id, embedding,
          row_number() OVER (ORDER BY
-           md5(concat('cent:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
+           md5(concat('{CENT_SALT}:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
   FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM r WHERE rk <= {nc}),
+cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM r WHERE rk <= {IVF_CENTROIDS}),
 assign AS (
   SELECT vec_id AS neighbor_id, cent_id FROM (
     SELECT e.vec_id, c.cent_id,
@@ -579,7 +594,7 @@ qp AS (
       row_number() OVER (PARTITION BY e.vec_id
         ORDER BY {cos_ec} DESC, c.cent_id) AS prnk
     FROM embeddings e CROSS JOIN cent c
-    WHERE e.vec_id < {n_queries}) WHERE prnk <= {n_probe}),
+    WHERE e.vec_id < {ANN_QUERIES}) WHERE prnk <= {IVF_PROBE}),
 cand AS (
   SELECT qp.query_id, a.neighbor_id
   FROM qp JOIN assign a USING (cent_id)
@@ -597,7 +612,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
          PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
        ) AS BIGINT) AS rank
 FROM sims
-QUALIFY rank <= {k}
+QUALIFY rank <= {ANN_K}
 """
 
 
@@ -610,12 +625,15 @@ def ann_cosine_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk_ivf_sampled
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
     out = cosine_topk_ivf_sampled(
-        # (16, 6): random uniform 64-dim vectors are IVF's worst case
-        # (cosines concentrate near 0); 6/16 probes holds recall ~0.56
-        # vs brute force while still skipping 62% of the corpus.
-        emb, queries, "embedding", "vec_id", k=5, n_centroids=16, n_probe=6
+        emb,
+        queries,
+        "embedding",
+        "vec_id",
+        k=ANN_K,
+        n_centroids=IVF_CENTROIDS,
+        n_probe=IVF_PROBE,
     )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
@@ -632,8 +650,8 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk_ivf(emb, queries, k=5, n_centroids=16, n_probe=4)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
+    out = cosine_topk_ivf(emb, queries, k=ANN_K, n_centroids=IVF_CENTROIDS, n_probe=4)
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
@@ -724,8 +742,8 @@ def _emb_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(pert)
 
 
-def _adaptive_planes_cte(n_tables: int, src: str = "emb", dim: int = EMB_DIM) -> str:
-    """Planes CTE that derives m from count(*) of `src` EXACTLY as the
+def _adaptive_planes_cte(n_tables: int) -> str:
+    """Planes CTE that derives m from count(*) of `emb` EXACTLY as the
     engine does (similarity.adaptive_planes_per_table: m = clamp(
     ceil(log2(max(n,2)/w)), floor, cap), from the same three
     similarity.LSH_* constants), then regenerates the hyperplanes in
@@ -738,11 +756,11 @@ def _adaptive_planes_cte(n_tables: int, src: str = "emb", dim: int = EMB_DIM) ->
     adaptive_planes_per_table(n) happens to equal NEARDUP_LSH_PLANES.
     Bit-exactness of the SQL-regenerated planes vs lsh_planes() is
     pinned by tests/test_similarity.py."""
-    assert dim % 4 == 0, "block/offset grid assumes dim % 4 == 0"
-    n_blocks = dim // 4
+    assert EMB_DIM % 4 == 0, "block/offset grid assumes dim % 4 == 0"
+    n_blocks = EMB_DIM // 4
     return f"""params AS (
   SELECT LEAST({LSH_PLANES_CAP}, GREATEST({LSH_PLANES_FLOOR}, CAST(CEIL(LOG2(
-    GREATEST((SELECT count(*) FROM {src}), 2) / {float(LSH_TARGET_BUCKET_WIDTH)}
+    GREATEST((SELECT count(*) FROM emb), 2) / {float(LSH_TARGET_BUCKET_WIDTH)}
   )) AS INTEGER))) AS m
 ),
 seeds AS (
@@ -767,16 +785,12 @@ planes AS (
 )"""
 
 
-def _neardup_lsh_sql(
-    threshold: float = NEARDUP_LSH_THRESHOLD,
-    n_tables: int = NEARDUP_LSH_TABLES,
-    cap: int = NEARDUP_BUCKET_CAP,
-) -> str:
+def _neardup_lsh_sql() -> str:
     return f"""
 WITH {_EMB_WITH_DUPS_SQL.strip()},
-{_adaptive_planes_cte(n_tables)},
+{_adaptive_planes_cte(NEARDUP_LSH_TABLES)},
 {_buckets_cte("emb")},
-kept AS (SELECT tbl, bucket FROM buckets GROUP BY tbl, bucket HAVING count(*) <= {cap}),
+kept AS (SELECT tbl, bucket FROM buckets GROUP BY tbl, bucket HAVING count(*) <= {NEARDUP_BUCKET_CAP}),
 b2 AS (SELECT buckets.* FROM buckets JOIN kept USING (tbl, bucket)),
 cand AS (
   SELECT DISTINCT x.vid AS id_a, y.vid AS id_b
@@ -787,7 +801,7 @@ SELECT CAST(c.id_a AS BIGINT) AS id_a, CAST(c.id_b AS BIGINT) AS id_b,
 FROM cand c
 JOIN emb a ON a.vec_id = c.id_a
 JOIN emb b ON b.vec_id = c.id_b
-WHERE {_EMB_DOT} / ({_EMB_NORM_A} * {_EMB_NORM_B}) >= {threshold}
+WHERE {_EMB_DOT} / ({_EMB_NORM_A} * {_EMB_NORM_B}) >= {NEARDUP_LSH_THRESHOLD}
 """
 
 
@@ -888,25 +902,25 @@ def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _minhash_calibration_sql(k: int = 8, n: int = 3) -> str:
-    pairs_inner = _minhash_lsh_sql(k=k, bands=4, n=n).strip()
+def _minhash_calibration_sql() -> str:
+    pairs_inner = _minhash_lsh_sql(k=MINHASH_K, bands=4, n=SHINGLE_N).strip()
     sig_cols = ",\n  ".join(
         f"list_min(list_transform(sh, x -> substr(sha256(x), {i * 8 + 1}, 8))) AS minhash_{i}"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     matches = " + ".join(
         f"CASE WHEN sa.minhash_{i} = sb.minhash_{i} THEN 1 ELSE 0 END"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     return f"""
 WITH pairs AS ({pairs_inner}),
 {_DOCS_WITH_DUPS_SQL.strip()},
 t2 AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
-sh2 AS (SELECT doc_id, list_distinct({_shingles_sql("toks", n)}) AS shd FROM t2),
+sh2 AS (SELECT doc_id, list_distinct({_shingles_sql("toks", SHINGLE_N)}) AS shd FROM t2),
 sig2 AS (SELECT doc_id, {sig_cols.replace('(sh,', '(shd,')} FROM sh2)
 SELECT p.id_a, p.id_b,
        CAST({matches} AS BIGINT) AS est_matches,
-       CAST({k} AS BIGINT) AS k,
+       CAST({MINHASH_K} AS BIGINT) AS k,
        CAST(len(list_intersect(ha.shd, hb.shd)) AS BIGINT) AS n_shared,
        CAST(len(ha.shd) AS BIGINT) AS n_a,
        CAST(len(hb.shd) AS BIGINT) AS n_b
@@ -960,7 +974,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash over distinct shingles equals MinHash over the raw list
     (min is idempotent to duplicates), so the estimate matches
     dedup_minhash_lsh_pairs' machinery exactly."""
-    k, n = 8, 3
+    k, n = MINHASH_K, SHINGLE_N
     docs = _docs_with_dups(spark, sf_dir)
     dshing = docs.withColumn(
         "shd", F.array_distinct(shingles("text", n))

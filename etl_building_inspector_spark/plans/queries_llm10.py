@@ -15,14 +15,12 @@ from pyspark.sql import functions as F
 
 from ..operators.sampling import sample_order
 from ..sources.tables import load_table
-from .queries_llm import _DOT_SQL, _TOKS
+from .queries_llm import ANN_K, ANN_QUERIES, _DOT_SQL, _TOKS
 from .registry import query
 
 
 # shared constants
 TRUNC_DIM = 16  # keep the first 16 of 64 dims
-TRUNC_K = 5
-TRUNC_NQ = 10
 AHASH_MAX_HAMMING = 3  # 4 x 16-bit bands are LOSSLESS for <= 3 flips
 PACK_BATCH = 8
 
@@ -48,7 +46,7 @@ WITH fullk AS (
 {full}
 ),
 tq AS (SELECT vec_id AS query_id, embedding[1:{TRUNC_DIM}] AS qe
-       FROM embeddings WHERE vec_id < {TRUNC_NQ}),
+       FROM embeddings WHERE vec_id < {ANN_QUERIES}),
 tc AS (SELECT vec_id AS neighbor_id, embedding[1:{TRUNC_DIM}] AS ce FROM embeddings),
 tsims AS (
   SELECT query_id, neighbor_id,
@@ -59,7 +57,7 @@ trunc AS (
     SELECT query_id, neighbor_id,
            row_number() OVER (PARTITION BY query_id
              ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM tsims) WHERE rank <= {TRUNC_K})
+    FROM tsims) WHERE rank <= {ANN_K})
 SELECT f.query_id,
        CAST(count(*) AS BIGINT) AS k,
        CAST(count(t.neighbor_id) AS BIGINT) AS n_matched,
@@ -89,9 +87,9 @@ def ann_truncated_dim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     te = emb.select(
         "vec_id", F.slice("embedding", 1, TRUNC_DIM).alias("temb")
     )
-    tqueries = te.filter(F.col("vec_id") < TRUNC_NQ)
+    tqueries = te.filter(F.col("vec_id") < ANN_QUERIES)
     trunc = cosine_topk_bruteforce(
-        te, tqueries, "temb", "vec_id", k=TRUNC_K
+        te, tqueries, "temb", "vec_id", k=ANN_K
     ).select(
         F.col("query_id").alias("t_qid"), F.col("neighbor_id").alias("t_nid")
     )

@@ -27,7 +27,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .queries_llm import _DOCS_WITH_DUPS_SQL, _NORM, _TOKS, _docs_with_dups, _shingles_sql
+from .queries_llm import (
+    SHINGLE_N,
+    _DOCS_WITH_DUPS_SQL,
+    _NORM,
+    _TOKS,
+    _docs_with_dups,
+    _shingles_sql,
+)
 from .registry import query
 
 
@@ -177,11 +184,11 @@ def privacy_contribution_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _prefix_filter_sql(n: int = 3, t: int = PREFIX_T_PCT) -> str:
+def _prefix_filter_sql() -> str:
     return f"""
 WITH {_DOCS_WITH_DUPS_SQL.strip()},
 tk AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
-sh0 AS (SELECT doc_id, unnest(list_distinct({_shingles_sql("toks", n)})) AS sh0 FROM tk),
+sh0 AS (SELECT doc_id, unnest(list_distinct({_shingles_sql("toks", SHINGLE_N)})) AS sh0 FROM tk),
 sh AS (SELECT doc_id,
               CAST(concat('0x', substr(md5(sh0), 1, 15)) AS BIGINT) AS sh
        FROM sh0),
@@ -193,11 +200,11 @@ ordered AS (
   FROM sh x JOIN dfreq d ON d.sh = x.sh),
 pref AS (
   SELECT doc_id, sh, s FROM ordered
-  WHERE rn <= s - (s * {t} + 99) // 100 + 1),
+  WHERE rn <= s - (s * {PREFIX_T_PCT} + 99) // 100 + 1),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.s AS s_a, b.s AS s_b
   FROM pref a JOIN pref b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  WHERE 100 * least(a.s, b.s) >= {t} * greatest(a.s, b.s)),
+  WHERE 100 * least(a.s, b.s) >= {PREFIX_T_PCT} * greatest(a.s, b.s)),
 inter AS (
   SELECT c.id_a, c.id_b, c.s_a, c.s_b, count(*) AS inter_sh
   FROM cand c
@@ -209,7 +216,7 @@ SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
        CAST(s_a + s_b - inter_sh AS BIGINT) AS union_sh,
        CAST(inter_sh AS DOUBLE) / (s_a + s_b - inter_sh) AS jaccard
 FROM inter
-WHERE 100 * inter_sh >= {t} * (s_a + s_b - inter_sh)
+WHERE 100 * inter_sh >= {PREFIX_T_PCT} * (s_a + s_b - inter_sh)
 """
 
 
@@ -226,7 +233,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_with_dups(spark, sf_dir)
     return jaccard_prefix_filter_pairs(
-        docs, "text", "doc_id", shingle_n=3, threshold_pct=PREFIX_T_PCT
+        docs, "text", "doc_id", shingle_n=SHINGLE_N, threshold_pct=PREFIX_T_PCT
     )
 
 

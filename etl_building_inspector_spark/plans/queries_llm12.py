@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm9 import _HLL_NUM, HLL_M, HLL_VBITS, _hll_exprs
@@ -187,7 +188,7 @@ def sketch_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _hist_quantile_sql(b: int = HIST_BINS) -> str:
+def _hist_quantile_sql() -> str:
     return f"""
 WITH c AS (
   SELECT o_orderpriority AS grp,
@@ -197,7 +198,7 @@ bounds AS (
   SELECT grp, min(cents) AS lo, max(cents) AS hi, count(*) AS n
   FROM c GROUP BY grp),
 binned AS (
-  SELECT c.grp, least({b} - 1, (c.cents - bo.lo) * {b} // (bo.hi - bo.lo + 1)) AS bin
+  SELECT c.grp, least({HIST_BINS} - 1, (c.cents - bo.lo) * {HIST_BINS} // (bo.hi - bo.lo + 1)) AS bin
   FROM c JOIN bounds bo ON bo.grp = c.grp),
 hist AS (SELECT grp, bin, count(*) AS cnt FROM binned GROUP BY grp, bin),
 cum AS (
@@ -210,7 +211,7 @@ med_bin AS (
   WHERE cum_cnt >= (n + 1) // 2
   GROUP BY grp),
 est AS (
-  SELECT m.grp, bo.lo + (m.bin + 1) * (bo.hi - bo.lo + 1) // {b} AS est_cents
+  SELECT m.grp, bo.lo + (m.bin + 1) * (bo.hi - bo.lo + 1) // {HIST_BINS} AS est_cents
   FROM med_bin m JOIN bounds bo ON bo.grp = m.grp),
 exact AS (
   SELECT grp, cents AS exact_cents FROM (
@@ -380,11 +381,6 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
 
     masked = _span_masked("spark")
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     pos = docs.select(
         "doc_id", F.posexplode(tokens("text")).alias("pos0", "tok")
@@ -458,7 +454,7 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _skip_sql(rows: int = FILE_ROWS) -> str:
+def _skip_sql() -> str:
     preds = " UNION ALL ".join(
         f"SELECT '{pid}' AS pred_id, TIMESTAMP '{lo} 00:00:00' AS lo, "
         f"TIMESTAMP '{hi} 00:00:00' AS hi"
@@ -467,12 +463,12 @@ def _skip_sql(rows: int = FILE_ROWS) -> str:
     return f"""
 WITH layouts AS (
   SELECT 'arrival' AS layout,
-         (row_number() OVER (ORDER BY o_orderkey) - 1) // {rows} AS file_id,
+         (row_number() OVER (ORDER BY o_orderkey) - 1) // {FILE_ROWS} AS file_id,
          o_orderdate
   FROM orders
   UNION ALL
   SELECT 'clustered' AS layout,
-         (row_number() OVER (ORDER BY o_orderdate, o_orderkey) - 1) // {rows} AS file_id,
+         (row_number() OVER (ORDER BY o_orderdate, o_orderkey) - 1) // {FILE_ROWS} AS file_id,
          o_orderdate
   FROM orders),
 zonemaps AS (

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .queries_llm import _DOCS_WITH_DUPS_SQL, _TOKS, _docs_with_dups
+from .queries_llm import SHINGLE_N, _DOCS_WITH_DUPS_SQL, _TOKS, _docs_with_dups
 from .registry import query
 
 
@@ -129,31 +129,33 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ODD_HEX = "('1','3','5','7','9','b','d','f')"
 
 
-def _bbit_sql(k: int = BBIT_K, n: int = 3) -> str:
+def _bbit_sql() -> str:
     from .queries_llm import MINHASH_BUCKET_CAP, _minhash_lsh_sql, _shingles_sql
 
     # cap passed explicitly so the coupling with the Spark twin's
     # max_bucket_width=MINHASH_BUCKET_CAP stays visible
-    pairs_inner = _minhash_lsh_sql(k=k, bands=4, n=n, cap=MINHASH_BUCKET_CAP).strip()
+    pairs_inner = _minhash_lsh_sql(
+        k=BBIT_K, bands=4, n=SHINGLE_N, cap=MINHASH_BUCKET_CAP
+    ).strip()
     sig_cols = ",\n  ".join(
         f"list_min(list_transform(shd, x -> substr(sha256(x), {i * 8 + 1}, 8))) AS mh_{i}"
-        for i in range(k)
+        for i in range(BBIT_K)
     )
     bits = " + ".join(
         f"(CASE WHEN (substr(sa.mh_{i}, 8, 1) IN {_ODD_HEX}) = "
         f"(substr(sb.mh_{i}, 8, 1) IN {_ODD_HEX}) THEN 1 ELSE 0 END)"
-        for i in range(k)
+        for i in range(BBIT_K)
     )
     return f"""
 WITH pairs AS ({pairs_inner}),
 {_DOCS_WITH_DUPS_SQL.strip()},
 t2 AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
-sh2 AS (SELECT doc_id, list_distinct({_shingles_sql("toks", n)}) AS shd FROM t2),
+sh2 AS (SELECT doc_id, list_distinct({_shingles_sql("toks", SHINGLE_N)}) AS shd FROM t2),
 sig2 AS (SELECT doc_id, {sig_cols} FROM sh2)
 SELECT p.id_a, p.id_b,
        CAST({bits} AS BIGINT) AS n_equal_bits,
-       CAST({k} AS BIGINT) AS k,
-       (2.0 * ({bits}) - {k}) / {k} AS j_bbit_est,
+       CAST({BBIT_K} AS BIGINT) AS k,
+       (2.0 * ({bits}) - {BBIT_K}) / {BBIT_K} AS j_bbit_est,
        CAST(len(list_intersect(ha.shd, hb.shd)) AS DOUBLE)
          / (len(ha.shd) + len(hb.shd) - len(list_intersect(ha.shd, hb.shd)))
          AS j_exact
@@ -178,7 +180,7 @@ def dedup_minhash_bbit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_pairs, minhash_signature
     from .queries_llm import MINHASH_BUCKET_CAP
 
-    k, n = BBIT_K, 3
+    k, n = BBIT_K, SHINGLE_N
     docs = _docs_with_dups(spark, sf_dir)
     dshing = docs.withColumn("shd", F.array_distinct(shingles("text", n))).select(
         "doc_id", "shd"

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .queries_llm import MINHASH_BUCKET_CAP, _docs_with_dups, _lsh_buckets_cte
+from .queries_llm import (
+    MINHASH_BUCKET_CAP,
+    MINHASH_K,
+    SHINGLE_N,
+    _docs_with_dups,
+    _lsh_buckets_cte,
+)
 from .registry import query
 
 
@@ -35,18 +41,18 @@ WINSOR_HI_PPM = 950_000  # P95
 # ---------------------------------------------------------------------------
 
 
-def _cap_loss_sql(k: int = 8, bands: int = 4, n: int = 3, cap: int = MINHASH_BUCKET_CAP) -> str:
+def _cap_loss_sql() -> str:
     return f"""
-WITH {_lsh_buckets_cte(k, bands, n)},
+WITH {_lsh_buckets_cte(MINHASH_K, 4, SHINGLE_N)},
 widths AS (
   SELECT band, key, count(*) AS w FROM buckets GROUP BY band, key)
 SELECT CAST(band AS BIGINT) AS band,
        CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(CASE WHEN w > {cap} THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
+       CAST(sum(CASE WHEN w > {MINHASH_BUCKET_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
        CAST(max(w) AS BIGINT) AS max_width,
-       CAST(sum(CASE WHEN w <= {cap} THEN w * (w - 1) // 2 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN w <= {MINHASH_BUCKET_CAP} THEN w * (w - 1) // 2 ELSE 0 END) AS BIGINT)
          AS pairs_kept,
-       CAST(sum(CASE WHEN w > {cap} THEN w * (w - 1) // 2 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN w > {MINHASH_BUCKET_CAP} THEN w * (w - 1) // 2 ELSE 0 END) AS BIGINT)
          AS pairs_lost
 FROM widths
 GROUP BY band
@@ -66,7 +72,9 @@ def dedup_lsh_cap_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_buckets
 
     docs = _docs_with_dups(spark, sf_dir)
-    buckets = minhash_lsh_buckets(docs, "text", "doc_id", k=8, bands=4, shingle_n=3)
+    buckets = minhash_lsh_buckets(
+        docs, "text", "doc_id", k=MINHASH_K, bands=4, shingle_n=SHINGLE_N
+    )
     widths = buckets.groupBy("band", "key").agg(F.count("*").alias("w"))
     cap = MINHASH_BUCKET_CAP
     pairs = F.expr("w * (w - 1) DIV 2")

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from ..functions.text import LANG_STOPWORDS, fingerprint, shingles, tokens
 from ..sources.tables import load_table
 from .queries_llm import (
+    MINHASH_K,
+    SHINGLE_N,
     _DOCS_WITH_DUPS_SQL,
     _NORM,
     _TOKS,
@@ -304,21 +306,21 @@ def text_compression_ratio_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _threshold_sensitivity_sql(k: int = 8, n: int = 3) -> str:
-    pairs_inner = _minhash_lsh_sql(k=k, bands=4, n=n).strip()
+def _threshold_sensitivity_sql() -> str:
+    pairs_inner = _minhash_lsh_sql(k=MINHASH_K, bands=4, n=SHINGLE_N).strip()
     sig_cols = ",\n  ".join(
         f"list_min(list_transform(sh, x -> substr(sha256(x), {i * 8 + 1}, 8))) AS minhash_{i}"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     matches = " + ".join(
         f"CASE WHEN sa.minhash_{i} = sb.minhash_{i} THEN 1 ELSE 0 END"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     return f"""
 WITH pairs AS ({pairs_inner}),
 {_DOCS_WITH_DUPS_SQL.strip()},
 t2 AS (SELECT doc_id, {_TOKS} AS toks FROM docs),
-sh2 AS (SELECT doc_id, {_shingles_sql("toks", n)} AS sh FROM t2),
+sh2 AS (SELECT doc_id, {_shingles_sql("toks", SHINGLE_N)} AS sh FROM t2),
 sig2 AS (SELECT doc_id, {sig_cols} FROM sh2),
 m AS (
   SELECT {matches} AS est_matches
@@ -343,7 +345,9 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram adds one k-way comparison per candidate pair and a
     9-row aggregate — the audit is (tiny constant) + (what the dedup
     already pays)."""
-    pairs, est = _minhash_pair_estimates(_docs_with_dups(spark, sf_dir), 8, 3)
+    pairs, est = _minhash_pair_estimates(
+        _docs_with_dups(spark, sf_dir), MINHASH_K, SHINGLE_N
+    )
     return (
         pairs.select(est.alias("est_matches"))
         .groupBy("est_matches")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from .queries_llm import _TOKS, _shingles_sql
 from .registry import query
@@ -197,11 +198,6 @@ def dedup_shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
     dedup itself will pay, at 3x scan cost but zero pair cost."""
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     staged = track_persist(docs.select(tokens("text").alias("toks")))
     outs = []

@@ -30,14 +30,12 @@ from ..operators.textops import (
     redact_pii,
     repetition_stats,
     stratified_sample,
-    tfidf_topk_terms,
 )
 from ..sources.tables import load_table
 from .queries_llm import (
     _DOCS_WITH_DUPS_SQL,
     _docs_with_dups,
     _minhash_lsh_sql,
-    _NORM,
     _shingles_sql,
     _stop_hits_sql,
     _TOKS,

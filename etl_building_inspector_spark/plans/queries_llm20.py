@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, shingles, tokens
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from .queries_llm import (
     _DOCS_WITH_DUPS_SQL,
@@ -71,11 +72,6 @@ def text_ngram_coverage_vs_reference(spark: SparkSession, sf_dir: str) -> DataFr
     product); the same shuffle class as decontaminate_ngram."""
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     from ..operators.sampling import sample_hash_u32
 

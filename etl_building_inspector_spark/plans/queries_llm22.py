@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, winnow_fingerprints
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from .queries_llm import _TOKS
 from .queries_llm18 import _RANGE_DOT, _RANGE_NC, _RANGE_NQ
@@ -139,11 +140,6 @@ def dedup_winnow_window_sensitivity(spark: SparkSession, sf_dir: str) -> DataFra
     from ..functions.text import _u32_of, shingles
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     staged = track_persist(
         docs.select(F.transform(shingles("text", 3), _u32_of).alias("h"))

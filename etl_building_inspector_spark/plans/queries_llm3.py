@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._parallel import fan_out_scan
 from ..operators.packing import pack_concat_chunks, pack_greedy
 from ..operators.sampling import sample_hash_u32, sample_order
 from ..operators.textops import bloom_decontaminate, domain_cap
@@ -282,11 +283,6 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     of full texts."""
     from ..functions.text import _u32_of, shingles, winnow_fingerprints
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     staged = docs.withColumn(
         "__h", F.transform(shingles("text", WINNOW_K), _u32_of)
@@ -466,11 +462,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import _u32_of, shingles, winnow_fingerprints
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     staged = docs.withColumn(
         "__h", F.transform(shingles("text", WINNOW_K), _u32_of)
@@ -537,17 +528,17 @@ EPOCH_SHUFFLE_SEED = 3
 EPOCH_SHUFFLE_SHARDS = 8
 
 
-def _epoch_shuffle_sql(seed: int = EPOCH_SHUFFLE_SEED, shards: int = EPOCH_SHUFFLE_SHARDS) -> str:
+def _epoch_shuffle_sql() -> str:
     u32 = (
-        f"CAST(concat('0x', substr(md5('ep{seed}:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
+        f"CAST(concat('0x', substr(md5('ep{EPOCH_SHUFFLE_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
         "AS BIGINT)"
     )
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST({u32} % {shards} AS BIGINT) AS shard,
+       CAST({u32} % {EPOCH_SHUFFLE_SHARDS} AS BIGINT) AS shard,
        CAST(row_number() OVER (
-         PARTITION BY {u32} % {shards}
-         ORDER BY md5('ep{seed}:' || CAST(doc_id AS VARCHAR)), doc_id
+         PARTITION BY {u32} % {EPOCH_SHUFFLE_SHARDS}
+         ORDER BY md5('ep{EPOCH_SHUFFLE_SEED}:' || CAST(doc_id AS VARCHAR)), doc_id
        ) AS BIGINT) AS position
 FROM documents
 """

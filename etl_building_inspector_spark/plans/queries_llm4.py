@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
+from ..operators._parallel import fan_out_scan
 from ..operators.dedup import minhash_lsh_pairs
 from .queries_llm import (
     _DOCS_WITH_DUPS_SQL,
@@ -60,11 +61,6 @@ GROUP BY sh.doc_id
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     sh = docs.select(
         "doc_id",

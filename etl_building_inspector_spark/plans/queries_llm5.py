@@ -13,16 +13,18 @@ SemDeDup (Abbas et al., arXiv:2303.09540), PQ (Jegou et al., TPAMI
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.similarity import (
+    CENT_SALT,
+    PQ_SALT,
     pq_adc_topk,
     pq_encode_sampled,
     semantic_dedup_sampled,
 )
 from ..sources.tables import load_table
-from .queries_llm import _TOKS
+from .queries_llm import ANN_K, ANN_QUERIES, _TOKS
 from .registry import query
 
 
@@ -66,7 +68,7 @@ def _semantic_sql() -> str:
 WITH r AS (
   SELECT vec_id, embedding,
          row_number() OVER (ORDER BY
-           md5(concat('cent:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
+           md5(concat('{CENT_SALT}:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
   FROM embeddings),
 cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM r WHERE rk <= {SEM_NC}),
 assign AS (
@@ -121,7 +123,7 @@ def _pq_cte() -> str:
     return f"""r AS (
   SELECT vec_id, embedding,
          row_number() OVER (ORDER BY
-           md5(concat('pq:', CAST(vec_id AS VARCHAR))), vec_id) AS code
+           md5(concat('{PQ_SALT}:', CAST(vec_id AS VARCHAR))), vec_id) AS code
   FROM embeddings),
 samp AS (SELECT code, embedding FROM r WHERE code <= {PQ_CODES}),
 subs AS (SELECT unnest(generate_series(0, {PQ_NSUB - 1})) AS sub_id),
@@ -184,14 +186,14 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_adc_sql(k: int = 5, n_queries: int = 10) -> str:
+def _pq_adc_sql() -> str:
     cos = _cos_sql("q.embedding", "e.recon")
     return f"""
 WITH {_pq_cte()},
 sims AS (
   SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, {cos} AS adc_cosine
   FROM embeddings q CROSS JOIN enc e
-  WHERE q.vec_id < {n_queries} AND q.vec_id <> e.vec_id)
+  WHERE q.vec_id < {ANN_QUERIES} AND q.vec_id <> e.vec_id)
 SELECT CAST(query_id AS BIGINT) AS query_id,
        CAST(neighbor_id AS BIGINT) AS neighbor_id,
        adc_cosine,
@@ -199,7 +201,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
          PARTITION BY query_id ORDER BY adc_cosine DESC, neighbor_id
        ) AS BIGINT) AS rank
 FROM sims
-QUALIFY rank <= {k}
+QUALIFY rank <= {ANN_K}
 """
 
 
@@ -209,10 +211,10 @@ def ann_cosine_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan side reads 8 small ints per vector instead of 256 bytes
     of float32. Recall vs brute force pinned in tests."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
     out = pq_adc_topk(
         emb, queries, "embedding", "vec_id",
-        k=5, n_sub=PQ_NSUB, codes_per_sub=PQ_CODES, dim=PQ_DIM,
+        k=ANN_K, n_sub=PQ_NSUB, codes_per_sub=PQ_CODES, dim=PQ_DIM,
     )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),

@@ -18,10 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._parallel import fan_out_scan
 from ..operators.dedup import minhash_signature
 from ..operators.similarity import cosine_arrow, lsh_buckets
 from ..sources.tables import load_table
-from .queries_llm import EMB_DIM, _planes_cte, _shingles_sql, _TOKS
+from .queries_llm import EMB_DIM, SHINGLE_N, _planes_cte, _shingles_sql, _TOKS
 from .queries_llm5 import _dense_daily
 from .registry import query
 
@@ -85,14 +86,10 @@ def _buckets_for(src: str) -> str:
 )"""
 
 
-def _decon_emb_sql(
-    threshold: float = DECON_EMB_THRESHOLD,
-    n_tables: int = DECON_EMB_TABLES,
-    m: int = DECON_EMB_PLANES,
-) -> str:
+def _decon_emb_sql() -> str:
     return f"""
 WITH {_DECON_SETS_SQL.strip()},
-{_planes_cte(n_tables, m)},
+{_planes_cte(DECON_EMB_TABLES, DECON_EMB_PLANES)},
 cb AS {_buckets_for("corpus")},
 bb AS {_buckets_for("bench")},
 cand AS (
@@ -110,7 +107,7 @@ SELECT CAST(corpus_id AS BIGINT) AS corpus_id,
        CAST(bench_id AS BIGINT) AS bench_id,
        cosine
 FROM sims
-WHERE cosine >= {threshold}
+WHERE cosine >= {DECON_EMB_THRESHOLD}
 QUALIFY row_number() OVER (
   PARTITION BY corpus_id ORDER BY cosine DESC, bench_id
 ) = 1
@@ -229,8 +226,6 @@ def text_oov_bigram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. The per-doc score is one more map-side-combinable agg."""
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
     # fan the 1-split scan out before the position explode (guide 2.5)
     docs = fan_out_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -288,21 +283,21 @@ _INC_K = 8
 _INC_BANDS = 4
 
 
-def _inc_minhash_sql(k: int = _INC_K, bands: int = _INC_BANDS, n: int = 3) -> str:
-    rpb = k // bands
+def _inc_minhash_sql() -> str:
+    rpb = _INC_K // _INC_BANDS
     sig_cols = ",\n  ".join(
         f"list_min(list_transform(sh, x -> substr(sha256(x), {i * 8 + 1}, 8))) AS minhash_{i}"
-        for i in range(k)
+        for i in range(_INC_K)
     )
     band_selects = "\nUNION ALL\n".join(
         f"SELECT doc_id, {b} AS band, md5(concat_ws('|', "
         + ", ".join(f"minhash_{b * rpb + r}" for r in range(rpb))
         + ")) AS key FROM sig"
-        for b in range(bands)
+        for b in range(_INC_BANDS)
     )
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql("toks", n)} AS sh FROM t),
+sh AS (SELECT doc_id, {_shingles_sql("toks", SHINGLE_N)} AS sh FROM t),
 sig AS (SELECT doc_id, {sig_cols} FROM sh),
 bandkeys AS ({band_selects}),
 idx AS (
@@ -340,7 +335,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     band table is exactly what an incremental pipeline persists
     between runs."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = minhash_signature(docs, "text", k=_INC_K, shingle_n=3)
+    sig = minhash_signature(docs, "text", k=_INC_K, shingle_n=SHINGLE_N)
     rpb = _INC_K // _INC_BANDS
     band_structs = [
         F.struct(
@@ -526,11 +521,6 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the rewrite result-invisible."""
     from ..functions.text import shingles, tokens
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     staged = docs.select("source", tokens("text").alias("toks"))
     s = (

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from . import queries_llm5
 from .queries_llm import _NORM, _TOKS
@@ -365,11 +366,6 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     joining candidates to the broadcast sketch and taking min over
     rows. All hashing is md5-derived integer arithmetic, so the
     DuckDB twin computes the identical sketch."""
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     t = docs.select(F.split(norm, " ").alias("t"))

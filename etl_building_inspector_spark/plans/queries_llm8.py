@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._parallel import fan_out_scan
 from ..sources.tables import load_table
 from .queries_llm import _NORM
 from .registry import query
@@ -74,8 +75,6 @@ def quality_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is the one linear pass; per-doc agg is map-side
     combinable."""
     from ..operators._cache import track_persist
-    from ..operators._parallel import fan_out_scan
-
     docs = load_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     # fan the 1-split scan out before the regex normalize + position

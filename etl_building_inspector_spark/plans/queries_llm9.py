@@ -25,8 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..operators._parallel import fan_out_scan
+from ..operators.similarity import CENT_SALT
 from ..sources.tables import load_table
-from .queries_llm import _TOKS
+from .queries_llm import ANN_K, ANN_QUERIES, IVF_CENTROIDS, IVF_PROBE, _TOKS
 from .registry import query
 
 
@@ -80,11 +82,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is consumed twice (count + join back), so it is persisted."""
     from ..operators._cache import track_persist
 
-    from ..operators._parallel import fan_out_scan
-
-    # fan the 1-split documents scan out before the heavy narrow
-    # pass (guide 2.5, operators/_parallel; A/B-kept in the r10
-    # optimization round)
     docs = fan_out_scan(load_table(spark, sf_dir, "documents"))
     spans = track_persist(
         docs.select("doc_id", tokens("text").alias("toks"))
@@ -482,11 +479,6 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # makes this rows-only).
 # ---------------------------------------------------------------------------
 
-IVFPQ_NC = 16
-IVFPQ_PROBE = 6
-IVFPQ_K = 5
-IVFPQ_NQ = 10
-
 
 def _ivf_pq_sql() -> str:
     from .queries_llm5 import _cos_sql, _pq_cte
@@ -497,9 +489,9 @@ def _ivf_pq_sql() -> str:
 WITH seed AS (
   SELECT vec_id, embedding,
          row_number() OVER (ORDER BY
-           md5(concat('cent:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
+           md5(concat('{CENT_SALT}:', CAST(vec_id AS VARCHAR))), vec_id) AS rk
   FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM seed WHERE rk <= {IVFPQ_NC}),
+cent AS (SELECT vec_id AS cent_id, embedding AS cvec FROM seed WHERE rk <= {IVF_CENTROIDS}),
 assign AS (
   SELECT vec_id AS neighbor_id, cent_id FROM (
     SELECT e.vec_id, c.cent_id,
@@ -512,7 +504,7 @@ qp AS (
       row_number() OVER (PARTITION BY e.vec_id
         ORDER BY {cos_ec} DESC, c.cent_id) AS prnk
     FROM embeddings e CROSS JOIN cent c
-    WHERE e.vec_id < {IVFPQ_NQ}) WHERE prnk <= {IVFPQ_PROBE}),
+    WHERE e.vec_id < {ANN_QUERIES}) WHERE prnk <= {IVF_PROBE}),
 cand AS (
   SELECT qp.query_id, a.neighbor_id
   FROM qp JOIN assign a USING (cent_id)
@@ -530,7 +522,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
          PARTITION BY query_id ORDER BY adc_cosine DESC, neighbor_id
        ) AS BIGINT) AS rank
 FROM sims
-QUALIFY rank <= {IVFPQ_K}
+QUALIFY rank <= {ANN_K}
 """
 
 
@@ -547,10 +539,10 @@ def ann_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_llm5 import PQ_CODES, PQ_DIM, PQ_NSUB
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < IVFPQ_NQ)
+    queries = emb.filter(F.col("vec_id") < ANN_QUERIES)
     out = cosine_topk_ivf_pq(
         emb, queries, "embedding", "vec_id",
-        k=IVFPQ_K, n_centroids=IVFPQ_NC, n_probe=IVFPQ_PROBE,
+        k=ANN_K, n_centroids=IVF_CENTROIDS, n_probe=IVF_PROBE,
         n_sub=PQ_NSUB, codes_per_sub=PQ_CODES, dim=PQ_DIM,
     )
     return out.select(

@@ -190,7 +190,7 @@ def spatial_pip_nomatch_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_RADIUS = 15  # also the grid cell size: 3x3 neighborhood covers R
 
 
-def _knn_sql(r: int = _KNN_RADIUS) -> str:
+def _knn_sql() -> str:
     return f"""
 WITH centers AS (
   SELECT CAST(s_suppkey AS BIGINT) AS poly_id,
@@ -208,7 +208,7 @@ d AS (
   SELECT point_id, poly_id,
          (px - sx) * (px - sx) + (py - sy) * (py - sy) AS d2
   FROM pts JOIN centers USING (layer_id)
-  WHERE (px - sx) * (px - sx) + (py - sy) * (py - sy) <= {r * r})
+  WHERE (px - sx) * (px - sx) + (py - sy) * (py - sy) <= {_KNN_RADIUS * _KNN_RADIUS})
 SELECT point_id, poly_id, CAST(d2 AS BIGINT) AS d2
 FROM d
 QUALIFY row_number() OVER (PARTITION BY point_id ORDER BY d2, poly_id) = 1
@@ -361,15 +361,15 @@ cand AS (
     ON a.layer_id = b.layer_id AND a.cx = b.cx AND a.cy = b.cy)"""
 
 
-def _bbox_sql(cell: int = _BBOX_CELL) -> str:
+def _bbox_sql() -> str:
     cand = _grid_cand_sql(
         _box_cells_sql(
             "a", "sup_box", "a_id, layer_id, ax0, ax1, ay0, ay1",
-            ("ax0", "ax1", "ay0", "ay1"), cell,
+            ("ax0", "ax1", "ay0", "ay1"), _BBOX_CELL,
         ),
         _box_cells_sql(
             "b", "part_box", "b_id, layer_id, bx0, bx1, by0, by1",
-            ("bx0", "bx1", "by0", "by1"), cell,
+            ("bx0", "bx1", "by0", "by1"), _BBOX_CELL,
         ),
         "a_id, b_id, ax0, ax1, ay0, ay1, bx0, bx1, by0, by1",
     )
@@ -466,15 +466,15 @@ def spatial_bbox_intersect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _poly_intersect_sql(cell: int = _BBOX_CELL) -> str:
+def _poly_intersect_sql() -> str:
     cand = _grid_cand_sql(
         _box_cells_sql(
             "a", "dia", "poly_id, layer_id, acx, acy, r",
-            ("(acx - r)", "(acx + r)", "(acy - r)", "(acy + r)"), cell,
+            ("(acx - r)", "(acx + r)", "(acy - r)", "(acy + r)"), _BBOX_CELL,
         ),
         _box_cells_sql(
             "b", "rect", "box_id, layer_id, bx0, bx1, by0, by1",
-            ("bx0", "bx1", "by0", "by1"), cell,
+            ("bx0", "bx1", "by0", "by1"), _BBOX_CELL,
         ),
         "poly_id, box_id, acx, acy, r, bx0, bx1, by0, by1",
     )
@@ -613,7 +613,7 @@ WHERE {predicate}
 """
 
 
-def _convex_sat_sql(cell: int = _BBOX_CELL) -> str:
+def _convex_sat_sql() -> str:
     # cross((p[i+1]-p[i]), (v-p[i])) < 0  == v strictly outside edge i
     def sep(p: str, q: str) -> str:
         return (
@@ -624,7 +624,7 @@ def _convex_sat_sql(cell: int = _BBOX_CELL) -> str:
         )
 
     return _convex_pair_sql(
-        cell, f"NOT ({sep('ra', 'rb')}) AND NOT ({sep('rb', 'ra')})"
+        _BBOX_CELL, f"NOT ({sep('ra', 'rb')}) AND NOT ({sep('rb', 'ra')})"
     )
 
 
@@ -941,7 +941,7 @@ def spatial_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _convex_contains_sql(cell: int = _BBOX_CELL) -> str:
+def _convex_contains_sql() -> str:
     # every edge i of outer ra has every vertex v of rb inside-or-on:
     # cross((ra[i+1]-ra[i]), (v-ra[i])) >= 0 for all (i, v)
     contains = (
@@ -951,7 +951,7 @@ def _convex_contains_sql(cell: int = _BBOX_CELL) -> str:
         "(ra[i+1][2] - ra[i][2]) * (v[1] - ra[i][1]) >= 0)) = len(rb))) "
         "= len(ra) - 1"
     )
-    return _convex_pair_sql(cell, contains)
+    return _convex_pair_sql(_BBOX_CELL, contains)
 
 
 @query("spatial_convex_contains_join", _convex_contains_sql())
@@ -1023,7 +1023,7 @@ def _pip_strict_sql(px: str, py: str, ring: str) -> str:
     )
 
 
-def _simple_poly_intersect_sql(cell: int = _BBOX_CELL) -> str:
+def _simple_poly_intersect_sql() -> str:
     edges = (
         "list_transform(generate_series(1, len({r}) - 1), "
         "i -> [{r}[i][1], {r}[i][2], {r}[i+1][1], {r}[i+1][2]])"
@@ -1039,8 +1039,8 @@ def _simple_poly_intersect_sql(cell: int = _BBOX_CELL) -> str:
         f" OR ({_pip_strict_sql('rb[1][1]', 'rb[1][2]', 'ra')})"
     )
     cand = _grid_cand_sql(
-        _ring_cells_sql("a", "dart", "poly_id", "ra", cell),
-        _ring_cells_sql("b", "ell", "shape_id", "rb", cell),
+        _ring_cells_sql("a", "dart", "poly_id", "ra", _BBOX_CELL),
+        _ring_cells_sql("b", "ell", "shape_id", "rb", _BBOX_CELL),
         "poly_id, shape_id, ra, rb",
     )
     return f"""

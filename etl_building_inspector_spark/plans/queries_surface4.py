@@ -473,8 +473,8 @@ _PR_SCALE = 10**12
 _PR_ITER = 4
 
 
-def _pagerank_sql(iterations: int = _PR_ITER, scale: int = _PR_SCALE) -> str:
-    r0 = f"({scale} // (SELECT count(*) FROM nodes))"
+def _pagerank_sql() -> str:
+    r0 = f"({_PR_SCALE} // (SELECT count(*) FROM nodes))"
     parts = [
         f"""
 WITH e0 AS (
@@ -485,7 +485,7 @@ nodes AS (SELECT DISTINCT s AS node FROM e),
 outdeg AS (SELECT s, count(*) AS od FROM e GROUP BY s),
 pr0 AS (SELECT node, {r0} AS r FROM nodes)"""
     ]
-    for k in range(1, iterations + 1):
+    for k in range(1, _PR_ITER + 1):
         parts.append(
             f""",
 pr{k} AS (
@@ -499,7 +499,7 @@ pr{k} AS (
     parts.append(
         f"""
 SELECT CAST(node AS BIGINT) AS node, CAST(r AS BIGINT) AS rank_scaled
-FROM pr{iterations}"""
+FROM pr{_PR_ITER}"""
     )
     return "".join(parts)
 
@@ -587,7 +587,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ROUNDS = 2
 
 
-def _lpa_sql(rounds: int = _LPA_ROUNDS) -> str:
+def _lpa_sql() -> str:
     parts = [
         f"""
 WITH e0 AS (
@@ -597,7 +597,7 @@ e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 nodes AS (SELECT DISTINCT s AS node FROM e),
 lp0 AS (SELECT node, node AS lab FROM nodes)"""
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, _LPA_ROUNDS + 1):
         parts.append(
             f""",
 lp{k} AS (
@@ -616,7 +616,7 @@ lp{k} AS (
     parts.append(
         f"""
 SELECT CAST(node AS BIGINT) AS node, CAST(lab AS BIGINT) AS community
-FROM lp{rounds}"""
+FROM lp{_LPA_ROUNDS}"""
     )
     return "".join(parts)
 
@@ -674,7 +674,7 @@ _KCORE_K = 60
 _KCORE_ROUNDS = 3
 
 
-def _kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
+def _kcore_sql() -> str:
     parts = [
         f"""
 WITH e0 AS (
@@ -682,11 +682,11 @@ WITH e0 AS (
 ),
 edges0 AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0)"""
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _KCORE_ROUNDS + 1):
         parts.append(
             f""",
 keep{r} AS (
-  SELECT s AS node FROM edges{r - 1} GROUP BY s HAVING count(*) >= {k}),
+  SELECT s AS node FROM edges{r - 1} GROUP BY s HAVING count(*) >= {_KCORE_K}),
 edges{r} AS (
   SELECT e.s, e.d FROM edges{r - 1} e
   JOIN keep{r} a ON e.s = a.node
@@ -695,7 +695,7 @@ edges{r} AS (
     parts.append(
         f"""
 SELECT CAST(s AS BIGINT) AS node, CAST(count(*) AS BIGINT) AS core_degree
-FROM edges{rounds} GROUP BY s"""
+FROM edges{_KCORE_ROUNDS} GROUP BY s"""
     )
     return "".join(parts)
 
@@ -742,13 +742,13 @@ _CN_TOPK = 5
 _CN_HUB_CAP = 100
 
 
-def _common_neighbors_sql(k: int = _CN_TOPK, cap: int = _CN_HUB_CAP) -> str:
+def _common_neighbors_sql() -> str:
     return f"""
 WITH e0 AS (
 {COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
-mid AS (SELECT s AS m FROM e GROUP BY s HAVING count(*) <= {cap}),
+mid AS (SELECT s AS m FROM e GROUP BY s HAVING count(*) <= {_CN_HUB_CAP}),
 eca AS (SELECT e.s, e.d FROM e JOIN mid ON e.d = mid.m),
 ecb AS (SELECT e.s, e.d FROM e JOIN mid ON e.s = mid.m),
 wedge AS (
@@ -762,7 +762,7 @@ cand AS (
 SELECT CAST(u AS BIGINT) AS node, CAST(v AS BIGINT) AS candidate, common,
        CAST(row_number() OVER (PARTITION BY u ORDER BY common DESC, v) AS BIGINT) AS rk
 FROM cand
-QUALIFY rk <= {k}
+QUALIFY rk <= {_CN_TOPK}
 """
 
 
@@ -826,14 +826,14 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _neighbor_jaccard_sql(k: int = _CN_TOPK, cap: int = _CN_HUB_CAP) -> str:
+def _neighbor_jaccard_sql() -> str:
     return f"""
 WITH e0 AS (
 {COPURCHASE_EDGES_SQL}
 ),
 e AS (SELECT u AS s, v AS d FROM e0 UNION ALL SELECT v AS s, u AS d FROM e0),
 deg AS (SELECT s AS node, count(*) AS deg FROM e GROUP BY s),
-mid AS (SELECT s AS m FROM e GROUP BY s HAVING count(*) <= {cap}),
+mid AS (SELECT s AS m FROM e GROUP BY s HAVING count(*) <= {_CN_HUB_CAP}),
 eca AS (SELECT e.s, e.d FROM e JOIN mid ON e.d = mid.m),
 ecb AS (SELECT e.s, e.d FROM e JOIN mid ON e.s = mid.m),
 wedge AS (
@@ -854,7 +854,7 @@ SELECT CAST(u AS BIGINT) AS node, CAST(v AS BIGINT) AS candidate,
        jaccard,
        CAST(row_number() OVER (PARTITION BY u ORDER BY jaccard DESC, v) AS BIGINT) AS rk
 FROM scored
-QUALIFY rk <= {k}
+QUALIFY rk <= {_CN_TOPK}
 """
 
 

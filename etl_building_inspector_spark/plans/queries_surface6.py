@@ -743,10 +743,12 @@ def time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min/max spans (the stats a pruning engine would persist).
 # ---------------------------------------------------------------------------
 
+_Z_BITS = 10  # bits per dimension: both keys are taken % 1024
 
-def _z_interleave_sql(x: str, y: str, bits: int = 10) -> str:
+
+def _z_interleave_sql(x: str, y: str) -> str:
     terms = []
-    for i in range(bits):
+    for i in range(_Z_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
@@ -772,7 +774,7 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("l_partkey") % 1024
     y = F.col("l_suppkey") % 1024
     z = F.lit(0)
-    for i in range(10):
+    for i in range(_Z_BITS):
         z = z + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
         z = z + F.shiftleft(
             F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1
@@ -822,10 +824,7 @@ FROM ranked GROUP BY o_orderpriority
 """,
 )
 def median_exact_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from pyspark.sql.functions import PandasUDFType
+    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     # explicit functionType: with `from __future__ import annotations`
     # the type hints are strings and pandas_udf's inference rejects them

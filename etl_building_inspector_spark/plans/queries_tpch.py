@@ -31,9 +31,10 @@ from ..sources.tables import load_table
 from .registry import query
 
 
-def _rev_e4(price="l_extendedprice", disc="l_discount"):
+def _rev_e4():
     """Per-row exact revenue in 1e-4 currency units (see module doc)."""
-    return F.round(F.col(price) * (F.lit(1) - F.col(disc)) * 10000, 0).cast("long")
+    revenue = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    return F.round(revenue * 10000, 0).cast("long")
 
 
 _REV_E4_SQL = "CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT)"

@@ -73,14 +73,11 @@ def download_paginated(
     out_path: str,
     fetch_json: FetchJson = _default_fetch,
     sleep_s: float = DEFAULT_SLEEP_S,
-    max_pages: int | None = None,
-    seq_start: int = 0,
 ) -> int:
     """S1: GET {base_url}/page/{n} from n=1; stop on the first page with
     empty/missing `features` (building-inspector.js:58-79). Features
-    append to out_path as JSONL with a global `_seq` arrival-order
-    column (continues from seq_start across multi-file landings).
-    Returns feature count."""
+    append to out_path as JSONL with an `_seq` arrival-order column
+    from 0. Returns feature count."""
     n_features = 0
     page = 1
     with open(out_path, "w") as out:
@@ -90,11 +87,9 @@ def download_paginated(
             if not feats:
                 break
             for feat in feats:
-                out.write(_seq_line(feat, seq_start + n_features))
+                out.write(_seq_line(feat, n_features))
                 n_features += 1
             page += 1
-            if max_pages is not None and page > max_pages:
-                break
             time.sleep(sleep_s)  # S2 politeness throttle
     return n_features
 

@@ -14,8 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Schema comes from the parquet footer
@@ -53,60 +51,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
 
-
-# --- multi-format read/write (engine source/sink breadth) -------------------
-# Parquet is the canonical store; CSV/JSON/ORC cover interchange with
-# upstream systems. Round-trip conformance is pinned by
-# tests/test_formats.py: write parquet-loaded fixtures to each format,
-# read back, prove value-identity. Format notes that matter at scale:
-#  - csv: header + explicit schema (NEVER inferSchema: a 100 TB
-#    inference pass is a full extra scan); timestamps as ISO strings.
-#  - json (JSONL): splittable line format, explicit schema for the
-#    same reason.
-#  - orc: columnar+splittable like parquet; the vectorized reader and
-#    pushdown work the same way.
-
-_FORMAT_OPTS: dict[str, dict[str, str]] = {
-    # timestampFormat governs TIMESTAMP; TIMESTAMP_NTZ columns read the
-    # separate timestampNTZFormat option — without it NTZ falls back to
-    # the [.SSS] default and silently truncates micros to millis on the
-    # text round trip (events.ts is NTZ with real microsecond fractions).
-    "csv": {
-        "header": "true",
-        "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-        "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    },
-    "json": {
-        "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-        "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    },
-    "orc": {},
-    "parquet": {},
-}
-
-
-def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Write a DataFrame in any supported interchange format."""
-    if fmt not in _FORMAT_OPTS:
-        raise ValueError(f"unsupported format: {fmt}")
-    df.write.mode("overwrite").options(**_FORMAT_OPTS[fmt]).format(fmt).save(
-        path
-    )
-
-
-def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema=None
-) -> DataFrame:
-    """Read any supported format. For text formats (csv/json) a schema
-    is REQUIRED — self-describing formats (parquet/orc) carry their
-    own."""
-    if fmt not in _FORMAT_OPTS:
-        raise ValueError(f"unsupported format: {fmt}")
-    reader = spark.read.options(**_FORMAT_OPTS[fmt]).format(fmt)
-    if fmt in ("csv", "json"):
-        if schema is None:
-            raise ValueError(f"{fmt} requires an explicit schema")
-        reader = reader.schema(schema)
-    elif schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)

@@ -42,8 +42,6 @@ def streaming_bloom_decontaminate(
     id_col: str,
     batch_col: str,
     n: int = 4,
-    num_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """Run the suite stream to completion, incrementally flagging
     train docs; return one batch row per train doc --
@@ -69,7 +67,7 @@ def streaming_bloom_decontaminate(
                     schema=f"{id_col} long",
                 )
                 clean_ex = ex.join(F.broadcast(quarantined), id_col, "left_anti")
-            hits = bloom_screen(clean_ex, pairs[b], id_col, num_bits, k_hashes)
+            hits = bloom_screen(clean_ex, pairs[b], id_col)
             for r in hits.collect():
                 flagged[r[id_col]] = (b, int(r["__hits"]))
 

@@ -38,16 +38,15 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
 def streaming_windowed_counts(
     events: DataFrame,
     window: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Tumbling-window counts per event type with late-data handling.
 
-    The watermark bounds state: at 100 TB/day the state store holds
+    The 2-hour watermark bounds state: at 100 TB/day the state store holds
     only (windows within watermark) x (event types), and late events
     beyond it are dropped deterministically.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),

@@ -49,7 +49,6 @@ def streaming_minhash_index_refresh(
     id_col: str,
     k: int = 8,
     bands: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Drain `corpus_stream` (a STREAMING DataFrame of corpus docs),
     absorbing each micro-batch into a standing band index by merge,
@@ -88,12 +87,11 @@ def streaming_minhash_index_refresh(
             id_col,
             k=k,
             bands=bands,
-            shingle_n=shingle_n,
             # micro-batches are a few hundred rows: the scan fan-out's
-            # exchange is pure overhead per batch (A/B'd 0.92x, r10
-            # optimization round) -- at production batch sizes the
-            # batch arrives as many splits and fan-out is a no-op
-            # anyway, so skipping it here loses nothing at scale
+            # exchange is pure overhead per batch (A/B'd 0.92x) -- at
+            # production batch sizes the batch arrives as many splits
+            # and fan-out is a no-op anyway, so skipping it here loses
+            # nothing at scale
             fanout=False,
         )
         idx_b = raw_b.select(
@@ -121,5 +119,5 @@ def streaming_minhash_index_refresh(
     if index is None:
         raise ValueError("corpus stream produced no batches; nothing to probe")
     return probe_minhash_band_index(
-        probe_docs, index, text_col, id_col, k=k, bands=bands, shingle_n=shingle_n
+        probe_docs, index, text_col, id_col, k=k, bands=bands
     )

@@ -1,51 +1,7 @@
-"""Source/sink breadth: CSV/JSON/ORC round-trip conformance."""
+"""Source/sink breadth: parquet schema evolution, Python UDTF rows and
+the native XML source."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from etl_building_inspector_spark.sources.tables import (
-    load_table,
-    read_table,
-    write_table,
-)
-
-
-def _same(a, b) -> bool:
-    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_format_round_trips(spark, sf_dir, tmp_path):
-    """documents through csv/json/orc: value-identical to the parquet
-    original (explicit schema for text formats — no inference scan)."""
-    docs = load_table(spark, sf_dir, "documents")
-    for fmt in ("csv", "json", "orc"):
-        p = str(tmp_path / f"docs_{fmt}")
-        write_table(docs, p, fmt)
-        back = read_table(spark, p, fmt, schema=docs.schema)
-        assert _same(docs, back), fmt
-
-
-def test_format_round_trip_timestamps(spark, sf_dir, tmp_path):
-    """events (timestamps) through csv: micro-precision survives the
-    text round trip via the pinned timestampFormat."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    p = str(tmp_path / "events_csv")
-    write_table(ev, p, "csv")
-    back = read_table(spark, p, "csv", schema=ev.schema)
-    assert _same(ev, back)
-
-
-def test_orc_predicate_pushdown(spark, sf_dir, tmp_path):
-    """ORC behaves like parquet for pushdown: the scan node carries the
-    filter (searchArgument/pushed) rather than filtering post-scan."""
-    docs = load_table(spark, sf_dir, "documents")
-    p = str(tmp_path / "docs_orc")
-    write_table(docs, p, "orc")
-    q = read_table(spark, p, "orc").filter(F.col("doc_id") < 10).select("doc_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "orc" in plan.lower()
-    assert "lt(doc_id,10)" in plan.replace(" ", "") or "doc_id" in plan
 
 
 def test_parquet_schema_evolution_mergeschema(spark, tmp_path_factory):

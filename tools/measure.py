@@ -116,8 +116,7 @@ def _no_fan_out(df):
 
 def fanout_switch(on: bool) -> None:
     """Enable or disable fan_out_scan in every package module holding it
-    by name (query modules import it from ``_parallel`` inside their
-    builders, so patching ``_parallel`` covers those)."""
+    by name (each caller imports it at module level)."""
     fn = _FAN_OUT if on else _no_fan_out
     for mod in list(sys.modules.values()):
         if getattr(mod, "__name__", "").startswith("etl_building_inspector_spark"):
